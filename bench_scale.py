@@ -409,18 +409,20 @@ def p_geo_grid(spark):
 
 @probe("graph_hits_5m_edges")
 def p_hits_scale(spark):
-    """HITS at 5M edges (the round-15 superstep design): a skewed
+    """HITS at 5M edges (the engine's operators/graph.hits): a skewed
     bipartite graph (50k hubs quadratically skewed, 200k authorities),
     4 iterations of BIGINT-nano state with one controlled float op per
-    L1 normalization, each superstep localCheckpoint'ed (lineage
-    truncation — without it the lazy plan re-evaluates the prefix
-    exponentially). Invariants: both final L1 masses within n nanos of
-    1e9 (each score carries at most 0.5 nano of HALF_UP rounding), and
-    the top hub strictly dominates (the skew must surface)."""
+    L1 normalization, each half-step a pinned superstep. Invariants:
+    both final L1 masses within n nanos of 1e9 (each score carries at
+    most 0.5 nano of HALF_UP rounding), and the top hub strictly
+    dominates (the skew must surface)."""
     from pyspark.sql import functions as F
 
+    from etl_mini_spark.operators.graph import hits
+    from etl_mini_spark.session import pin
+
     n = 5_000_000
-    edges = (
+    edges = pin(
         spark.range(n)
         .select(
             F.expr("CAST(floor(50000 * pow((id * 48271 % 65537) / 65537.0, 2)) AS BIGINT)")
@@ -428,27 +430,9 @@ def p_hits_scale(spark):
             (F.col("id") % 200_000).alias("p"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_edges = edges.count()
-    h = edges.select("s").distinct().withColumn("hs", F.lit(1000000000).cast("long"))
-
-    def norm(df, raw_col, out_col):
-        tot = df.agg(F.sum(raw_col).cast("long").alias("_tot"))
-        return df.join(F.broadcast(tot), F.lit(True)).select(
-            *[c for c in df.columns if c != raw_col],
-            F.floor(
-                F.col(raw_col).cast("double") / F.col("_tot").cast("double") * 1000000000
-                + F.lit(0.5)
-            ).cast("long").alias(out_col),
-        )
-
-    a = None
-    for _ in range(4):
-        ar = edges.join(h, "s").groupBy("p").agg(F.sum("hs").cast("long").alias("raw"))
-        a = norm(ar, "raw", "asc_").localCheckpoint(eager=True)
-        hr = edges.join(a, "p").groupBy("s").agg(F.sum("asc_").cast("long").alias("raw"))
-        h = norm(hr, "raw", "hs").localCheckpoint(eager=True)
+    h, a = hits(edges, 4)
     n_hub = h.count()
     n_auth = a.count()
     sum_h = h.agg(F.sum("hs")).collect()[0][0]
@@ -1041,15 +1025,17 @@ def p_incremental(spark, tmpdir):
 
 @probe("bfs_frontier_1m_nodes")
 def p_bfs_scale(spark):
-    """Frontier-BFS machinery (round-16 graph_bfs_circulant shape:
-    arithmetic neighbor expansion, anti-join vs visited,
-    localCheckpoint per superstep) at 1M nodes. At this node count the
-    registered query's FIXED offset set would need ~n/162 supersteps —
-    the scale rule is offsets that grow with n: powers of 3 up to n/2
-    give ternary reachability and an O(log3 n) diameter. Invariants:
-    every node reached exactly once (conservation), superstep count
-    within the log bound."""
+    """Frontier BFS (the engine's operators/graph.bfs_circulant, which
+    graph_bfs_circulant runs: arithmetic neighbor expansion, anti-join
+    vs the previous two levels, one pinned superstep per level) at 1M
+    nodes. At this node count the registered query's FIXED offset set
+    would need ~n/162 supersteps — the scale rule is offsets that grow
+    with n: powers of 3 up to n/2 give ternary reachability and an
+    O(log3 n) diameter. Invariants: every node reached exactly once
+    (conservation), superstep count within the log bound."""
     from pyspark.sql import functions as F
+
+    from etl_mini_spark.operators.graph import bfs_circulant
 
     n = 1_000_000
     offs = []
@@ -1057,23 +1043,8 @@ def p_bfs_scale(spark):
     while o < n // 2:
         offs.append(o)
         o *= 3
-    visited = spark.createDataFrame([(0, 0)], "i long, d int").localCheckpoint(eager=True)
-    frontier = visited.select("i")
-    d = 0
-    while True:
-        neigh = [F.pmod(F.col("i") + o, F.lit(n)).alias("x") for o in offs] + [
-            F.pmod(F.col("i") - o, F.lit(n)).alias("x") for o in offs
-        ]
-        cand = frontier.select(F.explode(F.array(*neigh)).alias("i")).distinct()
-        new = cand.join(visited, "i", "left_anti").withColumn("d", F.lit(d + 1))
-        if new.count() == 0:
-            break
-        visited = visited.union(new).localCheckpoint(eager=True)
-        frontier = new.select("i")
-        d += 1
-        if d > 60:  # runaway guard: the log bound is ~2*log3(n) ~ 26
-            break
-    total = visited.count()
+    r = bfs_circulant(n, offs).agg(F.count("*").alias("n"), F.max("d").alias("d")).first()
+    total, d = r["n"], r["d"]
     log_bound = 2 * len(offs) + 4
     return {
         "n_nodes": n,

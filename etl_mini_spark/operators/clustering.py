@@ -25,9 +25,8 @@ the whole trajectory against a numpy reference implementation.
 At 100 TB: the assignment pass scales embarrassingly (broadcast k×d,
 stream the corpus); the only shuffle is k keys wide. The per-iteration
 barrier is inherent to Lloyd's; iteration count, not data volume, is
-the latency driver — same discipline as graph_pagerank_converged
-(loop-scoped confs belong to the CALLER when embedding this in a
-registry query).
+the latency driver — the loop runs under the same loop-scoped confs as
+every superstep loop (operators/graph.py).
 """
 
 from __future__ import annotations
@@ -39,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_mini_spark.operators.graph import loop_confs
 
 
 def _init_centroids(df: DataFrame, id_col: str, vec_col: str, k: int) -> np.ndarray:
@@ -84,56 +85,42 @@ def kmeans_lloyd(
     The returned DataFrame carries the FINAL assignment (computed from
     the converged centroids, so it is consistent with them).
 
-    Loop discipline (same as graph_pagerank_converged): the input is
-    persisted ONCE — each of the ~2·iters jobs re-reads memory, not the
-    source files — and the loop runs under loop-scoped confs (AQE off,
-    small fixed shuffle partitions: per-iteration replanning latency
-    dominates at any SF because the shuffle is only k keys wide),
-    restored on exit. On a cluster, size the partition count to the
-    executor count."""
-    spark = df.sparkSession
-    confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "8",
-    }
-    saved = {c: spark.conf.get(c, None) for c in confs}
-    for c, v in confs.items():
-        spark.conf.set(c, v)
+    Loop discipline: the input is persisted ONCE — each of the ~2·iters
+    jobs re-reads memory, not the source files — and released on exit;
+    the loop runs under ``graph.loop_confs`` (per-iteration replanning
+    latency dominates at any SF because the shuffle is only k keys
+    wide). The loop itself runs on the driver — each iteration ends in
+    a k×d collect — so it needs no lineage truncation."""
     pinned = df.select(id_col, vec_col).persist()
     try:
-        cents = _init_centroids(pinned, id_col, vec_col, k)
-        it = 0
-        dim = cents.shape[1]
-        for it in range(1, max_iters + 1):
-            assigned = assign_clusters(pinned, vec_col, cents)
-            # per-cluster element-wise sum + count: k-key shuffle, partial aggs
-            sums = (
-                assigned.groupBy("cluster")
-                .agg(
-                    F.count("*").alias("n"),
-                    *[
-                        F.sum(F.col(vec_col).getItem(j).cast("double")).alias(f"s{j}")
-                        for j in range(dim)
-                    ],
+        with loop_confs(df.sparkSession, 8):
+            cents = _init_centroids(pinned, id_col, vec_col, k)
+            it = 0
+            dim = cents.shape[1]
+            for it in range(1, max_iters + 1):
+                assigned = assign_clusters(pinned, vec_col, cents)
+                # per-cluster element-wise sum + count: k-key shuffle, partial aggs
+                sums = (
+                    assigned.groupBy("cluster")
+                    .agg(
+                        F.count("*").alias("n"),
+                        *[
+                            F.sum(F.col(vec_col).getItem(j).cast("double")).alias(f"s{j}")
+                            for j in range(dim)
+                        ],
+                    )
+                    .collect()
                 )
-                .collect()
-            )
-            new = cents.copy()  # empty clusters keep their previous centroid
-            for r in sums:
-                new[r["cluster"]] = [r[f"s{j}"] / r["n"] for j in range(dim)]
-            shift = float(np.sqrt(((new - cents) ** 2).sum(axis=1)).max())
-            cents = new
-            if shift < tol:
-                break
+                new = cents.copy()  # empty clusters keep their previous centroid
+                for r in sums:
+                    new[r["cluster"]] = [r[f"s{j}"] / r["n"] for j in range(dim)]
+                shift = float(np.sqrt(((new - cents) ** 2).sum(axis=1)).max())
+                cents = new
+                if shift < tol:
+                    break
     finally:
-        for c, v in saved.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
-    out = assign_clusters(df, vec_col, cents)
-    pinned.unpersist()
-    return out, cents, it
+        pinned.unpersist()
+    return assign_clusters(df, vec_col, cents), cents, it
 
 
 def kmeans_reference(

@@ -30,6 +30,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_mini_spark.operators.graph import iterate, loop_confs, observed_count
+from etl_mini_spark.session import pin
+
 # Deterministic MinHash parameters (public LSH construction; see
 # Broder 1997 / Leskovec et al., "Mining of Massive Datasets" ch.3).
 MINHASH_PRIME = 4294967311  # smallest prime > 2^32
@@ -624,8 +627,6 @@ def simhash_near_dup_pairs(
         raise ValueError("n_blocks must divide 64")
     bits_per = 64 // n_blocks
     mask = (1 << bits_per) - 1
-    from etl_mini_spark.session import pin
-
     sh = pin(simhash(df, id_col, text_col))  # computed once, joined twice
     blocks = sh.select(
         "doc_id",
@@ -675,11 +676,12 @@ def connected_components(
 
     Iterative min-label propagation: each round every node takes the min
     of its own label and its neighbors' labels (one shuffle-join + one
-    aggregate per round), with ``localCheckpoint`` truncating the plan
-    lineage so the DAG stays flat across rounds, and an early exit when
-    a round changes nothing. Rounds needed = graph diameter; near-dup
-    graphs are unions of small dense cliques (diameter ~2-3), so this
-    settles in a handful of rounds even at corpus scale. For adversarial
+    aggregate per round), each round one superstep of ``graph.iterate``
+    (pinned, so the DAG stays flat; the changed-label count is observed
+    inside the pin's own job), with an early exit when a round changes
+    nothing. Rounds needed = graph diameter; near-dup graphs are unions
+    of small dense cliques (diameter ~2-3), so this settles in a
+    handful of rounds even at corpus scale. For adversarial
     long-chain graphs the published O(log n)-round alternation
     (large-star/small-star, Kiveris et al. 2014 "Connected Components in
     MapReduce and Beyond") drops in behind the same signature.
@@ -688,54 +690,38 @@ def connected_components(
     shingle-Jaccard rarely form clean pairs — transitive closure turns
     them into keep-one-per-cluster decisions.
     """
-    for c in (src, dst):  # loud failure beats silently NULLed-out edges
-        dt = dict(edges.dtypes)[c]
-        if dt not in ("tinyint", "smallint", "int", "bigint"):
-            raise TypeError(
-                f"connected_components needs integral node ids; {c!r} is {dt}. "
-                "Map string/UUID ids to dense longs first (e.g. hash or zipWithIndex)."
-            )
+    _require_integral_ids(edges, src, dst)
     e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    from etl_mini_spark.session import pin
-
     sym = pin(sym)  # reused every round — pin, don't recompute
-    labels = sym.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
-    changed = 0
-    for _ in range(max_iter):
+    changes = []
+
+    def step(labels):
         nbr_min = (
             sym.join(labels.select(F.col("node").alias("b"), F.col("comp").alias("nc")), "b")
             .groupBy("a")
             .agg(F.min("nc").alias("nbr_comp"))
             .withColumnRenamed("a", "node")
         )
-        new = pin(
-            labels.join(nbr_min, "node", "left")
-            .select(
+        new, obs = observed_count(
+            labels.join(nbr_min, "node", "left").select(
                 "node",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-            )
+                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("new"),
+                F.col("comp").alias("old"),
+            ),
+            F.col("new") != F.col("old"),
         )
-        changed = (
-            new.join(labels.withColumnRenamed("comp", "old"), "node")
-            .filter(F.col("comp") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    if changed != 0:
-        # Returning unconverged labels would silently under-merge
-        # components (long chains > max_iter hops keep distinct reps and
-        # dedup keeps rows it should drop) — fail loudly instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "the graph has a component with diameter > max_iter. Raise "
-            "max_iter, or use connected_components_star (the O(log n) "
-            "large-star/small-star alternation) for long-chain graphs."
-        )
-    return labels
+        changes.append(obs)
+        return new.select("node", F.col("new").alias("comp"))
+
+    # Returning unconverged labels would silently under-merge components
+    # (long chains > max_iter hops keep distinct reps and dedup keeps
+    # rows it should drop), so a graph whose diameter exceeds max_iter
+    # raises: raise max_iter, or use connected_components_star.
+    labels = sym.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
+    return iterate(
+        labels, step, max_iter=max_iter, until=lambda prev, cur: changes[-1].get["n"] == 0
+    )
 
 
 def _require_integral_ids(edges: DataFrame, src: str, dst: str) -> None:
@@ -787,10 +773,8 @@ def connected_components_star(
     _require_integral_ids(edges, src, dst)
     spark = edges.sparkSession
     # The O(log n) rounds are SEQUENTIAL stages; at verification SFs the
-    # cost is per-stage latency, not data. Loop-scoped confs (AQE's
-    # per-stage replanning off, modest fixed partition count), restored
-    # after — same treatment as the PageRank loop; size LOOP_PARTS to
-    # the cluster on a real deployment.
+    # cost is per-stage latency, not data, so they run under
+    # graph.loop_confs like every superstep loop.
     # Materialize the RAW (a, b) projection once, BEFORE the loop confs
     # take effect: ``edges`` lineage is often the expensive near-dup
     # pair join, and it used to be re-executed twice more by the
@@ -801,8 +785,6 @@ def connected_components_star(
     # the SESSION confs means the upstream pair generation runs exactly
     # once per call at full parallelism; ``e`` and ``all_nodes`` both
     # derive from it.
-    from etl_mini_spark.session import pin
-
     raw = pin(edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     ))
@@ -859,63 +841,49 @@ def connected_components_star(
             out.append((None, None))
         return spark.createDataFrame(out, "node long, comp long")
     loop_parts = max(1, min(2048, (n_raw + 999_999) // 1_000_000))
-    confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(loop_parts),
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        e = pin(
+    counts = []
+
+    def step(e):
+        # large-star over symmetric neighborhoods
+        nbr = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = nbr.groupBy("u").agg(F.min("v").alias("mn"))
+        mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
+        large = (
+            nbr.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))  # m <= u < v: output stays canonical
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .distinct()
+        )
+        # small-star over canonical (u > v) edges
+        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
+        small, obs = observed_count(
+            large.join(mins2, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(mins2.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        counts.append(obs)
+        return small
+
+    def fixpoint(prev, cur):
+        # both edge sets are distinct and materialized, so equal counts
+        # + empty (cur − prev) ⇔ set equality — one subtract job, and
+        # only once the counts agree
+        n_prev, n_cur = counts[-2].get["n"], counts[-1].get["n"]
+        return n_cur == n_prev and cur.subtract(prev).limit(1).count() == 0
+
+    # O(log n) rounds (~log2(n) + a few); not converging within
+    # max_iter means pathological input or a bug
+    with loop_confs(spark, loop_parts):
+        e, obs = observed_count(
             raw.filter(F.col("a") != F.col("b"))
             .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
             .distinct()
         )
-        n_e = e.count()
-        converged = False
-        for _ in range(max_iter):
-            # large-star over symmetric neighborhoods
-            nbr = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            mins = nbr.groupBy("u").agg(F.min("v").alias("mn"))
-            mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-            large = (
-                nbr.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))  # m <= u < v: output stays canonical
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .distinct()
-            )
-            # small-star over canonical (u > v) edges
-            mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-            small = (
-                large.join(mins2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(mins2.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            small = pin(small)
-            # fixpoint probe: both edge sets are distinct and
-            # materialized, so equal counts + empty (small − e) ⇔ set
-            # equality — one subtract job instead of two
-            n_small = small.count()
-            if n_small == n_e and small.subtract(e).limit(1).count() == 0:
-                e = small
-                converged = True
-                break
-            e, n_e = small, n_small
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds "
-            "(needs ~log2(n) + a few) — pathological input or a bug; inspect "
-            "the edge set."
-        )
+        e = pin(e)
+        counts.append(obs)
+        e = iterate(e, step, max_iter=max_iter, until=fixpoint)
     # converged edge set is a union of stars: u -> component minimum
     assigned = e.select(F.col("u").alias("node"), F.col("v").alias("comp")).union(
         e.select(F.col("v").alias("node"), F.col("v").alias("comp")).distinct()

@@ -57,6 +57,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def half_up(col, k: int = 6):
+    """floor(x*10^k + 0.5)/10^k — the repo's HALF_UP display rounding,
+    identical IEEE op sequence on both engines (FIXTURES.md §C)."""
+    scale = 10 ** k
+    return F.floor(col * scale + F.lit(0.5)) / scale
+
+
 _TMP = Path("/root/repo/tmp")
 
 

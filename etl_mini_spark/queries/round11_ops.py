@@ -23,15 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — the repo's HALF_UP display rounding,
-    identical IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 # --- Kendall's tau-b over daily order aggregates --------------------------------------
@@ -111,7 +104,7 @@ def kendall_tau_daily(spark, sf_dir):
     tau = (F.col("nc") - F.col("nd")) / F.sqrt(
         (n0 - F.col("n1")).cast("double") * (n0 - F.col("n2")).cast("double")
     )
-    return j.select("n", "nc", "nd", _pin(tau).alias("tau_b"))
+    return j.select("n", "nc", "nd", half_up(tau).alias("tau_b"))
 
 
 # --- Mann-Kendall trend test per event type ---------------------------------------------
@@ -207,7 +200,7 @@ def mann_kendall_trend(spark, sf_dir):
         .when(F.col("s") < 0, (F.col("s") + 1) / F.sqrt(F.col("var_s")))
         .otherwise(F.lit(0.0))
     )
-    return v.select("event_type", "n", "s", _pin(z).alias("z")).orderBy("event_type")
+    return v.select("event_type", "n", "s", half_up(z).alias("z")).orderBy("event_type")
 
 
 # --- Kruskal-Wallis H across event types --------------------------------------------------
@@ -291,7 +284,7 @@ def kruskal_wallis_h(spark, sf_dir):
     corr = 1.0 - F.col("tie_cubes").cast("double") / (
         F.col("n").cast("double") * F.col("n") * F.col("n") - F.col("n")
     )
-    return j.select("k", "n", _pin(h_raw / corr).alias("h_stat"))
+    return j.select("k", "n", half_up(h_raw / corr).alias("h_stat"))
 
 
 # --- Cohen's kappa between two deterministic document raters ------------------------------
@@ -351,7 +344,7 @@ def cohens_kappa_rules(spark, sf_dir):
     ) / (1.0 * F.col("n") * F.col("n"))
     po = (F.col("n11") + F.col("n00")) / (1.0 * F.col("n"))
     return c.select(
-        "n", "n11", "n10", "n01", "n00", _pin((po - pe) / (1.0 - pe)).alias("kappa")
+        "n", "n11", "n10", "n01", "n00", half_up((po - pe) / (1.0 - pe)).alias("kappa")
     )
 
 
@@ -409,7 +402,7 @@ def mcc_threshold(spark, sf_dir):
         * (F.col("tn") + F.col("fn"))
     )
     mcc = (F.col("tp") * F.col("tn") - F.col("fp") * F.col("fn")) / denom
-    return c.select("tp", "fp", "fn", "tn", _pin(mcc).alias("mcc"))
+    return c.select("tp", "fp", "fn", "tn", half_up(mcc).alias("mcc"))
 
 
 # --- two-proportion z-test: purchase rate, first vs second half of the month ---------------
@@ -455,7 +448,7 @@ def two_proportion_ztest(spark, sf_dir):
     p2 = F.col("x2") / (1.0 * F.col("n2"))
     pp = (F.col("x1") + F.col("x2")) / (1.0 * (F.col("n1") + F.col("n2")))
     z = (p1 - p2) / F.sqrt(pp * (1.0 - pp) * (1.0 / F.col("n1") + 1.0 / F.col("n2")))
-    return c.select("n1", "x1", "n2", "x2", _pin(z).alias("z"))
+    return c.select("n1", "x1", "n2", "x2", half_up(z).alias("z"))
 
 
 # --- Holt-Winters additive smoothing with weekly seasonality --------------------------------
@@ -596,10 +589,10 @@ def holt_winters_weekly(spark, sf_dir):
     )
     return out.select(
         "event_type", "d",
-        _pin(F.col("level")).alias("level"),
-        _pin(F.col("trend")).alias("trend"),
-        _pin(F.col("seasonal")).alias("seasonal"),
-        _pin(F.col("fitted")).alias("fitted"),
+        half_up(F.col("level")).alias("level"),
+        half_up(F.col("trend")).alias("trend"),
+        half_up(F.col("seasonal")).alias("seasonal"),
+        half_up(F.col("fitted")).alias("fitted"),
     ).orderBy("event_type", "d")
 
 
@@ -741,9 +734,9 @@ def bollinger_bands_7d(spark, sf_dir):
         .select(
             "d",
             (F.col("c").cast("double") / 100.0).alias("revenue"),
-            _pin(mean_c / 100.0, 4).alias("mid"),
-            _pin(up_c / 100.0, 4).alias("upper"),
-            _pin(lo_c / 100.0, 4).alias("lower"),
+            half_up(mean_c / 100.0, 4).alias("mid"),
+            half_up(up_c / 100.0, 4).alias("upper"),
+            half_up(lo_c / 100.0, 4).alias("lower"),
             (F.col("c").cast("double") > up_c).alias("breach_hi"),
             (F.col("c").cast("double") < lo_c).alias("breach_lo"),
         )
@@ -883,7 +876,7 @@ def stream_mg_incremental(spark, sf_dir):
         .agg(F.count("*").cast("bigint").alias("freq"))
         .crossJoin(F.broadcast(total))
         .filter(F.col("freq") * 31 > F.col("n_total"))
-        .select("t", "freq", _pin(share).alias("share"))
+        .select("t", "freq", half_up(share).alias("share"))
         .orderBy("t")
     )
 
@@ -1139,7 +1132,7 @@ def null_completeness_matrix(spark, sf_dir):
     )
     return rows.select(
         "col", "n", "n_null", "n_blank",
-        _pin((F.col("n") - F.col("n_null")) / (1.0 * F.col("n"))).alias("completeness"),
+        half_up((F.col("n") - F.col("n_null")) / (1.0 * F.col("n"))).alias("completeness"),
     ).orderBy("col")
 
 
@@ -1216,7 +1209,7 @@ def distinct_ratio_profile(spark, sf_dir):
     return (
         prof.select(
             "col", "n", "n_distinct",
-            _pin(F.col("n_distinct") / (1.0 * F.col("n"))).alias("distinct_ratio"),
+            half_up(F.col("n_distinct") / (1.0 * F.col("n"))).alias("distinct_ratio"),
             "top_value", "top_freq",
         )
         .orderBy("col")
@@ -1285,7 +1278,7 @@ def cross_field_consistency(spark, sf_dir):
             F.lit(name).alias("rule"),
             F.count("*").cast("bigint").alias("n_checked"),
             F.sum(F.when(viol_col, 1).otherwise(0)).cast("bigint").alias("n_violations"),
-            _pin(
+            half_up(
                 F.sum(F.when(viol_col, 1).otherwise(0)) / (1.0 * F.count("*"))
             ).alias("rate"),
         )
@@ -1307,7 +1300,7 @@ def cross_field_consistency(spark, sf_dir):
                 F.lit(name).alias("rule"),
                 F.col("n").alias("n_checked"),
                 F.col(f"v{i}").alias("n_violations"),
-                _pin(F.col(f"v{i}") / (1.0 * F.col("n"))).alias("rate"),
+                half_up(F.col(f"v{i}") / (1.0 * F.col("n"))).alias("rate"),
             )
             for i, (name, _) in enumerate(e_rules)
         ])).alias("__r")
@@ -1472,7 +1465,7 @@ def array_set_ops_suite(spark, sf_dir):
     )
     return s.select(
         "doc_id", "n_a", "n_b", "n_inter", "n_union", "n_a_only",
-        _pin(F.col("n_inter") / (1.0 * F.col("n_union"))).alias("jaccard"),
+        half_up(F.col("n_inter") / (1.0 * F.col("n_union"))).alias("jaccard"),
     ).orderBy("doc_id")
 
 
@@ -1517,7 +1510,7 @@ def hour_of_week_heatmap(spark, sf_dir):
         c.crossJoin(F.broadcast(t))
         .select(
             "dow_mon0", "hr", "n",
-            _pin(F.col("n") / (1.0 * F.col("total"))).alias("share"),
+            half_up(F.col("n") / (1.0 * F.col("total"))).alias("share"),
         )
         .orderBy("dow_mon0", "hr")
     )
@@ -1670,9 +1663,9 @@ def fourier_weekly_coeffs(spark, sf_dir):
     )
     return s.select(
         "event_type",
-        _pin(F.col("a1")).alias("a1"),
-        _pin(F.col("b1")).alias("b1"),
-        _pin(F.sqrt(F.col("a1") * F.col("a1") + F.col("b1") * F.col("b1"))).alias("amplitude"),
+        half_up(F.col("a1")).alias("a1"),
+        half_up(F.col("b1")).alias("b1"),
+        half_up(F.sqrt(F.col("a1") * F.col("a1") + F.col("b1") * F.col("b1"))).alias("amplitude"),
     ).orderBy("event_type")
 
 
@@ -1706,9 +1699,9 @@ def quantile_cont_parity(spark, sf_dir):
     g = e.groupBy("event_type").agg(pct.alias("p"))
     return g.select(
         "event_type",
-        _pin(F.col("p")[0]).alias("p25"),
-        _pin(F.col("p")[1]).alias("p50"),
-        _pin(F.col("p")[2]).alias("p75"),
+        half_up(F.col("p")[0]).alias("p25"),
+        half_up(F.col("p")[1]).alias("p50"),
+        half_up(F.col("p")[2]).alias("p75"),
     ).orderBy("event_type")
 
 
@@ -1779,8 +1772,8 @@ def ma_crossover_signals(spark, sf_dir):
         sig.filter(F.col("rn") >= 15)
         .select(
             "d",
-            _pin(F.col("s7") / 700.0, 4).alias("fast"),
-            _pin(F.col("s14") / 1400.0, 4).alias("slow"),
+            half_up(F.col("s7") / 700.0, 4).alias("fast"),
+            half_up(F.col("s14") / 1400.0, 4).alias("slow"),
             F.col("state").cast("bigint").alias("state"),
             F.when((F.col("state") == 1) & (F.col("prev_state") == -1), "golden")
             .when((F.col("state") == -1) & (F.col("prev_state") == 1), "death")
@@ -2101,7 +2094,7 @@ def holt_winters_forecast(spark, sf_dir):
     )
     return out.select(
         "event_type", F.col("h").cast("bigint").alias("h"), "f_d",
-        _pin(F.col("forecast")).alias("forecast"),
+        half_up(F.col("forecast")).alias("forecast"),
     ).orderBy("event_type", "h")
 
 
@@ -2220,8 +2213,8 @@ def eoq_inventory_policy(spark, sf_dir):
         "brand",
         F.expr("CAST(d_c DIV 100 AS BIGINT)").alias("demand_units"),
         "n_lines",
-        _pin(eoq, 4).alias("eoq_units"),
-        _pin(d_units / 365.0 * 7.0, 4).alias("reorder_point_units"),
+        half_up(eoq, 4).alias("eoq_units"),
+        half_up(d_units / 365.0 * 7.0, 4).alias("reorder_point_units"),
     ).orderBy("brand")
 
 

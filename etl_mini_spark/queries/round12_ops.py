@@ -28,15 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — the repo's HALF_UP display rounding,
-    identical IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 def _daily_cents(spark, sf_dir, table="events", value="value", datecol="ts"):
@@ -145,7 +138,7 @@ def friedman_test_blocks(spark, sf_dir):
     return (
         rj.crossJoin(F.broadcast(s))
         .crossJoin(F.broadcast(n))
-        .select("et", "r2j", "n", "k", _pin(q).alias("q_stat"))
+        .select("et", "r2j", "n", "k", half_up(q).alias("q_stat"))
         .orderBy("et")
     )
 
@@ -206,7 +199,7 @@ def cochran_q_raters(spark, sf_dir):
         2.0 * (3 * (g1 * g1 + g2 * g2 + g3 * g3) - (g1 + g2 + g3) * (g1 + g2 + g3))
         / (3 * F.col("sl") - F.col("sl2"))
     )
-    return s.select("n", "g1", "g2", "g3", _pin(q).alias("q_stat"))
+    return s.select("n", "g1", "g2", "g3", half_up(q).alias("q_stat"))
 
 
 # --- McNemar's test on two paired raters ---------------------------------------------------
@@ -260,8 +253,8 @@ def mcnemar_paired_rules(spark, sf_dir):
     adiff = F.abs(diff) - 1
     return s.select(
         "b01", "b10", "n11", "n00",
-        _pin(1.0 * diff * diff / tot).alias("chi2"),
-        _pin(1.0 * adiff * adiff / tot).alias("chi2_cc"),
+        half_up(1.0 * diff * diff / tot).alias("chi2"),
+        half_up(1.0 * adiff * adiff / tot).alias("chi2_cc"),
     )
 
 
@@ -338,7 +331,7 @@ def fleiss_kappa_multi(spark, sf_dir):
     pbar = 1.0 * (F.col("snsq") - n * 3) / (n * 3 * 2)
     pe = 1.0 * csq / ((n * 3) * (n * 3))
     return s.select(
-        "n", "c0", "c1t", "c2t", _pin((pbar - pe) / (1.0 - pe)).alias("kappa")
+        "n", "c0", "c1t", "c2t", half_up((pbar - pe) / (1.0 - pe)).alias("kappa")
     )
 
 
@@ -407,7 +400,7 @@ def cliffs_delta_effect(spark, sf_dir):
     return (
         s.crossJoin(F.broadcast(n1))
         .crossJoin(F.broadcast(n2))
-        .select("n1", "n2", "net", _pin(1.0 * F.col("net") / F.col("np")).alias("delta"))
+        .select("n1", "n2", "net", half_up(1.0 * F.col("net") / F.col("np")).alias("delta"))
     )
 
 
@@ -483,7 +476,7 @@ def jonckheere_terpstra_trend(spark, sf_dir):
         (F.col("j2") - 1.0 * (n * n - F.col("sn2")) / 2)
         / (2.0 * F.sqrt((1.0 * n * n * (2 * n + 3) - F.col("sv")) / 72.0))
     )
-    return j.crossJoin(F.broadcast(s)).select("n", "j2", _pin(z).alias("z"))
+    return j.crossJoin(F.broadcast(s)).select("n", "j2", half_up(z).alias("z"))
 
 
 # --- Pettitt changepoint on daily revenue -----------------------------------------------------
@@ -600,7 +593,7 @@ def grubbs_max_outlier(spark, sf_dir):
         F.col("d").alias("outlier_d"),
         (F.col("c").cast("double") / 100.0).alias("revenue"),
         "n",
-        _pin(g).alias("g_stat"),
+        half_up(g).alias("g_stat"),
     )
 
 
@@ -712,7 +705,7 @@ def chow_structural_break(spark, sf_dir):
     return (
         psse.crossJoin(F.broadcast(parts))
         .crossJoin(F.broadcast(nn))
-        .select("n", "nb", _pin(f).alias("f_stat"))
+        .select("n", "nb", half_up(f).alias("f_stat"))
     )
 
 
@@ -768,7 +761,7 @@ def theil_inequality_index(spark, sf_dir):
         .agg(
             F.max("n").alias("n"),
             F.max("xt").cast("bigint").alias("total_cents"),
-            _pin(F.sum("t9").cast("double")).alias("theil"),
+            half_up(F.sum("t9").cast("double")).alias("theil"),
         )
     )
 
@@ -831,9 +824,9 @@ def xmr_control_chart(spark, sf_dir):
         .select(
             "d",
             (F.col("c").cast("double") / 100.0).alias("revenue"),
-            _pin(mean / 100.0, 4).alias("center"),
-            _pin(ucl / 100.0, 4).alias("ucl"),
-            _pin(lcl / 100.0, 4).alias("lcl"),
+            half_up(mean / 100.0, 4).alias("center"),
+            half_up(ucl / 100.0, 4).alias("ucl"),
+            half_up(lcl / 100.0, 4).alias("lcl"),
             (F.col("c").cast("double") > ucl).alias("above_ucl"),
             (F.col("c").cast("double") < lcl).alias("below_lcl"),
         )
@@ -965,9 +958,9 @@ def rsi_wilder_14(spark, sf_dir):
         rsi, schema="d string, rsi double, avg_gain double, avg_loss double"
     )
     return res.select(
-        "d", _pin(F.col("rsi")).alias("rsi"),
-        _pin(F.col("avg_gain") / 100.0).alias("avg_gain"),
-        _pin(F.col("avg_loss") / 100.0).alias("avg_loss"),
+        "d", half_up(F.col("rsi")).alias("rsi"),
+        half_up(F.col("avg_gain") / 100.0).alias("avg_gain"),
+        half_up(F.col("avg_loss") / 100.0).alias("avg_loss"),
     ).orderBy("d")
 
 
@@ -1043,9 +1036,9 @@ def macd_signal_line(spark, sf_dir):
     lagh = F.lag(hist).over(w)
     return o.select(
         "d",
-        _pin(F.col("macd") / 100.0).alias("macd"),
-        _pin(F.col("sig") / 100.0).alias("signal_line"),
-        _pin(hist / 100.0).alias("histogram"),
+        half_up(F.col("macd") / 100.0).alias("macd"),
+        half_up(F.col("sig") / 100.0).alias("signal_line"),
+        half_up(hist / 100.0).alias("histogram"),
         F.coalesce(
             ((hist > 0) & (lagh <= 0)) | ((hist < 0) & (lagh >= 0)), F.lit(False)
         ).alias("crossed"),
@@ -1103,7 +1096,7 @@ def stochastic_oscillator_kd(spark, sf_dir):
     )
     pd3 = (F.col("pk") + F.lag("pk", 1).over(wr) + F.lag("pk", 2).over(wr)) / 3.0
     return k.select(
-        "d", _pin(F.col("pk")).alias("pct_k"), _pin(pd3).alias("pct_d")
+        "d", half_up(F.col("pk")).alias("pct_k"), half_up(pd3).alias("pct_d")
     ).orderBy("d")
 
 
@@ -1266,9 +1259,9 @@ def croston_intermittent(spark, sf_dir):
     return res.select(
         F.col("b").alias("bucket"),
         "demand_days",
-        _pin(F.col("size_ema")).alias("size_ema"),
-        _pin(F.col("interval_ema")).alias("interval_ema"),
-        _pin(F.col("size_ema") / F.col("interval_ema")).alias("forecast"),
+        half_up(F.col("size_ema")).alias("size_ema"),
+        half_up(F.col("interval_ema")).alias("interval_ema"),
+        half_up(F.col("size_ema") / F.col("interval_ema")).alias("forecast"),
     ).orderBy("bucket")
 
 
@@ -1353,9 +1346,9 @@ def holt_damped_trend(spark, sf_dir):
     )
     return res.select(
         "event_type", "d",
-        _pin(F.col("level")).alias("level"),
-        _pin(F.col("trend")).alias("trend"),
-        _pin(F.col("fitted")).alias("fitted"),
+        half_up(F.col("level")).alias("level"),
+        half_up(F.col("trend")).alias("trend"),
+        half_up(F.col("fitted")).alias("fitted"),
     ).orderBy("event_type", "d")
 
 
@@ -1507,8 +1500,8 @@ def hurst_rescaled_range(spark, sf_dir):
         y.crossJoin(F.broadcast(hurst))
         .select(
             "sz", "n_windows",
-            _pin(F.col("mean_rs")).alias("mean_rs"),
-            _pin(F.col("h_exp")).alias("hurst"),
+            half_up(F.col("mean_rs")).alias("mean_rs"),
+            half_up(F.col("h_exp")).alias("hurst"),
         )
         .orderBy("sz")
     )
@@ -1590,7 +1583,7 @@ def xyz_volatility_classes(spark, sf_dir):
         s.filter(sv > 0)
         .select(
             F.col("b").alias("brand"), "m", sv.alias("total_qty"),
-            _pin(cv).alias("cv"),
+            half_up(cv).alias("cv"),
             F.when(cv < 0.21, "X").when(cv < 0.25, "Y").otherwise("Z").alias("xyz_class"),
         )
         .orderBy("brand")
@@ -2147,7 +2140,7 @@ def decision_stump_gain(spark, sf_dir):
     return g.select(
         (F.col("t").cast("double") / 100.0).alias("threshold"),
         "nl", "nr", "pl", "pr",
-        _pin(F.col("ig9")).alias("info_gain"),
+        half_up(F.col("ig9")).alias("info_gain"),
         (F.row_number().over(Window.orderBy(F.col("ig9").desc(), "t")) == 1).alias("is_best"),
     ).orderBy("threshold")
 
@@ -2531,9 +2524,9 @@ def pacf_durbin_levinson(spark, sf_dir):
     out = dl3.select(
         F.explode(
             F.array(
-                F.struct(F.lit(1).alias("lag"), _pin(r1).alias("acf"), _pin(r1).alias("pacf")),
-                F.struct(F.lit(2).alias("lag"), _pin(r2).alias("acf"), _pin(F.col("p2")).alias("pacf")),
-                F.struct(F.lit(3).alias("lag"), _pin(r3).alias("acf"), _pin(F.col("p3")).alias("pacf")),
+                F.struct(F.lit(1).alias("lag"), half_up(r1).alias("acf"), half_up(r1).alias("pacf")),
+                F.struct(F.lit(2).alias("lag"), half_up(r2).alias("acf"), half_up(F.col("p2")).alias("pacf")),
+                F.struct(F.lit(3).alias("lag"), half_up(r3).alias("acf"), half_up(F.col("p3")).alias("pacf")),
             )
         ).alias("s")
     ).select("s.lag", "s.acf", "s.pacf")
@@ -2664,10 +2657,10 @@ def mean_family_suite(spark, sf_dir):
     n = F.col("n")
     return s.select(
         "event_type", "n",
-        _pin(1.0 * F.col("sc") / n / 100.0).alias("mean_arith"),
-        _pin(F.exp(F.col("sln").cast("double") / n)).alias("mean_geo"),
-        _pin(n / F.col("srec").cast("double")).alias("mean_harm"),
-        _pin(F.sqrt(F.col("ssq").cast("double") / n) / 100.0).alias("mean_rms"),
+        half_up(1.0 * F.col("sc") / n / 100.0).alias("mean_arith"),
+        half_up(F.exp(F.col("sln").cast("double") / n)).alias("mean_geo"),
+        half_up(n / F.col("srec").cast("double")).alias("mean_harm"),
+        half_up(F.sqrt(F.col("ssq").cast("double") / n) / 100.0).alias("mean_rms"),
     ).orderBy("event_type")
 
 
@@ -2758,7 +2751,7 @@ def pages_l_trend(spark, sf_dir):
     return (
         rj.crossJoin(F.broadcast(s))
         .crossJoin(F.broadcast(b))
-        .select("g", "r2j", "l2", F.col("b").alias("b"), _pin(z).alias("z"))
+        .select("g", "r2j", "l2", F.col("b").alias("b"), half_up(z).alias("z"))
         .orderBy("g")
     )
 
@@ -2811,7 +2804,7 @@ def turning_points_test(spark, sf_dir):
     z = (F.col("tp") - 2.0 * (F.col("n") - 2) / 3.0) / F.sqrt(
         (16.0 * F.col("n") - 29.0) / 90.0
     )
-    return t.crossJoin(F.broadcast(n)).select("n", "tp", _pin(z).alias("z"))
+    return t.crossJoin(F.broadcast(n)).select("n", "tp", half_up(z).alias("z"))
 
 
 # --- Bartels' rank von Neumann ratio --------------------------------------------------------------
@@ -2873,7 +2866,7 @@ def bartels_rank_vonneumann(spark, sf_dir):
         1.0 * F.col("n") * F.col("sd2")
         / (1.0 * F.col("n") * F.col("srr") - 1.0 * F.col("sr") * F.col("sr"))
     )
-    return dsq.crossJoin(F.broadcast(s)).select("n", "sd2", _pin(rvn).alias("rvn"))
+    return dsq.crossJoin(F.broadcast(s)).select("n", "sd2", half_up(rvn).alias("rvn"))
 
 
 # --- Cox-Stuart trend sign test --------------------------------------------------------------------
@@ -2927,7 +2920,7 @@ def cox_stuart_trend(spark, sf_dir):
         .cast("bigint").alias("m"),
     )
     z = (F.col("n_plus") - F.col("m") / 2.0) / F.sqrt(F.col("m") / 4.0)
-    return s.select("m", "n_plus", _pin(z).alias("z"))
+    return s.select("m", "n_plus", half_up(z).alias("z"))
 
 
 @pq("stream_rsi_incremental", _RSI_SQL)
@@ -3035,7 +3028,7 @@ def stream_rsi_incremental(spark, sf_dir):
     )
     return res.select(
         "d",
-        _pin(rsi).alias("rsi"),
-        _pin(F.col("ag") / 100.0).alias("avg_gain"),
-        _pin(F.col("al") / 100.0).alias("avg_loss"),
+        half_up(rsi).alias("rsi"),
+        half_up(F.col("ag") / 100.0).alias("avg_gain"),
+        half_up(F.col("al") / 100.0).alias("avg_loss"),
     ).orderBy("d")

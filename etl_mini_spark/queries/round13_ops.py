@@ -31,15 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — the repo's HALF_UP display rounding,
-    identical IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 # =====================================================================
@@ -315,7 +308,7 @@ def rrf_hybrid_fusion(spark, sf_dir):
         fused.withColumn("__rn", F.row_number().over(wf))
         .where(F.col("__rn") <= 5)
         .select("probe_id", "cand_id", "r_lex", "r_vec",
-                _pin(F.col("rrf_d").cast("double")).alias("rrf"))
+                half_up(F.col("rrf_d").cast("double")).alias("rrf"))
         .orderBy("probe_id", "cand_id")
     )
 
@@ -403,9 +396,9 @@ def ndcg_graded_eval(spark, sf_dir):
         dcg.join(ideal, "probe_id")
         .select(
             "probe_id", "rel_total",
-            _pin(F.col("dcg_d").cast("double")).alias("dcg"),
+            half_up(F.col("dcg_d").cast("double")).alias("dcg"),
             F.when(F.col("idcg_d").cast("double") == 0.0, F.lit(0.0))
-            .otherwise(_pin(F.col("dcg_d").cast("double") / F.col("idcg_d").cast("double")))
+            .otherwise(half_up(F.col("dcg_d").cast("double") / F.col("idcg_d").cast("double")))
             .alias("ndcg"),
         )
         .orderBy("probe_id")
@@ -1245,7 +1238,7 @@ def fellegi_sunter_weights(spark, sf_dir):
     return (
         pat.crossJoin(F.broadcast(wts))
         .select("a_seg", "a_bal", "a_ph", "n_pairs", "n_true",
-                _pin(weight).alias("weight"))
+                half_up(weight).alias("weight"))
         .orderBy("a_seg", "a_bal", "a_ph")
     )
 
@@ -1298,8 +1291,8 @@ def er_threshold_quality(spark, sf_dir):
         .agg(
             F.count("*").cast("bigint").alias("n_predicted"),
             F.sum("is_match").cast("bigint").alias("n_hit"),
-            _pin(F.sum("is_match") * 1.0 / F.count("*")).alias("precision"),
-            _pin(F.sum("is_match") * 1.0 / F.any_value("n_true")).alias("recall"),
+            half_up(F.sum("is_match") * 1.0 / F.count("*")).alias("precision"),
+            half_up(F.sum("is_match") * 1.0 / F.any_value("n_true")).alias("recall"),
         )
         .orderBy("threshold")
     )
@@ -1382,9 +1375,9 @@ def kalman_filter_1d(spark, sf_dir):
     )
     return out.select(
         "d",
-        _pin(F.col("x") / 100.0).alias("x_level"),
-        _pin(F.col("k")).alias("gain"),
-        _pin(F.col("p")).alias("p_var"),
+        half_up(F.col("x") / 100.0).alias("x_level"),
+        half_up(F.col("k")).alias("gain"),
+        half_up(F.col("p")).alias("p_var"),
     ).orderBy("d")
 
 
@@ -1476,7 +1469,7 @@ def irr_bisection_npv(spark, sf_dir):
         else:
             hi, mid = mid, (lo + mid) / 2.0
     out = spark.createDataFrame([(mid, 41)], "irr double, iters long")
-    return out.select(_pin(F.col("irr")).alias("irr"), "iters")
+    return out.select(half_up(F.col("irr")).alias("irr"), "iters")
 
 
 # --- Fixed-rate amortization schedule ------------------------------------------------------------
@@ -1652,9 +1645,9 @@ def bond_duration_convexity(spark, sf_dir):
     )
     return agg.select(
         (F.floor(F.col("price") * 100 + F.lit(0.5)) / 100).alias("price"),
-        _pin(F.col("tpv") / F.col("price") / 2.0).alias("macaulay_yr"),
-        _pin(F.col("tpv") / F.col("price") / 2.0 / 1.02).alias("modified_yr"),
-        _pin(F.col("ttpv") / F.col("price") / (1.02 * 1.02) / 4.0).alias("convexity_yr2"),
+        half_up(F.col("tpv") / F.col("price") / 2.0).alias("macaulay_yr"),
+        half_up(F.col("tpv") / F.col("price") / 2.0 / 1.02).alias("modified_yr"),
+        half_up(F.col("ttpv") / F.col("price") / (1.02 * 1.02) / 4.0).alias("convexity_yr2"),
     )
 
 
@@ -1748,9 +1741,9 @@ def ols_two_predictors(spark, sf_dir):
     d3 = a * (e * r - q * f_) - b * (b * r - q * c) + p_ * (b * f_ - e * c)
     return m.select(
         "n",
-        _pin(d1 / d0 / 100.0).alias("intercept"),
-        _pin(d2 / d0 / 100.0).alias("beta_orders"),
-        _pin(d3 / d0 / 100.0).alias("beta_customers"),
+        half_up(d1 / d0 / 100.0).alias("intercept"),
+        half_up(d2 / d0 / 100.0).alias("beta_orders"),
+        half_up(d3 / d0 / 100.0).alias("beta_customers"),
     )
 
 
@@ -1833,7 +1826,7 @@ def mahalanobis_outliers_2d(spark, sf_dir):
     )
     return (
         pts.crossJoin(F.broadcast(cov))
-        .select("o_orderkey", _pin(d2).alias("maha_d2"))
+        .select("o_orderkey", half_up(d2).alias("maha_d2"))
         .orderBy(F.col("maha_d2").desc(), "o_orderkey")
         .limit(10)
     )
@@ -1915,9 +1908,9 @@ def pca_eigen_2d(spark, sf_dir):
     )
     return eig.select(
         "n",
-        _pin(F.col("l1") / (F.col("l1") + F.col("l2"))).alias("explained_ratio"),
-        _pin((F.col("l1") - F.col("vxx")) / F.col("vxy")).alias("pc1_slope"),
-        _pin(F.col("l2") / F.col("l1")).alias("condition_inv"),
+        half_up(F.col("l1") / (F.col("l1") + F.col("l2"))).alias("explained_ratio"),
+        half_up((F.col("l1") - F.col("vxx")) / F.col("vxy")).alias("pc1_slope"),
+        half_up(F.col("l2") / F.col("l1")).alias("condition_inv"),
     )
 
 
@@ -2143,7 +2136,7 @@ def isotonic_regression_pav(spark, sf_dir):
         .agg(F.max("m").alias("fit_c"))
         .join(ser.select("d", "c", F.col("i").alias("j")), "j")
         .select("d", F.col("c").cast("bigint").alias("c"),
-                _pin(F.col("fit_c") / 100.0).alias("fitted"))
+                half_up(F.col("fit_c") / 100.0).alias("fitted"))
         .orderBy("d")
     )
 
@@ -2535,7 +2528,7 @@ def bloom_fpr_audit(spark, sf_dir):
         .crossJoin(F.broadcast(nb))
         .select(
             "n_members", "bits_set", "n_probes", "false_positives",
-            _pin(F.col("false_positives") * 1.0 / F.col("n_probes")).alias("fpr"),
+            half_up(F.col("false_positives") * 1.0 / F.col("n_probes")).alias("fpr"),
         )
     )
 
@@ -3028,7 +3021,7 @@ def corpus_amplified_jaccard(spark, sf_dir):
     return (
         pairs.where(F.col("inter") * 10 >= F.col("un") * 8)
         .select("doc_id", "v1", "v2", "inter", "un",
-                _pin(F.col("inter") * 1.0 / F.col("un")).alias("jaccard"))
+                half_up(F.col("inter") * 1.0 / F.col("un")).alias("jaccard"))
         .orderBy("doc_id", "v1", "v2")
     )
 
@@ -3431,7 +3424,7 @@ def graph_jaccard_link_prediction(spark, sf_dir):
     return (
         nonedge.join(da, "a").join(db, "b")
         .select("a", "b", "inter", un.alias("un"),
-                _pin(F.col("inter") * 1.0 / un).alias("jaccard"))
+                half_up(F.col("inter") * 1.0 / un).alias("jaccard"))
         .orderBy(F.col("jaccard").desc(), "a", "b")
         .limit(20)
     )
@@ -3519,8 +3512,8 @@ def erlang_c_staffing(spark, sf_dir):
         pd.DataFrame(rows, columns=["n", "offered_load", "wait_prob"])
     )
     return out.select(
-        "n", _pin(F.col("offered_load")).alias("offered_load"),
-        _pin(F.col("wait_prob")).alias("wait_prob"),
+        "n", half_up(F.col("offered_load")).alias("offered_load"),
+        half_up(F.col("wait_prob")).alias("wait_prob"),
     ).orderBy("n")
 
 
@@ -3620,8 +3613,8 @@ def page_hinkley_drift(spark, sf_dir):
     out = spark.createDataFrame(pd.DataFrame(rows, columns=["d", "mean", "ph"]))
     return out.select(
         "d",
-        _pin(F.col("mean")).alias("running_mean"),
-        _pin(F.col("ph")).alias("ph_stat"),
+        half_up(F.col("mean")).alias("running_mean"),
+        half_up(F.col("ph")).alias("ph_stat"),
         (F.col("ph") > 500.0).alias("drift_flag"),
     ).orderBy("d")
 
@@ -3756,8 +3749,8 @@ def holt_winters_multiplicative(spark, sf_dir):
         pd.DataFrame(rows, columns=["d", "l", "b", "x", "fitted"])
     )
     return out.select(
-        "d", _pin(F.col("l")).alias("level"), _pin(F.col("b")).alias("trend"),
-        _pin(F.col("fitted")).alias("fitted"),
+        "d", half_up(F.col("l")).alias("level"), half_up(F.col("b")).alias("trend"),
+        half_up(F.col("fitted")).alias("fitted"),
     ).orderBy("d")
 
 

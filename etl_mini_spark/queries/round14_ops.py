@@ -34,15 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — the repo's HALF_UP display rounding,
-    identical IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 # =====================================================================
@@ -934,7 +927,7 @@ def text_rake_keywords(spark, sf_dir):
     return (
         psc.withColumn("rn", F.row_number().over(wtop))
         .filter(F.col("rn") <= 3)
-        .select("doc_id", "phrase", _pin(F.col("score")).alias("score"))
+        .select("doc_id", "phrase", half_up(F.col("score")).alias("score"))
         .orderBy("doc_id", F.desc("score"), "phrase")
     )
 
@@ -1308,7 +1301,7 @@ def ewma_volatility_riskmetrics(spark, sf_dir):
         rows.append((d, r, v))
     out = spark.createDataFrame(pd.DataFrame(rows, columns=["d", "r", "v"]))
     return out.select(
-        "d", _pin(F.col("r")).alias("ret"), _pin(F.sqrt(F.col("v"))).alias("vol")
+        "d", half_up(F.col("r")).alias("ret"), half_up(F.sqrt(F.col("v"))).alias("vol")
     ).orderBy("d")
 
 
@@ -1392,8 +1385,8 @@ def cash_conversion_cycle(spark, sf_dir):
     return (
         rev.join(ln, "month_")
         .select(
-            "month_", _pin(dso).alias("dso"), _pin(dio).alias("dio"),
-            _pin(dpo).alias("dpo"), _pin(dso + dio - dpo).alias("ccc"),
+            "month_", half_up(dso).alias("dso"), half_up(dio).alias("dio"),
+            half_up(dpo).alias("dpo"), half_up(dso + dio - dpo).alias("ccc"),
         )
         .orderBy("month_")
     )
@@ -1480,9 +1473,9 @@ def loan_prepay_cpr_schedule(spark, sf_dir):
         pd.DataFrame(rows, columns=["t", "bal", "interest", "prepay"])
     )
     return out.select(
-        "t", _pin(F.col("bal")).alias("balance"),
-        _pin(F.col("interest")).alias("interest"),
-        _pin(F.col("prepay")).alias("prepay"),
+        "t", half_up(F.col("bal")).alias("balance"),
+        half_up(F.col("interest")).alias("interest"),
+        half_up(F.col("prepay")).alias("prepay"),
     ).orderBy("t")
 
 
@@ -1608,8 +1601,8 @@ def benford_second_digit(spark, sf_dir):
         obs.join(F.broadcast(exp), "d")
         .crossJoin(F.broadcast(tot))
         .select(
-            "d", "n", _pin(F.col("p")).alias("expected_p"),
-            _pin((share - F.col("p")) * (share - F.col("p")) / F.col("p")).alias("chi_term"),
+            "d", "n", half_up(F.col("p")).alias("expected_p"),
+            half_up((share - F.col("p")) * (share - F.col("p")) / F.col("p")).alias("chi_term"),
         )
         .orderBy("d")
     )
@@ -1682,8 +1675,8 @@ def dq_column_entropy_profile(spark, sf_dir):
         .agg(F.sum(term).cast("double").alias("ent"))
     )
     return e.select(
-        "col_", "k", _pin(F.col("ent")).alias("entropy_nats"),
-        _pin(
+        "col_", "k", half_up(F.col("ent")).alias("entropy_nats"),
+        half_up(
             F.when(F.col("k") > 1, F.col("ent") / F.log(F.col("k").cast("double")))
             .otherwise(F.lit(0.0))
         ).alias("entropy_norm"),
@@ -1760,7 +1753,7 @@ def dq_composite_key_candidates(spark, sf_dir):
         .select(
             "key_cols", "n_distinct", "rows_",
             (F.col("n_distinct") == F.col("rows_")).alias("is_key"),
-            _pin(F.col("n_distinct").cast("double") / F.col("rows_")).alias("uniqueness"),
+            half_up(F.col("n_distinct").cast("double") / F.col("rows_")).alias("uniqueness"),
         )
         .orderBy("key_cols")
     )
@@ -1873,7 +1866,7 @@ def graph_adamic_adar_linkpred(spark, sf_dir):
         .filter(F.col("common_n") >= 2)
     )
     return (
-        sc.select("x", "y", "common_n", _pin(F.col("aa")).alias("aa_score"))
+        sc.select("x", "y", "common_n", half_up(F.col("aa")).alias("aa_score"))
         .orderBy(F.desc("aa_score"), "x", "y")
         .limit(15)
     )
@@ -1936,7 +1929,7 @@ def graph_local_clustering_coeff(spark, sf_dir):
             F.col("u").alias("node"),
             F.coalesce("t", F.lit(0)).cast("bigint").alias("n_triangles"),
             F.col("d").alias("degree"),
-            _pin(
+            half_up(
                 (2 * F.coalesce("t", F.lit(0))).cast("double")
                 / (F.col("d") * (F.col("d") - 1))
             ).alias("lcc"),
@@ -2332,9 +2325,9 @@ def markov_transition_stationary(spark, sf_dir):
     den = num + F.col("n10").cast("double") * (F.col("n00") + F.col("n01"))
     return cnt.select(
         "n00", "n01", "n10", "n11",
-        _pin(F.col("n01").cast("double") / (F.col("n00") + F.col("n01"))).alias("p01"),
-        _pin(F.col("n10").cast("double") / (F.col("n10") + F.col("n11"))).alias("p10"),
-        _pin(num / den).alias("pi_high"),
+        half_up(F.col("n01").cast("double") / (F.col("n00") + F.col("n01"))).alias("p01"),
+        half_up(F.col("n10").cast("double") / (F.col("n10") + F.col("n11"))).alias("p10"),
+        half_up(num / den).alias("pi_high"),
     )
 
 
@@ -2483,9 +2476,9 @@ def theta_method_forecast(spark, sf_dir):
         rows.append((d, line, ses))
     out = spark.createDataFrame(pd.DataFrame(rows, columns=["d", "l", "ses"]))
     return out.select(
-        "d", _pin(F.col("l")).alias("trend"),
-        _pin(F.col("ses")).alias("ses_theta2"),
-        _pin(0.5 * (F.col("ses") + F.col("l"))).alias("theta_fit"),
+        "d", half_up(F.col("l")).alias("trend"),
+        half_up(F.col("ses")).alias("ses_theta2"),
+        half_up(0.5 * (F.col("ses") + F.col("l"))).alias("theta_fit"),
     ).orderBy("d")
 
 
@@ -3049,10 +3042,10 @@ def inventory_safety_stock(spark, sf_dir):
     ss = 1.645 * F.sqrt(var) * F.sqrt(F.lit(7.0))
     return m.select(
         "event_type",
-        _pin(mean).alias("mean_daily"),
-        _pin(F.sqrt(var)).alias("sigma_daily"),
-        _pin(ss).alias("safety_stock"),
-        _pin(7.0 * mean + ss).alias("reorder_point"),
+        half_up(mean).alias("mean_daily"),
+        half_up(F.sqrt(var)).alias("sigma_daily"),
+        half_up(ss).alias("safety_stock"),
+        half_up(7.0 * mean + ss).alias("reorder_point"),
     ).orderBy("event_type")
 
 
@@ -3143,9 +3136,9 @@ def did_difference_in_differences(spark, sf_dir):
         F.max(F.when((F.col("treat") == 0) & (F.col("post") == 0), mean)).alias("c0"),
     )
     return w.select(
-        _pin(F.col("t1")).alias("treat_post"), _pin(F.col("t0")).alias("treat_pre"),
-        _pin(F.col("c1")).alias("ctrl_post"), _pin(F.col("c0")).alias("ctrl_pre"),
-        _pin((F.col("t1") - F.col("t0")) - (F.col("c1") - F.col("c0"))).alias("did"),
+        half_up(F.col("t1")).alias("treat_post"), half_up(F.col("t0")).alias("treat_pre"),
+        half_up(F.col("c1")).alias("ctrl_post"), half_up(F.col("c0")).alias("ctrl_pre"),
+        half_up((F.col("t1") - F.col("t0")) - (F.col("c1") - F.col("c0"))).alias("did"),
     )
 
 
@@ -3217,8 +3210,8 @@ def uplift_two_model_deciles(spark, sf_dir):
     rc = F.col("cc").cast("double") / F.col("nc")
     return wd.select(
         "decile", "nt", "nc",
-        _pin(rt).alias("rate_treat"), _pin(rc).alias("rate_ctrl"),
-        _pin(rt - rc).alias("uplift"),
+        half_up(rt).alias("rate_treat"), half_up(rc).alias("rate_ctrl"),
+        half_up(rt - rc).alias("uplift"),
     ).orderBy("decile")
 
 
@@ -3315,8 +3308,8 @@ def cuped_variance_reduction(spark, sf_dir):
     cxy = nn * sxy - sx * sy
     return m.select(
         "n",
-        _pin(cxy / vx).alias("theta"),
-        _pin(1.0 - cxy * cxy / (vx * vy)).alias("var_ratio"),
+        half_up(cxy / vx).alias("theta"),
+        half_up(1.0 - cxy * cxy / (vx * vy)).alias("var_ratio"),
     )
 
 
@@ -3353,7 +3346,7 @@ def ab_srm_check(spark, sf_dir):
     dev = F.col("n").cast("double") - half
     return (
         c.crossJoin(F.broadcast(t))
-        .select("arm", "n", "tot", _pin(dev * dev / half).alias("chi_term"))
+        .select("arm", "n", "tot", half_up(dev * dev / half).alias("chi_term"))
         .orderBy("arm")
     )
 
@@ -3428,11 +3421,11 @@ def queueing_little_law_audit(spark, sf_dir):
         span.crossJoin(area)
         .select(
             "n",
-            _pin(F.col("a").cast("double") / (F.col("t1") - F.col("t0"))).alias("l_avg"),
-            _pin(
+            half_up(F.col("a").cast("double") / (F.col("t1") - F.col("t0"))).alias("l_avg"),
+            half_up(
                 F.col("n").cast("double") / (F.col("t1") - F.col("t0")) * 600000000.0
             ).alias("lambda_w"),
-            _pin(F.col("a").cast("double") / (F.col("n") * 600000000.0)).alias("ratio"),
+            half_up(F.col("a").cast("double") / (F.col("n") * 600000000.0)).alias("ratio"),
         )
     )
 

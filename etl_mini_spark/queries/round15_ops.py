@@ -35,15 +35,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.operators.graph import hits, iterate, loop_confs
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — the repo's HALF_UP display rounding,
-    identical IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 def _hex15(col) -> F.Column:
@@ -301,34 +295,18 @@ def graph_hits_hubs_authorities(spark, sf_dir):
     a keyed aggregate + a 1-row total broadcast — the natural Pregel
     superstep as DataFrame ops; at 100 TB each iteration is one
     shuffle on the edge key, and the normalization scalar is a
-    broadcast, never a driver loop over nodes. Each superstep is
-    localCheckpoint'ed: without lineage truncation the lazy plan
-    re-evaluates the whole prefix per reference — exponential
-    recompute (measured 46 s -> ~8 s at sf0.001), the same reason the
-    oracle CTEs are MATERIALIZED; at cluster scale this is the
-    standard checkpoint-per-iteration discipline."""
+    broadcast, never a driver loop over nodes. Each half-step is a
+    pinned superstep (operators/graph.hits): without lineage truncation
+    the lazy plan re-evaluates the whole prefix per reference —
+    exponential recompute (measured 46 s -> ~8 s at sf0.001), the same
+    reason the oracle CTEs are MATERIALIZED."""
+    from etl_mini_spark.session import pin
+
     li = _t(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct().localCheckpoint(eager=True)
-    h = edges.select("s").distinct().withColumn("hs", F.lit(1000000000).cast("long"))
-
-    def norm(df, raw_col, out_col):
-        tot = df.agg(F.sum(raw_col).cast("long").alias("_tot"))
-        return df.join(F.broadcast(tot), F.lit(True)).select(
-            *[c for c in df.columns if c != raw_col],
-            F.floor(
-                F.col(raw_col).cast("double") / F.col("_tot").cast("double") * 1000000000
-                + F.lit(0.5)
-            ).cast("long").alias(out_col),
-        )
-
-    a = None
-    for _ in range(4):
-        ar = edges.join(h, "s").groupBy("p").agg(F.sum("hs").cast("long").alias("raw"))
-        a = norm(ar, "raw", "asc_").localCheckpoint(eager=True)
-        hr = edges.join(a, "p").groupBy("s").agg(F.sum("asc_").cast("long").alias("raw"))
-        h = norm(hr, "raw", "hs").localCheckpoint(eager=True)
+    edges = pin(
+        li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
+    )
+    h, a = hits(edges, 4)
     hubs = h.select(
         F.lit("hub").alias("role"), F.col("s").alias("node_id"),
         F.col("hs").alias("score_nanos"),
@@ -391,7 +369,8 @@ def graph_label_propagation(spark, sf_dir):
     distributable. The symmetrized edge list is built by exploding both
     orientations of ONE distinct pass (a self-union re-ran the lineitem
     distinct per branch) and pinned: the loop references it once per
-    round, which unpinned re-ran the whole upstream 4x."""
+    round, which unpinned re-ran the whole upstream 4x. Each round is a
+    pinned superstep (operators/graph.iterate) under loop_confs."""
     from etl_mini_spark.session import pin
 
     li = _t(spark, sf_dir, "lineitem")
@@ -405,15 +384,19 @@ def graph_label_propagation(spark, sf_dir):
         )).alias("e"))
         .select("e.u", "e.v")
     )
-    lab = adj.select(F.col("u").alias("node")).distinct().withColumn("lab", F.col("node"))
-    for _ in range(3):
+    w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lab"))
+
+    def step(lab):
         nl = (
             adj.join(lab.withColumnRenamed("node", "v"), "v")
             .groupBy(F.col("u").alias("node"), "lab")
             .agg(F.count("*").alias("c"))
         )
-        w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lab"))
-        lab = nl.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).select("node", "lab")
+        return nl.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).select("node", "lab")
+
+    lab = adj.select(F.col("u").alias("node")).distinct().withColumn("lab", F.col("node"))
+    with loop_confs(spark, 8):
+        lab = iterate(lab, step, max_iter=3)
     return (
         lab.groupBy(F.col("lab").alias("community"))
         .agg(F.count("*").cast("bigint").alias("size"))
@@ -801,9 +784,9 @@ def tsb_intermittent_forecast(spark, sf_dir):
     )
     return res.select(
         F.col("b").alias("bucket"), "demand_days",
-        _pin(F.col("p_ema")).alias("p_ema"),
-        _pin(F.col("z_ema")).alias("z_ema"),
-        _pin(F.col("p_ema") * F.col("z_ema")).alias("forecast"),
+        half_up(F.col("p_ema")).alias("p_ema"),
+        half_up(F.col("z_ema")).alias("z_ema"),
+        half_up(F.col("p_ema") * F.col("z_ema")).alias("forecast"),
     ).orderBy("bucket")
 
 

@@ -37,15 +37,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.operators.graph import bfs_circulant
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — the repo's HALF_UP display rounding,
-    identical IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 # Daily order-revenue cents — the bounded calendar series every
@@ -647,7 +641,7 @@ def cronbach_alpha_items(spark, sf_dir):
     den = F.col("n") * F.col("qt") - F.col("st") * F.col("st")
     return sums.select(
         "n", num.cast("bigint").alias("num"), den.cast("bigint").alias("den"),
-        _pin((4.0 / 3.0) * (1.0 - num.cast("double") / den.cast("double"))).alias("alpha"),
+        half_up((4.0 / 3.0) * (1.0 - num.cast("double") / den.cast("double"))).alias("alpha"),
     )
 
 
@@ -736,8 +730,8 @@ def icc_oneway_quantity(spark, sf_dir):
     )
     return tot.select(
         "n_groups", "nn",
-        _pin(msb).alias("msb"), _pin(msw).alias("msw"), _pin(k0).alias("k0"),
-        _pin((msb - msw) / (msb + (k0 - 1.0) * msw)).alias("icc1"),
+        half_up(msb).alias("msb"), half_up(msw).alias("msw"), half_up(k0).alias("k0"),
+        half_up((msb - msw) / (msb + (k0 - 1.0) * msw)).alias("icc1"),
     )
 
 
@@ -828,7 +822,7 @@ def krippendorff_alpha_nominal(spark, sf_dir):
     tot = t1.crossJoin(F.broadcast(t2)).crossJoin(F.broadcast(t3))
     return tot.select(
         "n_units", "n_vals", "do_nanos", "de_int",
-        _pin(
+        half_up(
             1.0 - (F.col("n_vals").cast("double") - 1.0)
             * (F.col("do_nanos").cast("double") / 1000000000)
             / F.col("de_int").cast("double")
@@ -1125,40 +1119,15 @@ _BFS_SQL = """
 @pq("graph_bfs_circulant", _BFS_SQL)
 def graph_bfs_circulant(spark, sf_dir):
     """Frontier BFS over the {±1,±3,±9,±27,±81} circulant on the user
-    set: each superstep expands the frontier arithmetically (explode of
-    ten mod-n expressions — no edge table, no join to a neighbor list),
-    anti-joins the visited set, and localCheckpoints to keep lineage
-    flat. Superstep count is the graph diameter (~n/162), and each
+    set (operators/graph.bfs_circulant): each superstep expands the
+    frontier arithmetically (explode of ten mod-n expressions — no edge
+    table, no join to a neighbor list) and anti-joins the previous two
+    levels. Superstep count is the graph diameter (~n/162), and each
     step's work is O(frontier) — the textbook scalable BFS shape."""
-    e = _t(spark, sf_dir, "events")
-    nodes = e.select("user_id").distinct()
-    n = nodes.count()  # bounded scalar (the node count)
-    idx = nodes.select(
-        (F.row_number().over(Window.orderBy("user_id")) - 1).cast("bigint").alias("i")
-    )
-    offs = [1, 3, 9, 27, 81]
-    visited = idx.sparkSession.createDataFrame([(0, 0)], "i long, d int").localCheckpoint(
-        eager=True
-    )
-    frontier = visited.select("i")
-    d = 0
-    while True:
-        # pmod, not %: both engines' % follows the dividend sign, and
-        # when an offset exceeds n (tiny node sets) x - o is negative —
-        # plain % would mint phantom negative node ids on BOTH engines
-        # (caught by the conservation pin, not the differential)
-        neigh = [F.pmod(F.col("i") + o, F.lit(n)).alias("x") for o in offs] + [
-            F.pmod(F.col("i") - o, F.lit(n)).alias("x") for o in offs
-        ]
-        cand = frontier.select(F.explode(F.array(*neigh)).alias("i")).distinct()
-        new = cand.join(visited, "i", "left_anti").withColumn("d", F.lit(d + 1))
-        if new.count() == 0:  # bounded: one scalar per superstep
-            break
-        visited = visited.union(new).localCheckpoint(eager=True)
-        frontier = new.select("i")
-        d += 1
+    n = _t(spark, sf_dir, "events").select("user_id").distinct().count()
     return (
-        visited.groupBy("d")
+        bfs_circulant(n, [1, 3, 9, 27, 81])
+        .groupBy("d")
         .agg(F.count("*").cast("bigint").alias("n_nodes"))
         .orderBy("d")
     )
@@ -1395,7 +1364,7 @@ def seasonal_mann_kendall(spark, sf_dir):
         .unionByName(
             tot.select(
                 "season", "n_years", "s_stat", "var18",
-                _pin((F.col("s_stat").cast("double") - cc)
+                half_up((F.col("s_stat").cast("double") - cc)
                      / F.sqrt(F.col("var18").cast("double") / 18.0)).alias("z"),
             )
         )
@@ -1505,7 +1474,7 @@ def dunns_pairwise_z(spark, sf_dir):
     denom = F.sqrt(pooled * (1.0 / F.col("n1") + 1.0 / F.col("n2")))
     return pairs.select(
         "g1", "g2", "n1", "n2",
-        _pin(mean_diff / denom).alias("z"),
+        half_up(mean_diff / denom).alias("z"),
         (F.abs(mean_diff / denom) >= 2.807034).alias("significant"),
     ).orderBy("g1", "g2")
 

@@ -32,15 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.operators.graph import iterate, loop_confs
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — HALF_UP display rounding, identical
-    IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 _DAILY_SQL = """
@@ -137,8 +131,8 @@ def tukey_kramer_hsd(spark, sf_dir):
     hsd = 3.858 * F.sqrt(mse * 0.5 * (1.0 / F.col("n1") + 1.0 / F.col("n2")))
     return pairs.select(
         "g1", "g2", "n1", "n2",
-        _pin(mean_diff, 4).alias("mean_diff_cents"),
-        _pin(hsd, 4).alias("hsd_cents"),
+        half_up(mean_diff, 4).alias("mean_diff_cents"),
+        half_up(hsd, 4).alias("hsd_cents"),
         (F.abs(mean_diff) >= hsd).alias("significant"),
     ).orderBy("g1", "g2")
 
@@ -182,7 +176,7 @@ def simpson_diversity_index(spark, sf_dir):
         agg.filter(F.col("nn") >= 2)
         .select(
             "source", F.col("nn").alias("n_docs"), "n_langs",
-            _pin(1.0 - F.col("same_pairs").cast("double")
+            half_up(1.0 - F.col("same_pairs").cast("double")
                  / (F.col("nn").cast("double") * (F.col("nn") - 1))).alias("simpson_d"),
         )
         .orderBy("source")
@@ -279,7 +273,7 @@ def wilcoxon_signed_rank(spark, sf_dir):
                  - F.col("tie3").cast("double") / 48.0)
     )
     return tot.select(
-        "n", "wplus2", _pin(zexp).alias("z"),
+        "n", "wplus2", half_up(zexp).alias("z"),
         (F.abs(zexp) >= 1.959964).alias("significant"),
     )
 
@@ -1121,7 +1115,8 @@ def textrank_keywords(spark, sf_dir):
     co-occurrence edge counts; four integer-nano PageRank iterations
     run as vocabulary-sized joins (HITS discipline — exact BIGINT
     state, one integer division per edge, no float drift to
-    accumulate)."""
+    accumulate), each a pinned superstep (operators/graph.iterate)
+    under loop_confs."""
     from etl_mini_spark.session import pin
 
     d = _t(spark, sf_dir, "documents")
@@ -1155,8 +1150,8 @@ def textrank_keywords(spark, sf_dir):
     outw = pin(edges.groupBy("w1").agg(F.sum("w").cast("bigint").alias("ow")))
     nodes = outw.select(F.col("w1").alias("word"))
     n = nodes.count()  # bounded: vocabulary size
-    pr = nodes.select("word", F.lit(1000000000 // n).cast("bigint").alias("pr"))
-    for _ in range(4):
+
+    def step(pr):
         contrib = (
             edges.join(pr.withColumnRenamed("word", "w1"), "w1")
             .join(outw, "w1")
@@ -1167,11 +1162,15 @@ def textrank_keywords(spark, sf_dir):
             )
             .groupBy("word").agg(F.sum("c").cast("bigint").alias("inflow"))
         )
-        pr = nodes.join(contrib, "word", "left").select(
+        return nodes.join(contrib, "word", "left").select(
             "word",
             (F.lit(150000000 // n) + F.coalesce("inflow", F.lit(0)))
             .cast("bigint").alias("pr"),
         )
+
+    pr = nodes.select("word", F.lit(1000000000 // n).cast("bigint").alias("pr"))
+    with loop_confs(spark, 8):
+        pr = iterate(pr, step, max_iter=4)
     return pr.select("word", F.col("pr").alias("pr_nanos")).orderBy("word")
 
 

@@ -31,15 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — HALF_UP display rounding, identical
-    IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 # =====================================================================
@@ -137,8 +130,8 @@ def hyperloglog_md5_replay(spark, sf_dir):
                  64.0 * F.log(64.0 / F.col("zeros"))).otherwise(raw)
     return s.select(
         "n_exact", "zeros",
-        _pin(raw).alias("raw_estimate"),
-        _pin(est).alias("estimate"),
+        half_up(raw).alias("raw_estimate"),
+        half_up(est).alias("estimate"),
         (F.abs(est - F.col("n_exact")) / F.col("n_exact") <= 0.5).alias("within_band"),
     )
 
@@ -218,7 +211,7 @@ def pcsa_fm_sketch(spark, sf_dir):
     est = 64.0 / 0.77351 * F.pow(F.lit(2.0), F.col("rsum").cast("double") / 64.0)
     return s.select(
         "n_exact", "rsum",
-        _pin(est).alias("estimate"),
+        half_up(est).alias("estimate"),
         (F.abs(est - F.col("n_exact")) / F.col("n_exact") <= 0.5).alias("within_band"),
     )
 
@@ -549,7 +542,7 @@ def kuiper_two_sample(spark, sf_dir):
     )
     return sup.select(
         "n1", "n2", "dplus_num", "dminus_num",
-        _pin((F.col("dplus_num").cast("double") + F.col("dminus_num"))
+        half_up((F.col("dplus_num").cast("double") + F.col("dminus_num"))
              / (F.col("n1").cast("double") * F.col("n2"))).alias("kuiper_v"),
     )
 
@@ -625,7 +618,7 @@ def min_variance_two_asset(spark, sf_dir):
     s22 = F.col("n").cast("double") * F.col("syy") - F.col("sy").cast("double") * F.col("sy")
     s12 = F.col("n").cast("double") * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
     w = F.least(F.greatest((s22 - s12) / (s11 + s22 - 2 * s12), F.lit(0.0)), F.lit(1.0))
-    return m.select("n", _pin(w).alias("w_click"), _pin(1.0 - w).alias("w_view"))
+    return m.select("n", half_up(w).alias("w_click"), half_up(1.0 - w).alias("w_view"))
 
 
 # =====================================================================
@@ -739,9 +732,9 @@ def lp_vertex_enumeration(spark, sf_dir):
         .limit(1)
         .select(
             "n_feasible_vertices",
-            _pin(F.col("dxn").cast("double") / F.col("dn")).alias("x"),
-            _pin(F.col("dyn").cast("double") / F.col("dn")).alias("y"),
-            _pin(F.col("obj_scaled").cast("double") / 720720).alias("objective"),
+            half_up(F.col("dxn").cast("double") / F.col("dn")).alias("x"),
+            half_up(F.col("dyn").cast("double") / F.col("dn")).alias("y"),
+            half_up(F.col("obj_scaled").cast("double") / 720720).alias("objective"),
         )
     )
 

@@ -26,15 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t
+from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — HALF_UP display rounding, identical
-    IEEE op sequence on both engines (FIXTURES.md §C)."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 # =====================================================================
@@ -320,7 +313,7 @@ def group_sequential_obf(spark, sf_dir):
     pp = (F.col("h1") + F.col("h2")).cast("double") / (F.col("n1") + F.col("n2"))
     z = (p1 - p2) / F.sqrt(pp * (1.0 - pp) * (1.0 / F.col("n1") + 1.0 / F.col("n2")))
     return agg.select(
-        "k", "n1", "n2", "h1", "h2", _pin(z).alias("z"),
+        "k", "n1", "n2", "h1", "h2", half_up(z).alias("z"),
         (F.abs(z) >= F.col("bound")).alias("crossed"),
     ).orderBy("k")
 
@@ -551,7 +544,7 @@ def storey_pi0_estimate(spark, sf_dir):
     )
     return s.select(
         "m", "n_above",
-        _pin(F.col("n_above").cast("double") / (0.5 * F.col("m"))).alias("pi0"),
+        half_up(F.col("n_above").cast("double") / (0.5 * F.col("m"))).alias("pi0"),
     )
 
 

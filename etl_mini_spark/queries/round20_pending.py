@@ -39,12 +39,6 @@ def pq(name: str, sql: str | None = None):
     return deco
 
 
-def _pin(col, k: int = 6):
-    """floor(x*10^k + 0.5)/10^k — HALF_UP display rounding."""
-    scale = 10 ** k
-    return F.floor(col * scale + F.lit(0.5)) / scale
-
-
 # =====================================================================
 # Block A — Newton integer square root (exact floor-sqrt certificate)
 # =====================================================================

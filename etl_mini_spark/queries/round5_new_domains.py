@@ -1,5 +1,6 @@
 from etl_mini_spark.queries._base import *  # noqa: F401,F403
 from etl_mini_spark.queries._base import _t, _TMP  # noqa: F401
+from etl_mini_spark.operators.graph import pagerank
 
 # New analytics domains (round-5 batch 7): graph algorithms (triangle
 # counting, PageRank), spatial radius joins, edit-distance dedup,
@@ -41,6 +42,15 @@ def _copurchase_edges(spark, sf_dir):
         .filter("w >= 2")
         .select("p1", "p2")
         .localCheckpoint()
+    )
+
+
+def _copurchase_digraph(spark, sf_dir):
+    """Both orientations (p, t) of every co-purchase edge — the
+    symmetrized graph the PageRank entries iterate over."""
+    e = _copurchase_edges(spark, sf_dir)
+    return e.select(F.col("p1").alias("p"), F.col("p2").alias("t")).unionAll(
+        e.select(F.col("p2"), F.col("p1"))
     )
 
 
@@ -134,51 +144,12 @@ _PAGERANK_SQL = f"""
 def graph_pagerank_parts(spark, sf_dir):
     """3-iteration PageRank (d=0.85) over the undirected co-purchase
     graph, top-20 by rank scaled to mean 1. The iterative loop is plain
-    DataFrame joins — each iteration is one shuffle on the edge source
-    plus one on the destination agg; edges/degrees persist across
-    iterations (on a cluster you'd also checkpoint every ~10 iterations
-    to cut lineage). The oracle unrolls the same three iterations as
-    chained CTEs; float drift across engines is ~1 ulp per sum, far
-    below the round-6 output precision. Results ordered on the ROUNDED
+    DataFrame joins (operators/graph.pagerank: one shuffle per
+    iteration, pinned after the third). The oracle unrolls the same
+    three iterations as chained CTEs; float drift across engines is ~1
+    ulp per sum, far below the round-6 output precision. Results ordered on the ROUNDED
     rank so cross-engine tie order is stable."""
-    e = _copurchase_edges(spark, sf_dir)
-    edges = e.select(F.col("p1").alias("p"), F.col("p2").alias("t")).unionAll(
-        e.select(F.col("p2"), F.col("p1"))
-    )
-    # Same loop discipline as graph_pagerank_converged (round6_ops):
-    # one shuffle per iteration (pre-partitioned inverse-degree edges,
-    # base term folded into the aggregate — every node of a symmetrized
-    # graph has in-edges), loop-scoped confs restored after. Took the
-    # 3-iteration loop from ~20s to a few seconds at sf0.01; the
-    # per-sum FP difference (pr * (1/d) vs pr / d) is ~1 ulp, far
-    # below the round-6 output precision.
-    confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "8",
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        deg = edges.groupBy("p").agg((1.0 / F.count("*")).alias("invd"))
-        ej = edges.join(deg, "p").repartition(8, "p").persist()
-        n = float(deg.count())
-        pr = deg.select("p", F.lit(1.0 / n).alias("pr")).localCheckpoint(eager=True)
-        for _ in range(3):
-            pr = (
-                ej.join(pr, "p")
-                .groupBy(F.col("t").alias("p"))
-                .agg(
-                    (F.lit(0.15 / n) + F.lit(0.85) * F.sum(F.col("pr") * F.col("invd"))).alias("pr")
-                )
-            )
-        pr = pr.localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    pr, n = pagerank(_copurchase_digraph(spark, sf_dir), max_iter=3)
     return (
         pr.select(F.col("p").alias("p_partkey"), F.round(F.col("pr") * n, 6).alias("pr_scaled"))
         .orderBy(F.desc("pr_scaled"), "p_partkey")

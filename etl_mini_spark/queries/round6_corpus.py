@@ -1,5 +1,9 @@
+from functools import reduce
+
+from etl_mini_spark.operators.graph import iterate
 from etl_mini_spark.queries._base import *  # noqa: F401,F403
 from etl_mini_spark.queries._base import _t, _TMP  # noqa: F401
+from etl_mini_spark.session import pin
 from etl_mini_spark.queries.round5_new_domains import _EDGE_CTE, _copurchase_edges
 
 # Round-6 batch 2: corpus-internal repeated-span detection, exact sparse
@@ -231,8 +235,9 @@ def graph_khop_reach(spark, sf_dir):
     keeps revisits out of the frontier so work per hop is bounded by
     the true frontier size (the recursive-CTE oracle instead carries
     all (seed,node,hop) walks and min-reduces at the end — fine for an
-    oracle, wrong at scale). Visited/frontier are localCheckpointed
-    per level: 3 sequential stages, lineage stays flat. Oracle: DuckDB
+    oracle, wrong at scale). Each level is a pinned superstep
+    (operators/graph.iterate): 3 sequential stages, lineage stays flat.
+    Oracle: DuckDB
     recursive CTE, min-hop per (seed, node)."""
     e = _copurchase_edges(spark, sf_dir)
     und = e.select(F.col("p1").alias("s"), F.col("p2").alias("d")).unionAll(
@@ -241,22 +246,23 @@ def graph_khop_reach(spark, sf_dir):
     seeds = (
         und.select("s").distinct().orderBy("s").limit(3).select(F.col("s").alias("seed"))
     )
-    visited = seeds.select(
-        "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for h in (1, 2, 3):
+
+    def step(levels):
         nxt = (
-            frontier.join(und, frontier["node"] == und["s"])
+            levels[-1].join(und, F.col("node") == F.col("s"))
             .select("seed", F.col("d").alias("node"))
             .distinct()
-            .join(visited, ["seed", "node"], "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
         )
-        visited = visited.unionAll(nxt)
-        frontier = nxt
-    return visited.groupBy("seed", "hop").agg(F.count("*").alias("n_nodes"))
+        visited = reduce(DataFrame.unionAll, levels).select("seed", "node")
+        nxt = nxt.join(visited, ["seed", "node"], "left_anti")
+        return levels + (nxt.withColumn("hop", F.lit(len(levels))),)
+
+    hop0 = pin(seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("hop")))
+    levels = iterate((hop0,), step, max_iter=3)
+    return (
+        reduce(DataFrame.unionAll, levels)
+        .groupBy("seed", "hop").agg(F.count("*").alias("n_nodes"))
+    )
 
 
 # --- CDC-style snapshot diff ------------------------------------------------

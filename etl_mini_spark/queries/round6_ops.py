@@ -1,6 +1,7 @@
 from etl_mini_spark.queries._base import *  # noqa: F401,F403
 from etl_mini_spark.queries._base import _t, _TMP  # noqa: F401
-from etl_mini_spark.queries.round5_new_domains import _EDGE_CTE, _copurchase_edges
+from etl_mini_spark.operators.graph import pagerank
+from etl_mini_spark.queries.round5_new_domains import _EDGE_CTE, _copurchase_digraph
 from etl_mini_spark.queries.round5_ops import _SCD2_SQL
 
 # Round-6 additions (VERDICT r5 items 5-7): the as-of skew path under
@@ -118,77 +119,17 @@ _PAGERANK_CONV_SQL = f"""
 def graph_pagerank_converged(spark, sf_dir):
     """PageRank iterated to CONVERGENCE (scaled L-inf delta < 1e-9, vs
     graph_pagerank_parts' fixed 3 iterations), top-20 by rank scaled to
-    mean 1. The loop is plain DataFrame joins with
-    ``localCheckpoint(eager=True)`` every ``probe_every`` iterations —
-    without lineage truncation an iterative plan grows unboundedly and
-    the optimizer re-walks ~k² nodes by iteration k; with it each probe
-    job replans from a materialized frame, which is exactly the cadence
-    a 1000-executor run needs (swap localCheckpoint for a reliable
-    ``checkpoint`` dir there so executor loss can't orphan lineage).
-    The delta probe rides the same action that materializes the
-    checkpoint, so convergence testing adds no extra pass over the
-    edges. Oracle: DuckDB recursive CTE unrolled far past both engines'
+    mean 1. The loop (operators/graph.pagerank) is plain DataFrame
+    joins, pinned every 10 iterations — without lineage truncation an
+    iterative plan grows unboundedly and the optimizer re-walks ~k²
+    nodes by iteration k; with it each checkpoint job replans from a
+    materialized frame. The delta probe compares two consecutive
+    checkpoints, so it runs once per 10 iterations. Oracle: DuckDB recursive CTE unrolled far past both engines'
     rounding precision (both land within ~1e-7 of the fixed point;
     output rounds to 4 decimals)."""
-    e = _copurchase_edges(spark, sf_dir)
-    edges = e.select(F.col("p1").alias("p"), F.col("p2").alias("t")).unionAll(
-        e.select(F.col("p2"), F.col("p1"))
+    pr, n = pagerank(
+        _copurchase_digraph(spark, sf_dir), max_iter=200, tol=1e-9, checkpoint_every=10
     )
-    # ~130 power iterations are SEQUENTIAL stages — per-stage latency,
-    # not data volume, is the cost at any SF. Three levers: (1) the
-    # inverse-degree edge list is computed ONCE, hash-partitioned on the
-    # source and persisted, so each iteration's join reuses that
-    # partitioning (the groupBy output is hash(p, N) too → zero extra
-    # exchanges, ONE shuffle per iteration); (2) the base term folds
-    # into the aggregate — in a symmetrized graph every node has
-    # in-edges, so the usual left-join-with-nodes re-distribution step
-    # is provably a no-op and is dropped; (3) loop-scoped confs (AQE off
-    # — per-stage replanning latency dominates at iteration counts like
-    # these; modest fixed partition count), restored after. On a
-    # 1000-executor run you would size LOOP_PARTS to the cluster and
-    # swap localCheckpoint for a reliable checkpoint dir.
-    LOOP_PARTS = 8
-    confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(LOOP_PARTS),
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        deg = edges.groupBy("p").agg((1.0 / F.count("*")).alias("invd"))
-        ej = edges.join(deg, "p").repartition(LOOP_PARTS, "p").persist()
-        n = float(deg.count())
-        pr = deg.select("p", F.lit(1.0 / n).alias("pr")).localCheckpoint(eager=True)
-        probe_every, max_iters, eps_scaled = 10, 200, 1e-9
-        it = 0
-        while it < max_iters:
-            cur = pr
-            for _ in range(probe_every):
-                cur = (
-                    ej.join(cur, "p")
-                    .groupBy(F.col("t").alias("p"))
-                    .agg(
-                        (F.lit(0.15 / n) + F.lit(0.85) * F.sum(F.col("pr") * F.col("invd"))).alias("pr")
-                    )
-                )
-                it += 1
-            cur = cur.localCheckpoint(eager=True)
-            delta = (
-                cur.alias("a")
-                .join(pr.alias("b"), "p")
-                .agg(F.max(F.abs(F.col("a.pr") - F.col("b.pr"))).alias("m"))
-                .first()["m"]
-            )
-            pr = cur
-            if delta * n < eps_scaled:
-                break
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return (
         pr.select(F.col("p").alias("p_partkey"), F.round(F.col("pr") * n, 4).alias("pr_scaled"))
         .orderBy(F.desc("pr_scaled"), "p_partkey")

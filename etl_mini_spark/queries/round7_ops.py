@@ -551,17 +551,17 @@ _SETALL_SQL = """
 
 @pq("set_ops_all", _SETALL_SQL)
 def set_ops_all(spark, sf_dir):
-    """U1 completion: INTERSECT ALL / EXCEPT ALL — bag semantics with
-    true multiplicities (min(m_a, m_b) and m_a − m_b), which the
-    DISTINCT set-op entries cannot exercise. Both ops compute from ONE
-    scan and ONE shuffle: a (user, type) aggregate counts each side's
-    multiplicity with conditional counts, and the surviving rows
-    explode as (op, multiplicity) pairs — INTERSECT ALL keeps
-    min(m_a, m_b) > 0, EXCEPT ALL keeps m_a − m_b > 0, exactly the
-    multiplicities the engine set-ops produce (they replicate rows
-    this same way internally; the previous shape scanned events 4x
-    and shuffled twice, guide 2.4). Output is (row, multiplicity) so
-    the hash compare is order-free."""
+    """U1 completion: INTERSECT ALL / EXCEPT ALL results — bag
+    semantics with true multiplicities (min(m_a, m_b) and m_a − m_b).
+    This entry does NOT call the engine's ``intersectAll`` /
+    ``exceptAll``: both results come from ONE scan and ONE shuffle — a
+    (user, type) aggregate counts each side's multiplicity with
+    conditional counts, and the surviving rows explode as (op,
+    multiplicity) pairs: INTERSECT ALL keeps min(m_a, m_b) > 0, EXCEPT
+    ALL keeps m_a − m_b > 0 (the set-op formulation scanned events 4x
+    and shuffled twice, guide 2.4). The DataFrame set-ops themselves
+    are checked against DuckDB in tests/test_operators.py. Output is
+    (row, multiplicity) so the hash compare is order-free."""
     ev = _t(spark, sf_dir, "events")
     cnt = ev.groupBy("user_id", "event_type").agg(
         F.count(F.when(F.expr("event_id % 3 <> 0"), 1)).alias("ma"),

@@ -880,7 +880,9 @@ def dq_referential_integrity(spark, sf_dir):
     fact row with no match counts toward the orphan sum, a key row
     with no match counts toward the childless/orderless count —
     row-identical to the four original anti joins (a NULL fact key
-    matches nothing in either formulation), but each table pair is
+    matches nothing in either formulation; its group is an orphan, so
+    a key row is recognised as unmatched by its NULL per-key count,
+    never by the NULL fact key), but each table pair is
     scanned and shuffled once instead of twice, and the fact side
     shuffles its per-key COUNT, not its rows (guide 2.3/2.4). Counts
     assembled via a 1-row cross of scalar aggregates."""
@@ -895,7 +897,7 @@ def dq_referential_integrity(spark, sf_dir):
             F.coalesce(
                 F.sum(F.when(F.col("o_orderkey").isNull(), F.col("n_li"))), F.lit(0)
             ).cast("bigint").alias("n_orphan_lineitems"),
-            F.count(F.when(F.col("l_orderkey").isNull(), 1)).alias("n_childless_orders"),
+            F.count(F.when(F.col("n_li").isNull(), 1)).alias("n_childless_orders"),
         )
     )
     og = o.groupBy("o_custkey").agg(F.count("*").alias("n_o"))
@@ -905,7 +907,7 @@ def dq_referential_integrity(spark, sf_dir):
             F.coalesce(
                 F.sum(F.when(F.col("c_custkey").isNull(), F.col("n_o"))), F.lit(0)
             ).cast("bigint").alias("n_customerless_orders"),
-            F.count(F.when(F.col("o_custkey").isNull(), 1)).alias("n_orderless_customers"),
+            F.count(F.when(F.col("n_o").isNull(), 1)).alias("n_orderless_customers"),
         )
     )
     return li_o.crossJoin(o_c).select(

@@ -58,7 +58,9 @@ def get_spark(
 def pin(df, eager: bool = True):
     """Materialize ``df`` once and truncate its lineage — the §3.3
     "checkpoint a multiply-referenced intermediate" primitive used by
-    the dedup/graph/stats operators.
+    the dedup/graph/stats operators. Superstep loops do not call it
+    per round themselves: ``operators.graph.iterate`` pins their state
+    at its checkpoint cadence, so every loop checkpoint lands here.
 
     Default: ``localCheckpoint`` (executor-local shuffle/storage blocks
     — no extra I/O round trip). CAVEAT: localCheckpoint is NOT resilient

@@ -1269,3 +1269,170 @@ def test_sweep_rejects_unknown_flags():
     )
     assert r.returncode != 0
     assert "unknown flags: ['--bar']" in (r.stderr + r.stdout)
+
+
+def test_intersect_except_all_match_duckdb(spark):
+    """The DataFrame bag set-ops (intersectAll / exceptAll) against
+    DuckDB's INTERSECT ALL / EXCEPT ALL on an sf0.001 events slice
+    whose (user, type) rows repeat: per-row multiplicities must agree.
+    set_ops_all computes the same multiplicities without these
+    operators, so this is their only oracle check."""
+    from etl_mini_spark.session import load_table
+    from tests.oracle_harness import duck_connection
+
+    ev = load_table(spark, SF_SMOKE, "events").filter("event_id < 600")
+    a = ev.filter("event_id % 3 <> 0").select("user_id", "event_type")
+    b = ev.filter("event_id % 2 <> 0").select("user_id", "event_type")
+    con = duck_connection(SF_SMOKE)
+    try:
+        for name, got_df, op in (
+            ("intersect", a.intersectAll(b), "INTERSECT ALL"),
+            ("except", a.exceptAll(b), "EXCEPT ALL"),
+        ):
+            got = {
+                (r["user_id"], r["event_type"]): r["n"]
+                for r in got_df.groupBy("user_id", "event_type").count()
+                .withColumnRenamed("count", "n").collect()
+            }
+            want = {
+                (u, t): n
+                for u, t, n in con.execute(f"""
+                    SELECT user_id, event_type, count(*) FROM (
+                      SELECT user_id, event_type FROM events
+                       WHERE event_id < 600 AND event_id % 3 <> 0
+                      {op}
+                      SELECT user_id, event_type FROM events
+                       WHERE event_id < 600 AND event_id % 2 <> 0)
+                    GROUP BY 1, 2""").fetchall()
+            }
+            assert got == want, name
+            assert any(n > 1 for n in want.values()), name  # multiplicity exercised
+    finally:
+        con.close()
+
+
+# --- superstep driver (operators/graph.py) ----------------------------------
+
+
+def _counter_state(spark, x=0):
+    return spark.createDataFrame([(x,)], "x int")
+
+
+def _incr(df):
+    return df.select((F.col("x") + 1).alias("x"))
+
+
+def test_iterate_stops_when_until_holds(spark):
+    from etl_mini_spark.operators.graph import iterate
+
+    steps = []
+
+    def step(df):
+        steps.append(1)
+        return _incr(df)
+
+    out = iterate(
+        _counter_state(spark), step, max_iter=10,
+        until=lambda prev, cur: cur.first()["x"] >= 3,
+    )
+    assert out.first()["x"] == 3 and len(steps) == 3
+
+
+def test_iterate_checks_until_only_at_checkpoints(spark):
+    from etl_mini_spark.operators.graph import iterate
+
+    seen = []
+
+    def until(prev, cur):
+        seen.append((prev.first()["x"], cur.first()["x"]))
+        return cur.first()["x"] >= 5
+
+    out = iterate(_counter_state(spark), _incr, max_iter=10, until=until, checkpoint_every=2)
+    # prev is the previous checkpoint (the initial state first), and the
+    # loop overshoots to the first checkpoint at which until holds
+    assert seen == [(0, 2), (2, 4), (4, 6)] and out.first()["x"] == 6
+
+
+def test_iterate_raises_when_never_converged(spark):
+    from etl_mini_spark.operators.graph import iterate
+
+    with pytest.raises(RuntimeError, match="did not converge in 3 supersteps"):
+        iterate(_counter_state(spark), _incr, max_iter=3, until=lambda prev, cur: False)
+    # without until, max_iter supersteps is the contract, not a failure
+    assert iterate(_counter_state(spark), _incr, max_iter=3).first()["x"] == 3
+
+
+def test_loop_confs_restored_after_step_raises(spark):
+    from etl_mini_spark.operators.graph import iterate, loop_confs
+
+    before = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    }
+    inside = {}
+
+    def step(df):
+        inside.update({k: spark.conf.get(k) for k in before})
+        raise ValueError("step failed")
+
+    with pytest.raises(ValueError, match="step failed"):
+        with loop_confs(spark, 3):
+            iterate(_counter_state(spark), step, max_iter=5)
+    assert inside == {
+        "spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "3"
+    }
+    assert {k: spark.conf.get(k) for k in before} == before
+
+
+def test_iterate_pins_through_session_pin(spark, monkeypatch, tmp_path):
+    """Every checkpoint goes through session.pin, so the
+    SPARK_GRAFT_RELIABLE_CHECKPOINT switch reaches superstep loops:
+    with it set, no localCheckpoint runs at all. Only DataFrames a
+    superstep produced anew are pinned; carried-over ones are not."""
+    from etl_mini_spark import session
+    from etl_mini_spark.operators.dedup import connected_components
+    from etl_mini_spark.operators.graph import iterate
+
+    pins = []
+    real_pin = session.pin
+
+    def counting_pin(df, eager=True):
+        pins.append(df)
+        return real_pin(df, eager)
+
+    monkeypatch.setattr(session, "pin", counting_pin)
+    carried = _counter_state(spark, 100)
+    out = iterate(
+        (_counter_state(spark), carried, "tag"),
+        lambda s: (_incr(s[0]), s[1], s[2]),
+        max_iter=5, checkpoint_every=2,
+    )
+    assert len(pins) == 3  # supersteps 2, 4 and the last (5)
+    assert out[1] is carried and out[2] == "tag" and out[0].first()["x"] == 5
+
+    # a ported operator: a 7-node chain converges in 6 rounds + 1
+    # no-change round, one pin each
+    pins.clear()
+    chain = spark.createDataFrame([(i, i + 1) for i in range(1, 7)], ["d1", "d2"])
+    assert {r["comp"] for r in connected_components(chain).collect()} == {1}
+    assert len(pins) == 7
+
+    def no_local(self, eager=True):
+        raise AssertionError("localCheckpoint under SPARK_GRAFT_RELIABLE_CHECKPOINT")
+
+    reliable = []
+    frame_cls = type(carried)  # the session's concrete DataFrame class
+    real_checkpoint = frame_cls.checkpoint
+
+    def spy_checkpoint(self, eager=True):
+        reliable.append(self)
+        return real_checkpoint(self, eager)
+
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", str(tmp_path))
+    monkeypatch.setattr(frame_cls, "localCheckpoint", no_local)
+    monkeypatch.setattr(frame_cls, "checkpoint", spy_checkpoint)
+    pins.clear()
+    out = iterate(_counter_state(spark), _incr, max_iter=3)
+    assert out.first()["x"] == 3
+    assert len(pins) == 3 and len(reliable) == 3
+    assert spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()

@@ -498,3 +498,39 @@ def test_temporal_split_ranges_disjoint_and_leakage_real(spark):
         assert r["n_rows"] > 0 and r["n_users"] > 0
         assert 0 < r["n_leaked_users"] <= r["n_users"]
     assert rows["train"]["n_leaked_users"] == rows["test"]["n_leaked_users"]
+
+
+def test_referential_integrity_null_foreign_keys(spark, tmp_path):
+    """dq_referential_integrity on a NULL-foreign-key copy of sf0.001:
+    a group of NULL fact keys is an orphan, never also a childless
+    order or an orderless customer. The four counters must equal the
+    DuckDB anti-join oracle, NULL keys included."""
+    import duckdb
+
+    from etl_mini_spark.queries.round8_ops import _REFINT_SQL
+    from tests.oracle_harness import duck_connection
+
+    src = f"read_parquet('{SF_SMOKE}/{{t}}.parquet')"
+    nulled = {
+        "lineitem": "CASE WHEN l_linenumber = 3 THEN NULL ELSE l_orderkey END AS l_orderkey",
+        "orders": "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END AS o_custkey",
+        "customer": "CASE WHEN c_custkey % 11 = 0 THEN NULL ELSE c_custkey END AS c_custkey",
+    }
+    con = duckdb.connect()
+    for t, col in nulled.items():
+        con.execute(
+            f"COPY (SELECT * REPLACE ({col}) FROM {src.format(t=t)}) "
+            f"TO '{tmp_path}/{t}.parquet' (FORMAT PARQUET)"
+        )
+    con.close()
+
+    con = duck_connection(str(tmp_path))
+    try:
+        want = con.execute(_REFINT_SQL).fetchdf().iloc[0].to_dict()
+        assert con.execute(
+            "SELECT count(*) FILTER (l_orderkey IS NULL) FROM lineitem"
+        ).fetchone()[0] > 0
+    finally:
+        con.close()
+    got = QUERIES["dq_referential_integrity"](spark, str(tmp_path)).collect()[0].asDict()
+    assert got == {k: int(v) for k, v in want.items()}
