@@ -86,10 +86,11 @@ def upsert_parquet(
     (the stage dir holds the full merged result); a transactional
     format (Delta/Iceberg MERGE) removes the window entirely."""
     from etl_mini_spark.sources.fs import fs_delete, fs_exists, fs_rename
+    from etl_mini_spark.sources.readers import read_parquet
 
     existed = fs_exists(spark, target_path)
     if existed:
-        target = spark.read.parquet(target_path)
+        target = read_parquet(spark, target_path)
         merged = merge_upsert(target, source, keys, update_columns, conflict_action)
     else:
         merged = source

@@ -18,6 +18,7 @@ from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 
 from etl_mini_spark.operators.upsert import upsert_parquet
+from etl_mini_spark.sources.readers import read_parquet
 
 SCHEMA = "pipeline_name string, window_start timestamp, window_end timestamp, updated_at timestamp"
 
@@ -31,7 +32,7 @@ class CheckpointTable:
         """The committed high-water mark, or None on first run."""
         if not Path(self.path).exists():
             return None
-        df = self.spark.read.parquet(self.path)
+        df = read_parquet(self.spark, self.path)
         row = (
             df.filter(F.col("pipeline_name") == pipeline_name)
             .agg(F.max("window_end").alias("we"))

@@ -110,7 +110,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one of the driver-provided parquet tables (TESTDATA.md).
 
     Handles nanosecond-timestamp columns (events.ts) regardless of how
-    the calling SparkSession was configured — see sources/readers.py."""
+    the calling SparkSession was configured. Runs no Spark job when the
+    table was loaded before and its files are unchanged: ``read_parquet``
+    caches the inferred schema keyed on the path and invalidated by the
+    files' (name, mtime_ns, size); remote paths always infer — see
+    sources/readers.py."""
     from etl_mini_spark.sources.readers import read_parquet
 
     # Timestamp-derivation parity requires a pinned session TZ even when

@@ -12,11 +12,18 @@ schema-explicit Spark reads.
 - ``read_ndjson`` ≡ parse_json_lines input (data_processing.py:18-60).
 
 Explicit schemas everywhere: schema inference is a full extra pass over
-the data at 100 TB and can silently drift between runs.
+the data at 100 TB and can silently drift between runs. Parquet carries
+its schema in the file footers, so ``read_parquet`` infers it once per
+table version instead of once per read: the inferred schema is cached
+per local path with the fingerprint (name, mtime_ns, size) of the files
+Spark would scan, and a changed fingerprint re-infers. Remote paths
+(``s3a://``, ``hdfs://``) are not listed and infer on every read.
 """
 
 from __future__ import annotations
 
+import json
+import os
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -96,31 +103,59 @@ def read_ndjson(spark: SparkSession, path: str, schema: T.StructType | None = No
     return reader.schema(schema).json(path) if schema is not None else reader.json(path)
 
 
-_NS_COLS_CACHE: dict[str, list[str]] = {}
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# path -> (fingerprint, Spark's inferred schema, TIMESTAMP(NANOS) columns).
+# Entries are replaced whole and the fingerprint is taken before the
+# inference, so an entry is never newer than its schema and concurrent
+# readers need no lock: a racing rewrite only causes one more miss.
+_FOOTERS: dict[str, tuple[tuple, T.StructType, list[str]]] = {}
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Column names stored as parquet TIMESTAMP(NANOS) — Spark cannot
+def _hidden(name: str) -> bool:
+    """Spark's listing rule: ``_SUCCESS``, ``.crc`` and other ``_``/``.``
+    names are not data; ``_`` names holding ``=`` are partition dirs."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(root: Path) -> list[str]:
+    """The files Spark would scan for ``root``: the file itself, or every
+    non-hidden file under a table directory (partition dirs included)."""
+    if not root.is_dir():
+        return [str(root)]
+    files = []
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if not _hidden(n)]
+        files += [os.path.join(d, n) for n in names if not _hidden(n)]
+    return sorted(files)
+
+
+def _fingerprint(files: list[str]) -> tuple:
+    """(name, mtime_ns, size) of every data file: any rewrite, added or
+    removed file changes it. Raises FileNotFoundError for a missing
+    path, before any Spark call."""
+    return tuple((f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)])
+
+
+def _nanos_timestamp_cols(file: str) -> list[str]:
+    """Top-level columns stored as INT64 TIMESTAMP(NANOS) — Spark cannot
     read those natively (PARQUET_TYPE_ILLEGAL); we read them as long
-    via the legacy conf and convert to µs timestamps ourselves."""
-    if path not in _NS_COLS_CACHE:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    via the legacy conf and convert to µs timestamps ourselves.
 
-        probe = Path(path.removeprefix("file://"))
-        if probe.is_dir():
-            parts = sorted(probe.glob("*.parquet")) or sorted(probe.rglob("*.parquet"))
-            if not parts:
-                _NS_COLS_CACHE[path] = []
-                return _NS_COLS_CACHE[path]
-            probe = parts[0]
-        schema = pq.read_schema(probe)
-        _NS_COLS_CACHE[path] = [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    return _NS_COLS_CACHE[path]
+    Classified from the parquet schema, not the arrow one: pyarrow also
+    reports INT96 (Spark's default timestamp encoding) as
+    ``timestamp[ns]``, and Spark reads INT96 natively as TIMESTAMP."""
+    import pyarrow.parquet as pq
+
+    schema = pq.read_metadata(file).schema
+    cols = []
+    for c in (schema.column(i) for i in range(len(schema))):
+        logical = json.loads(c.logical_type.to_json())
+        if (c.path == c.name and c.physical_type == "INT64"
+                and logical.get("Type") == "Timestamp"
+                and logical.get("timeUnit") == "nanoseconds"):
+            cols.append(c.name)
+    return cols
 
 
 @contextmanager
@@ -156,10 +191,56 @@ def _force_ltz_timestamps(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
+def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """The raw parquet scan of ``path`` (TIMESTAMP(NANOS) columns still
+    int64) and the names of those columns — see ``read_parquet``."""
+    if "://" in path and not path.startswith("file://"):
+        with _force_ltz_timestamps(spark):
+            return spark.read.parquet(path), []
+    files = _data_files(Path(path.removeprefix("file://")))
+    fingerprint = _fingerprint(files)
+    cached = _FOOTERS.get(path)
+    if cached is not None and cached[0] == fingerprint:
+        _, schema, ns_cols = cached
+        if ns_cols:
+            spark.conf.set(_NANOS_AS_LONG, "true")
+        return spark.read.schema(schema).parquet(path), ns_cols
+    probe = next((f for f in files if f.endswith(".parquet")), files[0] if files else None)
+    ns_cols = _nanos_timestamp_cols(probe) if probe else []
+    if ns_cols:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    with _force_ltz_timestamps(spark):
+        df = spark.read.parquet(path)
+    _FOOTERS[path] = (fingerprint, df.schema, ns_cols)
+    return df, ns_cols
+
+
+def _nanos_to_micros(df: DataFrame, ns_cols: list[str]) -> DataFrame:
+    """int64 epoch-ns → µs TIMESTAMP with integer DIV (ns epochs overflow
+    a double mantissa)."""
+    return df.withColumns(
+        {c: F.expr(f"timestamp_micros(`{c}` DIV 1000)") for c in ns_cols}
+    )
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan, tolerant of TIMESTAMP(NANOS) columns: those are
-    read as long (legacy conf) and converted to µs timestamps with
-    integer DIV (ns epochs overflow a double mantissa).
+    """Parquet scan that reuses the table's inferred schema while its
+    files are unchanged, and tolerates TIMESTAMP(NANOS) columns.
+
+    Schema cache: for a local path (plain or ``file://``) the entry is
+    keyed by the path string and holds the fingerprint of the files
+    Spark would scan — ``(name, mtime_ns, size)`` of the file, or of
+    every data file under a table directory — Spark's inferred
+    ``StructType`` and the NANOS column list. A matching fingerprint
+    reads with ``.schema(cached)``, which runs no Spark job; a missing
+    or changed one infers as usual (one footer job) and replaces the
+    entry, so a rewritten table is re-inferred and each path keeps one
+    entry. Remote paths (``s3a://``, ``hdfs://``) are not listed and
+    always infer.
+
+    TIMESTAMP(NANOS) columns are read as long (legacy conf) and
+    converted to µs timestamps. Naive timestamps read as session-tz
+    TIMESTAMP, not TIMESTAMP_NTZ (``_force_ltz_timestamps``).
 
     NOTE: when ns columns are present, ``nanosAsLong`` stays set on the
     session — that conf is consulted at EXECUTION time (not just schema
@@ -167,16 +248,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     deferred scan. It is additive-safe: it only affects parquet files
     that actually contain TIMESTAMP(NANOS), which Spark cannot read at
     all without it."""
-    ns_cols = _nanos_timestamp_cols(path) if "://" not in path or path.startswith("file://") else []
-    if not ns_cols:
-        with _force_ltz_timestamps(spark):
-            return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    with _force_ltz_timestamps(spark):
-        df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
-    return df
+    return _nanos_to_micros(*_scan(spark, path))
 
 
 def read_parquet_ts_range(
@@ -187,7 +259,8 @@ def read_parquet_ts_range(
     end=None,
 ) -> DataFrame:
     """Half-open time-range scan ``[start, end)`` with the predicate
-    PUSHED INTO the parquet scan.
+    PUSHED INTO the parquet scan; otherwise reads exactly as
+    ``read_parquet`` (same schema cache, same timestamp types).
 
     A filter applied after the ns→µs conversion wraps the column in
     ``timestamp_micros(... DIV 1000)`` — Catalyst cannot push that
@@ -204,22 +277,10 @@ def read_parquet_ts_range(
             dt = dt.replace(tzinfo=timezone.utc)
         return int(dt.timestamp() * 1_000_000) * 1000
 
-    _force_ltz_timestamps(spark)
-    ns_cols = _nanos_timestamp_cols(path) if "://" not in path or path.startswith("file://") else []
-    if ts_col not in ns_cols:
-        df = read_parquet(spark, path)
-        if start is not None:
-            df = df.filter(F.col(ts_col) >= F.lit(start))
-        if end is not None:
-            df = df.filter(F.col(ts_col) < F.lit(end))
-        return df
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df, ns_cols = _scan(spark, path)
+    bound = _ns if ts_col in ns_cols else (lambda v: v)
     if start is not None:
-        df = df.filter(F.col(ts_col) >= F.lit(_ns(start)))
+        df = df.filter(F.col(ts_col) >= F.lit(bound(start)))
     if end is not None:
-        df = df.filter(F.col(ts_col) < F.lit(_ns(end)))
-    for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
-    return df
+        df = df.filter(F.col(ts_col) < F.lit(bound(end)))
+    return _nanos_to_micros(df, ns_cols)
