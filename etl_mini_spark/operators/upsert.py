@@ -77,25 +77,22 @@ def upsert_parquet(
 ) -> None:
     """Merge ``source`` into the parquet table at ``target_path``.
 
-    Write-stage-swap: the merge result lands in ``{path}__stage`` and is
-    only then swapped over the target, so a mid-write failure leaves the
-    original intact and a retry is idempotent. All path operations go
-    through the Hadoop FileSystem API (sources/fs.py) — the same code
-    path works on file://, hdfs://, and s3a:// targets, not just local
-    disk. The crash window between delete and rename is recoverable
-    (the stage dir holds the full merged result); a transactional
-    format (Delta/Iceberg MERGE) removes the window entirely."""
-    from etl_mini_spark.sources.fs import fs_delete, fs_exists, fs_rename
+    Write-stage-swap through ``sources.fs.replace_parquet``: the merge
+    result lands in ``{path}__stage`` and is only then swapped over the
+    target, so a mid-write failure leaves the original intact and a
+    retry is idempotent. All path operations go through the Hadoop
+    FileSystem API — the same code path works on file://, hdfs://, and
+    s3a:// targets, not just local disk. A crash between the delete and
+    the rename is recovered by ``replace_parquet`` on the next call,
+    before the target is read; a transactional format (Delta/Iceberg
+    MERGE) removes the window entirely."""
+    from etl_mini_spark.sources.fs import replace_parquet
     from etl_mini_spark.sources.readers import read_parquet
 
-    existed = fs_exists(spark, target_path)
-    if existed:
+    def merged(exists: bool) -> DataFrame:
+        if not exists:
+            return source
         target = read_parquet(spark, target_path)
-        merged = merge_upsert(target, source, keys, update_columns, conflict_action)
-    else:
-        merged = source
-    stage = target_path.rstrip("/") + "__stage"
-    merged.write.mode("overwrite").parquet(stage)
-    if existed:
-        fs_delete(spark, target_path)
-    fs_rename(spark, stage, target_path)
+        return merge_upsert(target, source, keys, update_columns, conflict_action)
+
+    replace_parquet(spark, target_path, merged)

@@ -8,17 +8,20 @@ run upserts (window_start, window_end, updated_at). The incremental
 contract: the next run's half-open window starts at the last committed
 ``window_end`` — a failed or skipped run leaves the checkpoint
 untouched, so retries re-extract the same window (idempotent together
-with an upsert/overwrite sink)."""
+with an upsert/overwrite sink).
+
+The table holds one row per pipeline and its schema is fixed here
+(``SCHEMA``), so it is read with that schema — no inference job — and a
+read is one Spark job with one task. A commit builds its row in the JVM
+(no Python worker) and rewrites the table as one part file in one job
+with one task."""
 
 from __future__ import annotations
 
-from pathlib import Path
-
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_mini_spark.operators.upsert import upsert_parquet
-from etl_mini_spark.sources.readers import read_parquet
+from etl_mini_spark.sources.fs import fs_create_marker, fs_delete, fs_exists, replace_parquet
 
 SCHEMA = "pipeline_name string, window_start timestamp, window_end timestamp, updated_at timestamp"
 
@@ -28,21 +31,36 @@ class CheckpointTable:
         self.spark = spark
         self.path = path
 
+    def _rows(self) -> DataFrame:
+        return self.spark.read.schema(SCHEMA).parquet(self.path)
+
     def last_window_end(self, pipeline_name: str):
-        """The committed high-water mark, or None on first run."""
-        if not Path(self.path).exists():
+        """The committed high-water mark, or None on first run.
+
+        One Spark job: the pipeline's ``window_end`` values are collected
+        and their max taken on the driver, so no aggregate (and no
+        shuffle stage) runs. The path may be local or any Hadoop
+        filesystem URI (``file://``, ``hdfs://``, ``s3a://``)."""
+        if not fs_exists(self.spark, self.path):
             return None
-        df = read_parquet(self.spark, self.path)
-        row = (
-            df.filter(F.col("pipeline_name") == pipeline_name)
-            .agg(F.max("window_end").alias("we"))
-            .collect()[0]
+        ends = (
+            self._rows()
+            .filter(F.col("pipeline_name") == pipeline_name)
+            .select("window_end")
+            .collect()
         )
-        return row["we"]
+        return max((r[0] for r in ends if r[0] is not None), default=None)
 
     def commit(self, pipeline_name: str, window_start, window_end) -> None:
         """Upsert this pipeline's checkpoint row (conflict column:
         pipeline_name — ≡ the reference's ON CONFLICT key).
+
+        The row is a literal projection built in the JVM. The new table
+        is the other pipelines' rows plus this row, coalesced to one
+        part file and swapped in through ``sources.fs.replace_parquet``:
+        one Spark job with one task. For a unique key and a one-row
+        source this is exactly the keyed upsert (a left-anti join on a
+        literal key is a ``!=`` filter).
 
         Concurrency contract: commits are serialized by an advisory
         lock marker (atomic create). A second commit that catches the
@@ -53,8 +71,6 @@ class CheckpointTable:
         crashed committer leaves a stale lock; operators remove
         ``{path}.lock`` manually after verifying no commit is running
         (a transactional format removes the lock entirely)."""
-        from etl_mini_spark.sources.fs import fs_create_marker, fs_delete
-
         lock = self.path.rstrip("/") + ".lock"
         if not fs_create_marker(self.spark, lock):
             raise ConcurrentCommitError(
@@ -63,11 +79,20 @@ class CheckpointTable:
                 "stale lock left by a crashed committer"
             )
         try:
-            row = self.spark.createDataFrame(
-                [Row(pipeline_name=pipeline_name, window_start=window_start, window_end=window_end)],
-                schema="pipeline_name string, window_start timestamp, window_end timestamp",
-            ).withColumn("updated_at", F.current_timestamp())
-            upsert_parquet(self.spark, self.path, row, keys=["pipeline_name"])
+            row = self.spark.range(1).select(
+                F.lit(pipeline_name).alias("pipeline_name"),
+                F.lit(window_start).cast("timestamp").alias("window_start"),
+                F.lit(window_end).cast("timestamp").alias("window_end"),
+                F.current_timestamp().alias("updated_at"),
+            )
+
+            def table(exists: bool) -> DataFrame:
+                if exists:
+                    others = self._rows().filter(F.col("pipeline_name") != pipeline_name)
+                    return others.unionByName(row).coalesce(1)
+                return row.coalesce(1)
+
+            replace_parquet(self.spark, self.path, table)
         finally:
             fs_delete(self.spark, lock)
 

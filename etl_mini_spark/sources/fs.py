@@ -1,6 +1,7 @@
 """Hadoop-FileSystem helpers — the object-store-safe file plumbing.
 
-Stage-swap (`upsert_parquet`) and the ``latest`` manifest
+The stage-swap (`replace_parquet`, behind `upsert_parquet`, the
+checkpoint commit and `compact_parquet`) and the ``latest`` manifest
 (`write_run_layout`) must work where the data lives: HDFS, S3A, GCS,
 ABFS, or local disk. ``shutil``/``pathlib`` only speak the local
 filesystem, so all path manipulation goes through the JVM's
@@ -15,14 +16,18 @@ Atomicity notes, because they differ per backend and matter at scale:
   non-atomic swap window is milliseconds, and readers that lose the
   race simply retry the read.
 - The stage-swap's crash window (target deleted, stage not yet renamed)
-  is recoverable: the stage dir holds the complete merged result, so a
-  retry of the rename completes the operation — nothing is lost. On
-  Delta/Iceberg targets, use their transactional MERGE instead.
+  is recovered by the next :func:`replace_parquet` on that path: a
+  missing target whose stage holds ``_SUCCESS`` is the complete result
+  of the interrupted write, so it is renamed into place before anything
+  reads the target. On Delta/Iceberg targets, use their transactional
+  MERGE instead.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -60,6 +65,32 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
     _, d = _fs_and_path(spark, dst)
     if not fs.rename(s, d):
         raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def replace_parquet(
+    spark: SparkSession, path: str, build: Callable[[bool], DataFrame]
+) -> None:
+    """Replace the parquet table at ``path`` with ``build(exists)``.
+
+    Stage-then-swap: the new table is written to ``{path}__stage`` and
+    only then swapped over the target, so a failed write leaves the
+    target intact. ``build`` is told whether the target exists and may
+    read it: its plan runs in full before the target is deleted.
+
+    A swap a crash cut between the delete and the rename is finished
+    first: when the target is missing and the stage holds ``_SUCCESS``,
+    the stage is the complete table and is renamed into place before
+    ``build`` runs. A stage without ``_SUCCESS`` is a write that did not
+    finish; it is never promoted, only overwritten."""
+    stage = path.rstrip("/") + "__stage"
+    exists = fs_exists(spark, path)
+    if not exists and fs_exists(spark, stage + "/_SUCCESS"):
+        fs_rename(spark, stage, path)
+        exists = True
+    build(exists).write.mode("overwrite").parquet(stage)
+    if exists:
+        fs_delete(spark, path)
+    fs_rename(spark, stage, path)
 
 
 def fs_write_text(spark: SparkSession, path: str, content: str) -> None:

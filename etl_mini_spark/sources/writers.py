@@ -159,26 +159,24 @@ def compact_parquet(
     files; scans then pay per-file open cost and lose row-group
     pruning). Sizing comes from the Hadoop FS content summary (works on
     file://, hdfs://, s3a://); the rewrite goes through the same
-    stage-swap as upsert_parquet so readers never see a half-compacted
-    dataset. With ``sort_col`` the rewrite also range-sorts (see
-    write_sorted_for_skipping) so compaction doubles as a clustering
-    pass."""
+    stage-swap as upsert_parquet (``sources.fs.replace_parquet``) so
+    readers never see a half-compacted dataset. With ``sort_col`` the
+    rewrite also range-sorts (see write_sorted_for_skipping) so
+    compaction doubles as a clustering pass."""
     import math
 
-    from etl_mini_spark.sources.fs import _fs_and_path, fs_delete, fs_rename
+    from etl_mini_spark.sources.fs import _fs_and_path, replace_parquet
 
-    fs, p = _fs_and_path(spark, path)
-    size_bytes = fs.getContentSummary(p).getLength()
-    n_files = max(1, math.ceil(size_bytes / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    if sort_col is not None:
-        out = df.repartitionByRange(n_files, F.col(sort_col)).sortWithinPartitions(sort_col)
-    else:
-        out = df.repartition(n_files)
-    stage = path.rstrip("/") + "__compact"
-    out.write.mode("overwrite").parquet(stage)
-    fs_delete(spark, path)
-    fs_rename(spark, stage, path)
+    def compacted(exists: bool) -> DataFrame:
+        fs, p = _fs_and_path(spark, path)
+        size_bytes = fs.getContentSummary(p).getLength()
+        n_files = max(1, math.ceil(size_bytes / (target_mb * 1024 * 1024)))
+        df = spark.read.parquet(path)
+        if sort_col is not None:
+            return df.repartitionByRange(n_files, F.col(sort_col)).sortWithinPartitions(sort_col)
+        return df.repartition(n_files)
+
+    replace_parquet(spark, path, compacted)
     fs, p = _fs_and_path(spark, path)
     return sum(
         1 for s in fs.listStatus(p) if s.getPath().getName().startswith("part-")

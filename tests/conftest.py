@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -26,3 +27,19 @@ def spark():
     )
     yield s
 
+
+_GROUPS = itertools.count()
+
+
+def run_in_job_group(spark, fn):
+    """(fn(), ids of the Spark jobs fn started), counted under a job group."""
+    sc = spark.sparkContext
+    group = f"tests-{next(_GROUPS)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -3,12 +3,13 @@
 from __future__ import annotations
 
 import json
+from datetime import datetime
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, run_in_job_group
 
 TMP = Path("/root/repo/tmp/testruns")
 
@@ -187,6 +188,87 @@ def test_checkpoint_concurrent_commit_fails_loudly(spark, tmp_path):
     assert not fs_exists(spark, path + ".lock")
 
 
+def test_checkpoint_on_a_hadoop_uri(spark, tmp_path):
+    """A ``file://`` (or hdfs://, s3a://) checkpoint reads back what it
+    committed; a local-only existence test saw no table there, so every
+    incremental run re-extracted from the start."""
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    ck = CheckpointTable(spark, f"file://{tmp_path}/ck")
+    assert ck.last_window_end("p") is None
+    ck.commit("p", None, datetime(2024, 1, 2))
+    assert ck.last_window_end("p") == datetime(2024, 1, 2)
+
+
+def test_checkpoint_read_and_commit_run_one_job_each(spark, tmp_path):
+    """One pipeline's checkpoint row costs one Spark job to read and one
+    single-task job to commit, on a table holding other pipelines' rows,
+    and the commit leaves one part file with every pipeline's row."""
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    path = tmp_path / "ck"
+    ck = CheckpointTable(spark, str(path))
+    ck.commit("a", None, datetime(2024, 1, 1))
+    ck.commit("b", None, datetime(2024, 2, 1))
+
+    end, read_jobs = run_in_job_group(spark, lambda: ck.last_window_end("a"))
+    assert end == datetime(2024, 1, 1) and len(read_jobs) == 1
+
+    _, commit_jobs = run_in_job_group(spark, lambda: ck.commit("a", end, datetime(2024, 1, 5)))
+    tracker = spark.sparkContext.statusTracker()
+    tasks = sum(tracker.getStageInfo(s).numTasks
+                for j in commit_jobs for s in tracker.getJobInfo(j).stageIds)
+    assert (len(commit_jobs), tasks) == (1, 1)
+    assert len(list(path.glob("part-*"))) == 1
+    assert ck.last_window_end("a") == datetime(2024, 1, 5)
+    assert ck.last_window_end("b") == datetime(2024, 2, 1)
+
+
+def test_checkpoint_reads_a_table_of_python_rows_in_int96(spark, tmp_path):
+    """A table committed from Python-row DataFrames, in several part
+    files with INT96 timestamps, reads back the same and takes new
+    commits."""
+    from pyspark.sql import Row
+
+    from etl_mini_spark.plans.checkpoint import SCHEMA, CheckpointTable
+
+    path = str(tmp_path / "ck")
+    ends = {"a": datetime(2024, 1, 3, 6, 30, 0, 250), "b": datetime(2024, 1, 9), "c": None}
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        for name, end in ends.items():
+            row = Row(pipeline_name=name, window_start=None, window_end=end,
+                      updated_at=datetime(2024, 3, 1))
+            spark.createDataFrame([row], schema=SCHEMA).write.mode("append").parquet(path)
+    finally:
+        spark.conf.set(conf, prev)
+    assert len(list(Path(path).glob("part-*"))) >= 3
+
+    ck = CheckpointTable(spark, path)
+    assert {n: ck.last_window_end(n) for n in ends} == ends
+    ck.commit("b", ends["b"], datetime(2024, 1, 20))
+    assert {n: ck.last_window_end(n) for n in ends} == {**ends, "b": datetime(2024, 1, 20)}
+
+
+def test_checkpoint_row_round_trips_exactly(spark, tmp_path):
+    """Microseconds in ``window_end`` and a NULL ``window_start`` (first
+    window) come back unchanged."""
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    path = str(tmp_path / "ck")
+    ck = CheckpointTable(spark, path)
+    first = datetime(2024, 1, 2, 3, 4, 5, 678901)
+    ck.commit("p", None, first)
+    assert ck.last_window_end("p") == first
+    ck.commit("p", first, datetime(2024, 1, 3, 0, 0, 0, 1))
+    [row] = spark.read.parquet(path).collect()
+    assert (row["pipeline_name"], row["window_start"], row["window_end"]) == (
+        "p", first, datetime(2024, 1, 3, 0, 0, 0, 1))
+    assert row["updated_at"] is not None
+
+
 def test_upsert_parquet_roundtrip(spark):
     import shutil
 
@@ -224,6 +306,44 @@ def test_upsert_parquet_file_uri(spark):
     out = {r["k"]: r["v"] for r in spark.read.parquet(uri).collect()}
     assert out == {1: "A", 2: "b"}
     assert not (TMP / "upsert_uri_tbl__stage").exists()  # swap completed
+
+
+def test_upsert_finishes_an_interrupted_swap(spark, tmp_path):
+    """A crash between deleting the target and renaming the stage over
+    it leaves the whole merged table in the stage. The next upsert
+    promotes it before reading the target instead of taking its source
+    for the whole table."""
+    from pyspark.sql import Row
+
+    from etl_mini_spark.operators.upsert import upsert_parquet
+
+    target, stage = tmp_path / "t", tmp_path / "t__stage"
+    upsert_parquet(spark, str(target), spark.createDataFrame([Row(k=1, v="a"), Row(k=2, v="b")]),
+                   keys=["k"])
+    target.rename(stage)  # the crash: target deleted, stage complete
+    assert (stage / "_SUCCESS").exists()
+    upsert_parquet(spark, str(target), spark.createDataFrame([Row(k=3, v="c")]), keys=["k"])
+    out = sorted((r["k"], r["v"]) for r in spark.read.parquet(str(target)).collect())
+    assert out == [(1, "a"), (2, "b"), (3, "c")]
+    assert not stage.exists()
+
+
+def test_unfinished_stage_is_never_promoted(spark, tmp_path):
+    """A stage without ``_SUCCESS`` is a write that did not finish: it
+    must not become the table."""
+    from pyspark.sql import Row
+
+    from etl_mini_spark.operators.upsert import upsert_parquet
+
+    target, stage = tmp_path / "t", tmp_path / "t__stage"
+    upsert_parquet(spark, str(target), spark.createDataFrame([Row(k=1, v="a"), Row(k=2, v="b")]),
+                   keys=["k"])
+    target.rename(stage)
+    (stage / "_SUCCESS").unlink()
+    upsert_parquet(spark, str(target), spark.createDataFrame([Row(k=3, v="c")]), keys=["k"])
+    out = [(r["k"], r["v"]) for r in spark.read.parquet(str(target)).collect()]
+    assert out == [(3, "c")]
+    assert not stage.exists()
 
 
 def test_run_layout_file_uri(spark):
@@ -305,7 +425,7 @@ def test_compact_parquet(spark):
     assert n_files < before_files and n_files >= 1
     after = spark.read.parquet(str(local))
     assert after.count() == before
-    assert not (TMP / "compact_tbl__compact").exists()
+    assert not (TMP / "compact_tbl__stage").exists()
 
 
 def test_sorted_write_has_disjoint_file_ranges(spark):

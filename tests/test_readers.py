@@ -3,7 +3,6 @@ that lets a repeat load of an unchanged table run no Spark job."""
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import subprocess
@@ -13,23 +12,13 @@ from datetime import datetime
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from tests.conftest import REPO
-
-_GROUPS = itertools.count()
+from tests.conftest import REPO, run_in_job_group
 
 
 def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn started), counted under a job group."""
-    sc = spark.sparkContext
-    group = f"test-readers-{next(_GROUPS)}"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    """(fn(), number of Spark jobs fn started)."""
+    out, ids = run_in_job_group(spark, fn)
+    return out, len(ids)
 
 
 def _spark_written_events(spark, path: str) -> None:
