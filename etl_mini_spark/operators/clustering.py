@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_mini_spark.operators.graph import loop_confs
+from etl_mini_spark.session import loop_confs
 
 
 def _init_centroids(df: DataFrame, id_col: str, vec_col: str, k: int) -> np.ndarray:
@@ -87,7 +87,7 @@ def kmeans_lloyd(
 
     Loop discipline: the input is persisted ONCE — each of the ~2·iters
     jobs re-reads memory, not the source files — and released on exit;
-    the loop runs under ``graph.loop_confs`` (per-iteration replanning
+    the loop runs under ``session.loop_confs`` (per-iteration replanning
     latency dominates at any SF because the shuffle is only k keys
     wide). The loop itself runs on the driver — each iteration ends in
     a k×d collect — so it needs no lineage truncation."""

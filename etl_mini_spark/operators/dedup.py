@@ -30,8 +30,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_mini_spark.operators.graph import iterate, loop_confs, observed_count
-from etl_mini_spark.session import pin
+from etl_mini_spark.operators.graph import iterate, observed_count
+from etl_mini_spark.session import loop_confs, pin
 
 # Deterministic MinHash parameters (public LSH construction; see
 # Broder 1997 / Leskovec et al., "Mining of Massive Datasets" ch.3).
@@ -774,7 +774,7 @@ def connected_components_star(
     spark = edges.sparkSession
     # The O(log n) rounds are SEQUENTIAL stages; at verification SFs the
     # cost is per-stage latency, not data, so they run under
-    # graph.loop_confs like every superstep loop.
+    # session.loop_confs like every superstep loop.
     # Materialize the RAW (a, b) projection once, BEFORE the loop confs
     # take effect: ``edges`` lineage is often the expensive near-dup
     # pair join, and it used to be re-executed twice more by the

@@ -5,44 +5,21 @@ A superstep is one synchronous round of an iterative DataFrame
 algorithm (a PageRank power step, a BFS level, a label-propagation
 round). Rounds are sequential stages, so their number, not the data
 volume, is the cost at any scale ("Approximation Algorithms for Large
-Scale Data Analysis", PODS 2021). The loop policy lives here and
-nowhere else: ``loop_confs`` scopes the confs of a loop, ``iterate``
-truncates lineage through ``session.pin`` and tests convergence.
+Scale Data Analysis", PODS 2021). The loop policy lives here and in
+``session``: ``session.loop_confs`` scopes the confs of a loop,
+``iterate`` truncates lineage through ``session.pin`` and tests
+convergence.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_mini_spark import session
-
-
-@contextmanager
-def loop_confs(spark: SparkSession, partitions: int):
-    """Run a superstep loop with AQE off and ``partitions`` shuffle
-    partitions; the session's own values come back on exit, also when
-    the loop raises. AQE replans every stage, which at round counts
-    like PageRank's (~130) costs more than the data; size
-    ``partitions`` to the cluster on a real deployment."""
-    confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(partitions),
-    }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+from etl_mini_spark.session import loop_confs
 
 
 def iterate(state, step, *, max_iter: int, until=None, checkpoint_every: int = 1):

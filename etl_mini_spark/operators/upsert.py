@@ -7,7 +7,8 @@ postgresql_service.py:181-239, conflict SQL at 213-229):
   col = excluded.col`` for the update columns)
 - ``nothing``: target row wins (``DO NOTHING``)
 
-``merge_upsert`` is the pure-DataFrame core (one shuffle on the keys);
+``merge_upsert`` is the pure-DataFrame core: a left-anti join against
+the source keys plus a union, broadcast when the source is small;
 ``upsert_parquet`` is the table-level sink: stage-then-swap so a failed
 write never corrupts the target (SURVEY.md §7.4 exactly-once note). On
 Delta-enabled clusters, swap the rewrite for ``MERGE INTO``.
@@ -17,6 +18,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+CONFLICT_ACTIONS = ("update", "nothing")
+
+
+def _check_upsert(source: DataFrame, keys: list[str] | None, conflict_action: str) -> None:
+    """Reject a bad upsert config before any Spark job: an unknown
+    ``conflict_action``, no keys, or keys that are not source columns.
+    Without this, an unknown action ran the update path and missing
+    keys wrote the first window unkeyed, failing only on the next."""
+    if conflict_action not in CONFLICT_ACTIONS:
+        raise ValueError(
+            f"conflict_action must be one of {CONFLICT_ACTIONS}, got {conflict_action!r}")
+    if not keys:
+        raise ValueError(f"upsert needs at least one key column, got {keys!r}")
+    missing = [k for k in keys if k not in source.columns]
+    if missing:
+        raise ValueError(f"upsert keys {missing} are not source columns {source.columns}")
 
 
 def merge_upsert(
@@ -31,9 +49,17 @@ def merge_upsert(
     conflict_action='update': colliding target rows are replaced —
     entirely when update_columns is None, else only those columns are
     taken from source. 'nothing': colliding source rows are dropped.
-    Plans as two hash joins on the same keys (one shuffle each side;
-    AQE broadcasts small sources automatically).
+    Raises ValueError on an unknown action, no keys, or keys missing
+    from ``source``.
+
+    The whole-row update plans as the target left-anti joined with the
+    source keys, unioned with the source: one join, whose build side
+    (the source keys) is broadcast when small. ``update_columns`` adds
+    a left join of the target with the source and a left-anti join of
+    the source with the target keys; 'nothing' is that left-anti join
+    alone, unioned with the target.
     """
+    _check_upsert(source, keys, conflict_action)
     if conflict_action == "nothing":
         new_rows = source.join(target.select(*keys), keys, "left_anti")
         return target.unionByName(new_rows.select(*target.columns))
@@ -85,9 +111,18 @@ def upsert_parquet(
     s3a:// targets, not just local disk. A crash between the delete and
     the rename is recovered by ``replace_parquet`` on the next call,
     before the target is read; a transactional format (Delta/Iceberg
-    MERGE) removes the window entirely."""
+    MERGE) removes the window entirely.
+
+    A bad config (see ``merge_upsert``) raises ValueError before any
+    Spark job, also on the first call, when there is no target yet.
+    ``replace_parquet`` plans a small merge statically and caches the
+    schema it wrote, so a steady small upsert runs two Spark jobs (the
+    source-keys broadcast and the write) and the next read of the
+    target runs none."""
     from etl_mini_spark.sources.fs import replace_parquet
     from etl_mini_spark.sources.readers import read_parquet
+
+    _check_upsert(source, keys, conflict_action)
 
     def merged(exists: bool) -> DataFrame:
         if not exists:

@@ -35,9 +35,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.operators.graph import hits, iterate, loop_confs
+from etl_mini_spark.operators.graph import hits, iterate
 from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
+from etl_mini_spark.session import loop_confs
 
 
 def _hex15(col) -> F.Column:

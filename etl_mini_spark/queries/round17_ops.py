@@ -32,9 +32,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.operators.graph import iterate, loop_confs
+from etl_mini_spark.operators.graph import iterate
 from etl_mini_spark.queries._base import _t, half_up
 from etl_mini_spark.queries._base import q as pq
+from etl_mini_spark.session import loop_confs
 
 
 _DAILY_SQL = """

@@ -10,6 +10,7 @@ must be deterministic regardless of host TZ (SURVEY.md §7.4).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -78,6 +79,32 @@ def pin(df, eager: bool = True):
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+@contextmanager
+def loop_confs(spark: SparkSession, partitions: int):
+    """Run the enclosed plans with AQE off and ``partitions`` shuffle
+    partitions; the session's own values come back on exit, also when
+    the block raises. AQE replans every stage and runs each exchange as
+    a job of its own, which costs more than the data in a superstep
+    loop (PageRank runs ~130 rounds) and in a small stage-swap write
+    (``sources.fs.replace_parquet``); size ``partitions`` to the
+    cluster on a real deployment."""
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(partitions),
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def spread(df, min_partitions: int | None = None):

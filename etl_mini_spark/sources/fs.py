@@ -1,7 +1,9 @@
 """Hadoop-FileSystem helpers — the object-store-safe file plumbing.
 
 The stage-swap (`replace_parquet`, behind `upsert_parquet`, the
-checkpoint commit and `compact_parquet`) and the ``latest`` manifest
+checkpoint commit and `compact_parquet`; it also plans small writes
+statically and leaves the written schema in `read_parquet`'s cache)
+and the ``latest`` manifest
 (`write_run_layout`) must work where the data lives: HDFS, S3A, GCS,
 ABFS, or local disk. ``shutil``/``pathlib`` only speak the local
 filesystem, so all path manipulation goes through the JVM's
@@ -67,6 +69,18 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
         raise IOError(f"rename failed: {src} -> {dst}")
 
 
+def _fits_one_partition(df: DataFrame) -> bool:
+    """True when the optimizer's size estimate of ``df`` (no job) is
+    within both the AQE advisory partition size and the broadcast
+    threshold: AQE would coalesce every shuffle of the plan to one
+    partition and broadcast any join side anyway."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    sql_conf = df.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
+    bound = min(conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()),
+                conf.autoBroadcastJoinThreshold())
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) <= bound
+
+
 def replace_parquet(
     spark: SparkSession, path: str, build: Callable[[bool], DataFrame]
 ) -> None:
@@ -77,20 +91,43 @@ def replace_parquet(
     target intact. ``build`` is told whether the target exists and may
     read it: its plan runs in full before the target is deleted.
 
+    A small table is planned statically: when the optimizer's estimate
+    fits ``_fits_one_partition``, the write runs under
+    ``session.loop_confs(spark, 1)`` (AQE off, one shuffle partition),
+    where AQE would make every exchange and broadcast a Spark job of its
+    own only to reach the same one-partition, broadcast plan. A scan's
+    estimate is its file size, which only overstates a filtered scan,
+    so a misjudged plan keeps the AQE write, never a bad static one.
+
+    After the swap the written schema is put into ``read_parquet``'s
+    cache under the new files' fingerprint (local paths only), so the
+    next read of the table runs no inference job.
+
     A swap a crash cut between the delete and the rename is finished
     first: when the target is missing and the stage holds ``_SUCCESS``,
     the stage is the complete table and is renamed into place before
     ``build`` runs. A stage without ``_SUCCESS`` is a write that did not
     finish; it is never promoted, only overwritten."""
+    from etl_mini_spark.session import loop_confs
+    from etl_mini_spark.sources import readers
+
     stage = path.rstrip("/") + "__stage"
     exists = fs_exists(spark, path)
     if not exists and fs_exists(spark, stage + "/_SUCCESS"):
         fs_rename(spark, stage, path)
         exists = True
-    build(exists).write.mode("overwrite").parquet(stage)
+    df = build(exists)
+    if _fits_one_partition(df):
+        with loop_confs(df.sparkSession, 1):
+            df.write.mode("overwrite").parquet(stage)
+    else:
+        df.write.mode("overwrite").parquet(stage)
+    entry = readers.written_entry(stage, path, df.schema)
     if exists:
         fs_delete(spark, path)
     fs_rename(spark, stage, path)
+    if entry is not None:
+        readers._FOOTERS[path] = entry
 
 
 def fs_write_text(spark: SparkSession, path: str, content: str) -> None:

@@ -16,8 +16,11 @@ the data at 100 TB and can silently drift between runs. Parquet carries
 its schema in the file footers, so ``read_parquet`` infers it once per
 table version instead of once per read: the inferred schema is cached
 per local path with the fingerprint (name, mtime_ns, size) of the files
-Spark would scan, and a changed fingerprint re-infers. Remote paths
-(``s3a://``, ``hdfs://``) are not listed and infer on every read.
+Spark would scan, and a changed fingerprint re-infers. A table the
+engine itself rewrites through ``sources.fs.replace_parquet`` gets its
+entry from the writer (``written_entry``), so it is never re-inferred.
+Remote paths (``s3a://``, ``hdfs://``) are not listed and infer on every
+read.
 """
 
 from __future__ import annotations
@@ -112,6 +115,14 @@ _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 _FOOTERS: dict[str, tuple[tuple, T.StructType, list[str]]] = {}
 
 
+def _local_root(path: str) -> Path | None:
+    """The local filesystem path of ``path`` (plain or ``file://``), or
+    None for a remote one, which the cache does not cover."""
+    if "://" in path and not path.startswith("file://"):
+        return None
+    return Path(path.removeprefix("file://"))
+
+
 def _hidden(name: str) -> bool:
     """Spark's listing rule: ``_SUCCESS``, ``.crc`` and other ``_``/``.``
     names are not data; ``_`` names holding ``=`` are partition dirs."""
@@ -135,6 +146,39 @@ def _fingerprint(files: list[str]) -> tuple:
     removed file changes it. Raises FileNotFoundError for a missing
     path, before any Spark call."""
     return tuple((f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)])
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """The type Spark infers for a column it wrote to parquet as ``t``:
+    file sources read every field, element and map value nullable.
+    Types are kept, TIMESTAMP_NTZ too: Spark's own schema in the footer
+    wins over the LTZ read of ``_force_ltz_timestamps``."""
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                             for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def written_entry(stage: str, path: str, schema: T.StructType):
+    """The schema-cache entry for a table Spark just wrote to ``stage``
+    with ``schema``, to be stored under ``path`` once ``stage`` is
+    renamed onto it — or None for a remote path.
+
+    The fingerprint is taken from the stage's files under their final
+    names, before the rename: a rename keeps mtime and size, and a
+    writer racing the swap only makes the fingerprint miss. Spark
+    writes no TIMESTAMP(NANOS), so the NANOS list is empty."""
+    root, stage_root = _local_root(path), _local_root(stage)
+    if root is None or stage_root is None:
+        return None
+    files = _data_files(stage_root)
+    final = [str(root) + f[len(str(stage_root)):] for f in files]
+    fingerprint = tuple((name, *st) for name, (_, *st) in zip(final, _fingerprint(files)))
+    return fingerprint, _nullable(schema), []
 
 
 def _nanos_timestamp_cols(file: str) -> list[str]:
@@ -194,10 +238,11 @@ def _force_ltz_timestamps(spark: SparkSession):
 def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
     """The raw parquet scan of ``path`` (TIMESTAMP(NANOS) columns still
     int64) and the names of those columns — see ``read_parquet``."""
-    if "://" in path and not path.startswith("file://"):
+    root = _local_root(path)
+    if root is None:
         with _force_ltz_timestamps(spark):
             return spark.read.parquet(path), []
-    files = _data_files(Path(path.removeprefix("file://")))
+    files = _data_files(root)
     fingerprint = _fingerprint(files)
     cached = _FOOTERS.get(path)
     if cached is not None and cached[0] == fingerprint:
@@ -235,8 +280,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     reads with ``.schema(cached)``, which runs no Spark job; a missing
     or changed one infers as usual (one footer job) and replaces the
     entry, so a rewritten table is re-inferred and each path keeps one
-    entry. Remote paths (``s3a://``, ``hdfs://``) are not listed and
-    always infer.
+    entry. A table written through ``sources.fs.replace_parquet`` is
+    already cached by the writer, so its first read runs no job either.
+    Remote paths (``s3a://``, ``hdfs://``) are not listed and always
+    infer.
 
     TIMESTAMP(NANOS) columns are read as long (legacy conf) and
     converted to µs timestamps. Naive timestamps read as session-tz

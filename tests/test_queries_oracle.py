@@ -2,8 +2,9 @@
 differential check the driver runs at sf0.01.
 
 Since round 19 the 543 per-query checks run as N_SHARDS concurrent
-subprocesses (tests/oracle_shard_runner.py) instead of 543 sequential
-pytest cases: 92% of each check is Spark driver/JVM work (measured:
+subprocesses (tests/oracle_shard_runner.py), as many at once as fit in
+the available memory, instead of 543 sequential pytest cases: 92% of
+each check is Spark driver/JVM work (measured:
 build 0.58s + execute 0.84s vs 0.13s DuckDB+compare per query), so
 overlapping independent shards in separate JVMs cuts the file's
 wall-clock ~4x (guide §2.6) and keeps the driver's pytest gate inside
@@ -16,6 +17,7 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pytest
@@ -26,6 +28,9 @@ from tests.oracle_shard_runner import ROWS_ONLY_SCHEMAS
 
 REPO = Path(__file__).resolve().parent.parent
 N_SHARDS = 10
+# Peak RSS of one shard's process tree (Python, JVM and Python workers):
+# 2.2-2.4 GB, measured one shard at a time at sf0.001 on a 4-core box.
+SHARD_RSS_BYTES = 2560 * 2**20
 
 
 def _registry():
@@ -37,38 +42,48 @@ def _registry():
 QUERIES, ORACLE = _registry()
 
 
-def launch_shards() -> list:
-    """Start the shard subprocesses. Deliberately launched FROM the
-    test (not earlier in the session): while the test blocks in join,
-    no other pytest test is running, so the shards can never race a
-    main-process test that rebuilds the same NAMED fixture dir (e.g. a
-    plan blanket constructing partitioned_roundtrip overwrites
-    tmp/part_rt_sf0.001 — an early-launch overlap was measured ~2 min
-    faster but introduces exactly that flake class)."""
+def max_running_shards() -> int:
+    """How many shards fit in ``MemAvailable`` at once: at least 1, at
+    most N_SHARDS (also where /proc/meminfo is absent). All ten at once
+    got the whole test run OOM-killed on a 15 GB box."""
+    try:
+        with open("/proc/meminfo") as f:
+            avail = next(int(ln.split()[1]) * 1024 for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return N_SHARDS
+    return max(1, min(N_SHARDS, avail // SHARD_RSS_BYTES))
+
+
+def run_shard(i: int) -> tuple[int, str]:
+    """(exit code, output) of shard ``i``, killed after 1800 s."""
     runner = REPO / "tests" / "oracle_shard_runner.py"
-    return [
-        subprocess.Popen(
-            [sys.executable, str(runner), str(i), str(N_SHARDS), SF_SMOKE],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.STDOUT,
-            text=True,
-            cwd=str(REPO),
-        )
-        for i in range(N_SHARDS)
-    ]
+    p = subprocess.Popen(
+        [sys.executable, str(runner), str(i), str(N_SHARDS), SF_SMOKE],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.STDOUT,
+        text=True,
+        cwd=str(REPO),
+    )
+    try:
+        out, _ = p.communicate(timeout=1800)
+    except subprocess.TimeoutExpired:
+        p.kill()
+        out, _ = p.communicate()
+        out += "\nSHARD TIMEOUT (1800s)"
+    return p.returncode, out
 
 
 def test_query_matches_oracle_sharded():
-    procs = launch_shards()
-    outs = []
-    for p in procs:
-        try:
-            out, _ = p.communicate(timeout=1800)
-        except subprocess.TimeoutExpired:
-            p.kill()
-            out, _ = p.communicate()
-            out += "\nSHARD TIMEOUT (1800s)"
-        outs.append((p.returncode, out))
+    """The shards start FROM the test (not earlier in the session):
+    while the test blocks, no other pytest test is running, so a shard
+    can never race a main-process test that rebuilds the same NAMED
+    fixture dir (e.g. a plan blanket constructing partitioned_roundtrip
+    overwrites tmp/part_rt_sf0.001 — an early-launch overlap was
+    measured ~2 min faster but introduces exactly that flake class).
+    At most ``max_running_shards()`` run at once; the next one starts
+    when one ends."""
+    with ThreadPoolExecutor(max_running_shards()) as pool:
+        outs = list(pool.map(run_shard, range(N_SHARDS)))
     bad = []
     for i, (rc, out) in enumerate(outs):
         done = [ln for ln in out.splitlines() if ln.startswith("SHARD")]

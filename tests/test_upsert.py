@@ -1,0 +1,205 @@
+"""Keyed upsert through the stage-then-swap writer: Spark jobs per
+pipeline window, the schema the swap leaves in the reader's cache, the
+AQE fallback for large plans, and loud failure on bad configs."""
+
+from __future__ import annotations
+
+from datetime import datetime
+
+import pytest
+from pyspark.sql import functions as F
+
+from tests.conftest import SF_SMOKE, run_in_job_group
+
+WINDOWS = (datetime(2024, 1, 10), datetime(2024, 1, 20))
+AQE, PARTS, ADVISORY = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+)
+
+
+def _spec(tmp_path, name="upsert_windows"):
+    from etl_mini_spark.plans.pipeline import PipelineSpec, SinkSpec, SourceSpec
+
+    return PipelineSpec(
+        name=name, source=SourceSpec(path=f"{SF_SMOKE}/events.parquet"),
+        sink=SinkSpec(path=str(tmp_path / "target"), format="upsert", upsert_keys=["event_id"]),
+        transforms=[{"op": "ordered_dedup", "dedup_by": ["event_id"],
+                     "order_by": [("ts", "desc")]}],
+        incremental_ts_col="ts", checkpoint_path=str(tmp_path / "ckpt"))
+
+
+def _run_windows(spark, spec, monkeypatch, between=None) -> list[tuple[int, int]]:
+    """(upsert jobs, all jobs) of each window's ``run_pipeline``; the
+    upsert's jobs are counted in a job group of their own."""
+    from etl_mini_spark.plans import pipeline
+
+    upsert_jobs = []
+
+    def counted(*args, **kwargs):
+        _, ids = run_in_job_group(spark, lambda: real(*args, **kwargs))
+        upsert_jobs.append(len(ids))
+
+    from etl_mini_spark.operators.upsert import upsert_parquet as real
+
+    monkeypatch.setattr(pipeline, "upsert_parquet", counted)
+    counts = []
+    for end in WINDOWS:
+        spec.window_end = end
+        _, ids = run_in_job_group(spark, lambda: pipeline.run_pipeline(spark, spec))
+        counts.append((upsert_jobs[-1], len(ids) + upsert_jobs[-1]))
+        if between is not None:
+            between()
+    return counts
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_steady_window_runs_two_upsert_jobs(spark, tmp_path, monkeypatch):
+    """The first window's upsert is one write job. A steady one is the
+    source-keys broadcast and the write: the target's schema is cached
+    by the previous swap, and the small merge is planned statically, so
+    no exchange runs as a job of its own. The whole window is 4 jobs."""
+    from etl_mini_spark.sources.readers import read_parquet
+
+    spec = _spec(tmp_path)
+    first, steady = _run_windows(spark, spec, monkeypatch)
+    assert (first[0], steady) == (1, (2, 4)), (first, steady)
+    df, ids = run_in_job_group(spark, lambda: read_parquet(spark, spec.sink.path))
+    assert ids == []
+    want = spark.read.parquet(f"{SF_SMOKE}/events.parquet").filter(F.col("ts") < WINDOWS[-1])
+    assert df.count() == want.select("event_id").distinct().count()
+
+
+def test_plan_over_the_bound_keeps_the_aqe_path(spark, tmp_path, monkeypatch):
+    """With the advisory partition size under the plan's estimate, the
+    write runs under AQE as before: a steady upsert runs the same 4 jobs
+    as the AQE write did before writes cached their schema (the target
+    read is warmed first, which takes that cache out of the count), and
+    the table holds the same rows as the statically planned one."""
+    from etl_mini_spark.sources.readers import read_parquet
+
+    static = _spec(tmp_path / "static")
+    _run_windows(spark, static, monkeypatch)
+    adaptive = _spec(tmp_path / "adaptive")
+    prev = spark.conf.get(ADVISORY)
+    spark.conf.set(ADVISORY, "1k")
+    try:
+        counts = _run_windows(spark, adaptive, monkeypatch,
+                              between=lambda: read_parquet(spark, adaptive.sink.path))
+    finally:
+        spark.conf.set(ADVISORY, prev)
+    assert counts[1][0] == 4, counts
+    assert _rows(spark, adaptive.sink.path) == _rows(spark, static.sink.path)
+
+
+_KINDS = """
+    SELECT * FROM VALUES
+      (1, TIMESTAMP_NTZ'2024-01-01 10:00:00.123456', TIMESTAMP'2024-01-01 10:00:00',
+       DATE'2024-01-01', CAST(1.25 AS DECIMAL(12, 3)),
+       array(named_struct('a', 1, 'at', TIMESTAMP_NTZ'2024-01-02 00:00:00')),
+       map('x', 1.5D), X'0102', CAST(1.5 AS FLOAT), CAST(7 AS SMALLINT), CAST(3 AS TINYINT)),
+      (2, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+    AS t(k, ntz, ltz, d, dec, arr, m, bin, f, s, b)
+"""
+
+
+def test_read_after_upsert_uses_the_written_schema(spark, tmp_path):
+    """``read_parquet`` right after ``upsert_parquet`` runs no Spark
+    job, and the schema the swap cached equals what inference returns
+    for NTZ and LTZ timestamps, date, decimal, ``array<struct>``, map,
+    binary, float, short, byte and a non-null key column."""
+    from etl_mini_spark.operators.upsert import upsert_parquet
+    from etl_mini_spark.sources.readers import _force_ltz_timestamps, read_parquet
+
+    path = str(tmp_path / "kinds")
+    source = spark.sql(_KINDS)
+    assert not source.schema["k"].nullable
+    for batch in (source, source.withColumn("k", F.col("k") + 1)):
+        upsert_parquet(spark, path, batch, keys=["k"])
+        df, ids = run_in_job_group(spark, lambda: read_parquet(spark, path))
+        assert ids == []
+        with _force_ltz_timestamps(spark):
+            inferred = spark.read.parquet(path)
+        assert df.schema == inferred.schema
+        assert sorted(df.collect()) == sorted(inferred.collect())
+    assert [r["k"] for r in read_parquet(spark, path).orderBy("k").collect()] == [1, 2, 3]
+
+
+def test_write_confs_restored_after_build_raises(spark, tmp_path):
+    """A ``build`` that raises, and a small plan that fails inside the
+    static write, leave the AQE and shuffle-partition confs as they
+    were and the target untouched."""
+    from etl_mini_spark.sources.fs import replace_parquet
+
+    path = str(tmp_path / "t")
+    replace_parquet(spark, path, lambda exists: spark.range(3))
+    before = {k: spark.conf.get(k) for k in (AQE, PARTS)}
+
+    def raises(exists):
+        raise RuntimeError("build failed")
+
+    def fails_in_write(exists):
+        boom = F.when(F.col("id") > 1, F.raise_error(F.lit("write failed")))
+        return spark.range(3).select(boom.otherwise(F.col("id")).alias("id"))
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        replace_parquet(spark, path, raises)
+    with pytest.raises(Exception, match="write failed"):
+        replace_parquet(spark, path, fails_in_write)
+    assert {k: spark.conf.get(k) for k in (AQE, PARTS)} == before
+    assert _rows(spark, path) == [(0,), (1,), (2,)]
+
+
+def _fails_before_any_job(spark, fn, match: str) -> None:
+    def call():
+        with pytest.raises(ValueError, match=match):
+            fn()
+
+    _, ids = run_in_job_group(spark, call)
+    assert ids == []
+
+
+def test_unknown_conflict_action_fails_loudly(spark, tmp_path):
+    """``"ignore"`` used to run the update path silently."""
+    from etl_mini_spark.operators.upsert import upsert_parquet
+
+    path = str(tmp_path / "t")
+    upsert_parquet(spark, path, spark.range(3).selectExpr("id AS k", "'a' AS v"), keys=["k"])
+    update = spark.range(2, 4).selectExpr("id AS k", "'b' AS v")
+    _fails_before_any_job(spark, lambda: upsert_parquet(
+        spark, path, update, keys=["k"], conflict_action="ignore"), "conflict_action")
+    assert _rows(spark, path) == [(0, "a"), (1, "a"), (2, "a")]
+
+
+def test_upsert_sink_without_keys_fails_loudly(spark, tmp_path):
+    """A keyless upsert sink used to write window 1 unkeyed and fail at
+    window 2 with ``TypeError``; it now fails on the first window,
+    before writing anything."""
+    from etl_mini_spark.operators.upsert import upsert_parquet
+    from etl_mini_spark.plans.pipeline import run_pipeline
+
+    spec = _spec(tmp_path)
+    spec.sink.upsert_keys = None
+    spec.window_end = WINDOWS[0]
+    with pytest.raises(ValueError, match="key"):
+        run_pipeline(spark, spec)
+    assert not (tmp_path / "target").exists()
+    source = spark.range(3).selectExpr("id AS k")
+    _fails_before_any_job(
+        spark, lambda: upsert_parquet(spark, str(tmp_path / "t"), source, keys=[]), "key")
+    assert not (tmp_path / "t").exists()
+
+
+def test_upsert_keys_must_be_source_columns(spark, tmp_path):
+    """An unknown key used to pass on the first call, which writes the
+    source without reading the keys."""
+    from etl_mini_spark.operators.upsert import upsert_parquet
+
+    source = spark.range(3).selectExpr("id AS k")
+    _fails_before_any_job(spark, lambda: upsert_parquet(
+        spark, str(tmp_path / "t"), source, keys=["k", "event_id"]), "event_id")
+    assert not (tmp_path / "t").exists()
