@@ -29,6 +29,7 @@ from etl_mini_spark.functions.registry import (
 from etl_mini_spark.operators.dedup import ordered_dedup
 from etl_mini_spark.operators.upsert import upsert_parquet
 from etl_mini_spark.plans.checkpoint import CheckpointTable
+from etl_mini_spark.session import static_plan
 from etl_mini_spark.sources.readers import read_csv, read_ndjson, read_parquet, require_source
 from etl_mini_spark.sources.writers import write_partitioned_by_type_date, write_run_layout
 
@@ -170,20 +171,25 @@ def build_plan(
 
 
 def write_sink(spark: SparkSession, df: DataFrame, sink: SinkSpec) -> None:
-    if sink.format == "parquet":
-        df.write.mode(sink.mode).parquet(sink.path)
-    elif sink.format == "ndjson":
-        df.write.mode(sink.mode).json(sink.path)
-    elif sink.format == "run_layout":
-        write_run_layout(df, sink.path)
-    elif sink.format == "partitioned":
-        write_partitioned_by_type_date(
-            df, sink.path, sink.partition_type_col, sink.partition_ts_col, sink.mode
-        )
-    elif sink.format == "upsert":
+    """Write ``df`` to the sink. The file sinks write under
+    ``session.static_plan``, so a small window is one static plan, not
+    one AQE job per exchange; the upsert sink's stage-swap applies the
+    same rule to its merged plan."""
+    if sink.format == "upsert":
         upsert_parquet(spark, sink.path, df, keys=sink.upsert_keys)
-    else:
+        return
+    write = {
+        "parquet": lambda: df.write.mode(sink.mode).parquet(sink.path),
+        "ndjson": lambda: df.write.mode(sink.mode).json(sink.path),
+        "run_layout": lambda: write_run_layout(df, sink.path),
+        "partitioned": lambda: write_partitioned_by_type_date(
+            df, sink.path, sink.partition_type_col, sink.partition_ts_col, sink.mode
+        ),
+    }.get(sink.format)
+    if write is None:
         raise ValueError(f"unknown sink format: {sink.format}")
+    with static_plan(df):
+        write()
 
 
 def run_pipeline(

@@ -13,6 +13,7 @@ Conventions (hash-parity rules, FIXTURES.md §C):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from pathlib import Path
 
@@ -37,15 +38,27 @@ from etl_mini_spark.operators import (
 )
 from etl_mini_spark.operators import text as TX
 from etl_mini_spark.operators.multimodal import attach_binary_payload, decode_media
-from etl_mini_spark.session import load_table
+from etl_mini_spark.session import load_table, static_plan
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
 
 def q(name: str, sql: str | None = None):
+    """Register ``fn`` as query ``name``. The registered builder plans
+    the DataFrame it returns under ``session.static_plan``, so a small
+    read runs one static plan instead of one AQE job per exchange; its
+    ``collect``/``toPandas`` reuse that plan. ``fn`` itself stays as
+    written, for builders that compose other builders' DataFrames."""
     def deco(fn):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def planned(*args, **kwargs):
+            df = fn(*args, **kwargs)
+            with static_plan(df):
+                df._jdf.queryExecution().executedPlan()
+            return df
+
+        QUERIES[name] = planned
         if sql is not None:
             ORACLE[name] = sql
         return fn
@@ -64,7 +77,7 @@ def half_up(col, k: int = 6):
     return F.floor(col * scale + F.lit(0.5)) / scale
 
 
-_TMP = Path("/root/repo/tmp")
+_TMP = Path(__file__).resolve().parents[2] / "tmp"  # the repository's tmp/
 
 
 def _sweep_scratch(prefix: str, min_age_s: int = 3600) -> None:

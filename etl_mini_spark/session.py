@@ -10,7 +10,7 @@ must be deterministic regardless of host TZ (SURVEY.md §7.4).
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import SparkSession
 
@@ -87,9 +87,11 @@ def loop_confs(spark: SparkSession, partitions: int):
     partitions; the session's own values come back on exit, also when
     the block raises. AQE replans every stage and runs each exchange as
     a job of its own, which costs more than the data in a superstep
-    loop (PageRank runs ~130 rounds) and in a small stage-swap write
-    (``sources.fs.replace_parquet``); size ``partitions`` to the
-    cluster on a real deployment."""
+    loop (PageRank runs ~130 rounds; size ``partitions`` to the cluster
+    on a real deployment) and in a small one-shot plan, where
+    :func:`static_plan` picks ``partitions`` from the scanned bytes.
+    The confs are session-wide: another thread sharing the session
+    plans without AQE while the block runs."""
     confs = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.shuffle.partitions": str(partitions),
@@ -105,6 +107,76 @@ def loop_confs(spark: SparkSession, partitions: int):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def _scala_list(seq) -> list:
+    it = seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _scanned_bytes(jvm, plan) -> int:
+    """Bytes the leaves of a logical plan hold by their own statistics
+    (a file scan: its files' size; a leaf of unknown size: Spark's
+    ``defaultSizeInBytes``, Long.MaxValue), the leaves of subquery plans
+    included. Runs no job."""
+    total = sum(leaf.stats().sizeInBytes() for leaf in _scala_list(plan.collectLeaves()))
+    if plan.containsPattern(jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION()):
+        nodes = [plan]
+        while nodes:
+            node = nodes.pop()
+            nodes += _scala_list(node.children())
+            total += sum(_scanned_bytes(jvm, sub) for sub in _scala_list(node.subqueries()))
+    return total
+
+
+@contextmanager
+def static_plan(df):
+    """Plan (and run) what the block does with ``df`` without AQE when
+    ``df`` reads little; otherwise leave the session's settings alone.
+
+    AQE runs every exchange and broadcast as a Spark job of its own,
+    and on a small read those fixed costs are most of the read. The
+    rule, from the optimized plan's leaf statistics (no job): when the
+    leaves hold ``scanned`` bytes in total and that fits
+    ``min(spark.sql.adaptive.advisoryPartitionSizeInBytes,
+    spark.sql.autoBroadcastJoinThreshold)``, the block runs under
+    :func:`loop_confs` with ``clamp(floor(scanned /
+    spark.sql.adaptive.coalescePartitions.minPartitionSize), 1,
+    defaultParallelism)`` shuffle partitions. That is the count AQE's
+    coalescing reaches under the default ``parallelismFirst``: it
+    splits a shuffle over ``minPartitionSize`` (1 MB) across up to
+    ``defaultParallelism`` partitions, not into one. A join side that
+    reads part of those bytes is estimated under the broadcast
+    threshold too, so the static plan broadcasts it, as AQE would. A
+    larger plan, a leaf of unknown size, a streaming plan, or a session
+    that already has AQE off keep their plan as it is.
+
+    Plan inside the block: a DataFrame action or write plans when it
+    runs, and ``df._jdf.queryExecution().executedPlan()`` fixes the
+    plan that later ``collect``/``toPandas`` calls on ``df`` reuse."""
+    n = _static_partitions(df)
+    with nullcontext() if n is None else loop_confs(df.sparkSession, n):
+        yield
+
+
+def _static_partitions(df) -> int | None:
+    """The shuffle-partition count :func:`static_plan` runs ``df``
+    with, or None to keep the session's plan."""
+    spark = df.sparkSession
+    if df.isStreaming or spark.conf.get("spark.sql.adaptive.enabled") == "false":
+        return None
+    conf = spark._jsparkSession.sessionState().conf()
+    sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    bound = min(conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()),
+                conf.autoBroadcastJoinThreshold())
+    scanned = _scanned_bytes(spark._jvm, df._jdf.queryExecution().optimizedPlan())
+    if scanned > bound:
+        return None
+    min_size = conf.getConf(sql_conf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
+    return max(1, min(scanned // min_size, spark.sparkContext.defaultParallelism))
 
 
 def spread(df, min_partitions: int | None = None):

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 
 def test_ordered_dedup_keeps_first_in_order(spark):
@@ -1265,7 +1265,7 @@ def test_sweep_rejects_unknown_flags():
 
     r = subprocess.run(
         [_sys.executable, "sweep_oracle.py", "--bar", "/root/testdata/sf0.001"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=REPO, timeout=120,
     )
     assert r.returncode != 0
     assert "unknown flags: ['--bar']" in (r.stderr + r.stdout)

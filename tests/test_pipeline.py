@@ -9,9 +9,9 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE, run_in_job_group
+from tests.conftest import REPO, SF_SMOKE, run_in_job_group
 
-TMP = Path("/root/repo/tmp/testruns")
+TMP = REPO / "tmp" / "testruns"
 
 
 @pytest.fixture(autouse=True, scope="module")
@@ -110,7 +110,7 @@ def test_pipeline_missing_source_gate(spark):
 
     spec = PipelineSpec(
         name="missing",
-        source=SourceSpec(path="/root/repo/tmp/nope.parquet"),
+        source=SourceSpec(path=str(REPO / "tmp" / "nope.parquet")),
         sink=SinkSpec(path=str(TMP / "never")),
     )
     with pytest.raises(SourceMissingError):
@@ -147,7 +147,7 @@ def test_checkpoint_advances_only_on_success(spark):
     assert r2["window_start"] == datetime(2024, 1, 15)
 
     # a skipped run must NOT advance the checkpoint
-    spec.source = SourceSpec(path="/root/repo/tmp/gone.parquet", fail_on_missing=False)
+    spec.source = SourceSpec(path=str(REPO / "tmp" / "gone.parquet"), fail_on_missing=False)
     spec.window_end = datetime(2024, 3, 1)
     assert run_pipeline(spark, spec)["status"] == "skipped"
     assert ck.last_window_end("incr") == datetime(2024, 2, 1)
@@ -455,3 +455,37 @@ def test_sorted_write_has_disjoint_file_ranges(spark):
     ranges.sort()
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2  # disjoint (boundary key may repeat)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "ndjson", "partitioned"])
+def test_small_file_sink_writes_in_one_job(spark, fmt):
+    """A small window's file sink runs as one static plan: filter +
+    ordered_dedup + write in one Spark job (AQE ran the dedup exchange,
+    and the partitioned sink's repartition, as jobs of their own), and
+    writes the rows the plan produces."""
+    from etl_mini_spark.plans.pipeline import (
+        PipelineSpec, SinkSpec, SourceSpec, build_plan, run_pipeline,
+    )
+    from tests.conftest import SF_CORRECT
+
+    out = str(TMP / f"small_sink_{fmt}")
+    spec = PipelineSpec(
+        name=f"small_{fmt}",
+        source=SourceSpec(path=f"{SF_CORRECT}/events.parquet"),
+        transforms=[
+            {"op": "filter", "expr": "event_type <> 'error'"},
+            {"op": "ordered_dedup", "dedup_by": ["user_id", "event_type"],
+             "order_by": [("ts", "desc"), "event_id"]},
+        ],
+        sink=SinkSpec(path=out, format=fmt, partition_type_col="event_type",
+                      partition_ts_col="ts"),
+    )
+    want = build_plan(spark, spec)  # also warms the source's schema cache
+    if fmt == "ndjson":  # JSON timestamps keep milliseconds
+        want = want.withColumn("ts", F.date_trunc("millisecond", "ts"))
+    expected = sorted(want.collect(), key=lambda r: r.event_id)
+    report, jobs = run_in_job_group(spark, lambda: run_pipeline(spark, spec))
+    assert report["status"] == "ok" and len(jobs) == 1, jobs
+    reader = spark.read.schema(want.schema).json if fmt == "ndjson" else spark.read.parquet
+    back = reader(out).select(*want.columns).collect()
+    assert sorted(back, key=lambda r: r.event_id) == expected

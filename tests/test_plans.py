@@ -3,14 +3,12 @@ pushdown reaches the scan, dims broadcast, bucketing kills the shuffle."""
 
 from __future__ import annotations
 
-from pathlib import Path
-
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
-TMP = Path("/root/repo/tmp/planruns")
+TMP = REPO / "tmp" / "planruns"
 
 
 def test_time_range_predicate_reaches_scan(spark):

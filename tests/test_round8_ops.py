@@ -395,13 +395,13 @@ def test_json_quarantine_contains_both_failure_modes(spark):
     """The quarantined set must carry BOTH planted failure classes —
     truncated objects and bare non-JSON — and exactly the planted 23;
     clean rows must parse typed (no nulls in event_id)."""
-    from pathlib import Path
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from etl_mini_spark.queries._base import _TMP
+
     QUERIES["ndjson_corrupt_quarantine"](spark, SF_SMOKE).collect()
-    tmp = Path("/root/repo/tmp") / "json_quarantine_sf0.001"
+    tmp = _TMP / "json_quarantine_sf0.001"
     # a DIFFERENT corrupt-column name on purpose: an identical plan
     # would hit the query's own cache entry, which may pin a pre-
     # overwrite file listing when the query ran earlier in the session

@@ -4,14 +4,13 @@ stream (file source + AvailableNow) and match their batch results."""
 from __future__ import annotations
 
 import shutil
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
-TMP = Path("/root/repo/tmp/streamruns")
+TMP = REPO / "tmp" / "streamruns"
 
 
 @pytest.fixture(autouse=True)
