@@ -111,12 +111,9 @@ def main() -> None:
         "reps": REPS,
         "agg": "min-per-query",
     }
-    # The per-round driver capture can land on a box busy with other
-    # JVMs (r17 verdict #2: the committed artifact read 1.08x while
-    # the protocol idle run read 0.96x). BENCH_IDLE.json is the
-    # COMMITTED min-of-3 idle protocol run (see BASELINE.md); embedding
-    # it here puts the protocol numbers inside the canonical
-    # driver-written BENCH_rN.json instead of a gitignored tmp log.
+    # A run can land on a box busy with other JVMs. BENCH_IDLE.json is
+    # the COMMITTED min-of-3 idle protocol run (see BASELINE.md);
+    # embedding it puts the protocol numbers beside every run's own.
     idle_ref = Path(__file__).resolve().parent / "BENCH_IDLE.json"
     if idle_ref.exists():
         try:

@@ -20,8 +20,8 @@ Tiers (all data deterministic — no RNG state leaks across partitionings):
 Prints ONE JSON line to stdout AND (because the driver JVM can write
 GC warnings to stdout under memory pressure, which would corrupt a
 shell redirect) to the file given as argv[1].
-Run per round and commit the artifact:
-    python bench_scale.py SCALE_r07.json
+Run:
+    python bench_scale.py SCALE.json
 Every probe also carries a hard invariant (recall / agreement /
 checksum equality); "ok": false in any probe means a functional
 regression, not just a slow run.

@@ -15,12 +15,6 @@ def sanitize_scalar(col: Column) -> Column:
     return F.regexp_replace(col, "[\\t\\n\\r]", " ")
 
 
-def nested_to_json(col: Column) -> Column:
-    """Serialize a struct/array column to a compact JSON string —
-    the scalar-position rule for nested values (tsv_converter.py:85-87)."""
-    return F.to_json(col)
-
-
 def with_json_length_flag(
     df: DataFrame, col_name: str, max_json_length: int = 100000, flag_col: str = "json_too_long"
 ) -> DataFrame:

@@ -419,14 +419,6 @@ def prefix_join_preflight(
     return stats
 
 
-def shingle_hash(col: Column) -> Column:
-    """Stable 32-bit base hash of a shingle: first 8 hex chars of md5.
-
-    Engine-portable (md5 is identical everywhere), unlike Spark's
-    ``hash()``/xxhash which DuckDB cannot reproduce."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a_i, b_i) pairs for h_i(x) = (a·x + b) mod p.
 

@@ -10,10 +10,11 @@ Two kernel tiers (round-13 split):
   PIL needed), `decode_png_pixels` (zlib inflate + scanline unfilter),
   and the operators built on them (`decode_media_real`,
   `resize_media_real`, `extract_features_real`).
-- Legacy STUB kernels (`_fake_decode` and the operators that replay
-  its formulas) kept for the earlier registered differentials; a real
-  Pillow/torchaudio call drops into the same batch shape for formats
-  the stdlib can't decode (lossy JPEG pixels, audio samples).
+- Legacy STUB kernels (`_fake_decode`, and `decode_media` and
+  `frame_sample`, which replay its formulas) kept for the earlier
+  registered differentials; a real Pillow/torchaudio call drops into
+  the same batch shape for formats the stdlib can't decode (lossy JPEG
+  pixels, audio samples).
 
 Metadata derivation (size/sha256) is JVM-side.
 """
@@ -382,77 +383,6 @@ def decode_media(df: DataFrame, id_col: str, payload_col: str = "payload") -> Da
                     "n_frames": [d[2] for d in dims],
                 }
             )
-
-    return df.select(id_col, payload_col).mapInPandas(process, out_schema)
-
-
-def resize_media(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str = "payload",
-    target_w: int = 224,
-    target_h: int = 224,
-) -> DataFrame:
-    """STUB resize: returns (id, width, height, resized binary) where the
-    'resized' payload is a deterministic fake (sha256-derived bytes of
-    fixed length ∝ target area). Real impl swaps the kernel for
-    PIL resize inside the same mapInPandas shape — schema, Arrow batch
-    handling, and null passthrough are the tested contract."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("resized", T.BinaryType()),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, payloads = [], [], [], []
-            for rid, p in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(rid)
-                if p is None:
-                    ws.append(None); hs.append(None); payloads.append(None)
-                    continue
-                digest = hashlib.sha256(bytes(p)).digest()
-                # fake pixel buffer: digest tiled to target_w*target_h//64 bytes
-                reps = max(1, (target_w * target_h) // (64 * len(digest)))
-                ws.append(target_w); hs.append(target_h); payloads.append(digest * reps)
-            yield pd.DataFrame({id_col: ids, "width": ws, "height": hs, "resized": payloads})
-
-    return df.select(id_col, payload_col).mapInPandas(process, out_schema)
-
-
-def extract_features(
-    df: DataFrame, id_col: str, payload_col: str = "payload", dim: int = 16
-) -> DataFrame:
-    """STUB feature extractor: payload → dense float vector (array<float>).
-
-    Deterministic fake: sha256 digest bytes → [0,1) floats. A real model
-    (CLIP/wav2vec) drops into the same mapInPandas kernel; downstream
-    similarity operators (operators/similarity.py) consume the output
-    column unchanged — this is the decode→embed→ANN pipeline shape."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("feature", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats = [], []
-            for rid, p in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(rid)
-                if p is None:
-                    feats.append(None)
-                    continue
-                digest = hashlib.sha256(bytes(p)).digest()
-                while len(digest) < dim:
-                    digest += hashlib.sha256(digest).digest()
-                feats.append([b / 255.0 for b in digest[:dim]])
-            yield pd.DataFrame({id_col: ids, "feature": feats})
 
     return df.select(id_col, payload_col).mapInPandas(process, out_schema)
 

@@ -1,6 +1,7 @@
-"""Query registry, split by domain. Import order is irrelevant to the
-driver window — _window._reorder_registry() rebuilds QUERIES/ORACLE into
-the curated 50-slot-window + tail order and asserts exact coverage.
+"""Query registry: importing this package registers every query module
+into QUERIES/ORACLE, in the import order below. No consumer depends on
+that order: the oracle shards take sorted(QUERIES)[i::n], and bench.py
+and perfbench look queries up by name.
 
 See _base for the registration decorator and hash-parity conventions.
 """
@@ -45,4 +46,3 @@ from etl_mini_spark.queries import round16_ops  # noqa: F401,E402
 from etl_mini_spark.queries import round17_ops  # noqa: F401,E402
 from etl_mini_spark.queries import round18_ops  # noqa: F401,E402
 from etl_mini_spark.queries import round19_ops  # noqa: F401,E402
-from etl_mini_spark.queries import _window  # noqa: F401,E402

@@ -4,9 +4,7 @@ ratio-to-report windows, churn gap detection, token-entropy quality,
 robust (MAD) outliers, and canonical-document selection over near-dup
 clusters (the keep/drop decision that completes a dedup pipeline).
 
-All oracle-backed. These land in the registry TAIL: the 50-slot driver
-window is full this round; they are locally oracle-verified every round
-and rotate into the window next round (queries/_window.py scheme).
+All oracle-backed.
 """
 
 from etl_mini_spark.queries._base import *  # noqa: F401,F403

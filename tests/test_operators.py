@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from tests.conftest import REPO, SF_SMOKE
+from tests.conftest import SF_SMOKE
 
 
 def test_ordered_dedup_keeps_first_in_order(spark):
@@ -1207,68 +1207,6 @@ def test_decode_media_stub_batch_shape(spark):
     )
     # NULL payload → NULL metadata row, never a task crash
     assert all(r2[c] is None for c in ["n_bytes", "sha256", "width", "height", "n_frames"])
-
-
-def test_sweep_tolerance_predicate_bounds():
-    """sweep_oracle's per-query tolerance (r13 verdict #5) accepts the
-    documented GK ε-neighborhood and still rejects real drift — and
-    non-tolerated columns stay exact."""
-    import pandas as pd
-
-    import sweep_oracle as so
-
-    a = pd.DataFrame({"p": [0.25, 0.5], "v": [26960.18, 50000.0]})
-    b = pd.DataFrame({"p": [0.25, 0.5], "v": [26960.27, 50000.0]})
-    assert so._within_tolerance(a, b, {"v": 1e-3})          # ε noise → green
-    c = pd.DataFrame({"p": [0.25, 0.5], "v": [27500.0, 50000.0]})
-    assert not so._within_tolerance(a, c, {"v": 1e-3})      # 2% drift → red
-    d = pd.DataFrame({"p": [0.26, 0.5], "v": [26960.18, 50000.0]})
-    assert not so._within_tolerance(a, d, {"v": 1e-3})      # exact col drift → red
-    assert "approx_quantile_sketch" in so.TOLERANCE
-
-
-def test_sweep_positional_parse_is_flag_order_independent():
-    """r17 advice: `sweep_oracle.py --bare sf_dir` used to silently
-    sweep the DEFAULT sf0.1 (SF was argv[1] only) and then crash
-    treating the sf path as start_from. The parse now takes the first
-    non-dash arg as SF and the second as start_from, wherever --bare
-    sits."""
-    import importlib
-    import sys as _sys
-
-    import sweep_oracle as so
-
-    orig = _sys.argv
-    try:
-        for argv in (
-            ["sweep_oracle.py", "--bare", "/root/testdata/sf0.01"],
-            ["sweep_oracle.py", "/root/testdata/sf0.01", "--bare"],
-        ):
-            _sys.argv = argv
-            so = importlib.reload(so)
-            assert so.SF == "/root/testdata/sf0.01", argv
-            assert so._POSITIONALS == ["/root/testdata/sf0.01"], argv
-        _sys.argv = ["sweep_oracle.py", "--bare", "sfdir", "name", "extra"]
-        so = importlib.reload(so)
-        assert so._POSITIONALS[2:] == ["extra"]  # main() rejects these
-    finally:
-        _sys.argv = orig
-        importlib.reload(so)
-
-
-def test_sweep_rejects_unknown_flags():
-    """A typo'd flag (`--bar`) must fail loudly, not silently run the
-    sweep under the non-bare session while the gate log claims bare
-    conditions (review follow-up to the r17 argv advice)."""
-    import subprocess
-    import sys as _sys
-
-    r = subprocess.run(
-        [_sys.executable, "sweep_oracle.py", "--bar", "/root/testdata/sf0.001"],
-        capture_output=True, text=True, cwd=REPO, timeout=120,
-    )
-    assert r.returncode != 0
-    assert "unknown flags: ['--bar']" in (r.stderr + r.stdout)
 
 
 def test_intersect_except_all_match_duckdb(spark):

@@ -182,17 +182,6 @@ def test_order_by_hash_no_single_partition_exchange(spark):
     assert "day" in s.text and "hashpartitioning" in s.text.lower(), s.text
 
 
-def test_driver_window_invariants():
-    """The first 50 registry entries are the driver's CORRECTNESS
-    window: every one needs a DuckDB oracle (rows-only entries belong
-    in the tail) and the curated order must cover the registry exactly."""
-    from etl_mini_spark.queries import ORACLE, QUERIES
-
-    names = list(QUERIES)
-    window = names[:50]
-    assert all(n in ORACLE for n in window), [n for n in window if n not in ORACLE]
-
-
 def test_approx_distinct_within_tolerance(spark):
     """agg_approx_distinct is rows-only for the driver (HLL++ can't
     hash-match an exact oracle) — pin its quality here instead:
@@ -1278,27 +1267,3 @@ def test_round19_staged_tier_no_cartesian_blanket(spark):
         assert "CartesianProduct" not in s.joins, (name, s.joins)
         if name not in BOUNDED_NONEQUI_OK:
             assert "BroadcastNestedLoopJoin" not in s.joins, (name, s.joins)
-
-
-def test_round20_staged_tier_no_cartesian_blanket(spark):
-    """Blanket physical-plan audit of the round-20 STAGED tier (same
-    contract as the round-7..19 blankets)."""
-    import re as _re
-
-    from etl_mini_spark.plans.explain import plan_summary
-    from etl_mini_spark.queries.round20_pending import PENDING20_QUERIES
-
-    src = open("etl_mini_spark/queries/round20_pending.py").read()
-    ROUND20 = sorted(set(_re.findall(r'@pq\("([a-z0-9_]+)"', src)))
-    assert len(ROUND20) == 6
-    SKIP_SIDE_EFFECTS = {
-        # bounded scalar / dimension collects seed driver replays
-        "isqrt_newton_exact", "euclid_continued_fraction",
-        "swrr_scheduler_replay", "josephus_survivor",
-    }
-    for name in ROUND20:
-        if name in SKIP_SIDE_EFFECTS:
-            continue
-        s = plan_summary(PENDING20_QUERIES[name](spark, SF_SMOKE))
-        assert "CartesianProduct" not in s.joins, (name, s.joins)
-        assert "BroadcastNestedLoopJoin" not in s.joins, (name, s.joins)

@@ -1,6 +1,5 @@
 """Non-vacuity pins for the round-10 tier (oracle equivalence is
-verified by sweep_oracle.py / tests/test_queries_oracle.py and the
-driver gate): bounds, conservation laws, monotonicity, and
+verified by tests/test_queries_oracle.py): bounds, conservation laws, monotonicity, and
 exact-identity checks so no entry can go green as a degenerate
 constant. Migrated unchanged from the staging harness at
 registration (the rounds-7/8/9 two-step)."""
