@@ -57,7 +57,10 @@ def ordered_dedup(df: DataFrame, dedup_by: list[str], order_by: list) -> DataFra
 
     ``order_by`` must be a total order within each key group (append a
     unique id as tie-breaker) — otherwise results are nondeterministic
-    across retries/partitionings. One shuffle on ``dedup_by``.
+    across retries/partitionings. One shuffle on ``dedup_by``; none
+    when its input is one partition, which satisfies the window's
+    clustering (``plans.pipeline.build_plan`` coalesces a small source
+    to one partition).
     """
     w = Window.partitionBy(*dedup_by).orderBy(*_order_cols(order_by))
     return (

@@ -115,10 +115,14 @@ def upsert_parquet(
 
     A bad config (see ``merge_upsert``) raises ValueError before any
     Spark job, also on the first call, when there is no target yet.
-    ``replace_parquet`` plans a small merge statically and caches the
-    schema it wrote, so a steady small upsert runs two Spark jobs (the
-    source-keys broadcast and the write) and the next read of the
-    target runs none."""
+    ``replace_parquet`` plans a small merge statically, writes it as at
+    most ``session.static_partitions`` files and caches the schema it
+    wrote, so a steady small upsert runs two Spark jobs (the
+    source-keys broadcast and the write), a merge that reads under
+    1 MiB writes one part file, and the next read of the target runs
+    none. A source from ``plans.pipeline.build_plan`` that the rule
+    gives one partition is already coalesced to one, so neither job
+    shuffles."""
     from etl_mini_spark.sources.fs import replace_parquet
     from etl_mini_spark.sources.readers import read_parquet
 

@@ -14,7 +14,7 @@ closed, like the UDF registry: specs name vetted ops only.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from datetime import datetime
+from datetime import datetime, timezone
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +29,7 @@ from etl_mini_spark.functions.registry import (
 from etl_mini_spark.operators.dedup import ordered_dedup
 from etl_mini_spark.operators.upsert import upsert_parquet
 from etl_mini_spark.plans.checkpoint import CheckpointTable
-from etl_mini_spark.session import static_plan
+from etl_mini_spark.session import static_partitions, static_plan
 from etl_mini_spark.sources.readers import read_csv, read_ndjson, read_parquet, require_source
 from etl_mini_spark.sources.writers import write_partitioned_by_type_date, write_run_layout
 
@@ -127,7 +127,15 @@ def build_plan(
     registry: FunctionRegistry | None = None,
     window_start=None,
 ) -> DataFrame:
-    """Source + transforms as one lazy plan (no execution)."""
+    """Source + transforms as one lazy plan (no execution).
+
+    A source that ``session.static_partitions`` gives one partition (a
+    small window) is coalesced to one partition before any transform.
+    One partition satisfies every clustered distribution, so the
+    window's ``ordered_dedup`` and aggregates plan no exchange, in the
+    sink's write and in the upsert's source-keys broadcast alike. The
+    rule reads plan statistics only: with the source's schema cached,
+    building the plan runs no Spark job."""
     src = spec.source
     incremental = spec.incremental_ts_col and spec.window_end is not None
     if src.format == "parquet":
@@ -156,6 +164,8 @@ def build_plan(
         if window_start is not None:
             cond = (c >= F.lit(window_start)) & cond
         df = df.filter(cond)
+    if static_partitions(df) == 1:
+        df = df.coalesce(1)
 
     registry = registry or default_registry()
     for t in spec.transforms:
@@ -173,8 +183,9 @@ def build_plan(
 def write_sink(spark: SparkSession, df: DataFrame, sink: SinkSpec) -> None:
     """Write ``df`` to the sink. The file sinks write under
     ``session.static_plan``, so a small window is one static plan, not
-    one AQE job per exchange; the upsert sink's stage-swap applies the
-    same rule to its merged plan."""
+    one AQE job per exchange; the upsert sink's stage-swap
+    (``sources.fs.replace_parquet``) applies the same rule to its
+    merged plan and writes a small merge as one file."""
     if sink.format == "upsert":
         upsert_parquet(spark, sink.path, df, keys=sink.upsert_keys)
         return
@@ -192,6 +203,12 @@ def write_sink(spark: SparkSession, df: DataFrame, sink: SinkSpec) -> None:
         write()
 
 
+def _utc_naive(dt: datetime) -> datetime:
+    """``dt`` as a naive UTC datetime, the way the readers bound a
+    window; a naive one is taken as UTC already."""
+    return dt if dt.tzinfo is None else dt.astimezone(timezone.utc).replace(tzinfo=None)
+
+
 def run_pipeline(
     spark: SparkSession,
     spec: PipelineSpec,
@@ -201,12 +218,21 @@ def run_pipeline(
 
     Returns a small run report. Skipped runs (missing source,
     fail_on_missing=False) do NOT advance the checkpoint — the
-    reference's not-advanced-on-missing rule."""
+    reference's not-advanced-on-missing rule. A ``window_end`` at or
+    before the committed one is skipped too, after the checkpoint read
+    and before any other Spark job: extracting the empty range and
+    committing would move the checkpoint backwards, and the next window
+    would load rows again."""
     if not require_source(spark, spec.source.path, spec.source.fail_on_missing):
         return {"status": "skipped", "reason": "source missing", "pipeline": spec.name}
 
     ckpt = CheckpointTable(spark, spec.checkpoint_path) if spec.checkpoint_path else None
     window_start = ckpt.last_window_end(spec.name) if ckpt and spec.incremental_ts_col else None
+    if (window_start is not None and spec.window_end is not None
+            and _utc_naive(spec.window_end) <= _utc_naive(window_start)):
+        return {"status": "skipped", "reason": "window already committed",
+                "pipeline": spec.name, "window_start": window_start,
+                "window_end": spec.window_end}
 
     df = build_plan(spark, spec, registry, window_start=window_start)
     write_sink(spark, df, spec.sink)

@@ -136,35 +136,43 @@ def _scanned_bytes(jvm, plan) -> int:
 def static_plan(df):
     """Plan (and run) what the block does with ``df`` without AQE when
     ``df`` reads little; otherwise leave the session's settings alone.
+    Yields :func:`static_partitions` of ``df``: the block's shuffle
+    partition count, or None when the session's plan is kept.
 
     AQE runs every exchange and broadcast as a Spark job of its own,
-    and on a small read those fixed costs are most of the read. The
-    rule, from the optimized plan's leaf statistics (no job): when the
-    leaves hold ``scanned`` bytes in total and that fits
-    ``min(spark.sql.adaptive.advisoryPartitionSizeInBytes,
-    spark.sql.autoBroadcastJoinThreshold)``, the block runs under
-    :func:`loop_confs` with ``clamp(floor(scanned /
-    spark.sql.adaptive.coalescePartitions.minPartitionSize), 1,
-    defaultParallelism)`` shuffle partitions. That is the count AQE's
-    coalescing reaches under the default ``parallelismFirst``: it
-    splits a shuffle over ``minPartitionSize`` (1 MB) across up to
-    ``defaultParallelism`` partitions, not into one. A join side that
-    reads part of those bytes is estimated under the broadcast
-    threshold too, so the static plan broadcasts it, as AQE would. A
-    larger plan, a leaf of unknown size, a streaming plan, or a session
-    that already has AQE off keep their plan as it is.
+    and on a small read those fixed costs are most of the read. When
+    the rule of :func:`static_partitions` gives a count, the block runs
+    under :func:`loop_confs` with that many shuffle partitions. A join
+    side reads part of the plan's bytes, which fit the broadcast
+    threshold, so the static plan broadcasts it, as AQE would.
 
     Plan inside the block: a DataFrame action or write plans when it
     runs, and ``df._jdf.queryExecution().executedPlan()`` fixes the
     plan that later ``collect``/``toPandas`` calls on ``df`` reuse."""
-    n = _static_partitions(df)
+    n = static_partitions(df)
     with nullcontext() if n is None else loop_confs(df.sparkSession, n):
-        yield
+        yield n
 
 
-def _static_partitions(df) -> int | None:
-    """The shuffle-partition count :func:`static_plan` runs ``df``
-    with, or None to keep the session's plan."""
+def static_partitions(df) -> int | None:
+    """The partition count a small ``df`` runs with, or None to keep
+    the session's (AQE) plan. The one size rule of the engine:
+    :func:`static_plan` uses it as the shuffle partition count,
+    ``plans.pipeline.build_plan`` coalesces a source it gives 1 to one
+    partition, and ``sources.fs.replace_parquet`` writes at most this
+    many files.
+
+    From the optimized plan's leaf statistics only, so it runs no job:
+    when the leaves hold ``scanned`` bytes in total and that fits
+    ``min(spark.sql.adaptive.advisoryPartitionSizeInBytes,
+    spark.sql.autoBroadcastJoinThreshold)``, the count is
+    ``clamp(floor(scanned /
+    spark.sql.adaptive.coalescePartitions.minPartitionSize), 1,
+    defaultParallelism)``. That is the count AQE's coalescing reaches
+    under the default ``parallelismFirst``: it splits a shuffle over
+    ``minPartitionSize`` (1 MB) across up to ``defaultParallelism``
+    partitions, not into one. A larger plan, a leaf of unknown size, a
+    streaming plan, or a session that already has AQE off give None."""
     spark = df.sparkSession
     if df.isStreaming or spark.conf.get("spark.sql.adaptive.enabled") == "false":
         return None

@@ -2,8 +2,9 @@
 
 The stage-swap (`replace_parquet`, behind `upsert_parquet`, the
 checkpoint commit and `compact_parquet`; it plans small writes
-statically by the rule of `session.static_plan` and leaves the written
-schema in `read_parquet`'s cache) and the ``latest`` manifest
+statically by the rule of `session.static_partitions`, writes them as
+at most that many files, and leaves the written schema in
+`read_parquet`'s cache) and the ``latest`` manifest
 (`write_run_layout`) must work where the data lives: HDFS, S3A, GCS,
 ABFS, or local disk. ``shutil``/``pathlib`` only speak the local
 filesystem, so all path manipulation goes through the JVM's
@@ -83,7 +84,11 @@ def replace_parquet(
     leaves (the target's and the source's files) are small, it is
     planned without AQE, with shuffle partitions sized from those
     bytes, where AQE would run every exchange and broadcast as a Spark
-    job of its own; a larger plan keeps the AQE write.
+    job of its own, and it writes at most that many files
+    (``df.coalesce``; ``session.static_partitions`` gives the count): a
+    merge that reads under 1 MiB is one part file, so a small upsert
+    target does not gain a file per rewrite. A larger plan keeps the
+    AQE write and its file count.
 
     After the swap the written schema is put into ``read_parquet``'s
     cache under the new files' fingerprint (local paths only), so the
@@ -103,8 +108,8 @@ def replace_parquet(
         fs_rename(spark, stage, path)
         exists = True
     df = build(exists)
-    with static_plan(df):
-        df.write.mode("overwrite").parquet(stage)
+    with static_plan(df) as n:
+        (df if n is None else df.coalesce(n)).write.mode("overwrite").parquet(stage)
     entry = readers.written_entry(stage, path, df.schema)
     if exists:
         fs_delete(spark, path)

@@ -162,7 +162,9 @@ def compact_parquet(
     stage-swap as upsert_parquet (``sources.fs.replace_parquet``) so
     readers never see a half-compacted dataset. With ``sort_col`` the
     rewrite also range-sorts (see write_sorted_for_skipping) so
-    compaction doubles as a clustering pass."""
+    compaction doubles as a clustering pass. A table within the bound
+    of ``session.static_partitions`` is written as at most that many
+    files, which can be fewer than ``target_mb`` asks for."""
     import math
 
     from etl_mini_spark.sources.fs import _fs_and_path, replace_parquet

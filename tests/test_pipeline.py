@@ -462,7 +462,8 @@ def test_small_file_sink_writes_in_one_job(spark, fmt):
     """A small window's file sink runs as one static plan: filter +
     ordered_dedup + write in one Spark job (AQE ran the dedup exchange,
     and the partitioned sink's repartition, as jobs of their own), and
-    writes the rows the plan produces."""
+    writes the rows the plan produces. Building the plan of a source
+    whose schema is cached runs no job."""
     from etl_mini_spark.plans.pipeline import (
         PipelineSpec, SinkSpec, SourceSpec, build_plan, run_pipeline,
     )
@@ -481,6 +482,8 @@ def test_small_file_sink_writes_in_one_job(spark, fmt):
                       partition_ts_col="ts"),
     )
     want = build_plan(spark, spec)  # also warms the source's schema cache
+    _, jobs = run_in_job_group(spark, lambda: build_plan(spark, spec))
+    assert jobs == []  # the size rule reads plan statistics only
     if fmt == "ndjson":  # JSON timestamps keep milliseconds
         want = want.withColumn("ts", F.date_trunc("millisecond", "ts"))
     expected = sorted(want.collect(), key=lambda r: r.event_id)

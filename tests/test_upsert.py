@@ -1,10 +1,11 @@
-"""Keyed upsert through the stage-then-swap writer: Spark jobs per
-pipeline window, the schema the swap leaves in the reader's cache, the
-AQE fallback for large plans, and loud failure on bad configs."""
+"""Keyed upsert through the stage-then-swap writer: Spark jobs and
+shuffle bytes per pipeline window, the target's file count, stale
+windows, the schema the swap leaves in the reader's cache, the AQE
+fallback for large plans, and loud failure on bad configs."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +13,8 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE, run_in_job_group
 
 WINDOWS = (datetime(2024, 1, 10), datetime(2024, 1, 20))
+FOUR_WINDOWS = (datetime(2024, 1, 8), datetime(2024, 1, 15), datetime(2024, 1, 22),
+                datetime(2024, 2, 1))
 AQE, PARTS, ADVISORY = (
     "spark.sql.adaptive.enabled",
     "spark.sql.shuffle.partitions",
@@ -30,28 +33,44 @@ def _spec(tmp_path, name="upsert_windows"):
         incremental_ts_col="ts", checkpoint_path=str(tmp_path / "ckpt"))
 
 
-def _run_windows(spark, spec, monkeypatch, between=None) -> list[tuple[int, int]]:
-    """(upsert jobs, all jobs) of each window's ``run_pipeline``; the
-    upsert's jobs are counted in a job group of their own."""
+def _run_windows(spark, spec, monkeypatch, between=None,
+                 windows=WINDOWS) -> list[tuple[list[int], list[int]]]:
+    """(upsert job ids, all job ids) of each window's ``run_pipeline``;
+    the upsert's jobs are counted in a job group of their own."""
     from etl_mini_spark.plans import pipeline
 
     upsert_jobs = []
 
     def counted(*args, **kwargs):
         _, ids = run_in_job_group(spark, lambda: real(*args, **kwargs))
-        upsert_jobs.append(len(ids))
+        upsert_jobs.append(ids)
 
     from etl_mini_spark.operators.upsert import upsert_parquet as real
 
     monkeypatch.setattr(pipeline, "upsert_parquet", counted)
-    counts = []
-    for end in WINDOWS:
+    out = []
+    for end in windows:
         spec.window_end = end
         _, ids = run_in_job_group(spark, lambda: pipeline.run_pipeline(spark, spec))
-        counts.append((upsert_jobs[-1], len(ids) + upsert_jobs[-1]))
+        out.append((upsert_jobs[-1], ids + upsert_jobs[-1]))
         if between is not None:
             between()
-    return counts
+    return out
+
+
+def _counts(windows) -> list[tuple[int, int]]:
+    return [(len(upsert), len(every)) for upsert, every in windows]
+
+
+def _shuffle_bytes(spark, job_ids) -> int:
+    """Shuffle bytes read plus written by the stages of ``job_ids``, from
+    the status store."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    return sum(
+        store.lastStageAttempt(sid).shuffleReadBytes()
+        + store.lastStageAttempt(sid).shuffleWriteBytes()
+        for jid in job_ids for sid in sc.statusTracker().getJobInfo(jid).stageIds)
 
 
 def _rows(spark, path):
@@ -66,7 +85,7 @@ def test_steady_window_runs_two_upsert_jobs(spark, tmp_path, monkeypatch):
     from etl_mini_spark.sources.readers import read_parquet
 
     spec = _spec(tmp_path)
-    first, steady = _run_windows(spark, spec, monkeypatch)
+    first, steady = _counts(_run_windows(spark, spec, monkeypatch))
     assert (first[0], steady) == (1, (2, 4)), (first, steady)
     df, ids = run_in_job_group(spark, lambda: read_parquet(spark, spec.sink.path))
     assert ids == []
@@ -74,12 +93,59 @@ def test_steady_window_runs_two_upsert_jobs(spark, tmp_path, monkeypatch):
     assert df.count() == want.select("event_id").distinct().count()
 
 
+def test_small_window_runs_without_a_shuffle(spark, tmp_path, monkeypatch):
+    """A window whose source the size rule gives one partition is
+    coalesced to one partition before its ``ordered_dedup``, so no job
+    of a window (the source-keys broadcast and the write included)
+    reads or writes a shuffle byte; the merge is written as one file,
+    so the target stays one part file, holding every source row older
+    than the last window's end (``event_id`` is unique in the source).
+    The dedup exchange ran twice per steady window, and the target grew
+    by one file per window."""
+    from etl_mini_spark.sources.readers import read_parquet
+
+    spec = _spec(tmp_path)
+    parts = []
+    runs = _run_windows(
+        spark, spec, monkeypatch, windows=FOUR_WINDOWS,
+        between=lambda: parts.append(len(list((tmp_path / "target").glob("part-*")))))
+    assert [_shuffle_bytes(spark, every) for _, every in runs] == [0, 0, 0, 0]
+    assert parts == [1, 1, 1, 1]
+    want = read_parquet(spark, f"{SF_SMOKE}/events.parquet")
+    want = want.filter(F.col("ts") < FOUR_WINDOWS[-1]).collect()
+    assert _rows(spark, spec.sink.path) == sorted(tuple(r) for r in want)
+
+
+def test_stale_window_is_skipped(spark, tmp_path, monkeypatch):
+    """A ``window_end`` at or before the committed one (naive or
+    tz-aware) is skipped after the checkpoint read, its one Spark job:
+    the target is not rewritten and the checkpoint does not move back.
+    Such a run used to extract the empty range, rewrite the target and
+    commit the earlier end, so the next window loaded rows again."""
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+    from etl_mini_spark.plans.pipeline import run_pipeline
+
+    spec = _spec(tmp_path)
+    _run_windows(spark, spec, monkeypatch)
+    target = tmp_path / "target"
+    files = {p.name: p.stat().st_mtime_ns for p in target.iterdir()}
+    for end in (WINDOWS[0], WINDOWS[-1].replace(tzinfo=timezone.utc)):
+        spec.window_end = end
+        report, ids = run_in_job_group(spark, lambda: run_pipeline(spark, spec))
+        assert (report["status"], report["reason"]) == ("skipped", "window already committed")
+        assert len(ids) == 1, ids
+    assert {p.name: p.stat().st_mtime_ns for p in target.iterdir()} == files
+    assert CheckpointTable(spark, spec.checkpoint_path).last_window_end(spec.name) == WINDOWS[-1]
+
+
 def test_plan_over_the_bound_keeps_the_aqe_path(spark, tmp_path, monkeypatch):
     """With the advisory partition size under the plan's estimate, the
     write runs under AQE as before: a steady upsert runs the same 4 jobs
     as the AQE write did before writes cached their schema (the target
     read is warmed first, which takes that cache out of the count), and
-    the table holds the same rows as the statically planned one."""
+    the table holds the same rows as the statically planned one. The
+    source is not coalesced, so the window's dedup keeps its exchange."""
+    from etl_mini_spark.plans.pipeline import build_plan
     from etl_mini_spark.sources.readers import read_parquet
 
     static = _spec(tmp_path / "static")
@@ -88,11 +154,14 @@ def test_plan_over_the_bound_keeps_the_aqe_path(spark, tmp_path, monkeypatch):
     prev = spark.conf.get(ADVISORY)
     spark.conf.set(ADVISORY, "1k")
     try:
-        counts = _run_windows(spark, adaptive, monkeypatch,
-                              between=lambda: read_parquet(spark, adaptive.sink.path))
+        counts = _counts(_run_windows(spark, adaptive, monkeypatch,
+                                      between=lambda: read_parquet(spark, adaptive.sink.path)))
+        qe = build_plan(spark, adaptive)._jdf.queryExecution()
+        optimized, executed = qe.optimizedPlan().toString(), qe.executedPlan().toString()
     finally:
         spark.conf.set(ADVISORY, prev)
     assert counts[1][0] == 4, counts
+    assert "Repartition" not in optimized and "Exchange hashpartitioning" in executed, executed
     assert _rows(spark, adaptive.sink.path) == _rows(spark, static.sink.path)
 
 
