@@ -7,17 +7,24 @@ postgresql_service.py:181-239, conflict SQL at 213-229):
   col = excluded.col`` for the update columns)
 - ``nothing``: target row wins (``DO NOTHING``)
 
-``merge_upsert`` is the pure-DataFrame core: a left-anti join against
-the source keys plus a union, broadcast when the source is small;
-``upsert_parquet`` is the table-level sink: stage-then-swap so a failed
-write never corrupts the target (SURVEY.md §7.4 exactly-once note). On
-Delta-enabled clusters, swap the rewrite for ``MERGE INTO``.
+``merge_upsert`` is the pure-DataFrame core: a small merge is one
+partition and a window over the keys, planned inside the write job; a
+larger one is a left-anti join against the source keys plus a union,
+broadcast when the source is small. ``upsert_parquet`` is the
+table-level sink: stage-then-swap so a failed write never corrupts the
+target (SURVEY.md §7.4 exactly-once note). On Delta-enabled clusters,
+swap the rewrite for ``MERGE INTO``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from etl_mini_spark.session import static_partitions
 
 CONFLICT_ACTIONS = ("update", "nothing")
 
@@ -37,6 +44,28 @@ def _check_upsert(source: DataFrame, keys: list[str] | None, conflict_action: st
         raise ValueError(f"upsert keys {missing} are not source columns {source.columns}")
 
 
+def _merge_in_one_partition(
+    target: DataFrame, source: DataFrame, keys: list[str], source_wins: bool
+) -> DataFrame | None:
+    """The whole-row merge of ``source`` into ``target`` as one
+    partition, or None when the size rule gives the two more than one.
+
+    ``__w`` is true on the side that wins a collision (the source when
+    ``source_wins``, else the target). A row is kept when it won, when
+    no row of its key won, or when its key has a NULL part. The window
+    needs ``withColumn``: Spark rejects a window expression in a
+    filter."""
+    both = target.withColumn("__w", F.lit(not source_wins)).unionByName(
+        source.select(*target.columns).withColumn("__w", F.lit(source_wins)))
+    if static_partitions(both) != 1:
+        return None
+    null_key = reduce(operator.or_, [F.col(k).isNull() for k in keys])
+    return (both.coalesce(1)
+            .withColumn("__m", F.max("__w").over(Window.partitionBy(*keys)))
+            .filter(F.col("__w") | ~F.col("__m") | null_key)
+            .drop("__w", "__m"))
+
+
 def merge_upsert(
     target: DataFrame,
     source: DataFrame,
@@ -52,14 +81,26 @@ def merge_upsert(
     Raises ValueError on an unknown action, no keys, or keys missing
     from ``source``.
 
-    The whole-row update plans as the target left-anti joined with the
-    source keys, unioned with the source: one join, whose build side
-    (the source keys) is broadcast when small. ``update_columns`` adds
-    a left join of the target with the source and a left-anti join of
-    the source with the target keys; 'nothing' is that left-anti join
-    alone, unioned with the target.
+    The whole-row update and 'nothing' plan as one partition when
+    ``session.static_partitions`` gives their inputs one: the target and
+    the source are unioned with a flag that marks the winning side, and
+    a window over the keys drops each losing row whose key a winning
+    row holds. One partition satisfies the window's clustering, so the
+    merge plans no exchange and no broadcast and runs inside the job
+    that consumes it, reading the source once. A larger whole-row
+    update plans as the target left-anti joined with the source keys,
+    unioned with the source: one join, whose build side (the source
+    keys) is broadcast when small. ``update_columns`` adds a left join
+    of the target with the source and a left-anti join of the source
+    with the target keys; a larger 'nothing' is that left-anti join
+    alone, unioned with the target. Every plan keeps a row whose key
+    has a NULL part, as the anti join does (NULL never matches).
     """
     _check_upsert(source, keys, conflict_action)
+    if conflict_action == "nothing" or update_columns is None:
+        merged = _merge_in_one_partition(target, source, keys, conflict_action == "update")
+        if merged is not None:
+            return merged
     if conflict_action == "nothing":
         new_rows = source.join(target.select(*keys), keys, "left_anti")
         return target.unionByName(new_rows.select(*target.columns))
@@ -117,12 +158,13 @@ def upsert_parquet(
     Spark job, also on the first call, when there is no target yet.
     ``replace_parquet`` plans a small merge statically, writes it as at
     most ``session.static_partitions`` files and caches the schema it
-    wrote, so a steady small upsert runs two Spark jobs (the
-    source-keys broadcast and the write), a merge that reads under
-    1 MiB writes one part file, and the next read of the target runs
-    none. A source from ``plans.pipeline.build_plan`` that the rule
-    gives one partition is already coalesced to one, so neither job
-    shuffles."""
+    wrote, and ``merge_upsert`` merges a small whole-row upsert in one
+    partition, so a steady small upsert runs one Spark job (the write,
+    which reads the target and the source once each), a merge that
+    reads under 1 MiB writes one part file, and the next read of the
+    target runs none. A source from ``plans.pipeline.build_plan`` that
+    the rule gives one partition is already coalesced to one, so the
+    write does not shuffle."""
     from etl_mini_spark.sources.fs import replace_parquet
     from etl_mini_spark.sources.readers import read_parquet
 

@@ -132,9 +132,9 @@ def build_plan(
     A source that ``session.static_partitions`` gives one partition (a
     small window) is coalesced to one partition before any transform.
     One partition satisfies every clustered distribution, so the
-    window's ``ordered_dedup`` and aggregates plan no exchange, in the
-    sink's write and in the upsert's source-keys broadcast alike. The
-    rule reads plan statistics only: with the source's schema cached,
+    window's ``ordered_dedup`` and aggregates plan no exchange in the
+    sink's write, the upsert's one-partition merge included. The rule
+    reads plan statistics only: with the source's schema cached,
     building the plan runs no Spark job."""
     src = spec.source
     incremental = spec.incremental_ts_col and spec.window_end is not None
@@ -203,10 +203,11 @@ def write_sink(spark: SparkSession, df: DataFrame, sink: SinkSpec) -> None:
         write()
 
 
-def _utc_naive(dt: datetime) -> datetime:
-    """``dt`` as a naive UTC datetime, the way the readers bound a
-    window; a naive one is taken as UTC already."""
-    return dt if dt.tzinfo is None else dt.astimezone(timezone.utc).replace(tzinfo=None)
+def _instant(dt: datetime) -> datetime:
+    """``dt`` as an aware UTC datetime. A naive one is read in the
+    process's local time zone, as PySpark's ``lit`` and ``collect`` do:
+    the checkpoint returns a committed end as a naive local time."""
+    return dt.astimezone(timezone.utc)
 
 
 def run_pipeline(
@@ -229,7 +230,7 @@ def run_pipeline(
     ckpt = CheckpointTable(spark, spec.checkpoint_path) if spec.checkpoint_path else None
     window_start = ckpt.last_window_end(spec.name) if ckpt and spec.incremental_ts_col else None
     if (window_start is not None and spec.window_end is not None
-            and _utc_naive(spec.window_end) <= _utc_naive(window_start)):
+            and _instant(spec.window_end) <= _instant(window_start)):
         return {"status": "skipped", "reason": "window already committed",
                 "pipeline": spec.name, "window_start": window_start,
                 "window_end": spec.window_end}

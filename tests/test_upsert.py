@@ -78,15 +78,16 @@ def _rows(spark, path):
 
 
 def test_steady_window_runs_two_upsert_jobs(spark, tmp_path, monkeypatch):
-    """The first window's upsert is one write job. A steady one is the
-    source-keys broadcast and the write: the target's schema is cached
-    by the previous swap, and the small merge is planned statically, so
-    no exchange runs as a job of its own. The whole window is 4 jobs."""
+    """The first window's upsert is one write job, and so is a steady
+    one: the target's schema is cached by the previous swap, and the
+    small merge is one partition planned statically, so no exchange or
+    source-keys broadcast runs as a job of its own. The whole window is
+    3 jobs: the checkpoint read, the write and the checkpoint commit."""
     from etl_mini_spark.sources.readers import read_parquet
 
     spec = _spec(tmp_path)
     first, steady = _counts(_run_windows(spark, spec, monkeypatch))
-    assert (first[0], steady) == (1, (2, 4)), (first, steady)
+    assert (first[0], steady) == (1, (1, 3)), (first, steady)
     df, ids = run_in_job_group(spark, lambda: read_parquet(spark, spec.sink.path))
     assert ids == []
     want = spark.read.parquet(f"{SF_SMOKE}/events.parquet").filter(F.col("ts") < WINDOWS[-1])
@@ -96,10 +97,10 @@ def test_steady_window_runs_two_upsert_jobs(spark, tmp_path, monkeypatch):
 def test_small_window_runs_without_a_shuffle(spark, tmp_path, monkeypatch):
     """A window whose source the size rule gives one partition is
     coalesced to one partition before its ``ordered_dedup``, so no job
-    of a window (the source-keys broadcast and the write included)
-    reads or writes a shuffle byte; the merge is written as one file,
-    so the target stays one part file, holding every source row older
-    than the last window's end (``event_id`` is unique in the source).
+    of a window (the write and its merge included) reads or writes a
+    shuffle byte; the merge is written as one file, so the target stays
+    one part file, holding every source row older than the last
+    window's end (``event_id`` is unique in the source).
     The dedup exchange ran twice per steady window, and the target grew
     by one file per window."""
     from etl_mini_spark.sources.readers import read_parquet
@@ -138,6 +139,34 @@ def test_stale_window_is_skipped(spark, tmp_path, monkeypatch):
     assert CheckpointTable(spark, spec.checkpoint_path).last_window_end(spec.name) == WINDOWS[-1]
 
 
+def test_stale_window_is_skipped_outside_utc(spark, tmp_path, monkeypatch):
+    """Under a process time zone other than UTC, an end before the
+    committed one is skipped too. The checkpoint returns a naive local
+    time, which was compared as UTC: in New York a 22:00Z end ran after
+    a 00:00Z commit and moved the checkpoint back to 17:00 local."""
+    import time
+
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+    from etl_mini_spark.plans.pipeline import run_pipeline
+
+    spec = _spec(tmp_path)
+    committed = datetime(2024, 1, 20, tzinfo=timezone.utc)
+    try:
+        with monkeypatch.context() as m:
+            m.setenv("TZ", "America/New_York")
+            time.tzset()
+            spec.window_end = committed
+            assert run_pipeline(spark, spec)["status"] == "ok"
+            spec.window_end = datetime(2024, 1, 19, 22, tzinfo=timezone.utc)
+            report = run_pipeline(spark, spec)
+            assert (report["status"], report.get("reason")) == (
+                "skipped", "window already committed"), report
+            ck = CheckpointTable(spark, spec.checkpoint_path)
+            assert ck.last_window_end(spec.name).astimezone(timezone.utc) == committed
+    finally:
+        time.tzset()
+
+
 def test_plan_over_the_bound_keeps_the_aqe_path(spark, tmp_path, monkeypatch):
     """With the advisory partition size under the plan's estimate, the
     write runs under AQE as before: a steady upsert runs the same 4 jobs
@@ -163,6 +192,72 @@ def test_plan_over_the_bound_keeps_the_aqe_path(spark, tmp_path, monkeypatch):
     assert counts[1][0] == 4, counts
     assert "Repartition" not in optimized and "Exchange hashpartitioning" in executed, executed
     assert _rows(spark, adaptive.sink.path) == _rows(spark, static.sink.path)
+
+
+_MERGE_SCHEMA = "k1 int, k2 string, v int"
+# NULL key parts, keys duplicated on both sides, and a source key that
+# matches ``k1`` alone.
+_MERGE_TARGET = [(1, "a", 10), (1, "a", 11), (2, "a", 20), (None, "a", 30), (3, None, 40),
+                 (None, None, 50), (4, "b", 60), (5, "c", 70), (5, "c", 71)]
+_MERGE_SOURCE = [(1, "a", 100), (1, "a", 101), (None, "a", 300), (3, None, 400),
+                 (None, None, 500), (4, "b", 600), (6, "d", 700), (6, "d", 701), (2, "z", 800)]
+
+
+def _parquet(spark, tmp_path, rows):
+    """``rows`` as a parquet scan, whose size the size rule can read (a
+    DataFrame of Python rows has no size estimate)."""
+    path = str(tmp_path / f"rows{len(list(tmp_path.iterdir()))}")
+    spark.createDataFrame(rows, _MERGE_SCHEMA).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _merge_reference(target, source, keys, action):
+    """Left-anti + union as a row multiset: a row of the losing side is
+    dropped when a winning row has its key, and a key with a NULL part
+    matches nothing."""
+    from collections import Counter
+
+    idx = [("k1", "k2").index(k) for k in keys]
+
+    def key(row):
+        return tuple(row[i] for i in idx)
+
+    def unmatched(rows, winners):
+        won = {key(w) for w in winners}
+        return [r for r in rows if None in key(r) or key(r) not in won]
+
+    if action == "update":
+        return Counter(unmatched(target, source) + source)
+    return Counter(target + unmatched(source, target))
+
+
+@pytest.mark.parametrize("advisory", [None, "1k"], ids=["one_partition", "broadcast"])
+def test_merge_plans_match_left_anti_union(spark, tmp_path, advisory):
+    """Both plans of the whole-row merge, the one-partition window and
+    the left-anti join that a 1 KiB advisory size forces, equal a Python
+    left-anti + union, for both actions, one- and two-column keys, and
+    an empty source or target. A window merge that collapsed duplicate
+    keys or matched NULL keys would differ."""
+    from collections import Counter
+
+    from etl_mini_spark.operators.upsert import merge_upsert
+
+    prev = spark.conf.get(ADVISORY)
+    if advisory is not None:
+        spark.conf.set(ADVISORY, advisory)
+    try:
+        for target, source in ((_MERGE_TARGET, _MERGE_SOURCE), (_MERGE_TARGET, []),
+                               ([], _MERGE_SOURCE)):
+            t, s = (_parquet(spark, tmp_path, rows) for rows in (target, source))
+            for keys in (["k1"], ["k1", "k2"]):
+                for action in ("update", "nothing"):
+                    merged = merge_upsert(t, s, keys, conflict_action=action)
+                    plan = merged._jdf.queryExecution().optimizedPlan().toString()
+                    assert ("Window" in plan) == (advisory is None), plan
+                    got = Counter(tuple(r) for r in merged.collect())
+                    assert got == _merge_reference(target, source, keys, action), (keys, action)
+    finally:
+        spark.conf.set(ADVISORY, prev)
 
 
 _KINDS = """
