@@ -221,7 +221,7 @@ def run_pipeline(
     fail_on_missing=False) do NOT advance the checkpoint — the
     reference's not-advanced-on-missing rule. A ``window_end`` at or
     before the committed one is skipped too, after the checkpoint read
-    and before any other Spark job: extracting the empty range and
+    and before any Spark job: extracting the empty range and
     committing would move the checkpoint backwards, and the next window
     would load rows again."""
     if not require_source(spark, spec.source.path, spec.source.fail_on_missing):

@@ -77,6 +77,51 @@ def half_up(col, k: int = 6):
     return F.floor(col * scale + F.lit(0.5)) / scale
 
 
+def md5_mod(expr, salt: str, mod: int):
+    """Portable deterministic bucket: md5 of (key || salt), first 15
+    hex chars as an integer, mod — identical on both engines (the
+    operators/sampling.hash_bucket recipe)."""
+    return (
+        F.conv(F.substring(F.md5(F.concat(expr.cast("string"), F.lit(salt))), 1, 15),
+               16, 10).cast("bigint") % mod
+    )
+
+
+def events_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily events revenue in exact BIGINT cents — the bounded calendar
+    series (one hash agg, ~2.4k rows at any SF) that daily-statistic and
+    recursion entries start from; ``EVENTS_DAILY_SQL`` is its oracle CTE."""
+    t = _t(spark, sf_dir, "events")
+    return t.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("d")).agg(
+        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+        .cast("bigint").alias("c")
+    )
+
+
+EVENTS_DAILY_SQL = """
+      SELECT strftime(ts, '%Y-%m-%d') AS d,
+             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS c
+      FROM events GROUP BY 1
+"""
+
+
+def orders_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily order revenue in exact BIGINT cents, the same shape over
+    ``orders``; ``ORDERS_DAILY_SQL`` is its oracle CTE."""
+    o = _t(spark, sf_dir, "orders")
+    return o.groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("d")).agg(
+        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
+        .cast("bigint").alias("c")
+    )
+
+
+ORDERS_DAILY_SQL = """
+      SELECT strftime(o_orderdate, '%Y-%m-%d') AS d,
+             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
+      FROM orders GROUP BY 1
+"""
+
+
 _TMP = Path(__file__).resolve().parents[2] / "tmp"  # the repository's tmp/
 
 

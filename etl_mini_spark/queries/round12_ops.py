@@ -28,26 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t, half_up
+from etl_mini_spark.queries._base import EVENTS_DAILY_SQL, _t, events_daily_cents, half_up
 from etl_mini_spark.queries._base import q as pq
-
-
-def _daily_cents(spark, sf_dir, table="events", value="value", datecol="ts"):
-    """Daily total of `value` in exact BIGINT cents — the shared series
-    every daily-statistic entry in this tier starts from."""
-    t = _t(spark, sf_dir, table)
-    return t.groupBy(F.date_format(datecol, "yyyy-MM-dd").alias("d")).agg(
-        F.sum((F.col(value).cast("decimal(18,2)") * 100).cast("long"))
-        .cast("bigint").alias("c")
-    )
-
-
-# the matching oracle-side CTE (events daily revenue cents)
-_DAILY_SQL = """
-      SELECT strftime(ts, '%Y-%m-%d') AS d,
-             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS c
-      FROM events GROUP BY 1
-"""
 
 
 # --- Friedman test over day blocks ---------------------------------------------------------
@@ -484,7 +466,7 @@ def jonckheere_terpstra_trend(spark, sf_dir):
 # (calendar^2); the changepoint is the earliest day maximizing |U_t|.
 # Everything is integer: sgn sums, max, argmax with day tie-break.
 _PETTITT_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     idx AS (SELECT d, c, row_number() OVER (ORDER BY d) AS rn FROM daily),
     pairs AS (
       SELECT a.rn AS i, b.rn AS j,
@@ -516,7 +498,7 @@ def pettitt_changepoint(spark, sf_dir):
     aggregate 3x unpinned (guide 3.3)."""
     from etl_mini_spark.session import pin
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     idx = pin(daily.select("d", "c", F.row_number().over(Window.orderBy("d")).alias("rn")))
     a = idx.select(F.col("rn").alias("i"), F.col("c").alias("ci"))
     b = idx.select(F.col("rn").alias("j"), F.col("c").alias("cj"))
@@ -548,7 +530,7 @@ def pettitt_changepoint(spark, sf_dir):
 # once for the winner from exact integer sums (sum of squares held
 # wide: DECIMAL(38,0)/HUGEINT past the 2^63 cliff).
 _GRUBBS_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     s AS (
       SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(c) AS BIGINT) AS sc,
              sum(CAST(c AS HUGEINT) * c) AS ssq
@@ -573,7 +555,7 @@ def grubbs_max_outlier(spark, sf_dir):
     one fixed expression over exact integer sums, the sum of squares
     wide (DECIMAL(38,0)/HUGEINT). Plan: one day agg, one broadcast of
     the 1-row moments, one rank pick."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     s = daily.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("c").cast("bigint").alias("sc"),
@@ -604,7 +586,7 @@ def grubbs_max_outlier(spark, sf_dir):
 # sums (all additive), and F is one fixed double expression — the
 # same integer-sums regression discipline as rolling_regression_slope.
 _CHOW_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     idx AS (SELECT c, row_number() OVER (ORDER BY d) AS rn FROM daily),
     nn AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(count(*) / 2 AS BIGINT) AS nb FROM idx),
     seg AS (
@@ -658,7 +640,7 @@ def chow_structural_break(spark, sf_dir):
     scan + day aggregate (guide 3.3)."""
     from etl_mini_spark.session import pin
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     idx = pin(daily.select("c", F.row_number().over(Window.orderBy("d")).alias("rn")))
     nn = idx.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -773,7 +755,7 @@ def theil_inequality_index(spark, sf_dir):
 # each day's out-of-control flags compare the SAME doubles on both
 # engines.
 _XMR_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     mr AS (
       SELECT d, c,
              abs(c - lag(c) OVER (ORDER BY d)) AS mrv
@@ -806,7 +788,7 @@ def xmr_control_chart(spark, sf_dir):
     out-of-control booleans compare raw doubles computed identically on
     both engines (the bollinger breach discipline). Plan: one day agg,
     one lag window, one broadcast 1-row moment join."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     mr = daily.select(
         "d", "c", F.abs(F.col("c") - F.lag("c").over(Window.orderBy("d"))).alias("mrv")
     )
@@ -839,7 +821,7 @@ def xmr_control_chart(spark, sf_dir):
 # strictly exceeds every prior day's. Running max and the record
 # ordinal are integer window aggregates — no floats anywhere.
 _RECORD_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     r AS (
       SELECT d, c,
              max(c) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
@@ -861,7 +843,7 @@ def record_breaking_days(spark, sf_dir):
     ordinal — the running-max streak audit. Strictly integer window
     logic (prev-row running max + a counted flag). Plan: one day agg
     and two ordered windows over the calendar-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     w_prev = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, -1)
     r = daily.select("d", "c", F.max("c").over(w_prev).alias("prev_max"))
     flags = r.select(
@@ -886,7 +868,7 @@ def record_breaking_days(spark, sf_dir):
 # IDENTICAL IEEE sequence on both engines (holt discipline), so RSI
 # matches bit-for-bit before the display pin.
 _RSI_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({EVENTS_DAILY_SQL}),
     ser AS (SELECT d, c, row_number() OVER (ORDER BY d) AS i FROM daily),
     dd AS (
       SELECT s2.i, s2.d,
@@ -925,7 +907,7 @@ def rsi_wilder_14(spark, sf_dir):
     IEEE sequence. Plan: one day agg, one bounded single-series pass."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
 
     def rsi(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)
@@ -971,7 +953,7 @@ def rsi_wilder_14(spark, sf_dir):
 # consecutive histogram values via a lag over the recursion output —
 # engine-identical because the trajectories are.
 _MACD_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({EVENTS_DAILY_SQL}),
     ser AS (SELECT d, CAST(c AS DOUBLE) AS x, row_number() OVER (ORDER BY d) AS i
             FROM daily),
     rec AS (
@@ -1009,7 +991,7 @@ def macd_signal_line(spark, sf_dir):
     one day agg, one bounded single-series pass, one lag window."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
 
     def macd(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)
@@ -1051,7 +1033,7 @@ def macd_signal_line(spark, sf_dir):
 # 9dp so the 3-term %D average — written as an explicit left-assoc
 # lag sum, never a frame aggregate — is order-free.
 _STOCH_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     w AS (
       SELECT d, c,
              min(c) OVER (ORDER BY d ROWS 13 PRECEDING) AS mn,
@@ -1079,7 +1061,7 @@ def stochastic_oscillator_kd(spark, sf_dir):
     9dp; %D as the explicit (k + lag1 + lag2)/3 left-associated sum —
     fixed evaluation order, so no frame-aggregation order leaks in.
     Plan: one day agg + three ordered windows over the bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     w14 = Window.orderBy("d").rowsBetween(-13, 0)
     wr = Window.orderBy("d")
     w = daily.select(
@@ -2762,7 +2744,7 @@ def pages_l_trend(spark, sf_dir):
 # the same rule on both engines) against the i.i.d. null moments
 # E = 2(n-2)/3, Var = (16n-29)/90.
 _TURNING_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     w AS (
       SELECT c,
              lag(c) OVER (ORDER BY d) AS p,
@@ -2787,7 +2769,7 @@ def turning_points_test(spark, sf_dir):
     excluded by the same rule on both engines) z-scored against the
     i.i.d. null E = 2(n-2)/3, Var = (16n-29)/90. Plan: one day agg and
     one lag/lead window over the calendar-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     w = Window.orderBy("d")
     t = daily.select(
         "c", F.lag("c").over(w).alias("p"), F.lead("c").over(w).alias("nx")
@@ -2813,7 +2795,7 @@ def turning_points_test(spark, sf_dir):
 # doubling cancels between numerator and denominator, so the whole
 # statistic is a single division of exact BIGINTs.
 _BARTELS_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     r AS (
       SELECT d,
              2 * rank() OVER (ORDER BY c) + count(*) OVER (PARTITION BY c) - 1 AS r2
@@ -2841,7 +2823,7 @@ def bartels_rank_vonneumann(spark, sf_dir):
     rank variance use twice-midrank integers (the doubling cancels in
     the ratio), so RVN is one division of exact BIGINTs. Plan: one day
     agg, one rank + one lead window over the bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     r2 = (
         2 * F.rank().over(Window.orderBy("c"))
         + F.count("*").over(Window.partitionBy("c"))
@@ -2874,7 +2856,7 @@ def bartels_rank_vonneumann(spark, sf_dir):
 # the first: all counts integer, ties dropped (same rule both
 # engines), z the binomial normal approximation.
 _COXSTUART_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     idx AS (SELECT c, row_number() OVER (ORDER BY d) AS i FROM daily),
     nn AS (SELECT CAST(count(*) / 2 AS BIGINT) AS h FROM idx),
     pairs AS (
@@ -2903,7 +2885,7 @@ def cox_stuart_trend(spark, sf_dir):
     re-running the events scan 3x unpinned (guide 3.3)."""
     from etl_mini_spark.session import pin
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     idx = pin(daily.select("c", F.row_number().over(Window.orderBy("d")).alias("i")))
     nn = idx.agg((F.count("*") / 2).cast("bigint").alias("h"))
     a = idx.select(F.col("c").alias("x"), F.col("i").alias("ia"))
@@ -2951,7 +2933,7 @@ def stream_rsi_incremental(spark, sf_dir):
     tmp = _TMP / f"srsi_{uuid.uuid4().hex[:8]}"
     src, out, state, ckpt = tmp / "src", tmp / "out", tmp / "state", tmp / "ckpt"
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     all_daily = daily.toPandas().sort_values("d")
     cuts = ["0000-00-00", "2024-01-11", "2024-01-21", "9999-12-31"]
     src.mkdir(parents=True, exist_ok=True)

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t, half_up
+from etl_mini_spark.queries._base import EVENTS_DAILY_SQL, _t, events_daily_cents, half_up, md5_mod
 from etl_mini_spark.queries._base import q as pq
 
 
@@ -1142,13 +1142,6 @@ _FS_SQL = f"""
 """
 
 
-def _md5_mod(expr, salt: str, mod: int):
-    return (
-        F.conv(F.substring(F.md5(F.concat(expr.cast("string"), F.lit(salt))), 1, 15),
-               16, 10).cast("bigint") % mod
-    )
-
-
 def _fs_frames(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     base = c.select(
@@ -1156,16 +1149,16 @@ def _fs_frames(spark, sf_dir):
         F.col("c_nationkey").alias("nat"),
         F.col("c_mktsegment").alias("seg"),
         (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long").alias("bal_c"),
-        _md5_mod(F.col("c_custkey"), ":ph", 10000).alias("phone"),
+        md5_mod(F.col("c_custkey"), ":ph", 10000).alias("phone"),
     )
     var = base.where(F.col("k") % 5 == 0).select(
         "k", "nat",
-        F.when(_md5_mod(F.col("k"), ":segv", 10) < 2, F.lit("VARIED"))
+        F.when(md5_mod(F.col("k"), ":segv", 10) < 2, F.lit("VARIED"))
         .otherwise(F.col("seg")).alias("seg"),
-        (F.col("bal_c") + F.when(_md5_mod(F.col("k"), ":balv", 10) < 3,
-                                 _md5_mod(F.col("k"), ":balj", 201) - 100)
+        (F.col("bal_c") + F.when(md5_mod(F.col("k"), ":balv", 10) < 3,
+                                 md5_mod(F.col("k"), ":balj", 201) - 100)
          .otherwise(F.lit(0))).alias("bal_c"),
-        F.when(_md5_mod(F.col("k"), ":phv", 10) < 2,
+        F.when(md5_mod(F.col("k"), ":phv", 10) < 2,
                (F.col("phone") + 1111) % 10000)
         .otherwise(F.col("phone")).alias("phone"),
     )
@@ -1302,23 +1295,6 @@ def er_threshold_quality(spark, sf_dir):
 # Block D — finance / sequential recursions
 # =====================================================================
 
-def _daily_cents(spark, sf_dir):
-    """Daily events revenue in exact BIGINT cents — the shared series
-    the recursion entries start from (round12_ops discipline)."""
-    t = _t(spark, sf_dir, "events")
-    return t.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("d")).agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-        .cast("bigint").alias("c")
-    )
-
-
-_DAILY_SQL = """
-      SELECT strftime(ts, '%Y-%m-%d') AS d,
-             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS c
-      FROM events GROUP BY 1
-"""
-
-
 # --- 1-D local-level Kalman filter --------------------------------------------------------------
 # Constant-model Kalman over the daily revenue series (z = cents/100,
 # one exact int->double conversion + one IEEE division): P' = P + Q;
@@ -1327,7 +1303,7 @@ _DAILY_SQL = """
 # IEEE sequence replayed identically by the recursive-CTE oracle —
 # "incremental state estimation" with bit-exact parity.
 _KALMAN_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({EVENTS_DAILY_SQL}),
     ser AS (SELECT d, CAST(c AS DOUBLE) / 100.0 AS z,
                    row_number() OVER (ORDER BY d) AS i FROM daily),
     rec AS (
@@ -1358,7 +1334,7 @@ def kalman_filter_1d(spark, sf_dir):
     scan dominates and the recursion stays O(days)."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir).orderBy("d").collect()
+    daily = events_daily_cents(spark, sf_dir).orderBy("d").collect()
     rows, x, p = [], None, 1.0
     for r in daily:
         z = r["c"] / 100.0
@@ -2076,7 +2052,7 @@ def gradient_boost_stumps(spark, sf_dir):
 # fact-table pass). Averages are one division of exact integer sums;
 # min/max over identical doubles are engine-identical.
 _ISOPAV_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     ser AS (SELECT d, c, row_number() OVER (ORDER BY d) AS i,
                    sum(c) OVER (ORDER BY d) AS pre
             FROM daily),
@@ -2111,7 +2087,7 @@ def isotonic_regression_pav(spark, sf_dir):
     (guide 3.3)."""
     from etl_mini_spark.session import pin
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     w = Window.orderBy("d")
     ser = pin(daily.select(
         "d", "c",
@@ -2817,12 +2793,12 @@ def stream_cdc_upsert_latest(spark, sf_dir):
     src.mkdir(parents=True, exist_ok=True)
     for b in range(1, 4):
         batch = (
-            c.where(_md5_mod(F.col("c_custkey"), f":cdc:{b}", 3) == 0)
+            c.where(md5_mod(F.col("c_custkey"), f":cdc:{b}", 3) == 0)
             .select(
                 F.col("c_custkey").alias("k"),
                 F.lit(b).cast("long").alias("seq"),
                 F.concat(F.lit("SEG-"),
-                         _md5_mod(F.col("c_custkey"), f":lab:{b}", 4).cast("string"))
+                         md5_mod(F.col("c_custkey"), f":lab:{b}", 4).cast("string"))
                 .alias("segment"),
             )
         )
@@ -2903,8 +2879,8 @@ def geohash_prefix_radius(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     pts = c.select(
         F.col("c_custkey").alias("k"),
-        _md5_mod(F.col("c_custkey"), ":lat", 1_000_000).alias("lat_u"),
-        _md5_mod(F.col("c_custkey"), ":lon", 1_000_000).alias("lon_u"),
+        md5_mod(F.col("c_custkey"), ":lat", 1_000_000).alias("lat_u"),
+        md5_mod(F.col("c_custkey"), ":lon", 1_000_000).alias("lon_u"),
     )
     g = pts.select(
         "k", "lat_u", "lon_u",
@@ -3168,9 +3144,9 @@ def binary_header_metadata(spark, sf_dir):
     dimension histogram must match the oracle's direct md5 arithmetic.
     A parse-time magic assertion guards the round-trip."""
     d = _t(spark, sf_dir, "documents").select("doc_id")
-    w = (640 + _md5_mod(F.col("doc_id"), ":w", 1280)).alias("w")
-    h = (360 + _md5_mod(F.col("doc_id"), ":h", 720)).alias("h")
-    ch = (1 + _md5_mod(F.col("doc_id"), ":c", 4)).alias("ch")
+    w = (640 + md5_mod(F.col("doc_id"), ":w", 1280)).alias("w")
+    h = (360 + md5_mod(F.col("doc_id"), ":h", 720)).alias("h")
+    ch = (1 + md5_mod(F.col("doc_id"), ":c", 4)).alias("ch")
     hx = lambda c, n: F.lpad(F.conv(c.cast("string"), 10, 16), n, "0")  # noqa: E731
     blob = F.unhex(
         F.concat(
@@ -3550,7 +3526,7 @@ def weighted_sample_ares(spark, sf_dir):
     the key pre-rounds at 9dp before ranking. The distributed
     corpus-sampling shape mixture pipelines need."""
     d = _t(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    u = (_md5_mod(F.col("doc_id"), ":ares", 1_000_000) + 1) / 1_000_001.0
+    u = (md5_mod(F.col("doc_id"), ":ares", 1_000_000) + 1) / 1_000_001.0
     k9 = F.floor(F.pow(u, 1.0 / F.col("n_chars")) * 1e9 + F.lit(0.5)) / 1e9
     return (
         d.select("doc_id", F.col("n_chars").cast("bigint").alias("wt"), k9.alias("k9"))
@@ -3567,7 +3543,7 @@ def weighted_sample_ares(spark, sf_dir):
 # keep the running mean a rational (one division per step, identical
 # IEEE), and the oracle replays the identical recursion.
 _PAGEH_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({EVENTS_DAILY_SQL}),
     ser AS (SELECT d, CAST(c AS DOUBLE) / 100.0 AS x,
                    row_number() OVER (ORDER BY d) AS i FROM daily),
     rec AS (
@@ -3599,7 +3575,7 @@ def page_hinkley_drift(spark, sf_dir):
     day aggregation is the only fact-table pass."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir).orderBy("d").collect()
+    daily = events_daily_cents(spark, sf_dir).orderBy("d").collect()
     rows, mean, ph = [], None, 0.0
     for i, r in enumerate(daily, start=1):
         x = r["c"] / 100.0
@@ -3626,7 +3602,7 @@ def page_hinkley_drift(spark, sf_dir):
 # leakage-safe time-series CV split every forecasting pipeline needs —
 # pure integer arithmetic, fold boundaries fixed by rank.
 _WFV_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     ser AS (SELECT d, c, row_number() OVER (ORDER BY d) AS i FROM daily),
     folds AS (SELECT * FROM (VALUES (1, 10), (2, 15), (3, 20)) t(fold, train_end)),
     scored AS (
@@ -3651,7 +3627,7 @@ def walk_forward_validation(spark, sf_dir):
     days, reporting per-fold MAE in exact cents — the leakage-safe
     time-series cross-validation split, all integer arithmetic over
     rank-fixed fold boundaries."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     w = Window.orderBy("d")
     ser = daily.select("d", "c", F.row_number().over(w).alias("i"))
     folds = spark.createDataFrame([(1, 10), (2, 15), (3, 20)], "fold int, train_end int")
@@ -3680,7 +3656,7 @@ def walk_forward_validation(spark, sf_dir):
 # identical IEEE division each), alpha/beta/gamma as 2dp literals —
 # the same both-engine recursion discipline, different algebra.
 _HWM_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({EVENTS_DAILY_SQL}),
     ser AS (SELECT d, CAST(c AS DOUBLE) / 100.0 AS x,
                    row_number() OVER (ORDER BY d) AS i FROM daily),
     -- exact integer first-week sum -> one conversion + two divisions:
@@ -3728,7 +3704,7 @@ def holt_winters_multiplicative(spark, sf_dir):
     recursion bounded by the calendar."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir).orderBy("d").collect()
+    daily = events_daily_cents(spark, sf_dir).orderBy("d").collect()
     xs = [(r["d"], r["c"] / 100.0) for r in daily]
     # first-week mean from the EXACT integer cents sum (order-free),
     # then the identical conversion/division sequence as the oracle

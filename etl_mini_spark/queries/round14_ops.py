@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_mini_spark.queries._base import _t, half_up
+from etl_mini_spark.queries._base import EVENTS_DAILY_SQL, _t, events_daily_cents, half_up, md5_mod
 from etl_mini_spark.queries._base import q as pq
 
 
@@ -1248,13 +1248,8 @@ def vwap_anchored_monthly(spark, sf_dir):
 # lambda=0.94 EWMA variance recursion seeded with r1^2 — the identical
 # IEEE multiply/add chain on both engines (RSI/Holt discipline),
 # bounded by the calendar.
-_DAILY14_SQL = """
-      SELECT strftime(ts, '%Y-%m-%d') AS d,
-             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS c
-      FROM events GROUP BY 1
-"""
 _EWMAV_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY14_SQL}),
+    WITH RECURSIVE daily AS ({EVENTS_DAILY_SQL}),
     ser AS (
       SELECT d, CAST(c AS DOUBLE) / 100.0 AS z,
              row_number() OVER (ORDER BY d) AS i
@@ -2245,24 +2240,6 @@ def partition_spec_evolution_routing(spark, sf_dir):
 # Block J — time-series symbolization & forecasting
 # =====================================================================
 
-_DAILY14 = """
-      SELECT strftime(ts, '%Y-%m-%d') AS d,
-             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS c
-      FROM events GROUP BY 1
-"""
-
-
-def _daily14(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("d"))
-        .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .cast("bigint").alias("c")
-        )
-    )
-
-
 # --- two-state Markov chain -------------------------------------------------------------------------
 # Daily revenue above/below the mean (an INTEGER comparison:
 # c*N > total — no division ever decides the state), transition
@@ -2270,7 +2247,7 @@ def _daily14(spark, sf_dir):
 # stationary distribution pi1 = p01/(p01+p10), all pinned ratios of
 # exact integers.
 _MARKOV_SQL = f"""
-    WITH daily AS ({_DAILY14}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     t AS (SELECT CAST(sum(c) AS BIGINT) AS tot, CAST(count(*) AS BIGINT) AS n FROM daily),
     st AS (
       SELECT d, CASE WHEN c * t.n > t.tot THEN 1 ELSE 0 END AS s
@@ -2300,7 +2277,7 @@ def markov_transition_stationary(spark, sf_dir):
     transitions from ONE lag over the calendar-bounded day table, and
     the stationary high-state mass in the division-free cross form
     n01*(n10+n11) / (n01*(n10+n11) + n10*(n00+n01)) pinned once."""
-    daily = _daily14(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     t = daily.agg(
         F.sum("c").cast("bigint").alias("tot"), F.count("*").cast("bigint").alias("n")
     )
@@ -2339,7 +2316,7 @@ def markov_transition_stationary(spark, sf_dir):
 # engines cut identically. Mean/std derive from the exact integer
 # moments in one conversion each.
 _SAX_SQL = f"""
-    WITH daily AS ({_DAILY14}),
+    WITH daily AS ({EVENTS_DAILY_SQL}),
     idx AS (
       SELECT d, c, (row_number() OVER (ORDER BY d) - 1) // 5 AS seg
       FROM daily),
@@ -2371,7 +2348,7 @@ def sax_symbolization_paa(spark, sf_dir):
     integers (s2 as DECIMAL(38,0) — the 2^63 cliff rule), z pinned at
     6dp before the ±0.43 breakpoint CASE. Partial trailing segments
     are dropped (count = 5) so symbolization is length-stable."""
-    daily = _daily14(spark, sf_dir)
+    daily = events_daily_cents(spark, sf_dir)
     w = Window.orderBy("d")
     idx = daily.select(
         "c", ((F.row_number().over(w) - 1) / 5).cast("long").alias("seg")
@@ -2418,7 +2395,7 @@ def sax_symbolization_paa(spark, sf_dir):
 # seeded with Z_1 — the recursion replayed identically (driver fold vs
 # recursive CTE), combined fitted value 0.5*(ses + L).
 _THETA_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY14}),
+    WITH RECURSIVE daily AS ({EVENTS_DAILY_SQL}),
     ser AS (
       SELECT d, CAST(c AS DOUBLE) / 100.0 AS x,
              row_number() OVER (ORDER BY d) AS i
@@ -2459,7 +2436,7 @@ def theta_method_forecast(spark, sf_dir):
     Holt discipline with z_1 as seed and 0.3/0.7 literals."""
     import pandas as pd
 
-    daily = _daily14(spark, sf_dir).orderBy("d").collect()
+    daily = events_daily_cents(spark, sf_dir).orderBy("d").collect()
     xs = [(r["d"], r["c"] / 100.0) for r in daily]
     n = len(xs)
     si = n * (n + 1) // 2
@@ -3053,16 +3030,6 @@ def inventory_safety_stock(spark, sf_dir):
 # Block M — experimentation / causal analytics, queueing, distances
 # =====================================================================
 
-def _md5_mod14(expr, salt: str, mod: int):
-    """Portable deterministic bucket: md5 of (key || salt), first 15
-    hex chars as an integer, mod — identical on both engines (the
-    operators/sampling.hash_bucket recipe)."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(expr.cast("string"), F.lit(salt))), 1, 15),
-               16, 10).cast("bigint") % mod
-    )
-
-
 _MD5MOD_SQL = "(CAST(('0x' || substr(md5(CAST({k} AS VARCHAR) || '{salt}'), 1, 15)) AS BIGINT) % {mod})"
 
 
@@ -3113,7 +3080,7 @@ def did_difference_in_differences(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.date_format("ts", "yyyy-MM-dd").alias("d"),
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("c"),
-        _md5_mod14(F.col("user_id"), ":did", 2).alias("treat"),
+        md5_mod(F.col("user_id"), ":did", 2).alias("treat"),
     )
     days = ev.select("d").distinct()
     wm = Window.orderBy("d")
@@ -3194,8 +3161,8 @@ def uplift_two_model_deciles(spark, sf_dir):
     )
     a = u.select(
         "converted",
-        _md5_mod14(F.col("user_id"), ":utr", 2).alias("treat"),
-        _md5_mod14(F.col("user_id"), ":usc", 10).alias("decile"),
+        md5_mod(F.col("user_id"), ":utr", 2).alias("treat"),
+        md5_mod(F.col("user_id"), ":usc", 10).alias("decile"),
     )
     g = a.groupBy("decile", "treat").agg(
         F.count("*").cast("bigint").alias("n"), F.sum("converted").cast("bigint").alias("conv")
@@ -3338,7 +3305,7 @@ def ab_srm_check(spark, sf_dir):
     a = (
         _t(spark, sf_dir, "events")
         .select("user_id").distinct()
-        .select(_md5_mod14(F.col("user_id"), ":srm", 2).alias("arm"))
+        .select(md5_mod(F.col("user_id"), ":srm", 2).alias("arm"))
     )
     c = a.groupBy("arm").agg(F.count("*").cast("bigint").alias("n"))
     t = c.agg(F.sum("n").cast("bigint").alias("tot"))

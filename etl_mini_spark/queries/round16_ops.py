@@ -38,26 +38,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_mini_spark.operators.graph import bfs_circulant
-from etl_mini_spark.queries._base import _t, half_up
+from etl_mini_spark.queries._base import ORDERS_DAILY_SQL, _t, half_up, orders_daily_cents
 from etl_mini_spark.queries._base import q as pq
-
-
-# Daily order-revenue cents — the bounded calendar series every
-# sequential entry in this tier recurses over (same shape as the
-# round-12 _daily_cents: one hash agg, ~2.4k rows at any SF).
-_DAILY_SQL = """
-      SELECT strftime(o_orderdate, '%Y-%m-%d') AS d,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
-      FROM orders GROUP BY 1
-"""
-
-
-def _daily_cents(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("d")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint").alias("c")
-    )
 
 
 # =====================================================================
@@ -72,7 +54,7 @@ def _daily_cents(spark, sf_dir):
 # Neither engine has MATCH_RECOGNIZE; both derive it from the same
 # windows, which is the point of the differential.
 _VSHAPE_SQL = f"""
-    WITH daily AS ({_DAILY_SQL}),
+    WITH daily AS ({ORDERS_DAILY_SQL}),
     ser AS (
       SELECT d, c, row_number() OVER (ORDER BY d) AS i FROM daily),
     dirs AS (
@@ -117,7 +99,7 @@ def pattern_vshape_runs(spark, sf_dir):
     operator instead of a join (guide 2.4/3.3)."""
     from etl_mini_spark.session import pin
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = orders_daily_cents(spark, sf_dir)
     ser = pin(daily.select("d", "c", F.row_number().over(Window.orderBy("d")).alias("i")))
     wser = Window.orderBy("i")
     dirs = (

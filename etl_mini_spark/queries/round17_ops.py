@@ -33,24 +33,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_mini_spark.operators.graph import iterate
-from etl_mini_spark.queries._base import _t, half_up
+from etl_mini_spark.queries._base import ORDERS_DAILY_SQL, _t, half_up, orders_daily_cents
 from etl_mini_spark.queries._base import q as pq
 from etl_mini_spark.session import loop_confs
-
-
-_DAILY_SQL = """
-      SELECT strftime(o_orderdate, '%Y-%m-%d') AS d,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
-      FROM orders GROUP BY 1
-"""
-
-
-def _daily_cents(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("d")).agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint").alias("c")
-    )
 
 
 # =====================================================================
@@ -366,7 +351,7 @@ def huffman_code_lengths(spark, sf_dir):
 # so the full per-day state sequence is value-checked, not just the
 # final score.
 _VITERBI_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({ORDERS_DAILY_SQL}),
     ser AS (SELECT d, c, row_number() OVER (ORDER BY d) AS i FROM daily),
     obs AS (
       SELECT s2.i - 1 AS i, s2.d,
@@ -406,7 +391,7 @@ def viterbi_two_state(spark, sf_dir):
     recursive CTE with string path carry."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = orders_daily_cents(spark, sf_dir)
 
     def vit(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)
@@ -547,7 +532,7 @@ def secretary_stopping_rule(spark, sf_dir):
 # calendar-bounded series vs a recursive CTE carrying the last three
 # dp values. Pure BIGINT.
 _CPATH_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({ORDERS_DAILY_SQL}),
     ser AS (SELECT d, c, row_number() OVER (ORDER BY d) AS i FROM daily),
     n AS (SELECT CAST(max(i) AS BIGINT) AS n FROM ser),
     rec AS (
@@ -575,7 +560,7 @@ def critical_path_lookback(spark, sf_dir):
     positive and it can extend any of the three predecessors)."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = orders_daily_cents(spark, sf_dir)
 
     def cp(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)
@@ -1187,7 +1172,7 @@ def textrank_keywords(spark, sf_dir):
 # recursion on both engines, so the answer is value-checked with its
 # exact interval, not just the sum.
 _KADANE_SQL = f"""
-    WITH RECURSIVE daily AS ({_DAILY_SQL}),
+    WITH RECURSIVE daily AS ({ORDERS_DAILY_SQL}),
     ser AS (SELECT d, c, row_number() OVER (ORDER BY d) AS i FROM daily),
     dx AS (
       SELECT s2.i - 1 AS i, s2.d, CAST(s2.c - s1.c AS BIGINT) AS x
@@ -1228,7 +1213,7 @@ def kadane_max_swing(spark, sf_dir):
     engines."""
     import pandas as pd
 
-    daily = _daily_cents(spark, sf_dir)
+    daily = orders_daily_cents(spark, sf_dir)
 
     def kad(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("d").reset_index(drop=True)

@@ -1,11 +1,12 @@
 """Hadoop-FileSystem helpers — the object-store-safe file plumbing.
 
-The stage-swap (`replace_parquet`, behind `upsert_parquet`, the
-checkpoint commit and `compact_parquet`; it plans small writes
+The stage-swap of data tables (`replace_parquet`, behind
+`upsert_parquet` and `compact_parquet`; it plans small writes
 statically by the rule of `session.static_partitions`, writes them as
 at most that many files, and leaves the written schema in
-`read_parquet`'s cache) and the ``latest`` manifest
-(`write_run_layout`) must work where the data lives: HDFS, S3A, GCS,
+`read_parquet`'s cache) and the tiny-text swap of control documents
+(`fs_write_text`, behind the ``latest`` manifest of `write_run_layout`
+and the pipeline checkpoint) must work where the data lives: HDFS, S3A, GCS,
 ABFS, or local disk. ``shutil``/``pathlib`` only speak the local
 filesystem, so all path manipulation goes through the JVM's
 ``org.apache.hadoop.fs.FileSystem`` — the same abstraction Spark's own
@@ -15,9 +16,10 @@ and a path string whose scheme picks the backend (``file://``,
 
 Atomicity notes, because they differ per backend and matter at scale:
 - HDFS/local rename is atomic; S3A rename is a copy (not atomic). The
-  ``latest`` manifest is therefore kept TINY (one JSON line) so even a
-  non-atomic swap window is milliseconds, and readers that lose the
-  race simply retry the read.
+  ``latest`` manifest and the checkpoint document are therefore kept
+  TINY (one JSON line, one per pipeline) so even a non-atomic swap
+  window is milliseconds, and readers that lose the race simply retry
+  the read.
 - The stage-swap's crash window (target deleted, stage not yet renamed)
   is recovered by the next :func:`replace_parquet` on that path: a
   missing target whose stage holds ``_SUCCESS`` is the complete result
@@ -73,7 +75,9 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
 def replace_parquet(
     spark: SparkSession, path: str, build: Callable[[bool], DataFrame]
 ) -> None:
-    """Replace the parquet table at ``path`` with ``build(exists)``.
+    """Replace the parquet table at ``path`` with ``build(exists)``:
+    the one stage-swap of data tables, behind ``upsert_parquet`` and
+    ``compact_parquet``.
 
     Stage-then-swap: the new table is written to ``{path}__stage`` and
     only then swapped over the target, so a failed write leaves the
@@ -120,7 +124,8 @@ def replace_parquet(
 
 def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
     """Write a small text file via a temp-name + rename swap. Meant for
-    manifests/pointers only — data goes through DataFrame writers.
+    manifests, pointers and the pipeline checkpoint only — data goes
+    through DataFrame writers.
 
     The swap prefers ``FileContext.rename(..., Rename.OVERWRITE)``,
     which is a single atomic operation on HDFS and local disk — a

@@ -22,17 +22,17 @@ DataFrame via ``spark.createDataFrame`` — correct for the reference's
 one-shot export APIs, whose whole response is one bounded payload.
 
 For the 100 TB shape — thousands of parameterized calls (per
-app/day/segment) — use :func:`fetch_many_to_dataframe`: the param sets
-become a DataFrame and each PARTITION issues its own requests inside
-``mapInPandas``, so fetch parallelism scales with executors and no
-response ever lands on the driver.
+app/day/segment) — read through the registered ``http_api`` DataSource
+(``sources/pyds.py``): each param set becomes one partition that
+renders and fetches on an executor, so fetch parallelism scales with
+executors and no response ever lands on the driver.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -170,45 +170,3 @@ def fetch_to_dataframe(
         data = [data]
     return spark.createDataFrame(data, schema=schema)
 
-
-def fetch_many_to_dataframe(
-    spark: SparkSession,
-    templates: dict,
-    template_key: str,
-    param_sets: list[dict],
-    schema,
-    transport: Transport = requests_transport,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Distributed fan-out extract: one request per param set, issued
-    from executors.
-
-    The param sets become a (json-encoded) DataFrame, repartitioned so
-    requests spread across the cluster; each partition renders and
-    fetches its own slice inside ``mapInPandas`` and yields the JSON
-    rows directly — responses never aggregate on the driver, so total
-    volume is bounded only by the sink. ``schema`` is required (rows
-    from remote payloads can't be inferred lazily). Template validation
-    still happens UP FRONT on the driver for every param set — a bad
-    param set fails the job before any request is sent."""
-    import pandas as pd
-
-    for p in param_sets:  # fail fast, driver-side
-        render_template(templates, template_key, p)
-    n = num_partitions or min(len(param_sets), spark.sparkContext.defaultParallelism)
-    pdf = spark.createDataFrame(
-        [(json.dumps(p),) for p in param_sets], "params_json string"
-    ).repartition(n)
-    # mapInPandas matches yielded frames to the declared schema
-    # POSITIONALLY — an API returning JSON keys in a different order
-    # would silently misassign values, so pin the column order here.
-    field_names = [f.name for f in spark.createDataFrame([], schema).schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for pj in b["params_json"]:
-                rows = fetch(templates, template_key, json.loads(pj), transport)
-                if rows:
-                    yield pd.DataFrame(rows).reindex(columns=field_names)
-
-    return pdf.mapInPandas(run, schema)

@@ -9,7 +9,8 @@ wrong for thousands of parameterized calls. Registering a DataSource
 turns each param set into an ``InputPartition``: rendering+fetching runs
 on EXECUTORS, partition-parallel, rows stream out through Arrow, and the
 scan composes with the rest of the engine (filters project onto it,
-downstream joins see an ordinary DataFrame).
+downstream joins see an ordinary DataFrame). It is the engine's one
+distributed fetch path.
 
 Transport selection is by option string (executors can't receive a
 callable): ``transport=stub_export`` is the deterministic offline stub

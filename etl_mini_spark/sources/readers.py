@@ -317,12 +317,10 @@ def read_parquet_ts_range(
     between scanning a day and scanning 100 TB on a time-partitioned
     fact table. For regular (µs) timestamp columns the plain filter
     already pushes down and this degrades to exactly that."""
-    from datetime import datetime, timezone
-
-    def _ns(dt: datetime) -> int:
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return int(dt.timestamp() * 1_000_000) * 1000
+    def _ns(dt) -> int:
+        # PySpark's own literal conversion (a naive bound is local
+        # time, as ``F.lit`` reads it on the µs path), in integers
+        return T.TimestampType().toInternal(dt) * 1000
 
     df, ns_cols = _scan(spark, path)
     bound = _ns if ts_col in ns_cols else (lambda v: v)

@@ -22,9 +22,10 @@ extends it the way a Spark deployment needs:
   substitutes the real value.
 
 Resolution happens ONCE, driver-side, before templates render —
-executors only ever see already-rendered requests (exactly how
-``fetch_many_to_dataframe`` ships work), so secrets never transit the
-cluster as task closures beyond the rendered headers that need them.
+executors never read the secrets file or the driver's environment. The
+``http_api`` DataSource (``sources/pyds.py``) ships each resolved param
+set, token included, only in the partition that renders and fetches
+its request.
 """
 
 from __future__ import annotations

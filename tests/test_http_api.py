@@ -1,6 +1,7 @@
 """S4 HTTP-API extractor: template validation/rendering against the
 reference's semantics (simple_api_service.py:19-61), stub-transport
-fetch + DataFrame landing, and the distributed fan-out path."""
+fetch + DataFrame landing, and the distributed fan-out through the
+``http_api`` DataSource."""
 
 from __future__ import annotations
 
@@ -14,7 +15,6 @@ from etl_mini_spark.sources.http_api import (
     TemplateNotFoundError,
     extract_placeholders,
     fetch,
-    fetch_many_to_dataframe,
     fetch_to_dataframe,
     load_templates,
     render_template,
@@ -123,33 +123,23 @@ def test_fetch_to_dataframe_binary(spark):
     assert df.collect()[0]["content"] == bytearray(b"\x00\x01")
 
 
-def test_fetch_many_distributed(spark):
-    # transport derives rows from the rendered url — proves each param
-    # set got its own correctly-rendered request on the executors
-    templates = {
-        "page": {"url": "stub://p?page={PAGE}", "headers": {}, "method": "GET"}
-    }
+def test_http_api_source_fetches_each_param_set(spark):
+    # the stub transport derives rows from the rendered url — proves
+    # each param set got its own correctly-rendered request on the
+    # executors
+    from etl_mini_spark.sources.pyds import HttpApiDataSource
 
-    def transport(request):
-        page = int(request["url"].split("page=")[1])
-        rows = [{"page": page, "i": i} for i in range(3)]
-        return 200, "application/json", json.dumps(rows).encode()
-
-    params = [{"PAGE": str(p)} for p in range(8)]
-    df = fetch_many_to_dataframe(
-        spark, templates, "page", params, schema="page long, i long", transport=transport
+    spark.dataSource.register(HttpApiDataSource)
+    templates = {"page": {"url": "stub://p?n=3&start={START}", "headers": {}}}
+    params = [{"START": str(p * 100)} for p in range(8)]
+    df = (
+        spark.read.format("http_api").schema("id long, name string, value double")
+        .option("templates", json.dumps(templates)).option("template_key", "page")
+        .option("param_sets", json.dumps(params)).option("transport", "stub_export")
+        .load()
     )
     assert df.count() == 24
-    assert df.select("page").distinct().count() == 8
-
-
-def test_fetch_many_validates_upfront(spark):
-    templates = {"page": {"url": "stub://p?page={PAGE}", "headers": {}}}
-    with pytest.raises(MissingParamsError):
-        fetch_many_to_dataframe(
-            spark, templates, "page", [{"PAGE": "1"}, {"WRONG": "2"}],
-            schema="page long", transport=lambda r: (200, "application/json", b"[]"),
-        )
+    assert df.select((df["id"] / 100).cast("int")).distinct().count() == 8
 
 
 def test_pyds_validates_param_sets_before_scheduling(spark):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import re
 from datetime import datetime
 from pathlib import Path
 
@@ -200,10 +201,10 @@ def test_checkpoint_on_a_hadoop_uri(spark, tmp_path):
     assert ck.last_window_end("p") == datetime(2024, 1, 2)
 
 
-def test_checkpoint_read_and_commit_run_one_job_each(spark, tmp_path):
-    """One pipeline's checkpoint row costs one Spark job to read and one
-    single-task job to commit, on a table holding other pipelines' rows,
-    and the commit leaves one part file with every pipeline's row."""
+def test_checkpoint_read_and_commit_run_no_job(spark, tmp_path):
+    """One pipeline's checkpoint line is read and committed with no
+    Spark job, on a table holding another pipeline's line, and the
+    commit leaves one ``checkpoint.jsonl`` with every pipeline's line."""
     from etl_mini_spark.plans.checkpoint import CheckpointTable
 
     path = tmp_path / "ck"
@@ -212,61 +213,104 @@ def test_checkpoint_read_and_commit_run_one_job_each(spark, tmp_path):
     ck.commit("b", None, datetime(2024, 2, 1))
 
     end, read_jobs = run_in_job_group(spark, lambda: ck.last_window_end("a"))
-    assert end == datetime(2024, 1, 1) and len(read_jobs) == 1
+    assert end == datetime(2024, 1, 1) and read_jobs == []
 
     _, commit_jobs = run_in_job_group(spark, lambda: ck.commit("a", end, datetime(2024, 1, 5)))
-    tracker = spark.sparkContext.statusTracker()
-    tasks = sum(tracker.getStageInfo(s).numTasks
-                for j in commit_jobs for s in tracker.getJobInfo(j).stageIds)
-    assert (len(commit_jobs), tasks) == (1, 1)
-    assert len(list(path.glob("part-*"))) == 1
+    assert commit_jobs == []
+    assert [p.name for p in path.iterdir() if not p.name.startswith(".")] == ["checkpoint.jsonl"]
+    lines = (path / "checkpoint.jsonl").read_text().splitlines()
+    assert sorted(json.loads(s)["pipeline_name"] for s in lines) == ["a", "b"]
     assert ck.last_window_end("a") == datetime(2024, 1, 5)
     assert ck.last_window_end("b") == datetime(2024, 2, 1)
 
 
-def test_checkpoint_reads_a_table_of_python_rows_in_int96(spark, tmp_path):
-    """A table committed from Python-row DataFrames, in several part
-    files with INT96 timestamps, reads back the same and takes new
-    commits."""
-    from pyspark.sql import Row
-
-    from etl_mini_spark.plans.checkpoint import SCHEMA, CheckpointTable
+def test_parquet_checkpoint_raises(spark, tmp_path):
+    """A directory without ``checkpoint.jsonl`` (a parquet checkpoint of
+    an earlier version, or a wrong path) raises instead of reading as
+    empty, which re-extracted every window from the start."""
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
 
     path = str(tmp_path / "ck")
-    ends = {"a": datetime(2024, 1, 3, 6, 30, 0, 250), "b": datetime(2024, 1, 9), "c": None}
-    conf = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(conf)
-    spark.conf.set(conf, "INT96")
-    try:
-        for name, end in ends.items():
-            row = Row(pipeline_name=name, window_start=None, window_end=end,
-                      updated_at=datetime(2024, 3, 1))
-            spark.createDataFrame([row], schema=SCHEMA).write.mode("append").parquet(path)
-    finally:
-        spark.conf.set(conf, prev)
-    assert len(list(Path(path).glob("part-*"))) >= 3
-
+    spark.sql("SELECT 'p' AS pipeline_name, TIMESTAMP'2024-01-09' AS window_end") \
+        .write.parquet(path)
     ck = CheckpointTable(spark, path)
-    assert {n: ck.last_window_end(n) for n in ends} == ends
-    ck.commit("b", ends["b"], datetime(2024, 1, 20))
-    assert {n: ck.last_window_end(n) for n in ends} == {**ends, "b": datetime(2024, 1, 20)}
+    for op in (lambda: ck.last_window_end("p"), lambda: ck.commit("p", None, datetime(2024, 2, 1))):
+        with pytest.raises(ValueError, match=re.escape(path)):
+            op()
+    assert not Path(path + ".lock").exists()
 
 
 def test_checkpoint_row_round_trips_exactly(spark, tmp_path):
     """Microseconds in ``window_end`` and a NULL ``window_start`` (first
-    window) come back unchanged."""
+    window) come back unchanged, and the line holds them in PySpark's
+    ``TimestampType`` encoding."""
+    from pyspark.sql.types import TimestampType
+
     from etl_mini_spark.plans.checkpoint import CheckpointTable
 
-    path = str(tmp_path / "ck")
-    ck = CheckpointTable(spark, path)
+    path = tmp_path / "ck"
+    ck = CheckpointTable(spark, str(path))
     first = datetime(2024, 1, 2, 3, 4, 5, 678901)
     ck.commit("p", None, first)
     assert ck.last_window_end("p") == first
     ck.commit("p", first, datetime(2024, 1, 3, 0, 0, 0, 1))
-    [row] = spark.read.parquet(path).collect()
-    assert (row["pipeline_name"], row["window_start"], row["window_end"]) == (
+    [line] = (path / "checkpoint.jsonl").read_text().splitlines()
+    row = json.loads(line)
+    ts = TimestampType().fromInternal
+    assert (row["pipeline_name"], ts(row["window_start"]), ts(row["window_end"])) == (
         "p", first, datetime(2024, 1, 3, 0, 0, 0, 1))
     assert row["updated_at"] is not None
+
+
+def test_checkpoint_tz_aware_ends_read_back_as_the_same_instants(spark, tmp_path):
+    """A tz-aware end (UTC or any offset) reads back as the same
+    instant, as a naive local datetime."""
+    from datetime import timedelta, timezone
+
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    ck = CheckpointTable(spark, str(tmp_path / "ck"))
+    ends = {"utc": datetime(2024, 1, 2, 3, 4, 5, 6, tzinfo=timezone.utc),
+            "plus5": datetime(2024, 1, 2, 3, 4, 5, 6, tzinfo=timezone(timedelta(hours=5)))}
+    for name, end in ends.items():
+        ck.commit(name, end, end)
+    for name, end in ends.items():
+        got = ck.last_window_end(name)
+        assert got.tzinfo is None and got.astimezone(timezone.utc) == end, (name, got)
+
+
+def test_checkpoint_commit_rejects_non_datetime_ends(spark, tmp_path):
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    path = tmp_path / "ck"
+    ck = CheckpointTable(spark, str(path))
+    for start, end in ((None, "2024-01-02"), ("2024-01-01", datetime(2024, 1, 2))):
+        with pytest.raises(TypeError):
+            ck.commit("p", start, end)
+    assert not path.exists() and not Path(f"{path}.lock").exists()
+
+
+def test_failed_checkpoint_write_keeps_the_previous_document(spark, tmp_path, monkeypatch):
+    """A commit whose write fails leaves the committed document readable
+    and releases the lock, so the next commit can run."""
+    from etl_mini_spark.plans import checkpoint
+    from etl_mini_spark.plans.checkpoint import CheckpointTable
+
+    path = str(tmp_path / "ck")
+    ck = CheckpointTable(spark, path)
+    ck.commit("p", None, datetime(2024, 1, 1))
+
+    def broken(*_):
+        raise IOError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "fs_write_text", broken)
+        with pytest.raises(IOError, match="disk full"):
+            ck.commit("p", datetime(2024, 1, 1), datetime(2024, 1, 2))
+    assert ck.last_window_end("p") == datetime(2024, 1, 1)
+    assert not Path(path + ".lock").exists()
+    ck.commit("p", datetime(2024, 1, 1), datetime(2024, 1, 2))
+    assert ck.last_window_end("p") == datetime(2024, 1, 2)
 
 
 def test_upsert_parquet_roundtrip(spark):

@@ -89,6 +89,31 @@ def test_ts_range_reads_timestamps_like_read_parquet(spark, tmp_path):
     assert sorted(r["k"] for r in ranged.collect()) == [1, 2]
 
 
+def test_ts_range_naive_bounds_match_across_encodings(spark, tmp_path, monkeypatch):
+    """A naive bound is process-local time for a TIMESTAMP(NANOS) column
+    too, as ``F.lit`` reads it for a µs one. The NANOS bound was read as
+    UTC, so in New York the same window selected rows 5 hours apart."""
+    import time
+
+    from etl_mini_spark.sources.readers import read_parquet_ts_range
+
+    path = str(tmp_path / "hourly.parquet")
+    base = 1_704_067_200 * 10**9  # 2024-01-01 00:00 UTC
+    _ns_and_us(path, [base + h * 3600 * 10**9 for h in range(24)], {"k": list(range(24))})
+    try:
+        with monkeypatch.context() as m:
+            m.setenv("TZ", "America/New_York")
+            time.tzset()
+            got = {
+                col: sorted(r["k"] for r in read_parquet_ts_range(
+                    spark, path, col,
+                    start=datetime(2024, 1, 1, 10), end=datetime(2024, 1, 1, 12)).collect())
+                for col in ("ts", "seen")}
+    finally:
+        time.tzset()
+    assert got == {"ts": [15, 16], "seen": [15, 16]}, got
+
+
 def test_repeat_load_runs_no_spark_job(spark, tmp_path):
     from etl_mini_spark.session import load_table
 

@@ -82,12 +82,12 @@ def test_steady_window_runs_two_upsert_jobs(spark, tmp_path, monkeypatch):
     one: the target's schema is cached by the previous swap, and the
     small merge is one partition planned statically, so no exchange or
     source-keys broadcast runs as a job of its own. The whole window is
-    3 jobs: the checkpoint read, the write and the checkpoint commit."""
+    that one job: the checkpoint read and commit run none."""
     from etl_mini_spark.sources.readers import read_parquet
 
     spec = _spec(tmp_path)
     first, steady = _counts(_run_windows(spark, spec, monkeypatch))
-    assert (first[0], steady) == (1, (1, 3)), (first, steady)
+    assert (first, steady) == ((1, 1), (1, 1)), (first, steady)
     df, ids = run_in_job_group(spark, lambda: read_parquet(spark, spec.sink.path))
     assert ids == []
     want = spark.read.parquet(f"{SF_SMOKE}/events.parquet").filter(F.col("ts") < WINDOWS[-1])
@@ -119,7 +119,7 @@ def test_small_window_runs_without_a_shuffle(spark, tmp_path, monkeypatch):
 
 def test_stale_window_is_skipped(spark, tmp_path, monkeypatch):
     """A ``window_end`` at or before the committed one (naive or
-    tz-aware) is skipped after the checkpoint read, its one Spark job:
+    tz-aware) is skipped after the checkpoint read, with no Spark job:
     the target is not rewritten and the checkpoint does not move back.
     Such a run used to extract the empty range, rewrite the target and
     commit the earlier end, so the next window loaded rows again."""
@@ -134,7 +134,7 @@ def test_stale_window_is_skipped(spark, tmp_path, monkeypatch):
         spec.window_end = end
         report, ids = run_in_job_group(spark, lambda: run_pipeline(spark, spec))
         assert (report["status"], report["reason"]) == ("skipped", "window already committed")
-        assert len(ids) == 1, ids
+        assert ids == [], ids
     assert {p.name: p.stat().st_mtime_ns for p in target.iterdir()} == files
     assert CheckpointTable(spark, spec.checkpoint_path).last_window_end(spec.name) == WINDOWS[-1]
 
