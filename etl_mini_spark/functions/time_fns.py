@@ -20,7 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DATETIME_FMT = "yyyy-MM-dd HH:mm:ss"
-ISO_MICROS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
 
 def normalize_iso_col(col: Column) -> Column:

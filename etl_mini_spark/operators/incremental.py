@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATE_COLS = ("n", "s", "mn", "mx", "ss")
-
 
 def agg_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
     """Per-key mergeable state over one data slice."""

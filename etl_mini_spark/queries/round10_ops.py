@@ -1,7 +1,5 @@
-"""Round-10 tier: rank statistics, BI decompositions, corpus laws, and
-source/DQ ops — authored and staged in round 9 (swept vs the DuckDB
-oracle at sf0.001/0.01/0.1 as `round10_pending`), registered in round
-10 with names and oracles verbatim.
+"""Registry queries: rank statistics, BI decompositions, corpus laws,
+and source/DQ ops, each checked against its DuckDB oracle.
 
 Parity rules as in round9_ops: integer/decimal arithmetic end-to-end,
 libm terms pre-rounded at 9dp and summed as DECIMAL(28,9), ranks via
@@ -515,14 +513,10 @@ def cohort_ltv_curve(spark, sf_dir):
     revenue accumulates as DECIMAL, and the per-member normalization is
     the single double op. Plan: one custkey agg for cohorts (broadcast
     back over orders), one (cohort, age) agg, a prefix sum over the
-    tiny curve table. The per-customer first-order table is pinned:
-    the cohort sizing and the fact join both referenced it, each
-    re-running the orders scan + custkey aggregate (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    tiny curve table."""
     o = _t(spark, sf_dir, "orders")
     ym = F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
-    fo = pin(o.groupBy("o_custkey").agg(F.min(ym).alias("cohort_ym")))
+    fo = o.groupBy("o_custkey").agg(F.min(ym).alias("cohort_ym"))
     sized = fo.groupBy("cohort_ym").agg(F.count("*").cast("bigint").alias("n_cust"))
     facts = o.join(F.broadcast(fo), "o_custkey").select(
         "cohort_ym",
@@ -776,12 +770,7 @@ def bm25_topk_docs(spark, sf_dir):
     accumulated libm noise. Plan: one token scan feeding tf (filtered
     to the query terms by a broadcast semi-join — the corpus never
     shuffles on token), tiny df/dl/stat aggregates broadcast back, one
-    top-k. The doc-length and (doc, term) tf tables are pinned: each
-    was referenced twice (stats + broadcast join resp. df + scoring),
-    and every reference re-ran the corpus token explode (guide 3.3) —
-    pinned, the corpus is scanned once per grain."""
-    from etl_mini_spark.session import pin
-
+    top-k."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -789,7 +778,7 @@ def bm25_topk_docs(spark, sf_dir):
             F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
         ).alias("t"),
     )
-    dl = pin(toks.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("dl")))
+    dl = toks.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("dl"))
     stats = dl.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("total_toks"),
@@ -797,9 +786,9 @@ def bm25_topk_docs(spark, sf_dir):
     q = spark.range(1).select(
         F.explode(F.array(F.lit("spark"), F.lit("join"), F.lit("window"))).alias("t")
     )
-    tf = pin(toks.join(F.broadcast(q), "t").groupBy("doc_id", "t").agg(
+    tf = toks.join(F.broadcast(q), "t").groupBy("doc_id", "t").agg(
         F.count("*").cast("bigint").alias("tf")
-    ))
+    )
     df_ = tf.groupBy("t").agg(F.countDistinct("doc_id").cast("bigint").alias("df"))
     terms = (
         tf.join(F.broadcast(df_), "t")
@@ -2252,15 +2241,11 @@ def ljung_box_q(spark, sf_dir):
     co-observed-pair statistics as acf_hourly_lags; each r_k²/(n−k)
     term pre-rounds at 9dp and sums as DECIMAL(28,9). Plan: one hour
     agg, a 7×|hours| lag join on the tiny aggregated series, a scalar
-    finish. The calendar-bounded hourly series is pinned: both lag-join
-    sides and the two count references re-ran the events scan + hour
-    aggregate 4x unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    finish."""
     e = _t(spark, sf_dir, "events")
-    hourly = pin(e.groupBy(
+    hourly = e.groupBy(
         F.floor(F.unix_timestamp("ts") / 3600).cast("bigint").alias("h")
-    ).agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("x")))
+    ).agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("x"))
     nall = hourly.agg(F.count("*").cast("bigint").alias("n"))
     lags = spark.range(1).select(
         F.explode(F.array(*[F.lit(i) for i in range(1, 8)])).alias("lag")
@@ -2402,22 +2387,17 @@ def gaps_islands_order_days(spark, sf_dir):
     ties) — the classic SQL-interview shape that powers uptime and
     activity-streak reports. Pure date/integer arithmetic. Plan: one
     distinct over days, one rank window, one island agg — all bounded
-    by the calendar, not the fact table. The day domain and island
-    table are pinned: each fed two references (rank pass + day count,
-    top pick + island count), and every reference re-ran the orders
-    scan + distinct unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    by the calendar, not the fact table."""
     o = _t(spark, sf_dir, "orders")
-    days = pin(o.select(F.to_date("o_orderdate").alias("d")).distinct())
+    days = o.select(F.to_date("o_orderdate").alias("d")).distinct()
     keyed = days.select(
         "d",
         F.date_sub(F.col("d"), F.row_number().over(Window.orderBy("d"))).alias("island"),
     )
-    isl = pin(keyed.groupBy("island").agg(
+    isl = keyed.groupBy("island").agg(
         F.count("*").cast("bigint").alias("len"),
         F.date_format(F.min("d"), "yyyy-MM-dd").alias("start_d"),
-    ))
+    )
     top = isl.select(
         "len", "start_d",
         F.row_number().over(Window.orderBy(F.col("len").desc(), "start_d")).alias("rn"),
@@ -2595,12 +2575,10 @@ def corpus_source_divergence(spark, sf_dir):
     finite; each ln term pre-rounds at 9dp and sums as DECIMAL(28,9)
     per source. Plan: one token agg per grain (global, per-source),
     a source×vocab grid built from the TINY aggregated tables (the
-    corpus itself is scanned once), one keyed sum. The (source, token)
-    aggregate is pinned and EVERY other table derives from it — global
-    counts roll it up over sources, the vocabulary size is the global
-    table's row count, n_g/n_s are its sums — so the corpus really is
-    scanned once (unpinned, the five aggregates each re-ran the token
-    explode: 5 scans, guide 3.3)."""
+    corpus itself is scanned once), one keyed sum. EVERY other table
+    derives from the (source, token) aggregate — global counts roll it
+    up over sources, the vocabulary size is the global table's row
+    count, n_g/n_s are its sums."""
     from etl_mini_spark.session import pin
 
     d = _t(spark, sf_dir, "documents")
@@ -2610,8 +2588,9 @@ def corpus_source_divergence(spark, sf_dir):
             F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
         ).alias("t"),
     )
+    # unpinned: 0.56 s vs 0.43 s at sf0.1 (a pin on g as well did not pay)
     s = pin(tok.groupBy("source", "t").agg(F.count("*").cast("bigint").alias("cs")))
-    g = pin(s.groupBy("t").agg(F.sum("cs").cast("bigint").alias("cg")))
+    g = s.groupBy("t").agg(F.sum("cs").cast("bigint").alias("cg"))
     vocab = g.agg(F.count("*").cast("bigint").alias("v"))
     ng = g.agg(F.sum("cg").cast("bigint").alias("n_g"))
     ns = s.groupBy("source").agg(F.sum("cs").cast("bigint").alias("n_s"))

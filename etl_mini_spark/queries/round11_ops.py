@@ -1,10 +1,8 @@
-"""Round-11 tier: concordance/trend statistics, Holt-Winters seasonal
-smoothing + forecast, incremental sketch maintenance, classic
+"""Registry queries: concordance/trend statistics, Holt-Winters
+seasonal smoothing + forecast, incremental sketch maintenance, classic
 relational/BI ops (division, largest-remainder allocation,
-survivorship), a DQ profiling block, and retrieval eval — authored
-and staged in round 10 (swept vs the DuckDB oracle at
-sf0.001/0.01/0.1 as `round11_pending`), registered in round 11 with
-names and oracles verbatim.
+survivorship), a DQ profiling block, and retrieval eval, each checked
+against its DuckDB oracle.
 
 Parity rules as in round9/10_ops (FIXTURES.md §C): integer/decimal
 arithmetic end-to-end (money as exact BIGINT cents where a recursion
@@ -73,17 +71,14 @@ def kendall_tau_daily(spark, sf_dir):
     Plan: the fact table aggregates to days FIRST, so the pair join is
     calendar-bounded (~2.9M pairs over 7 years) regardless of fact
     scale — the O(n²) stays off the 100-TB table."""
-    from etl_mini_spark.session import pin
-
     o = _t(spark, sf_dir, "orders")
     # calendar-bounded daily table referenced FIVE times (both pair-join
-    # sides, n, and the two tie aggregates) -- unpinned, the orders scan
-    # + day aggregate re-ran per reference (guide 3.3)
-    daily = pin(o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
+    # sides, n, and the two tie aggregates)
+    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
         .cast("bigint").alias("rev_c"),
         F.count("*").cast("bigint").alias("cnt"),
-    ))
+    )
     a, b = daily.alias("a"), daily.alias("b")
     sgn = (F.col("a.rev_c") - F.col("b.rev_c")) * (F.col("a.cnt") - F.col("b.cnt"))
     p = a.join(b, F.col("a.d") < F.col("b.d")).agg(
@@ -150,18 +145,14 @@ def mann_kendall_trend(spark, sf_dir):
     continuity-corrected z — the nonparametric "is this series
     trending" check that pairs with trend_theil_sen's slope estimate.
     Plan: day-aggregate first (one shuffle), 435 pairs per series —
-    invariant to fact scale. The calendar×type-bounded day series is
-    pinned: both pair-join sides plus the count and tie aggregates
-    re-ran the events scan 4x unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    invariant to fact scale."""
     e = _t(spark, sf_dir, "events")
-    daily = pin(e.groupBy(
+    daily = e.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("d")
     ).agg(
         F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
         .cast("bigint").alias("x")
-    ))
+    )
     a, b = daily.alias("a"), daily.alias("b")
     s = (
         a.join(b, (F.col("a.event_type") == F.col("b.event_type")) & (F.col("a.d") < F.col("b.d")))

@@ -1,4 +1,4 @@
-"""Round-12 tier: agreement/effect-size/changepoint statistics
+"""Registry queries: agreement/effect-size/changepoint statistics
 (Friedman, Cochran's Q, McNemar, Fleiss' kappa, Cliff's delta,
 Jonckheere-Terpstra, Pettitt, Grubbs, Chow), a technical-indicator
 family of sequential recursions (Wilder RSI, MACD, stochastic %K/%D,
@@ -6,9 +6,7 @@ OBV, Croston, damped Holt, Hurst R/S), SPC charts, and SQL-surface
 parity ops (equi-depth NTILE histogram, quantile_disc convention,
 UNPIVOT INCLUDE NULLS, calendar-edge date arithmetic, SCD6, MERGE
 clause semantics, banker's rounding) plus corpus amplification and a
-cursor-paginated HTTP source — authored and staged in round 11 (swept
-vs the DuckDB oracle at sf0.001/0.01/0.1 as `round12_pending`),
-registered in round 12 with names and oracles verbatim.
+cursor-paginated HTTP source, each checked against its DuckDB oracle.
 
 Parity rules as in round9/10/11_ops (FIXTURES.md §C): integer/decimal
 arithmetic end-to-end (money as exact BIGINT cents; sums of squares
@@ -80,12 +78,10 @@ def friedman_test_blocks(spark, sf_dir):
     from etl_mini_spark.session import pin
 
     e = _t(spark, sf_dir, "events")
-    # cells is calendar-bounded (days x types) and referenced -- directly
-    # or via days/types/grid -- by five subtrees of the final plan; each
-    # used to re-run the events scan + aggregate (guide 3.3). One pin =
-    # one events scan per run. types derives from cells: every event row
-    # lands in exactly one (d, et) cell, so DISTINCT et over cells is
-    # the same set as over the raw table.
+    # cells is calendar-bounded (days x types). types derives from
+    # cells: every event row lands in exactly one (d, et) cell, so
+    # DISTINCT et over cells is the same set as over the raw table.
+    # unpinned: 0.55 s vs 0.49 s at sf0.1 (a pin on rj as well did not pay)
     cells = pin(e.groupBy(
         F.date_format("ts", "yyyy-MM-dd").alias("d"), F.col("event_type").alias("et")
     ).agg(
@@ -104,10 +100,10 @@ def friedman_test_blocks(spark, sf_dir):
         + F.count("*").over(Window.partitionBy("d", "c"))
         - 1
     )
-    # k rows; referenced by both the scalar finish and the output join
-    rj = pin(grid.select("et", r2.alias("r2")).groupBy("et").agg(
+    # k rows
+    rj = grid.select("et", r2.alias("r2")).groupBy("et").agg(
         F.sum("r2").cast("bigint").alias("r2j")
-    ))
+    )
     s = rj.agg(
         F.count("*").cast("bigint").alias("k"),
         F.sum(F.col("r2j") * F.col("r2j")).cast("bigint").alias("sr2"),
@@ -351,15 +347,11 @@ def cliffs_delta_effect(spark, sf_dir):
     day x day pair grid divided by n1*n2 — all BIGINTs, one division.
     Plan: two day aggs, a calendar^2 cross of TINY aggregated tables
     (the fact table is scanned twice and never self-joined), 1-row
-    finish. Both calendar-bounded day series are pinned: each fed the
-    dominance cross AND its own count, re-running the events scan per
-    reference unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    finish."""
     e = _t(spark, sf_dir, "events")
 
     def daily(et):
-        return pin(
+        return (
             e.filter(F.col("event_type") == et)
             .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("d"))
             .agg(
@@ -425,12 +417,11 @@ def jonckheere_terpstra_trend(spark, sf_dir):
     (a bounded grid — months x priorities, never the fact table), and
     z = (J2 - 2E[J]) / (2 sqrt(Var)) is one fixed expression over
     integer sums. Plan: one month x priority agg, a tiny grid
-    self-join, 1-row finish. The month×priority grid is pinned: both
-    self-join sides and the size aggregate referenced it, each
-    re-running the orders scan 3x unpinned (guide 3.3)."""
+    self-join, 1-row finish."""
     from etl_mini_spark.session import pin
 
     o = _t(spark, sf_dir, "orders")
+    # unpinned: 0.38 s vs 0.34 s at sf0.1
     m = pin(o.groupBy(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("g"),
         F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
@@ -492,14 +483,9 @@ def pettitt_changepoint(spark, sf_dir):
     halves. Computed over the bounded day-pair grid (the fact table
     aggregates to days first), so every value is a BIGINT and the
     argmax is integer with an earliest-day tie-break. Plan: one day
-    agg, a calendar^2 pair join on TINY tables, one rank pick. The
-    indexed day series is pinned: both pair-join sides and the window
-    probe referenced it, each re-running the events scan + day
-    aggregate 3x unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    agg, a calendar^2 pair join on TINY tables, one rank pick."""
     daily = events_daily_cents(spark, sf_dir)
-    idx = pin(daily.select("d", "c", F.row_number().over(Window.orderBy("d")).alias("rn")))
+    idx = daily.select("d", "c", F.row_number().over(Window.orderBy("d")).alias("rn"))
     a = idx.select(F.col("rn").alias("i"), F.col("c").alias("ci"))
     b = idx.select(F.col("rn").alias("j"), F.col("c").alias("cj"))
     pairs = a.join(b, F.col("i") < F.col("j")).select(
@@ -634,13 +620,11 @@ def chow_structural_break(spark, sf_dir):
     integer sums (Syy wide), pooled sums are the ADDITIVE combination
     of the segment sums (no second scan), and F is one fixed double
     expression. Plan: one day agg, one 2-group aggregate over the tiny
-    indexed series, scalar algebra. The indexed series (one row per
-    calendar day) is pinned: the segment/pooled/count aggregates and
-    the final cross joins referenced it 5x, each re-running the events
-    scan + day aggregate (guide 3.3)."""
+    indexed series (one row per calendar day), scalar algebra."""
     from etl_mini_spark.session import pin
 
     daily = events_daily_cents(spark, sf_dir)
+    # unpinned: 0.56 s vs 0.51 s at sf0.1
     idx = pin(daily.select("c", F.row_number().over(Window.orderBy("d")).alias("rn")))
     nn = idx.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1420,13 +1404,9 @@ def hurst_rescaled_range(spark, sf_dir):
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hh")
     ).select(F.date_format("hh", "yyyy-MM-dd HH:00:00").alias("h"))
-    from etl_mini_spark.session import pin
 
-    # calendar-bounded hourly series, referenced through sized by the
-    # full-window filter and the stats pass (and the 3-row finish) --
-    # unpinned, the events scan + hour aggregate + spine join re-ran
-    # per reference (6 scans in the audit; guide 3.3)
-    ser = pin(
+    # calendar-bounded hourly series
+    ser = (
         spine.join(hours, "h", "left")
         .select("h", F.coalesce("x", F.lit(0)).alias("x"))
         .withColumn("i", F.row_number().over(Window.orderBy("h")))
@@ -1466,12 +1446,12 @@ def hurst_rescaled_range(spark, sf_dir):
         F.count("*").cast("bigint").alias("n_windows"),
         (F.sum("rs9").cast("double") / F.count("*")).alias("mean_rs"),
     )
-    # 3 rows; referenced by both the slope aggregate and the output join
-    y = pin(m.select(
+    # 3 rows
+    y = m.select(
         "sz", "n_windows", "mean_rs",
         (F.floor(F.log("mean_rs") / F.log(F.lit(2.0)) * 1_000_000_000 + F.lit(0.5))
          / 1_000_000_000).alias("y9"),
-    ))
+    )
     hurst = y.agg(
         (
             (F.max(F.when(F.col("sz") == 256, F.col("y9")))
@@ -1533,15 +1513,10 @@ def xyz_volatility_classes(spark, sf_dir):
     zero-filled month grid, from exact integer sums (sum of squares
     wide), with FIXED class cutpoints 0.21/0.25 — never
     quantile-derived edges. Plan: one month x brand agg, grid fill
-    against tiny dimension tables, per-brand scalar algebra. The
-    brand×month cell table is pinned: the month-domain pass and the
-    grid fill both referenced it, each re-running the lineitem⋈part
-    join + aggregate (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    against tiny dimension tables, per-brand scalar algebra."""
     l = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
-    cells = pin(
+    cells = (
         l.join(F.broadcast(p.select("p_partkey", "p_brand")), l.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("b"), F.date_format("l_shipdate", "yyyy-MM").alias("ym"))
         .agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("v"))
@@ -2461,15 +2436,10 @@ def pacf_durbin_levinson(spark, sf_dir):
     st = ser.agg(
         F.count("*").cast("bigint").alias("n"), F.sum("c").cast("bigint").alias("s")
     )
-    # materialized once: den and BOTH lag-join sides reference dev, and
-    # without the checkpoint each reference re-ran the events scan +
-    # hour aggregate + spine join (~6 scans per run). Calendar-bounded:
-    # one row per hour of the dataset.
-    from etl_mini_spark.session import pin
-
-    dev = pin(ser.crossJoin(F.broadcast(st)).select(
+    # calendar-bounded: one row per hour of the dataset
+    dev = ser.crossJoin(F.broadcast(st)).select(
         "i", (F.col("n") * F.col("c") - F.col("s")).cast("decimal(19,0)").alias("d")
-    ))
+    )
     den = dev.agg(F.sum(F.col("d") * F.col("d")).alias("d0"))
     ks = ser.sparkSession.createDataFrame([(1,), (2,), (3,)], "k int")
     a = dev.select(F.col("i").alias("ia"), F.col("d").alias("da"))
@@ -2556,12 +2526,7 @@ def orderkey_gap_audit(spark, sf_dir):
         .select(F.col("o_orderkey").alias("k"))
         .distinct()
     )
-    # materialized once: both successor-join sides reference the ranked
-    # table, and without the checkpoint each side re-ran the distinct +
-    # quantile-bucketed rank (two full passes over the key set)
-    from etl_mini_spark.session import pin
-
-    r = pin(exact_global_rank(k, ["k"]))
+    r = exact_global_rank(k, ["k"])
     a = r.select(F.col("k").alias("ka"), F.col("rn").alias("rna"))
     b = r.select(F.col("k").alias("kb"), (F.col("rn") - 1).alias("rnb"))
     pairs = a.join(b, F.col("rna") == F.col("rnb"))
@@ -2693,19 +2658,16 @@ def pages_l_trend(spark, sf_dir):
     integers on the zero-filled grid), the doubled statistic
     L2 = SUM j*R2_j, and z from the classical moments
     (E = bk(k+1)^2/4, Var = bk^2(k+1)(k^2-1)/144) — the ordered
-    sibling of the staged Friedman test, sharing its grid machinery.
+    sibling of the Friedman test, sharing its grid machinery.
     Plan: one month x priority agg, one in-block rank window over the
     bounded grid, a k-row finish."""
-    from etl_mini_spark.session import pin
-
     o = _t(spark, sf_dir, "orders")
-    # same lineage discipline as friedman_test_blocks: the bounded
-    # month x priority cell table feeds five subtrees of the final plan;
-    # pin it so orders is scanned once per run (guide 3.3).
-    cells = pin(o.groupBy(
+    # the bounded month x priority cell table feeds five subtrees of
+    # the final plan
+    cells = o.groupBy(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("g"),
         F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
-    ).agg(F.count("*").cast("bigint").alias("v")))
+    ).agg(F.count("*").cast("bigint").alias("v"))
     months = cells.select("ym").distinct()
     gs = cells.select("g").distinct()
     grid = (
@@ -2718,9 +2680,9 @@ def pages_l_trend(spark, sf_dir):
         + F.count("*").over(Window.partitionBy("ym", "v"))
         - 1
     )
-    rj = pin(grid.select("g", r2.alias("r2")).groupBy("g").agg(
+    rj = grid.select("g", r2.alias("r2")).groupBy("g").agg(
         F.sum("r2").cast("bigint").alias("r2j")
-    ))  # k rows; referenced by both the scalar finish and the output join
+    )  # k rows
     s = rj.agg(
         F.sum(F.col("g") * F.col("r2j")).cast("bigint").alias("l2"),
         F.count("*").cast("bigint").alias("k"),
@@ -2880,13 +2842,9 @@ def cox_stuart_trend(spark, sf_dir):
     upward-sign count is binomial under no-trend, ties drop by the
     same rule on both engines, z is the normal approximation — all
     integer until the final two divisions. Plan: one day agg, one
-    bounded self-join on the indexed series. The indexed series is
-    pinned: the half count and both pair sides referenced it, each
-    re-running the events scan 3x unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    bounded self-join on the indexed series."""
     daily = events_daily_cents(spark, sf_dir)
-    idx = pin(daily.select("c", F.row_number().over(Window.orderBy("d")).alias("i")))
+    idx = daily.select("c", F.row_number().over(Window.orderBy("d")).alias("i"))
     nn = idx.agg((F.count("*") / 2).cast("bigint").alias("h"))
     a = idx.select(F.col("c").alias("x"), F.col("i").alias("ia"))
     bdf = idx.select(F.col("c").alias("y"), F.col("i").alias("ib"))

@@ -1,4 +1,4 @@
-"""Round-13 staged tier: a modern-retrieval block (int8 quantized
+"""Registry queries: a modern-retrieval block (int8 quantized
 similarity, Matryoshka truncation audit, reciprocal-rank fusion, NDCG,
 product-quantization ANN), lakehouse table semantics (manifest
 pruning, log replay, bitemporal snapshots, composed SCD2+SCD6,
@@ -9,11 +9,9 @@ OLS, Mahalanobis, 2x2 PCA, boosted stumps, isotonic PAV), SQL-surface
 differentials (window EXCLUDE, mode tie-break, QUALIFY), sketch audits
 (count-min batch + incremental streaming, Bloom FPR), geohash prefix
 blocking, streaming differentials (sessionize, CDC keep-latest), and
-amplified-corpus dedup, plus the round-13-authored REAL multimodal
-decode block (header-parse + PNG pixel differentials) — authored and
-staged in round 12 (swept vs the DuckDB oracle at sf0.001/0.01/0.1 as
-`round13_pending`), registered in round 13 with names and oracles
-verbatim.
+amplified-corpus dedup, plus a real multimodal decode block
+(header-parse + PNG pixel differentials), each checked against its
+DuckDB oracle.
 
 Parity rules as in round9..12_ops (FIXTURES.md §C): integer/decimal
 arithmetic end-to-end (money as exact BIGINT cents; int8 codes and
@@ -582,8 +580,7 @@ def delta_log_replay(spark, sf_dir):
     cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
     # the month-file table (~7 years x 12 rows) is referenced by every
     # branch of the action-log union AND by versions/adds/removes over
-    # that union — unpinned, the orders scan + aggregate re-ran ~12x
-    # per query (guide 3.3); one pin = one orders scan per run.
+    # that union; unpinned: 0.87 s vs 0.53 s at sf0.1
     mf = pin(o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("file_id")).agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum(cents).cast("bigint").alias("cents"),
@@ -1163,21 +1160,13 @@ def _fs_frames(spark, sf_dir):
         .otherwise(F.col("phone")).alias("phone"),
     )
     a, v = base.alias("a"), var.alias("v")
-    cand = a.join(v, F.col("a.nat") == F.col("v.nat")).select(
+    return a.join(v, F.col("a.nat") == F.col("v.nat")).select(
         F.col("a.k").alias("a_key"), F.col("v.k").alias("b_key"),
         (F.col("a.seg") == F.col("v.seg")).cast("int").alias("a_seg"),
         (F.abs(F.col("a.bal_c") - F.col("v.bal_c")) <= 100).cast("int").alias("a_bal"),
         (F.col("a.phone") == F.col("v.phone")).cast("int").alias("a_ph"),
         (F.col("a.k") == F.col("v.k")).cast("int").alias("is_match"),
     )
-    # pinned: both consumers (the m/u rate aggregate + pattern rollup,
-    # and the threshold sweep + its truth count) reference the
-    # candidate table twice, each re-running the blocked join and its
-    # two customer scans (guide 3.3) — this is the candidate table an
-    # ER pipeline materializes anyway
-    from etl_mini_spark.session import pin
-
-    return pin(cand)
 
 
 @pq("fellegi_sunter_weights", _FS_SQL)
@@ -1190,7 +1179,11 @@ def fellegi_sunter_weights(spark, sf_dir):
     that splink-style ER stacks fit at scale. Plan: variant synthesis
     is pure Column md5 arithmetic, one blocked join (never all-pairs),
     one 1-row rate aggregate broadcast onto the pattern rollup."""
-    cand = _fs_frames(spark, sf_dir)
+    from etl_mini_spark.session import pin
+
+    # unpinned: 4.67 s vs 3.58 s at sf0.1 (er_threshold_quality, which
+    # shares _fs_frames, ran 0.66 s unpinned vs 3.23 s pinned)
+    cand = pin(_fs_frames(spark, sf_dir))
     rates = cand.agg(
         F.sum(F.col("a_seg") * F.col("is_match")).alias("m_seg_n"),
         F.sum("is_match").alias("m_d"),
@@ -1969,21 +1962,16 @@ def gradient_boost_stumps(spark, sf_dir):
     round-2 residual sums derive from one bounded (f1, f2) base agg
     with no per-row residual pass; variance-reduction gains on
     once-converted doubles, threshold tie-breaks. One fact-table agg
-    total — boosting as aggregation, the 100-TB shape. The ≤48-cell
-    (f1, f2) base aggregate is pinned: round 1, the residual fold and
-    round 2 all referenced it, each re-running the orders scan 3x
-    unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    total — boosting as aggregation, the 100-TB shape."""
     o = _t(spark, sf_dir, "orders")
-    base = pin(o.groupBy(
+    base = o.groupBy(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("f1"),
         F.month("o_orderdate").cast("int").alias("f2"),
     ).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
         .cast("bigint").alias("sy"),
-    ))
+    )
 
     def best_stump(cells, feat_col, n_col, s_col, t_lo, t_hi):
         tgrid = spark.range(t_lo, t_hi + 1).select(F.col("id").cast("int").alias("t"))
@@ -2081,19 +2069,14 @@ def isotonic_regression_pav(spark, sf_dir):
     — exact on the calendar-bounded grid, with segment averages one
     division of exact integer prefix sums. The fact-table pass is the
     day aggregation alone; the O(days^3) grid is bounded by the
-    calendar, not the data. The prefix-summed series is pinned: both
-    segment-join sides, the j-grid and the final label join referenced
-    it, each re-running the events scan + day aggregate 4x unpinned
-    (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    calendar, not the data."""
     daily = events_daily_cents(spark, sf_dir)
     w = Window.orderBy("d")
-    ser = pin(daily.select(
+    ser = daily.select(
         "d", "c",
         F.row_number().over(w).alias("i"),
         F.sum("c").over(w).alias("pre"),
-    ))
+    )
     a, b = ser.alias("a"), ser.alias("b")
     seg = a.join(b, F.col("a.i") <= F.col("b.i")).select(
         F.col("a.i").alias("i"), F.col("b.i").alias("k"),
@@ -2457,15 +2440,10 @@ def bloom_fpr_audit(spark, sf_dir):
     is a pure function of the data. Plan: members/nonmembers from one
     scan each, bit table via a x3 bounded explode + distinct, probes
     join the bit table on the hashed position (keyed join, no
-    broadcast of the fact table). The member-key set (what a real
-    Bloom build materializes anyway) and the <= 4096-row bit table are
-    pinned: unpinned, the anti-join, bit build and the two count
-    aggregates re-ran the orders scan 5x (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    broadcast of the fact table)."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    members = pin(
+    members = (
         o.where((F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1996-01-01"))
         .select(F.col("o_custkey").alias("k")).distinct()
     )
@@ -2479,7 +2457,7 @@ def bloom_fpr_audit(spark, sf_dir):
         )
 
     igrid = F.explode(F.array(*[F.lit(i) for i in range(_BLOOM_K)])).alias("i")
-    bits = pin(
+    bits = (
         members.select("k", igrid)
         .select(bitpos(F.col("k"), F.col("i")).alias("bit"))
         .distinct()
@@ -3295,26 +3273,24 @@ def graph_kcore_peel(spark, sf_dir):
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
     )
-    sym = edges.unionByName(
+    from etl_mini_spark.session import pin
+
+    # gather the six per-round scalars eagerly, each round's edge table
+    # pinned lazily (the first count materializes it). Against the
+    # persist this replaces, at sf0.1: 32 jobs vs 30-36, 10.8 s vs
+    # 14.0 s; unpinned: 58 jobs vs 30-36, 25.9 s vs 9.5 s
+    sym = pin(edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    # gather the six per-round scalars eagerly with each round's edge
-    # table persisted — otherwise every later round's lineage re-derives
-    # the expensive co-purchase self-join (the DuckDB oracle
-    # materializes its CTEs once; ~7x redundant joins measured without
-    # the persist)
-    stats, e, persisted = [], sym, [sym]
+    ), eager=False)
+    stats, e = [], sym
     for rnd in (1, 2, 3):
         nodes = (
             e.groupBy("u").agg(F.count("*").alias("deg"))
             .where(F.col("deg") >= 3).select("u")
         )
-        e = e.join(nodes, "u").join(nodes.select(F.col("u").alias("v")), "v").persist()
-        persisted.append(e)
+        e = pin(e.join(nodes, "u").join(nodes.select(F.col("u").alias("v")), "v"), eager=False)
         stats.append((rnd, nodes.count(), e.count() // 2))
     out = spark.createDataFrame(stats, "round int, nodes long, edges long")
-    for df in persisted:
-        df.unpersist()
     return out.orderBy("round")
 
 
@@ -3361,15 +3337,10 @@ def graph_jaccard_link_prediction(spark, sf_dir):
     the shared neighbor (bounded by the key sample — the inverted-
     index shape), degrees joined back, anti-join removes real edges;
     never an all-pairs scan."""
-    from etl_mini_spark.session import pin
-
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
-    # pinned: edges feeds the symmetrization (which deg/s1/s2 read 3x)
-    # AND the non-edge anti-join -- unpinned, the basket self-join +
-    # distinct re-ran SEVEN times through the final plan (guide 3.3);
-    # the symmetrization itself is an inline explode, not a self-union
-    edges = pin(
+    # the symmetrization is an inline explode, not a self-union
+    edges = (
         a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))

@@ -1,4 +1,4 @@
-"""Round-14 tier: geospatial beyond geohash blocking (equirect
+"""Registry queries: geospatial beyond geohash blocking (equirect
 k-NN, bbox containment via grid cells, polyline track length, density
 hotspots), window-frame SQL parity follow-ons (EXCLUDE GROUP/TIES,
 GROUPS frames, second-order QUALIFY, IGNORE NULLS gap-fill),
@@ -12,10 +12,8 @@ candidates), graph link prediction & local clustering, lakehouse
 maintenance (next-fit-decreasing compaction bins, snapshot retention
 expiry, partition-spec evolution routing), time-series symbolization
 (two-state Markov stationary, SAX/PAA, Theta forecast), and a
-streaming state-TTL eviction differential — authored and swept in
-round 13 as round14_pending, registered verbatim in round 14 (names
-and oracles unchanged; the staging `pq` decorator becomes the registry
-`q`).
+streaming state-TTL eviction differential, each checked against its
+DuckDB oracle.
 
 Parity rules as in round9..13_ops (FIXTURES.md §C): integer/decimal
 arithmetic end-to-end (money as exact BIGINT cents), libm terms
@@ -755,15 +753,12 @@ def query_likelihood_dirichlet(spark, sf_dir):
     ln term pre-rounds at 9dp before the DECIMAL(28,9) fold. Smoothing
     means unmatched terms still contribute ln(MU*p(w|C)/(|d|+MU)), so
     the scoring join is dl x qt with tf LEFT-joined, exactly the
-    streaming-scorer shape a 100 TB corpus wants. The (doc, tok) tf
-    table is pinned and every other statistic DERIVES from it — df is
-    its per-token row count, dlen/cf/ct are its partial sums — so the
-    corpus token explode runs once instead of five times (guide 3.3;
-    same counts by construction: tf rows are unique per (doc, tok))."""
-    from etl_mini_spark.session import pin
-
+    streaming-scorer shape a 100 TB corpus wants. Every other statistic
+    DERIVES from the (doc, tok) tf table — df is its per-token row
+    count, dlen/cf/ct are its partial sums (same counts by
+    construction: tf rows are unique per (doc, tok))."""
     tok = _tok14(spark, sf_dir)
-    tf = pin(tok.groupBy("doc_id", "tok").agg(F.count("*").cast("bigint").alias("tf")))
+    tf = tok.groupBy("doc_id", "tok").agg(F.count("*").cast("bigint").alias("tf"))
     qt = (
         tf.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
         .orderBy(F.desc("df"), "tok").limit(3)
@@ -1075,16 +1070,11 @@ def rocchio_relevance_vector(spark, sf_dir):
     conditional aggregates, and the 64-row result joins the broadcast
     q0 components. Dim-partitioned all the way — no vector ever
     gathers to one task."""
-    # The 1-row query-vector tables are pinned: q0id fed three
-    # references and q0 two, each re-running the embeddings scan
-    # (6 scans unpinned -> 3, guide 3.3).
-    from etl_mini_spark.session import pin
-
     emb = _t(spark, sf_dir, "embeddings")
-    q0id = pin(emb.agg(F.min("vec_id").alias("m")))
-    q0 = pin(emb.join(F.broadcast(q0id), emb.vec_id == F.col("m")).select(
+    q0id = emb.agg(F.min("vec_id").alias("m"))
+    q0 = emb.join(F.broadcast(q0id), emb.vec_id == F.col("m")).select(
         F.col("embedding").alias("q_emb"), F.col("label").alias("q_label")
-    ))
+    )
     comp = (
         emb.join(F.broadcast(q0id), emb.vec_id != F.col("m"))
         .crossJoin(F.broadcast(q0))
@@ -1642,9 +1632,7 @@ def dq_column_entropy_profile(spark, sf_dir):
     histograms are keyed aggs (domain-sized), -p*ln(p) terms pre-round
     at 9dp into a DECIMAL fold, normalization divides by ln(k) once.
     The union runs each branch's scan independently — no table waits
-    on another. The domain-sized histogram union is pinned: the
-    per-column totals and the entropy fold both referenced it, so
-    every branch's table scan ran twice unpinned (guide 3.3)."""
+    on another."""
     from etl_mini_spark.session import pin
 
     ev = _t(spark, sf_dir, "events").groupBy(F.col("event_type").alias("v")).agg(
@@ -1656,7 +1644,7 @@ def dq_column_entropy_profile(spark, sf_dir):
     op = _t(spark, sf_dir, "orders").groupBy(F.col("o_orderpriority").alias("v")).agg(
         F.count("*").cast("bigint").alias("n")
     ).select(F.lit("o_orderpriority").alias("col_"), "v", "n")
-    h = pin(ev.unionByName(dc).unionByName(op))
+    h = pin(ev.unionByName(dc).unionByName(op))  # unpinned: 0.42 s vs 0.33 s at sf0.1
     t = h.groupBy("col_").agg(
         F.sum("n").cast("bigint").alias("tot"), F.count("*").cast("bigint").alias("k")
     )
@@ -1782,17 +1770,16 @@ def _edges14(spark, sf_dir):
         (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
         & (F.col("a.l_partkey") < F.col("b.l_partkey")),
     ).select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-    # materialized once — und references e twice and the wedge/adjacency
-    # joins downstream reference it up to 3x more; without the
-    # checkpoint every reference re-ran the lineitem self-join + agg
-    # (same fix as _copurchase_edges; plans dropped from 27-44
-    # Exchanges to ~10)
-    e = (
+    from etl_mini_spark.session import pin
+
+    # und references e twice and the wedge/adjacency joins up to 3x
+    # more; unpinned: graph_adamic_adar_linkpred 2.96 s vs 1.68 s and
+    # graph_local_clustering_coeff 2.37 s vs 1.88 s at sf0.1
+    e = pin(
         pairs.groupBy("p1", "p2")
         .agg(F.count("*").alias("w"))
         .filter("w >= 2")
         .select("p1", "p2")
-        .localCheckpoint()
     )
     und = e.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionByName(
         e.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
@@ -2813,12 +2800,8 @@ def weibull_median_rank_fit(spark, sf_dir):
         .filter(F.col("l_shipdate") > F.col("o_orderdate"))
         .select(F.datediff("l_shipdate", "o_orderdate").alias("t"))
     )
-    # pinned (delay-domain histogram, bounded by integer days): the
-    # total count and the cumulative-rank pass both referenced it,
-    # each re-running the lineitem⋈orders join (guide 3.3)
-    from etl_mini_spark.session import pin
-
-    hv = pin(d.groupBy("t").agg(F.count("*").cast("bigint").alias("c")))
+    # delay-domain histogram, bounded by integer days
+    hv = d.groupBy("t").agg(F.count("*").cast("bigint").alias("c"))
     n = hv.agg(F.sum("c").cast("bigint").alias("n"))
     w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     r = hv.select(

@@ -1,4 +1,4 @@
-"""Round-15 staged tier: retrieval evaluation (MAP@10 / MRR), a KMV
+"""Registry queries: retrieval evaluation (MAP@10 / MRR), a KMV
 distinct sketch replayed exactly on both engines, iterative graph
 analytics under the integer-nano discipline (HITS hubs/authorities,
 synchronous label propagation), exact cooperative-game attribution
@@ -9,12 +9,8 @@ refinement), forecast-accuracy metrology (wMAPE/sMAPE/MASE), lakehouse
 snapshot data-diff, privacy (l-diversity), a COUNT(DISTINCT) OVER
 window parity differential, credit-risk vintage curves, Wald's SPRT
 sequential test on exact-decimal log-likelihood ladders, closed-form
-water-filling allocation, and Benjamini-Hochberg FDR adjustment —
-authored and swept in round 14 as round15_pending, registered
-verbatim in round 15 (names and oracles unchanged; the staging `pq`
-decorator becomes the registry `q`). DELIBERATELY SMALL (16 entries):
-the round-15 rotation spends its remaining 34 slots re-verifying the
-stale r05 cohort (the r13/r14 verdicts' named structural debt).
+water-filling allocation, and Benjamini-Hochberg FDR adjustment, each
+checked against its DuckDB oracle.
 
 Parity rules as in round9..14_ops (FIXTURES.md §C): integer/decimal
 arithmetic end-to-end wherever a comparison decides a row (money as
@@ -102,16 +98,14 @@ def map_mrr_eval(spark, sf_dir):
     BIGINT nanos and summed exactly; the only float ops are the two
     final display divisions. At corpus scale the probe side stays a
     broadcast and the per-query top-10 is a WindowGroupLimit — one
-    corpus scan, no quadratic materialization past the rank cut. The
-    probe table is pinned, and n_rel derives from a per-source corpus
-    count (a probe's relevant set is every OTHER doc with its source,
-    so n_rel = count(source) - 1 — identical integers) instead of a
-    second evaluation of the probe×corpus candidate join, which is
-    the quadratic stage (guide 2.4/3.3)."""
-    from etl_mini_spark.session import pin
-
+    corpus scan, no quadratic materialization past the rank cut. n_rel
+    derives from a per-source corpus count (a probe's relevant set is
+    every OTHER doc with its source, so n_rel = count(source) - 1 —
+    identical integers) instead of a second evaluation of the
+    probe×corpus candidate join, which is the quadratic stage (guide
+    2.4)."""
     d = _t(spark, sf_dir, "documents")
-    probes = pin(
+    probes = (
         d.filter(F.col("doc_id") % 11 == 3)
         .select(F.col("doc_id").alias("query_id"), F.col("source").alias("qsrc"))
     )
@@ -304,6 +298,7 @@ def graph_hits_hubs_authorities(spark, sf_dir):
     from etl_mini_spark.session import pin
 
     li = _t(spark, sf_dir, "lineitem")
+    # unpinned: 50 jobs vs 44, 6.38 s vs 3.99 s at sf0.1
     edges = pin(
         li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
     )
@@ -369,13 +364,10 @@ def graph_label_propagation(spark, sf_dir):
     update is what makes the result order-independent and therefore
     distributable. The symmetrized edge list is built by exploding both
     orientations of ONE distinct pass (a self-union re-ran the lineitem
-    distinct per branch) and pinned: the loop references it once per
-    round, which unpinned re-ran the whole upstream 4x. Each round is a
-    pinned superstep (operators/graph.iterate) under loop_confs."""
-    from etl_mini_spark.session import pin
-
+    distinct per branch). Each round is a pinned superstep
+    (operators/graph.iterate) under loop_confs."""
     li = _t(spark, sf_dir, "lineitem")
-    adj = pin(
+    adj = (
         li.filter(F.col("l_quantity") > 47)
         .select((2 * F.col("l_suppkey")).alias("u"), (2 * F.col("l_partkey") + 1).alias("v"))
         .distinct()
@@ -468,14 +460,10 @@ def shapley_attribution_paths(spark, sf_dir):
     coefficients, one display division per channel. The touch-mask
     aggregation is the only data-sized pass; at 100 TB it is one
     groupBy(user) — the game-theory layer stays O(2^channels)."""
-    from etl_mini_spark.session import pin
-
     e = _t(spark, sf_dir, "events")
     # conv feeds both the touch join and the converted-user re-add;
-    # mcnt (<= 16 rows) feeds the three coalition-value references --
-    # unpinned, the events aggregates re-ran per reference (9 scans in
-    # the r19 audit; guide 3.3)
-    conv = pin(
+    # mcnt (<= 16 rows) feeds the three coalition-value references
+    conv = (
         e.filter(F.col("event_type") == "purchase")
         .groupBy("user_id").agg(F.min("ts").alias("cts"))
     )
@@ -498,7 +486,7 @@ def shapley_attribution_paths(spark, sf_dir):
     # a second left join from conv.
     touch = conv.select("user_id").join(touch, "user_id", "left").select(
         "user_id", F.coalesce("mask", F.lit(0)).alias("mask"))
-    mcnt = pin(touch.groupBy("mask").agg(F.count("*").cast("bigint").alias("cnt")))
+    mcnt = touch.groupBy("mask").agg(F.count("*").cast("bigint").alias("cnt"))
     grid = spark.range(16).select(F.col("id").cast("long").alias("smask"))
     v = (
         grid.join(F.broadcast(mcnt), F.expr("(mask & smask) = mask"), "left")
@@ -1115,14 +1103,12 @@ def vintage_default_curves(spark, sf_dir):
         )
     )
     # byage carries the per-cell line count so the cohort totals roll
-    # up from the pinned cohort×age table (≤12 ages) instead of a
-    # second evaluation of the orders⋈lineitem join (guide 2.4/3.3)
-    from etl_mini_spark.session import pin
-
-    byage = pin(base.groupBy("cohort", "age").agg(
+    # up from the cohort×age table (≤12 ages) instead of a second
+    # evaluation of the orders⋈lineitem join (guide 2.4)
+    byage = base.groupBy("cohort", "age").agg(
         F.sum("ret").cast("bigint").alias("r"),
         F.count("*").cast("bigint").alias("__c"),
-    ))
+    )
     tot = byage.groupBy("cohort").agg(F.sum("__c").cast("bigint").alias("n_lines"))
     cum = byage.withColumn(
         "cum_r", F.sum("r").over(Window.partitionBy("cohort").orderBy("age")).cast("bigint"))
@@ -1190,12 +1176,7 @@ def sprt_sequential_test(spark, sf_dir):
     """Wald SPRT per user stream: the log-likelihood ladder is a
     cumulative sum of two fixed DECIMAL(18,9) literals (ln computed
     offline), so the walk, both boundary crossings, and the stopping
-    time are exact on both engines. One partitioned window pass —
-    pinned, because the boundary-crossing, observation-count and
-    final-state aggregates all referenced the ladder, each re-running
-    the events scan + both user windows 3x unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    time are exact on both engines. One partitioned window pass."""
     e = _t(spark, sf_dir, "events")
     wb = Window.partitionBy("user_id").orderBy("ts", "event_id")
     s = e.select(
@@ -1206,11 +1187,11 @@ def sprt_sequential_test(spark, sf_dir):
         .otherwise(F.lit("-0.133531393").cast("decimal(18,9)"))
         .alias("inc"),
     )
-    c = pin(s.withColumn(
+    c = s.withColumn(
         "llr",
         F.sum("inc").over(Window.partitionBy("user_id").orderBy("i"))
         .cast("decimal(18,9)"),
-    ))
+    )
     up = F.lit("2.772588722").cast("decimal(18,9)")
     lo = F.lit("-1.558144618").cast("decimal(18,9)")
     hit = (
@@ -1292,15 +1273,10 @@ def water_filling_allocation(spark, sf_dir):
     monotone prefix test — exact BIGINT cents end to end, one float
     division for the displayed level. Plan: one window pass per
     segment + a broadcast of the per-segment capacity row; no
-    iteration, no driver loop. The per-customer demand table is pinned
-    (O(|customers|) keyed aggregate): the window pass and the capacity
-    aggregate each re-ran the customer⋈orders join unpinned — 6 table
-    scans instead of 2 (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    iteration, no driver loop."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
-    dem = pin(
+    dem = (
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), F.col("c_custkey").alias("cust"))
         .agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))

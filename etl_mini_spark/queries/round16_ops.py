@@ -1,4 +1,4 @@
-"""Round-16 staged tier: the SQL:2016 row-pattern surface as a batch
+"""Registry queries: the SQL:2016 row-pattern surface as a batch
 differential (V-shape MATCH_RECOGNIZE-class detection over daily
 revenue), two classic per-group sequential DPs no window frame can
 express (weighted interval scheduling, longest increasing
@@ -10,15 +10,9 @@ under pure-integer inlier tests, marketing adstock with an exact
 integer-halving carryover, MMR diverse top-k retrieval, single-source
 BFS on a formulaic circulant graph, a streaming state-eviction batch
 twin driven by as-of joins on BOTH engines (Spark union-sort vs DuckDB
-native ASOF), seasonal Mann-Kendall, and Dunn's post-hoc pairwise z —
-authored in round 14 as round16_pending (avro_roundtrip joined the
-tier in round 15 when the pure-stdlib Avro codec closed the format
-gap), registered verbatim in round 16 (names and oracles unchanged;
-the staging `pq` decorator becomes the registry `q`). DELIBERATELY
-SMALL (16 entries): per the r13 verdict's backlog plan, tiers stay
-small so ~34 window slots per round re-verify the stale r05-r08
-cohort until that debt clears — this round drains the r05 cohort
-11 -> 0 and the r06 cohort 46 -> 23.
+native ASOF), seasonal Mann-Kendall, Dunn's post-hoc pairwise z, and an
+Avro round trip through the pure-stdlib codec, each checked against its
+DuckDB oracle.
 
 Parity rules as in round9..15 (FIXTURES.md §C): integer/decimal
 arithmetic end-to-end wherever a comparison decides a row (money as
@@ -90,17 +84,13 @@ def pattern_vshape_runs(spark, sf_dir):
     run starting the next day is a match. Plan: one day agg, three
     ordered windows, one tiny self-join of run summaries — the series
     is calendar-bounded (~2.4k rows at any SF), so the single-partition
-    windows are the CORRECT plan, not a scale hazard. The day series
-    and run summaries are pinned (each fed both self-join sides,
-    re-running the events scan + day aggregate 4x unpinned); the
+    windows are the CORRECT plan, not a scale hazard. The
     consecutive-day pairing is a lag window instead of an i+1
     self-join — identical rows (row i pairs with row i-1; row 1, which
     the inner join dropped, is dropped by the i > 1 filter), one
-    operator instead of a join (guide 2.4/3.3)."""
-    from etl_mini_spark.session import pin
-
+    operator instead of a join (guide 2.4)."""
     daily = orders_daily_cents(spark, sf_dir)
-    ser = pin(daily.select("d", "c", F.row_number().over(Window.orderBy("d")).alias("i")))
+    ser = daily.select("d", "c", F.row_number().over(Window.orderBy("d")).alias("i"))
     wser = Window.orderBy("i")
     dirs = (
         ser.select(
@@ -118,12 +108,12 @@ def pattern_vshape_runs(spark, sf_dir):
     runs = dirs.withColumn(
         "grp", F.col("i") - F.row_number().over(Window.partitionBy("dir").orderBy("i"))
     )
-    seg = pin(runs.groupBy("dir", "grp").agg(
+    seg = runs.groupBy("dir", "grp").agg(
         F.min("i").alias("i0"), F.max("i").alias("i1"),
         F.count("*").cast("bigint").alias("len"),
         F.min("prev_d").alias("strt_d"), F.min_by("prev_c", "i").alias("strt_c"),
         F.max("d").alias("end_d"), F.max_by("c", "i").alias("end_c"),
-    ))
+    )
     dn, up = seg.alias("dn"), seg.alias("up")
     return (
         dn.join(up, (F.col("dn.dir") == "D") & (F.col("up.dir") == "U")
@@ -457,17 +447,14 @@ def damerau_dl_blocked(spark, sf_dir):
         .filter(F.col("w").rlike("^[a-z]+$"))
         .distinct()
     )
-    reach = tok.groupBy("w").agg(F.count("*").cast("bigint").alias("n_docs"))
-    # One corpus pass total: reach is vocabulary-sized (tiny by the
-    # preflight's own guarantee), so persist it — the preflight
-    # histogram, and BOTH self-join sides below, reuse one
-    # materialization instead of re-running the documents scan +
-    # explode + distinct three times. No explicit success-path
-    # unpersist is possible (the returned lazy plan references the
-    # cache); once the caller drops the frame, ContextCleaner reclaims
-    # the blocks — bounded by the preflight at ~|V| rows of (word,
-    # count), a few MB.
-    reach = reach.persist()
+    from etl_mini_spark.session import pin
+
+    # reach is vocabulary-sized (tiny by the preflight's own guarantee)
+    # and feeds the preflight histogram and BOTH self-join sides below;
+    # pinned lazily, the histogram collect materializes it. Measured
+    # against the persist this replaces: 6 jobs vs 4, 1.08 s vs 2.89 s
+    # at sf0.1; unpinned: 5 jobs, 0.91 s
+    reach = pin(tok.groupBy("w").agg(F.count("*").cast("bigint").alias("n_docs")), eager=False)
     # Candidate-mass preflight (same contract as the setjoin r15 fix,
     # sized by bench_scale.py's damerau_blocked_100k probe): length-±1
     # blocking concentrates mass in the common word lengths, so on a
@@ -486,7 +473,6 @@ def damerau_dl_blocked(spark, sf_dir):
         hist[l] * hist.get(l + 1, 0) for l in hist
     )
     if mass > _DL_MAX_PAIRS:
-        reach.unpersist()
         raise ValueError(
             f"damerau_dl_blocked: length-blocked candidate mass {mass:,} "
             f"exceeds {_DL_MAX_PAIRS:,} — exact DL cannot scan this "
@@ -769,12 +755,12 @@ def krippendorff_alpha_nominal(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     lines = li.select(F.col("l_orderkey").alias("u"), F.col("l_returnflag").alias("c"))
     # nuc (unit x category counts + the unit size m) is the working set
-    # every downstream aggregate reads (do_u, marg, the unit totals) --
-    # unpinned, the t1/t2/t3 subtrees re-ran the lineitem scan ~6x per
-    # query (guide 3.3). Build it in ONE lineitem scan: the count window
-    # on u replaces the old mu-aggregate join-back (same rows -- m >= 2
-    # filters identically), and hash(u) clustering satisfies the
-    # (u, c) groupBy, so window + aggregate share one exchange.
+    # every downstream aggregate reads (do_u, marg, the unit totals).
+    # Build it in ONE lineitem scan: the count window on u replaces the
+    # old mu-aggregate join-back (same rows -- m >= 2 filters
+    # identically), and hash(u) clustering satisfies the (u, c)
+    # groupBy, so window + aggregate share one exchange.
+    # unpinned: 1.52 s vs 1.14 s at sf0.1
     nuc = pin(
         lines.withColumn("m", F.count("*").over(Window.partitionBy("u")).cast("bigint"))
         .filter("m >= 2")
@@ -1179,7 +1165,6 @@ def stream_eviction_twin(spark, sf_dir):
     calendar-bounded. Sessions that outlive the data's watermark are
     correctly absent (their state would still be resident)."""
     from etl_mini_spark.operators.joins import asof_join
-    from etl_mini_spark.session import pin
 
     e = _t(spark, sf_dir, "events")
     ev = e.select(
@@ -1194,10 +1179,9 @@ def stream_eviction_twin(spark, sf_dir):
          - 600000000).alias("wm"),
     )
     # strict is calendar-bounded (one row per 15-min trigger with a
-    # watermark advance) but feeds BOTH the as-of probe side and the
-    # next-trigger lookup; unpinned, each reference re-ran the events
-    # scan + trigger aggregate + three global windows (guide 3.3).
-    strict = pin(
+    # watermark advance) and feeds BOTH the as-of probe side and the
+    # next-trigger lookup
+    strict = (
         wm.withColumn("prev", F.lag("wm").over(Window.orderBy("trig")))
         .filter(F.col("prev").isNull() | (F.col("wm") > F.col("prev")))
         .withColumn("j", F.row_number().over(Window.orderBy("trig")))
@@ -1291,20 +1275,18 @@ def seasonal_mann_kendall(spark, sf_dir):
     season), tie-corrected variance numerators kept as BIGINTs, one
     continuity-corrected z in the season-0 total row. The only corpus
     pass is the month agg."""
+    o = _t(spark, sf_dir, "orders")
     from etl_mini_spark.session import pin
 
-    o = _t(spark, sf_dir, "orders")
-    monthly = o.groupBy(
+    # ~84 rows; unpinned: 0.56 s vs 0.49 s at sf0.1 (a pin on per as
+    # well did not pay)
+    monthly = pin(o.groupBy(
         F.month("o_orderdate").alias("season"),
         F.year("o_orderdate").alias("yr"),
     ).agg(
         F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
         .cast("bigint").alias("c")
-    )
-    # ~84 rows; referenced by both self-join sides, the season sizes
-    # and the tie counts -- unpinned, the orders scan + month aggregate
-    # re-ran 4x per query (guide 3.3)
-    monthly = pin(monthly)
+    ))
     a, b = monthly.alias("a"), monthly.alias("b")
     s = (
         a.join(b, (F.col("b.season") == F.col("a.season")) & (F.col("b.yr") > F.col("a.yr")))
@@ -1323,7 +1305,7 @@ def seasonal_mann_kendall(spark, sf_dir):
         .agg(F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5))
              .cast("bigint").alias("tie18"))
     )
-    per = pin(  # 12 rows; referenced by the total row and the output union
+    per = (  # 12 rows
         nsz.join(s, "season").join(ties, "season")
         .select(
             "season", "n_years", "s_stat",
@@ -1410,20 +1392,15 @@ def dunns_pairwise_z(spark, sf_dir):
     exact half-units over the DISTINCT-VALUE table (the ordered window
     runs on the value domain, which is bounded by the cent range, not
     the row count), tie-corrected pooled variance, Bonferroni literal.
-    Plan: ONE events scan — the (g,v) aggregate is pinned and the
-    value histogram, rank table, group totals and tie sums all derive
-    from it (unpinned, the a/b pair-join sides plus the rank and total
-    aggregates re-ran the fact scan 5x, guide 3.3). The per-group
-    table is pinned too (<= #event_types rows) so the self-join reads
-    it twice without re-running the rank-window join."""
-    from etl_mini_spark.session import pin
-
+    Plan: the value histogram, rank table, group totals and tie sums
+    all derive from the (g,v) aggregate; the per-group table has
+    <= #event_types rows."""
     e = _t(spark, sf_dir, "events")
     x = e.select(
         F.col("event_type").alias("g"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("v"),
     )
-    gv = pin(x.groupBy("g", "v").agg(F.count("*").cast("bigint").alias("n_gv")))
+    gv = x.groupBy("g", "v").agg(F.count("*").cast("bigint").alias("n_gv"))
     vals = gv.groupBy("v").agg(F.sum("n_gv").cast("bigint").alias("n_v"))
     rk = vals.select(
         "v", "n_v",
@@ -1431,7 +1408,7 @@ def dunns_pairwise_z(spark, sf_dir):
             F.sum("n_v").over(Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)),
             F.lit(0)) + F.col("n_v") + 1).cast("bigint").alias("r2"),
     )
-    grp = pin(
+    grp = (
         gv.join(rk, "v")
         .groupBy("g")
         .agg(

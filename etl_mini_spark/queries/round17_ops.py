@@ -1,4 +1,4 @@
-"""Round-17 staged tier: post-hoc + nonparametric classics (Tukey-
+"""Registry queries: post-hoc + nonparametric classics (Tukey-
 Kramer HSD, Wilcoxon signed-rank), information/coding theory (Huffman
 code lengths with deterministic merges), dynamic programming over
 bounded series (two-state integer Viterbi with path carry, lookback-3
@@ -9,13 +9,7 @@ fixed-point expectation ladder — no logistic ever evaluated), density
 clustering (DBSCAN as grid-blocked neighbor counts + connected
 components, the scale-safe decomposition), and retrieval (BM25F
 fielded scoring, TextRank keyword centrality under the integer-nano
-iteration discipline) — authored in round 14 as round17_pending,
-registered verbatim in round 17 (names and oracles unchanged; the
-staging `pq` decorator becomes the registry `q`). DELIBERATELY SMALL
-(13 entries): per the r13 verdict's backlog plan, tiers stay small so
-~37 window slots per round re-verify the stale r06-r08 cohort until
-that debt clears — this round drains the r06 cohort 23 -> 0 and the
-r07 cohort 44 -> 30.
+iteration discipline), each checked against its DuckDB oracle.
 
 Parity rules as in round9..16 (FIXTURES.md §C): integer/decimal
 arithmetic wherever a comparison decides a row; libm-free except
@@ -88,13 +82,12 @@ def tukey_kramer_hsd(spark, sf_dir):
     """Tukey-Kramer honestly-significant-difference over event-type
     mean cents: one hash agg to per-group integer sums, one scalar
     combine for MSE, a 10-pair group self-join. Scale: the only
-    corpus-sized pass is the first agg — pinned, because the MSE
-    combine and both self-join sides referenced it and each re-ran
-    the events scan unpinned (guide 3.3)."""
+    corpus-sized pass is the first agg."""
     from etl_mini_spark.session import pin
 
     e = _t(spark, sf_dir, "events")
     x = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    # unpinned: 0.44 s vs 0.40 s at sf0.1
     g = pin(e.groupBy(F.col("event_type").alias("g")).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(x).alias("s"), F.sum(x * x).alias("q"),
@@ -471,23 +464,17 @@ def secretary_stopping_rule(spark, sf_dir):
     """The secretary problem's 37% stopping rule replayed per user:
     prefix max over the skip window, first-crossing argmin, overall
     argmax — three windows and two joins, no sequential kernel
-    needed. Scale: everything partitions by user. The ranked candidate
-    table is pinned: the k/prefix/pick/best stages and the final
-    chosen-row join referenced it 5x, each re-running the events scan
-    plus the user-partitioned ranking windows (guide 3.3) — pinned,
-    the scan and the window sort happen once."""
-    from etl_mini_spark.session import pin
-
+    needed. Scale: everything partitions by user."""
     e = _t(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id")
-    cand = pin(e.select(
+    cand = e.select(
         "user_id",
         F.conv(F.substring(F.md5(F.concat(F.col("event_id").cast("string"),
                                           F.lit(":sec"))), 1, 15), 16, 10)
         .cast("long").alias("score"),
         F.row_number().over(wu.orderBy(F.unix_micros("ts"), "event_id")).alias("i"),
         F.count("*").over(wu).cast("bigint").alias("n"),
-    ))
+    )
     k = (
         cand.filter((F.col("i") == 1) & (F.col("n") >= 3))
         .select("user_id", "n", F.floor(F.col("n") * 368 / 1000).cast("bigint").alias("k"))
@@ -628,12 +615,7 @@ def privacy_t_closeness(spark, sf_dir):
     assignment is one global NTILE (value-domain work), then group ×
     decile counts, cumulative distributions, and the nano-prerounded
     EMD. Plan: two hash aggs + a (groups × 10)-row grid — the corpus
-    never joins itself. The ≤(groups×10)-row cell grid is pinned: the
-    group totals, decile marginals and the EMD grid all referenced it,
-    and each reference re-ran the customer scan + the single-partition
-    NTILE sort 3x unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    never joins itself."""
     c = _t(spark, sf_dir, "customer")
     cust = c.select(
         F.col("c_mktsegment").alias("seg"),
@@ -643,7 +625,7 @@ def privacy_t_closeness(spark, sf_dir):
                            "c_custkey")
         ).alias("dec"),
     )
-    gd = pin(cust.groupBy("seg", "natb", "dec").agg(F.count("*").cast("bigint").alias("n")))
+    gd = cust.groupBy("seg", "natb", "dec").agg(F.count("*").cast("bigint").alias("n"))
     g = gd.groupBy("seg", "natb").agg(F.sum("n").cast("bigint").alias("n_g"))
     glob = gd.groupBy("dec").agg(F.sum("n").cast("bigint").alias("n_d"))
     nn = glob.agg(F.sum("n_d").cast("bigint").alias("n"))
@@ -882,10 +864,9 @@ def dbscan_grid_blocked(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem")
     # pts feeds the probe side, the build side AND the noise anti-join
-    # (3 references), pairs feeds deg/core_edges/border (3 more) --
-    # unpinned, each reference re-ran the lineitem aggregate resp. the
-    # 3x3 grid join (guide 3.3); two pins = one lineitem scan and one
-    # grid join per run
+    # (3 references), pairs feeds deg/core_edges/border (3 more);
+    # unpinned: 2.27 s vs 1.49 s at sf0.1, and with one of the two
+    # pinned 2.39 s vs 2.13 s (pts) and 2.55 s vs 2.20 s (pairs)
     pts = pin(
         li.filter(F.col("l_orderkey") % 37 == 3)
         .groupBy(F.col("l_orderkey").alias("pid"))
@@ -1001,11 +982,7 @@ def bm25f_fielded_topk(spark, sf_dir):
     title field (first 5 tokens). Plan mirrors bm25_topk_docs: the
     token scan filters to query terms via a broadcast semi-join before
     any shuffle, the weighted-length table broadcasts back, exact
-    DECIMAL ranking key. As in bm25_topk_docs, the doc-length and
-    (doc, term) tf tables are pinned — unpinned, their second
-    references re-ran the corpus token explode (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    DECIMAL ranking key."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -1013,10 +990,10 @@ def bm25f_fielded_topk(spark, sf_dir):
             F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
         ).alias("p", "t"),
     ).select("doc_id", "t", F.when(F.col("p") < 5, 2).otherwise(1).alias("w"))
-    dl = pin(toks.groupBy("doc_id").agg(
+    dl = toks.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("dl"),
         F.sum("w").cast("bigint").alias("dlw"),
-    ))
+    )
     stats = dl.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("dlw").cast("bigint").alias("total_w"),
@@ -1024,9 +1001,9 @@ def bm25f_fielded_topk(spark, sf_dir):
     q = spark.range(1).select(
         F.explode(F.array(F.lit("join"), F.lit("hash"), F.lit("scan"))).alias("t")
     )
-    tf = pin(toks.join(F.broadcast(q), "t").groupBy("doc_id", "t").agg(
+    tf = toks.join(F.broadcast(q), "t").groupBy("doc_id", "t").agg(
         F.sum("w").cast("bigint").alias("tfw")
-    ))
+    )
     df_ = tf.groupBy("t").agg(F.countDistinct("doc_id").cast("bigint").alias("df"))
     terms = (
         tf.join(F.broadcast(df_), "t")
@@ -1118,12 +1095,7 @@ def textrank_keywords(spark, sf_dir):
         .select(F.col("t").alias("w1"), F.col("t2").alias("w2"))
     )
     # symmetrize inline (a unionByName over the SAME adj subtree would
-    # re-run the corpus pass per direction), and PIN the edge counts:
-    # the four unrolled PageRank iterations below each reference edges
-    # + outw + nodes, so the unpinned corpus lineage appeared 52 times
-    # in the final plan (52 parquet scans — the round-19 audit's worst
-    # offender). One corpus pass at materialization; everything after
-    # is vocabulary-sized.
+    # re-run the corpus pass per direction)
     sym = adj.select(
         F.explode(
             F.array(
@@ -1132,6 +1104,9 @@ def textrank_keywords(spark, sf_dir):
             )
         ).alias("s")
     ).select("s.w1", "s.w2")
+    # the four unrolled PageRank iterations below each reference edges +
+    # outw + nodes; unpinned: 4.63 s vs 1.73 s at sf0.1, and with edges
+    # alone pinned 1.98 s vs 1.61 s
     edges = pin(sym.groupBy("w1", "w2").agg(F.count("*").cast("bigint").alias("w")))
     outw = pin(edges.groupBy("w1").agg(F.sum("w").cast("bigint").alias("ow")))
     nodes = outw.select(F.col("w1").alias("word"))

@@ -1,4 +1,4 @@
-"""Round-18 staged tier: distinct sketches whose ESTIMATES are
+"""Registry queries: distinct sketches whose ESTIMATES are
 oracle-checkable because the hash is engine-portable md5 (an
 own-implementation HyperLogLog and a Flajolet-Martin PCSA — unlike
 the rows-only builtin HLL++ entry, every register value here is an
@@ -10,13 +10,8 @@ data-vault point-in-time table over two satellite histories), modular
 arithmetic (Shamir secret reconstruction via Lagrange interpolation
 mod a Mersenne prime), data quality (Luhn checksum audit), and
 distribution comparison (the Kuiper two-sample statistic, the
-rotation-invariant refinement of KS) — authored in round 14 as
-round18_pending, registered verbatim in round 18 (names and oracles
-unchanged; the staging `pq` decorator becomes the registry `q`).
-DELIBERATELY SMALL (10 entries): per the r13 verdict's backlog plan,
-tiers stay small so ~40 window slots per round re-verify the stale
-r07-r08 cohort until that debt clears — this round drains the r07
-cohort 30 -> 0 and the r08 cohort 48 -> 38.
+rotation-invariant refinement of KS), each checked against its DuckDB
+oracle.
 
 Parity rules as in round9..17 (FIXTURES.md §C): exact integers
 wherever a comparison decides a row (registers, DP states, modular

@@ -1,4 +1,4 @@
-"""Round-19 staged tier: time-series alignment (banded dynamic time
+"""Registry queries: time-series alignment (banded dynamic time
 warping via a flat-scan recursion — the 2-D DP linearized row-major
 with a sliding value window, since a list_transform cannot express
 the within-row left dependency), AR(1) by Yule-Walker with an exact
@@ -11,12 +11,7 @@ guarantee as the audited invariant), multiple-testing estimation
 (Storey's π₀ from the p-value tail), and two independent-path
 calendar/checksum differentials (Zeller's congruence vs the engine's
 native day-of-week; IBAN-style mod-97 with streamed modular
-reduction) — authored in round 14 as round19_pending, registered
-verbatim in round 19 (names and oracles unchanged; the staging `pq`
-decorator becomes the registry `q`). DELIBERATELY 8 entries: per the
-r13 verdict's backlog plan, tiers stay small so ~42 window slots per
-round re-verify the stale cohort — this round drains the r08 cohort
-37 -> 0 and the r09 cohort 48 -> 44.
+reduction), each checked against its DuckDB oracle.
 
 Parity rules as in round9..18 (FIXTURES.md §C).
 """

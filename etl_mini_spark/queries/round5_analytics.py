@@ -243,17 +243,12 @@ def mad_outliers(spark, sf_dir):
     """Robust outlier counts per event type via median absolute
     deviation (3×MAD rule) — unlike z-scores, immune to the outliers
     it hunts. Two exact-median aggregates on the same event_type key;
-    the per-type medians broadcast back onto the rows. The |types|-row
-    median table and the deviation rows are pinned: the MAD aggregate
-    and the final rollup both referenced dev, each re-running the
-    events scan + median join unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    the per-type medians broadcast back onto the rows."""
     e = _t(spark, sf_dir, "events").select("event_type", "value")
-    med = pin(e.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("med")))
-    dev = pin(e.join(F.broadcast(med), "event_type").withColumn(
+    med = e.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("med"))
+    dev = e.join(F.broadcast(med), "event_type").withColumn(
         "adev", F.abs(F.col("value") - F.col("med"))
-    ))
+    )
     mad = dev.groupBy("event_type").agg(F.expr("percentile(adev, 0.5)").alias("mad"))
     return (
         dev.join(F.broadcast(mad), "event_type")

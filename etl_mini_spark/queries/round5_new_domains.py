@@ -1,6 +1,7 @@
 from etl_mini_spark.queries._base import *  # noqa: F401,F403
 from etl_mini_spark.queries._base import _t, _TMP  # noqa: F401
 from etl_mini_spark.operators.graph import pagerank
+from etl_mini_spark.session import pin
 
 # New analytics domains (round-5 batch 7): graph algorithms (triangle
 # counting, PageRank), spatial radius joins, edit-distance dedup,
@@ -31,17 +32,14 @@ def _copurchase_edges(spark, sf_dir):
         (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
         & (F.col("a.l_partkey") < F.col("b.l_partkey")),
     ).select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-    # materialized once: every graph query referencing this edge list
-    # uses it 3-6x (degree tables, wedge joins, adjacency anti-joins),
-    # and without the checkpoint each reference re-ran the lineitem
-    # self-join + aggregate — graph_triangle_count's plan held 184
-    # Exchange nodes before, 10 after. O(edges) rows of two longs.
-    return (
+    # O(edges) rows of two longs, referenced 3-6x by every graph query
+    # on it; unpinned: graph_pagerank_parts 5.65 s vs 2.00 s and
+    # graph_pagerank_converged 26.5 s vs 17.1 s at sf0.1
+    return pin(
         pairs.groupBy("p1", "p2")
         .agg(F.count("*").alias("w"))
         .filter("w >= 2")
         .select("p1", "p2")
-        .localCheckpoint()
     )
 
 
@@ -89,10 +87,12 @@ def graph_triangle_count(spark, sf_dir):
         .join(deg.withColumnsRenamed({"p": "p2", "d": "d2"}), "p2")
     )
     fwd = (F.col("d1") < F.col("d2")) | ((F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2")))
-    o = ed.select(
+    # referenced 3x by the wedge-close join below; unpinned (edges
+    # still pinned): 2.79 s vs 2.59 s at sf0.1
+    o = pin(ed.select(
         F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("src"),
         F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
-    ).localCheckpoint()  # referenced 3x by the wedge-close join below
+    ))
     o1, o2, o3 = o.alias("o1"), o.alias("o2"), o.alias("o3")
     tri = (
         o1.join(o2, F.col("o1.dst") == F.col("o2.src"))
@@ -398,20 +398,16 @@ def dq_expectations_report(spark, sf_dir):
     aggregate computes every CASE-sum); the orphan rule is a broadcast
     null-aware anti join on the distinct orderkeys. The report unions
     five one-row frames — constant-sized output however big the
-    inputs. The lineitem aggregate row is pinned: three report rows
-    reference it and each union branch re-ran the full lineitem scan
-    unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    inputs."""
     l = _t(spark, sf_dir, "lineitem")  # noqa: E741
     o = _t(spark, sf_dir, "orders")
     d = _t(spark, sf_dir, "documents")
     one = lambda cond: F.sum(F.when(cond, 1).otherwise(0)).cast("bigint")  # noqa: E731
-    la = pin(l.agg(
+    la = l.agg(
         F.count("*").alias("total"),
         one(F.col("l_quantity") > 45).alias("v_qty"),
         one(F.col("l_discount") > 0.08).alias("v_disc"),
-    ))
+    )
     oa = o.agg(F.count("*").alias("total"), one(F.col("o_totalprice") <= 0).alias("v_tp"))
     da = d.agg(F.count("*").alias("total"), one(F.col("n_chars") < 100).alias("v_short"))
     orph = (

@@ -77,21 +77,14 @@ def dedup_bloom_prefilter(spark, sf_dir):
     per doc instead of the md5 fingerprint + doc payload, and the exact
     verify runs on the (tiny) collision+duplicate subset only.
     """
-    # Both fingerprint tables are pinned (8-40 bytes/row decision
-    # tables — what a real incremental dedup persists): existing_fp
-    # fed the compact build AND the exact verify, incoming fed both
-    # membership probes, and each reference re-ran its corpus scan +
-    # md5 pass unpinned (guide 3.3).
-    from etl_mini_spark.session import pin
-
     docs = _t(spark, sf_dir, "documents")
-    existing_fp = pin(
+    existing_fp = (
         docs.filter(F.col("doc_id") % 2 == 0).select(F.md5("text").alias("fp")).distinct()
     )
     compact = existing_fp.select(F.xxhash64("fp").alias("h")).distinct()
-    incoming = pin(docs.filter(F.col("doc_id") % 2 == 1).select(
+    incoming = docs.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", F.md5("text").alias("fp")
-    ).withColumn("h", F.xxhash64("fp")))
+    ).withColumn("h", F.xxhash64("fp"))
     definitely_new = incoming.join(compact, "h", "left_anti")
     maybe_dup = incoming.join(compact, "h", "left_semi")
     fp_new = maybe_dup.join(existing_fp, "fp", "left_anti")

@@ -3,8 +3,8 @@ from functools import reduce
 from etl_mini_spark.operators.graph import iterate
 from etl_mini_spark.queries._base import *  # noqa: F401,F403
 from etl_mini_spark.queries._base import _t, _TMP  # noqa: F401
-from etl_mini_spark.session import pin
 from etl_mini_spark.queries.round5_new_domains import _EDGE_CTE, _copurchase_edges
+from etl_mini_spark.session import pin
 
 # Round-6 batch 2: corpus-internal repeated-span detection, exact sparse
 # TF-IDF cosine pairs, SQL-defined scalar UDFs (Spark 4), multi-seed
@@ -122,9 +122,8 @@ def similarity_tfidf_pairs(spark, sf_dir):
     being quadratic in the stop-word mass. Shuffles are all keyed
     (token for the postings join, (doc_a, doc_b) for the dot-product
     aggregate, doc for norms); AQE splits any residual hot token. The
-    weighted postings list is materialized ONCE (localCheckpoint) and
-    reused three times (norms + both join sides) — without it Catalyst
-    re-derives the tf⋈df subtree per use, paying the corpus scan 4×."""
+    weighted postings list is pinned and reused three times (norms +
+    both join sides)."""
     docs = _t(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
     tok = (
@@ -134,11 +133,11 @@ def similarity_tfidf_pairs(spark, sf_dir):
     tf = tok.groupBy("doc_id", "tok").agg(F.count("*").cast("double").alias("tf"))
     df = tf.groupBy("tok").agg(F.count("*").alias("df")).filter("df BETWEEN 2 AND 100")
     n_docs = docs.agg(F.count("*").cast("double").alias("n"))
-    w = (
+    # unpinned: 0.98 s vs 0.86 s at sf0.1
+    w = pin(
         tf.join(df, "tok")
         .crossJoin(F.broadcast(n_docs))
         .select("doc_id", "tok", (F.col("tf") * F.log(F.col("n") / F.col("df"))).alias("w"))
-        .localCheckpoint(eager=True)
     )
     nrm = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     a, b = w.alias("a"), w.alias("b")
@@ -257,6 +256,7 @@ def graph_khop_reach(spark, sf_dir):
         nxt = nxt.join(visited, ["seed", "node"], "left_anti")
         return levels + (nxt.withColumn("hop", F.lit(len(levels))),)
 
+    # unpinned (edges still pinned): 28 jobs vs 26, 3.80 s vs 2.89 s at sf0.1
     hop0 = pin(seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("hop")))
     levels = iterate((hop0,), step, max_iter=3)
     return (

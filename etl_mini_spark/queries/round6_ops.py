@@ -177,16 +177,8 @@ def scd2_late_correction(spark, sf_dir):
             ).alias("valid_to"),
         ).withColumn("is_current", F.col("valid_to").isNull())
 
-    # history is pinned (it is the table a real warehouse has
-    # materialized): the untouched anti-join and the affected-key
-    # rewrite both referenced it, each re-running the on-time scan +
-    # interval window; affected (keys only) likewise fed both the
-    # anti and semi probes (guide 3.3).
-    from etl_mini_spark.session import pin
-
-    history = pin(build(on_time.select(*change_cols)))
-
-    affected = pin(late.select("o_custkey").distinct())
+    history = build(on_time.select(*change_cols))
+    affected = late.select("o_custkey").distinct()
     untouched = history.join(affected, "o_custkey", "left_anti")
     # recover the change points of affected keys from the history itself
     # (valid_from + attributes fully determine them), add the late rows,

@@ -1,7 +1,4 @@
-"""Round-7 operators — staged (and differentially verified) as
-round7_pending during round 6 while every driver-window slot was owned
-by a never-driver-verified entry; registered round 7 with the freed
-slots (tests/test_window_rotation.py enforces the slot invariant). The
+"""Registry queries, each checked against its DuckDB oracle. The
 non-vacuity pins live in tests/test_round7_ops.py; every entry also
 runs through the registry oracle sweep (tests/test_queries_oracle.py).
 
@@ -125,10 +122,12 @@ def _setjoin_bitmask(spark, tok, vocab):
         # SUM is exactly bitwise OR; bitpos <= 62 keeps it in int64
         .agg(F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), bitpos)")).alias("mask"))
     )
-    # one materialization (doc_id, mask — 16 bytes/doc) feeds the
-    # eager cap count AND all five downstream join legs; without it
-    # the postings scan + hash agg would re-run per leg
-    masks = masks.localCheckpoint(eager=True)
+    # (doc_id, mask — 16 bytes/doc) feeds the eager cap count AND all
+    # five downstream join legs; unpinned: 18 jobs vs 16, 1.41 s vs
+    # 1.00 s at sf0.01
+    from etl_mini_spark.session import pin
+
+    masks = pin(masks)
     mm = masks.select("mask").distinct()
     n_masks = mm.count()  # bounded driver scalar (<= 2^|V|, <= n_docs)
     if n_masks > 32768:
@@ -498,18 +497,14 @@ def mixture_temperature_weights(spark, sf_dir):
     sample itself is a narrow map+filter, so at 100 TB the whole thing
     costs one source-keyed partial agg and one scan. Integer thresholds
     keep the boundary engine-exact. Output: per-source totals, rate,
-    kept counts. The |sources|-row totals and threshold tables are
-    pinned: totals fed both the weight normalization sides and thr fed
-    both the sampling join and the final report, each reference
-    re-running the corpus count unpinned (guide 3.3)."""
+    kept counts."""
     from etl_mini_spark.operators.sampling import mixture_sample
-    from etl_mini_spark.session import pin
 
     d = _t(spark, sf_dir, "documents")
-    totals = pin(d.groupBy("source").agg(F.count("*").alias("n")))
+    totals = d.groupBy("source").agg(F.count("*").alias("n"))
     wts = totals.withColumn("w", F.pow("n", F.lit(0.7)))
     tot = wts.agg(F.sum("w").alias("sw"), F.sum("n").alias("sn"))
-    thr = pin(
+    thr = (
         wts.crossJoin(F.broadcast(tot))
         .withColumn("rate", F.least(F.lit(1.0), (0.4 * F.col("sn") * F.col("w") / F.col("sw")) / F.col("n")))
         .withColumn("t", F.floor(F.col("rate") * 100000).cast("long"))
@@ -1214,17 +1209,11 @@ def basket_rules_lift(spark, sf_dir):
     l_orderkey after per-order DISTINCT — O(Σ basket²), not O(n²));
     part frequencies broadcast; the order count is one scalar. At
     100 TB the basket-size bound is the safety: TPC-H baskets are ≤7
-    lines, so the explode factor is ≤42 per order. The distinct basket
-    table is pinned — the self-join sides, the part-frequency build
-    and the order count referenced it 5x, each re-running the lineitem
-    scan + distinct shuffle (guide 3.3); the |parts|-bounded frequency
-    table is pinned too (broadcast twice)."""
-    from etl_mini_spark.session import pin
-
+    lines, so the explode factor is ≤42 per order."""
     li = _t(spark, sf_dir, "lineitem")
-    b = pin(li.select("l_orderkey", "l_partkey").distinct())
+    b = li.select("l_orderkey", "l_partkey").distinct()
     n = b.agg(F.countDistinct("l_orderkey").alias("n_orders"))
-    f = pin(b.groupBy("l_partkey").agg(F.count("*").alias("n_part")))
+    f = b.groupBy("l_partkey").agg(F.count("*").alias("n_part"))
     p = (
         b.alias("a")
         .join(b.alias("c"), "l_orderkey")
@@ -1363,15 +1352,12 @@ def dau_mau_stickiness(spark, sf_dir):
     bounded-explode sliding-distinct rewrite (each (day, user) pair
     covers ≤28 window-end days; no range join, no 28× rescan); DAU is
     a plain count over the same deduped pairs, so both legs share one
-    (day, user) shuffle. The oracle runs the naive range join. The
-    (day, user) pair set is pinned — the DAU leg, the MAU cover
-    explode AND the observed-day domain (distinct days of pairs ==
-    distinct event days) all derive from it, so events is scanned once
-    instead of 3x (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    (day, user) shuffle. The oracle runs the naive range join. The DAU
+    leg, the MAU cover explode AND the observed-day domain (distinct
+    days of pairs == distinct event days) all derive from the (day,
+    user) pair set."""
     e = _t(spark, sf_dir, "events")
-    pairs = pin(e.select(F.to_date("ts").alias("d"), "user_id").distinct())
+    pairs = e.select(F.to_date("ts").alias("d"), "user_id").distinct()
     dau = pairs.groupBy("d").agg(F.count("*").alias("dau"))
     cover = pairs.select(
         F.explode(F.sequence(F.col("d"), F.date_add(F.col("d"), 27))).alias("day"),
@@ -1937,15 +1923,10 @@ def funnel_with_timeouts(spark, sf_dir):
     of an events-derived table is a driver-OOM risk at 100x users).
     Timestamp deadlines compare exact µs instants. Scale: three passes
     over events, each pre-filtered by event type and joined on
-    user_id. Each step table is pinned (O(|users|) keyed aggregates —
-    what a real funnel materializes): unpinned, the next step's join
-    AND that step's count each re-ran the whole upstream chain, so
-    events was scanned 6x instead of 3x (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    user_id."""
     e = _t(spark, sf_dir, "events")
-    a = pin(e.filter(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("a")))
-    b = pin(
+    a = e.filter(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("a"))
+    b = (
         e.filter(F.col("event_type") == "click")
         .join(a, "user_id")
         .filter((F.col("ts") >= F.col("a")) & (F.col("ts") <= F.col("a") + F.expr("INTERVAL 6 HOUR")))
@@ -2457,8 +2438,7 @@ def attribution_linear_multitouch(spark, sf_dir):
 
 
 # =========================================================================
-# Round-7 session additions (never staged — registered directly with
-# window slots): the nearest×bucketed as-of composition, Welford-merge
+# The nearest×bucketed as-of composition, Welford-merge
 # incremental state over a NULL-key group, and real-binary multimodal
 # ingest through spark.read.format("binaryFile").
 # =========================================================================
@@ -2526,16 +2506,13 @@ def incremental_welford_merge(spark, sf_dir):
         finalize_agg_state_welford,
         merge_agg_state_welford,
     )
+    from etl_mini_spark.session import pin
 
     e = _t(spark, sf_dir, "events").select(
         F.expr("nullif(event_type, 'error')").alias("etype"), "user_id", "value"
     )
-    from etl_mini_spark.session import pin
-
-    # each shard state is |keys| rows and is exactly what a real
-    # incremental pipeline would have PERSISTED per load; pinning the
-    # states keeps the merge chain from re-running the shard scans
-    # through every downstream reference (guide 3.3)
+    # each shard state is |keys| rows, what a real incremental pipeline
+    # persists per load; unpinned: 0.61 s vs 0.56 s at sf0.1
     parts = [
         pin(agg_state_welford(e.filter(F.col("user_id") % 3 == i), ["etype"], "value"))
         for i in range(3)

@@ -309,15 +309,11 @@ def target_encoding_loo(spark, sf_dir):
     base = o.select(
         "o_orderkey", "o_orderpriority", F.col("o_totalprice").cast("decimal(18,2)").alias("y")
     )
-    # g is pinned (5 rows) and the global prior DERIVES from it
-    # (sum of category sums / sum of counts — identical values), so
-    # the orders scan runs twice (category agg + encoded rows), not
-    # three times (guide 3.3).
-    from etl_mini_spark.session import pin
-
-    g = pin(base.groupBy("o_orderpriority").agg(
+    # the global prior DERIVES from g (5 rows): sum of category sums /
+    # sum of counts — identical values
+    g = base.groupBy("o_orderpriority").agg(
         F.sum("y").alias("sum_cat"), F.count("*").cast("bigint").alias("n_cat")
-    ))
+    )
     p = g.agg((F.sum("sum_cat").cast("double") / F.sum("n_cat")).alias("prior"))
     return (
         base.filter(F.col("o_orderkey") % 37 == 0)

@@ -1,7 +1,4 @@
-"""Round-8 operators — staged (and differentially verified) as
-round8_pending during round 7 while every driver-window slot was owned
-by a never-driver-verified entry; registered round 8 with the freed
-slots (tests/test_window_rotation.py enforces the slot invariant). The
+"""Registry queries, each checked against its DuckDB oracle. The
 non-vacuity pins live in tests/test_round8_ops.py; every entry also
 runs through the registry oracle sweep (tests/test_queries_oracle.py).
 
@@ -581,15 +578,10 @@ def audience_overlap_jaccard(spark, sf_dir):
     intersection-join + inclusion-exclusion shape as the document
     set-similarity tier, but over membership sets. One distinct pass,
     one keyed self-join on user_id (|types|² pairs via co-membership,
-    never a cross join), sizes joined back by type. The membership set
-    and the |types|-row size table are pinned: both self-join sides
-    plus the two size broadcasts re-ran the events scan + distinct 4x
-    unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    never a cross join), sizes joined back by type."""
     e = _t(spark, sf_dir, "events")
-    m = pin(e.select("event_type", "user_id").distinct())
-    sz = pin(m.groupBy("event_type").agg(F.count("*").alias("n")))
+    m = e.select("event_type", "user_id").distinct()
+    sz = m.groupBy("event_type").agg(F.count("*").alias("n"))
     a = m.select(F.col("event_type").alias("t1"), "user_id")
     b = m.select(F.col("event_type").alias("t2"), F.col("user_id").alias("uid2"))
     inter = (
@@ -1348,15 +1340,11 @@ def impute_missing_values(spark, sf_dir):
     mean_v = F.floor(
         F.round(F.sum("v"), 2) / F.count("v") * 1_000_000 + F.lit(0.5)
     ) / 1_000_000
-    # pinned (|types| rows): the median's count join and the final
-    # strategy join both referenced it, each re-running the full
-    # events scan + aggregate (guide 3.3)
-    from etl_mini_spark.session import pin
-
-    stats = pin(holes.groupBy("event_type").agg(
+    # |types| rows
+    stats = holes.groupBy("event_type").agg(
         mean_v.alias("mean_v"),
         F.count("v").alias("n_nonnull"),
-    ))
+    )
     # exact lower median (= DuckDB quantile_disc): Spark's percentile()
     # interpolates, so take the cumulative-count definition directly
     nonnull = holes.filter(F.col("v").isNotNull())

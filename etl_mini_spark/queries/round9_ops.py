@@ -176,12 +176,7 @@ def mutual_information_discrete(spark, sf_dir):
     sees nonlinear association). Identical contingency plan to
     chi_square_cramers_v: one hash-agg to the cell grid, margin
     windows over ≤40 rows, per-cell ln terms pre-rounded at 9dp and
-    summed as DECIMAL(28,9). 100-TB cost = the one scan — the ≤40-row
-    margin table is pinned because the MI fold and both entropy
-    aggregates referenced it, each re-running the scan + windows 3x
-    unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    summed as DECIMAL(28,9). 100-TB cost = the one scan."""
     e = _t(spark, sf_dir, "events")
     c = e.groupBy(
         F.col("event_type").alias("x"),
@@ -195,7 +190,6 @@ def mutual_information_discrete(spark, sf_dir):
             Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ).alias("n"),
     )
-    t = pin(t)
     mi = t.agg(
         F.max("n").cast("bigint").alias("n"),
         F.sum(
@@ -894,18 +888,13 @@ def token_pmi_bigrams(spark, sf_dir):
     single per-row ln of their ratio — no float accumulates, no top-k
     rank rides on a float: every pair with c12 >= 5 is returned. Plan:
     two token-keyed aggs (the corpus scans) and two broadcast joins of
-    the tiny vocab onto the bigram table. The unigram and bigram count
-    tables are pinned (vocab-bounded): the unigram table fed three
-    references (total + both broadcast sides) and the bigram table
-    two, each re-running its corpus scan unpinned (guide 3.3)."""
-    from etl_mini_spark.session import pin
-
+    the tiny vocab onto the bigram table."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ").alias("l"),
     )
-    uni = pin(
+    uni = (
         toks.select(F.explode("l").alias("t"))
         .groupBy("t")
         .agg(F.count("*").cast("bigint").alias("c1"))
@@ -919,7 +908,7 @@ def token_pmi_bigrams(spark, sf_dir):
             )
         ).alias("p")
     ).select(F.col("p.0").alias("t1"), F.col("p.1").alias("t2"))
-    bi = pin(pairs.groupBy("t1", "t2").agg(F.count("*").cast("bigint").alias("c12")))
+    bi = pairs.groupBy("t1", "t2").agg(F.count("*").cast("bigint").alias("c12"))
     nb = bi.agg(F.sum("c12").cast("bigint").alias("n_bi"))
     u1 = uni.select(F.col("t").alias("t1"), F.col("c1").alias("c1_a"))
     u2 = uni.select(F.col("t").alias("t2"), F.col("c1").alias("c1_b"))
@@ -1377,21 +1366,15 @@ def item_item_cosine_topk(spark, sf_dir):
     left to AQE rather than hint-forced: at a 100-TB catalog a forced
     broadcast would OOM the driver, while AQE picks broadcast exactly
     when the measured size allows (same rule as the r6 funnel fix)."""
-    from etl_mini_spark.session import pin
-
     li = _t(spark, sf_dir, "lineitem")
     # the distinct basket table feeds FOUR subtrees (both self-join
     # sides and both norm joins) and the pair table two (the bidir
-    # union) -- unpinned, each reference re-ran the lineitem scan +
-    # distinct (resp. the basket self-join + aggregate) from scratch
-    # (guide 3.3); two pins = one scan, one pair join per run.
-    d = pin(
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")).distinct()
-    )
+    # union)
+    d = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")).distinct()
     n = d.groupBy("pk").agg(F.count("*").cast("bigint").alias("n_ord"))
     a = d.alias("a")
     b = d.alias("b")
-    pairs = pin(
+    pairs = (
         a.join(b, (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")))
         .groupBy(F.col("a.pk").alias("p1"), F.col("b.pk").alias("p2"))
         .agg(F.count("*").cast("bigint").alias("c12"))

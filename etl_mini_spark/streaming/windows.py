@@ -111,7 +111,7 @@ def stream_interval_join(
     (AvailableNow) run therefore never flush their null match; to get
     batch-equal output on a bounded source, advance the watermark past
     the data with a sentinel row on both streams and drop it afterward
-    (see queries/round8_pending.stream_interval_join_outer)."""
+    (see queries/round8_ops.stream_interval_join_outer)."""
     overlap = set(left.columns) & set(right.columns)
     if overlap:
         raise ValueError(f"stream_interval_join: overlapping columns {sorted(overlap)}")
