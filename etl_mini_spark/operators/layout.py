@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_mini_spark.sources.writers import write_parquet
+
+
 def morton_code(x: Column, y: Column, bits: int = 10) -> Column:
     """Interleave the low ``bits`` bits of two non-negative long
     columns into a single Z-value: x occupies even bit positions, y
@@ -67,7 +70,7 @@ def zorder_write(
     out = out.repartitionByRange(
         *([num_files] if num_files else []), F.col("__z")
     ).sortWithinPartitions("__z")
-    out.drop("__z").write.mode(mode).parquet(path)
+    write_parquet(out.drop("__z").write.mode(mode), path)
 
 
 def exact_global_rank(

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_mini_spark.sources.writers import write_parquet
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -326,7 +328,7 @@ def write_ivf_partitioned(
     if centroids is None:
         centroids = train_ivf_centroids(corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
     assigned = assign_ivf_cells(corpus, centroids, vec_col=vec_col, cell_col=cell_col)
-    assigned.write.mode("overwrite").partitionBy(cell_col).parquet(path)
+    write_parquet(assigned.write.mode("overwrite").partitionBy(cell_col), path)
     return centroids
 
 

@@ -31,7 +31,9 @@ from etl_mini_spark.operators.upsert import upsert_parquet
 from etl_mini_spark.plans.checkpoint import CheckpointTable
 from etl_mini_spark.session import static_partitions, static_plan
 from etl_mini_spark.sources.readers import read_csv, read_ndjson, read_parquet, require_source
-from etl_mini_spark.sources.writers import write_partitioned_by_type_date, write_run_layout
+from etl_mini_spark.sources.writers import (
+    write_parquet, write_partitioned_by_type_date, write_run_layout,
+)
 
 
 @dataclass
@@ -190,7 +192,7 @@ def write_sink(spark: SparkSession, df: DataFrame, sink: SinkSpec) -> None:
         upsert_parquet(spark, sink.path, df, keys=sink.upsert_keys)
         return
     write = {
-        "parquet": lambda: df.write.mode(sink.mode).parquet(sink.path),
+        "parquet": lambda: write_parquet(df.write.mode(sink.mode), sink.path),
         "ndjson": lambda: df.write.mode(sink.mode).json(sink.path),
         "run_layout": lambda: write_run_layout(df, sink.path),
         "partitioned": lambda: write_partitioned_by_type_date(

@@ -82,20 +82,11 @@ def pin(df, eager: bool = True):
 
 
 @contextmanager
-def loop_confs(spark: SparkSession, partitions: int):
-    """Run the enclosed plans with AQE off and ``partitions`` shuffle
-    partitions; the session's own values come back on exit, also when
-    the block raises. AQE replans every stage and runs each exchange as
-    a job of its own, which costs more than the data in a superstep
-    loop (PageRank runs ~130 rounds; size ``partitions`` to the cluster
-    on a real deployment) and in a small one-shot plan, where
-    :func:`static_plan` picks ``partitions`` from the scanned bytes.
-    The confs are session-wide: another thread sharing the session
-    plans without AQE while the block runs."""
-    confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(partitions),
-    }
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the enclosed block; each key's
+    own value (or its unset state) comes back on exit, also when the
+    block raises. The confs are session-wide: another thread sharing
+    the session sees them while the block runs."""
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
@@ -107,6 +98,20 @@ def loop_confs(spark: SparkSession, partitions: int):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def loop_confs(spark: SparkSession, partitions: int):
+    """Run the enclosed plans with AQE off and ``partitions`` shuffle
+    partitions (:func:`scoped_confs`). AQE replans every stage and runs
+    each exchange as a job of its own, which costs more than the data
+    in a superstep loop (PageRank runs ~130 rounds; size ``partitions``
+    to the cluster on a real deployment) and in a small one-shot plan,
+    where :func:`static_plan` picks ``partitions`` from the scanned
+    bytes."""
+    return scoped_confs(spark, {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(partitions),
+    })
 
 
 def _scala_list(seq) -> list:

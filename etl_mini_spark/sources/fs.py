@@ -3,10 +3,11 @@
 The stage-swap of data tables (`replace_parquet`, behind
 `upsert_parquet` and `compact_parquet`; it plans small writes
 statically by the rule of `session.static_partitions`, writes them as
-at most that many files, and leaves the written schema in
-`read_parquet`'s cache) and the tiny-text swap of control documents
-(`fs_write_text`, behind the ``latest`` manifest of `write_run_layout`
-and the pipeline checkpoint) must work where the data lives: HDFS, S3A, GCS,
+at most that many files in the format of `writers.write_parquet`, and
+leaves the written schema in `read_parquet`'s cache) and the tiny-text
+swap of control documents (`fs_write_text`, behind the ``latest``
+manifest of `write_run_layout` and the pipeline checkpoint) must work
+where the data lives: HDFS, S3A, GCS,
 ABFS, or local disk. ``shutil``/``pathlib`` only speak the local
 filesystem, so all path manipulation goes through the JVM's
 ``org.apache.hadoop.fs.FileSystem`` — the same abstraction Spark's own
@@ -33,6 +34,8 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from etl_mini_spark.sources.writers import write_parquet
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -94,6 +97,11 @@ def replace_parquet(
     target does not gain a file per rewrite. A larger plan keeps the
     AQE write and its file count.
 
+    The stage is written by ``writers.write_parquet``: zstd pages and
+    INT64 µs UTC-adjusted timestamps, whatever format the target had
+    (a table Spark wrote with its defaults, snappy and INT96, comes
+    back compact after its first upsert or compaction).
+
     After the swap the written schema is put into ``read_parquet``'s
     cache under the new files' fingerprint (local paths only), so the
     next read of the table runs no inference job.
@@ -113,7 +121,7 @@ def replace_parquet(
         exists = True
     df = build(exists)
     with static_plan(df) as n:
-        (df if n is None else df.coalesce(n)).write.mode("overwrite").parquet(stage)
+        write_parquet((df if n is None else df.coalesce(n)).write.mode("overwrite"), stage)
     entry = readers.written_entry(stage, path, df.schema)
     if exists:
         fs_delete(spark, path)

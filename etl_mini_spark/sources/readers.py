@@ -27,12 +27,13 @@ from __future__ import annotations
 
 import json
 import os
-from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_mini_spark.session import scoped_confs
 
 
 class SourceMissingError(Exception):
@@ -202,7 +203,6 @@ def _nanos_timestamp_cols(file: str) -> list[str]:
     return cols
 
 
-@contextmanager
 def _force_ltz_timestamps(spark: SparkSession):
     """Read parquet TIMESTAMP(isAdjustedToUTC=false) as session-tz
     TIMESTAMP (LTZ), not TIMESTAMP_NTZ — scoped to the wrapped read.
@@ -220,19 +220,7 @@ def _force_ltz_timestamps(spark: SparkSession):
     untouched for subsequent non-framework ``spark.read.parquet`` calls
     (previously this helper flipped the conf permanently — NTZ data in
     the same session would silently read as LTZ afterwards)."""
-    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    try:
-        prev = spark.conf.get(key, None)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return scoped_confs(spark, {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"})
 
 
 def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:

@@ -454,9 +454,19 @@ def test_csv_reader_bom_and_coerce(spark):
 
 
 def test_compact_parquet(spark):
+    """Compaction merges small files and keeps the column types
+    ``read_parquet`` reads: a naive µs ``ts`` stays TIMESTAMP and a
+    TIMESTAMP(NANOS) one becomes µs TIMESTAMP, with the same instants.
+    A plain ``spark.read.parquet`` rewrite turned the first into
+    TIMESTAMP_NTZ and the second into bigint epoch nanoseconds."""
     import shutil
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from etl_mini_spark.session import load_table
+    from etl_mini_spark.sources.readers import read_parquet
     from etl_mini_spark.sources.writers import compact_parquet
 
     local = TMP / "compact_tbl"
@@ -470,6 +480,29 @@ def test_compact_parquet(spark):
     after = spark.read.parquet(str(local))
     assert after.count() == before
     assert not (TMP / "compact_tbl__stage").exists()
+
+    micros = [[0, 1704067200123456, None], [-86400000001, 1], [946684800000001]]
+    for unit in ("us", "ns"):
+        table = TMP / f"compact_ts_{unit}"
+        shutil.rmtree(table, ignore_errors=True)
+        table.mkdir()
+        for i, chunk in enumerate(micros):  # three pyarrow files, naive ts
+            ids = [10 * i + j for j in range(len(chunk))]
+            ts = pa.array(chunk, pa.int64())
+            if unit == "ns":
+                ts = pc.multiply(ts, 1000)
+            ts = ts.cast(pa.timestamp(unit))
+            pq.write_table(pa.table({"id": ids, "ts": ts}), str(table / f"part-{i}.parquet"))
+
+        def instants():
+            df = read_parquet(spark, str(table))
+            rows = df.select("id", F.unix_micros("ts")).orderBy("id").collect()
+            return df.schema["ts"].dataType.simpleString(), [tuple(r) for r in rows]
+
+        want = instants()
+        assert want[0] == "timestamp", (unit, want)
+        assert compact_parquet(spark, str(table)) == 1
+        assert instants() == want, unit
 
 
 def test_sorted_write_has_disjoint_file_ranges(spark):

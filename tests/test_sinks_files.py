@@ -8,12 +8,17 @@ file-level parity tests the container can run without S3 or Postgres.
   committed golden file covering tabs, newlines, CRs, SQL NULLs,
   empty strings, and nested struct/array values
   (≡ tsv_converter.py:83-94 + postgresql_service.py:166-170).
+- Parquet: ``writers.write_parquet`` is the one writer of the engine's
+  parquet tables; timestamps at the edges of the calendar survive it.
 """
 
 from __future__ import annotations
 
+import ast
+from datetime import datetime, timedelta
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -21,6 +26,7 @@ from etl_mini_spark.sources.jdbc import _partition_to_tsv
 from etl_mini_spark.sources.readers import read_csv
 
 FIXTURES = Path(__file__).parent / "fixtures"
+PACKAGE = Path(__file__).resolve().parent.parent / "etl_mini_spark"
 
 
 def test_bom_csv_header_and_values(spark):
@@ -205,3 +211,110 @@ def test_binaryfile_source_feeds_multimodal_pipeline(spark, tmp_path):
     # bytes survive a DataFrame transform on the binary column
     sized = df.select("fname", F.length("content").alias("n")).collect()
     assert {r["fname"]: r["n"] for r in sized} == {k: len(v) for k, v in blobs.items()}
+
+
+_EPOCH = datetime(1970, 1, 1)
+_EDGE_TIMESTAMPS = [
+    datetime(1, 1, 1),
+    datetime(1582, 10, 10, 12),  # inside the Julian-to-Gregorian gap
+    datetime(1899, 12, 31, 23, 59, 59, 999999),
+    _EPOCH,
+    datetime(9999, 12, 31, 23, 59, 59, 999999),
+]
+
+
+def test_write_parquet_keeps_edge_timestamps(spark, tmp_path):
+    """Timestamps from year 1 to year 9999, and NULL, come back
+    unchanged from the engine's parquet writer, read by ``read_parquet``
+    and by DuckDB. Compared as epoch microseconds: collecting year 1 as
+    a Python datetime fails under a UTC process time zone."""
+    import duckdb
+
+    from etl_mini_spark.sources.readers import read_parquet
+    from etl_mini_spark.sources.writers import write_parquet
+
+    micros = [(t - _EPOCH) // timedelta(microseconds=1) for t in _EDGE_TIMESTAMPS]
+    want = sorted(enumerate(micros + [None]))
+    path = str(tmp_path / "edges")
+    df = spark.createDataFrame(want, "k int, us bigint")
+    write_parquet(df.select("k", F.timestamp_micros("us").alias("ts")).write, path)
+
+    got = read_parquet(spark, path).select("k", F.unix_micros("ts")).orderBy("k").collect()
+    assert [tuple(r) for r in got] == want
+    rows = duckdb.sql(f"SELECT k, epoch_us(ts) FROM read_parquet('{path}/*.parquet') ORDER BY k")
+    assert rows.fetchall() == want
+
+
+def _reads(node: ast.AST, readers: set[str]) -> bool:
+    """Whether the call chain ending at ``node`` starts at a reader:
+    ``.read``/``.readStream``, or a name assigned from one."""
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            if node.attr in ("read", "readStream"):
+                return True
+            node = node.value
+        else:
+            return isinstance(node, ast.Name) and node.id in readers
+
+
+def _parquet_writes(tree: ast.Module) -> list[tuple[str, int]]:
+    """(innermost enclosing function, line) of each ``.parquet(...)`` or
+    ``.format("parquet")`` call in ``tree`` that does not read."""
+    readers = {
+        t.id for n in ast.walk(tree) if isinstance(n, ast.Assign) and _reads(n.value, set())
+        for t in n.targets if isinstance(t, ast.Name)
+    }
+    owner = {}  # ast.walk is breadth-first: inner functions come later
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef)):
+            owner.update((n, getattr(fn, "name", "<module>")) for n in ast.walk(fn))
+    hits = []
+    for n, fn in owner.items():
+        if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+            continue
+        parquet = n.func.attr == "parquet" or (
+            n.func.attr == "format" and n.args
+            and isinstance(n.args[0], ast.Constant) and n.args[0].value == "parquet")
+        if parquet and not _reads(n.func.value, readers):
+            hits.append((fn, n.lineno))
+    return sorted(hits, key=lambda h: h[1])
+
+
+# (module, function) that may write parquet without the writer:
+# the writer itself, and the streaming file sink, whose timestamp conf
+# would have to stay set for the whole life of the query.
+_OWN_PARQUET_WRITES = {
+    ("sources/writers.py", "write_parquet"),
+    ("streaming/stream.py", "run_to_completion"),
+}
+
+
+def test_engine_writes_parquet_only_through_the_writer():
+    """Outside ``queries/`` (whose builders write scratch inputs), no
+    module of the engine calls a writer's ``.parquet(`` or
+    ``.format("parquet")``: the on-disk format of every table the
+    engine writes is decided in ``writers.write_parquet``."""
+    hits = [
+        f"{rel}:{line} ({fn})"
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (rel := p.relative_to(PACKAGE).as_posix()).split("/")[0] != "queries"
+        for fn, line in _parquet_writes(ast.parse(p.read_text()))
+        if (rel, fn) not in _OWN_PARQUET_WRITES
+    ]
+    assert not hits, hits
+
+
+@pytest.mark.parametrize("code, found", [
+    ("def f(df, p):\n    df.write.mode('overwrite').parquet(p)", [("f", 2)]),
+    ("def f(df, p):\n    w = df.write\n    w.format('parquet').save(p)", [("f", 3)]),
+    ("def f(spark, p):\n    return spark.read.parquet(p)", []),
+    ("def f(spark, p):\n    r = spark.readStream.schema(s)\n    return r.parquet(p)", []),
+    ("def f(df, p):\n    def g():\n        df.write.parquet(p)\n    g()", [("g", 3)]),
+    ("df.write.parquet(p)", [("<module>", 1)]),
+])
+def test_parquet_write_finder(code, found):
+    """The finder behind the test above sees a write through a writer
+    variable, and does not take a read for a write."""
+    assert _parquet_writes(ast.parse(code)) == found

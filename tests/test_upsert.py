@@ -367,3 +367,64 @@ def test_upsert_keys_must_be_source_columns(spark, tmp_path):
     _fails_before_any_job(spark, lambda: upsert_parquet(
         spark, str(tmp_path / "t"), source, keys=["k", "event_id"]), "event_id")
     assert not (tmp_path / "t").exists()
+
+
+def _format_of(path) -> list[tuple[str, str, str]]:
+    """(compression, physical type, logical type) of the ``ts`` column
+    in every part file under ``path``, one entry per file."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(path.glob("part-*")):
+        md = pq.read_metadata(str(f))
+        i = md.schema.names.index("ts")
+        col = md.row_group(0).column(i)
+        out.append((col.compression, col.physical_type, str(md.schema.column(i).logical_type)))
+    return out
+
+
+_COMPACT = ("ZSTD", "INT64", "Timestamp(isAdjustedToUTC=true, timeUnit=microseconds, "
+            "is_from_converted_type=false, force_set_converted_type=false)")
+
+
+def test_upsert_writes_the_compact_format(spark, tmp_path, monkeypatch):
+    """Every part file of an upsert target is zstd, with its timestamp
+    column INT64 TIMESTAMP(MICROS) adjusted to UTC, not Spark's default
+    snappy pages and INT96; the write leaves the session's timestamp
+    conf as it was."""
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key, None)
+    spec = _spec(tmp_path)
+    _run_windows(spark, spec, monkeypatch)
+    files = _format_of(tmp_path / "target")
+    assert files and set(files) == {_COMPACT}, files
+    assert all(p.name.endswith(".zstd.parquet") for p in (tmp_path / "target").glob("part-*"))
+    assert spark.conf.get(key, None) == before
+
+
+def test_upsert_into_a_default_format_target(spark, tmp_path):
+    """A target written with Spark's defaults (INT96, snappy, several
+    part files) upserts like any other: its rows equal a Python
+    keep-last of target then source, and it is rewritten in the
+    compact format."""
+    from etl_mini_spark.operators.upsert import upsert_parquet
+    from etl_mini_spark.sources.readers import read_parquet
+
+    target = tmp_path / "target"
+    events = read_parquet(spark, f"{SF_SMOKE}/events.parquet")
+    old = events.filter(F.col("ts") < WINDOWS[0])
+    old.repartition(3).write.parquet(str(target))
+    files = _format_of(target)
+    assert len(files) == 3 and {(c, t) for c, t, _ in files} == {("SNAPPY", "INT96")}, files
+    source = events.filter(F.col("event_id") % 3 == 0).withColumns(
+        {"ts": F.col("ts") + F.expr("INTERVAL 1 DAY"), "value": F.col("value") + 1})
+    upsert_parquet(spark, str(target), source, keys=["event_id"])
+
+    def rows(df):
+        return [tuple(r) for r in df.select(
+            "event_id", F.unix_micros("ts"), "user_id", "event_type", "value", "props").collect()]
+
+    want = {r[0]: r for r in rows(old)}
+    want.update({r[0]: r for r in rows(source)})
+    assert sorted(rows(read_parquet(spark, str(target)))) == sorted(want.values())
+    assert set(_format_of(target)) == {_COMPACT}
