@@ -29,7 +29,7 @@ from etl_mini_spark.functions.registry import (
 from etl_mini_spark.operators.dedup import ordered_dedup
 from etl_mini_spark.operators.upsert import upsert_parquet
 from etl_mini_spark.plans.checkpoint import CheckpointTable
-from etl_mini_spark.session import static_partitions, static_plan
+from etl_mini_spark.session import coalesce_small, static_plan
 from etl_mini_spark.sources.readers import read_csv, read_ndjson, read_parquet, require_source
 from etl_mini_spark.sources.writers import (
     write_parquet, write_partitioned_by_type_date, write_run_layout,
@@ -132,12 +132,14 @@ def build_plan(
     """Source + transforms as one lazy plan (no execution).
 
     A source that ``session.static_partitions`` gives one partition (a
-    small window) is coalesced to one partition before any transform.
-    One partition satisfies every clustered distribution, so the
-    window's ``ordered_dedup`` and aggregates plan no exchange in the
-    sink's write, the upsert's one-partition merge included. The rule
-    reads plan statistics only: with the source's schema cached,
-    building the plan runs no Spark job."""
+    small window) is coalesced to one partition before any transform
+    (``session.coalesce_small``): the parquet readers do it themselves,
+    and a csv or ndjson source is coalesced here. One partition
+    satisfies every clustered distribution, so the window's
+    ``ordered_dedup`` and aggregates plan no exchange in the sink's
+    write, the upsert's one-partition merge included. The rule reads
+    plan statistics only: with the source's schema cached, building
+    the plan runs no Spark job."""
     src = spec.source
     incremental = spec.incremental_ts_col and spec.window_end is not None
     if src.format == "parquet":
@@ -154,9 +156,9 @@ def build_plan(
         else:
             df = read_parquet(spark, src.path)
     elif src.format == "csv":
-        df = read_csv(spark, src.path, src.schema, src.rename_map, src.type_map)
+        df = coalesce_small(read_csv(spark, src.path, src.schema, src.rename_map, src.type_map))
     elif src.format == "ndjson":
-        df = read_ndjson(spark, src.path, src.schema)
+        df = coalesce_small(read_ndjson(spark, src.path, src.schema))
     else:
         raise ValueError(f"unknown source format: {src.format}")
 
@@ -166,8 +168,6 @@ def build_plan(
         if window_start is not None:
             cond = (c >= F.lit(window_start)) & cond
         df = df.filter(cond)
-    if static_partitions(df) == 1:
-        df = df.coalesce(1)
 
     registry = registry or default_registry()
     for t in spec.transforms:

@@ -122,19 +122,14 @@ def _scala_list(seq) -> list:
     return out
 
 
-def _scanned_bytes(jvm, plan) -> int:
+def _scanned_bytes(plan) -> int:
     """Bytes the leaves of a logical plan hold by their own statistics
     (a file scan: its files' size; a leaf of unknown size: Spark's
-    ``defaultSizeInBytes``, Long.MaxValue), the leaves of subquery plans
-    included. Runs no job."""
-    total = sum(leaf.stats().sizeInBytes() for leaf in _scala_list(plan.collectLeaves()))
-    if plan.containsPattern(jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION()):
-        nodes = [plan]
-        while nodes:
-            node = nodes.pop()
-            nodes += _scala_list(node.children())
-            total += sum(_scanned_bytes(jvm, sub) for sub in _scala_list(node.subqueries()))
-    return total
+    ``defaultSizeInBytes``, Long.MaxValue), the leaves of its subquery
+    plans and of theirs (``subqueriesAll``) included. Runs no job."""
+    return sum(leaf.stats().sizeInBytes()
+               for p in [plan, *_scala_list(plan.subqueriesAll())]
+               for leaf in _scala_list(p.collectLeaves()))
 
 
 @contextmanager
@@ -163,9 +158,10 @@ def static_partitions(df) -> int | None:
     """The partition count a small ``df`` runs with, or None to keep
     the session's (AQE) plan. The one size rule of the engine:
     :func:`static_plan` uses it as the shuffle partition count,
-    ``plans.pipeline.build_plan`` coalesces a source it gives 1 to one
-    partition, and ``sources.fs.replace_parquet`` writes at most this
-    many files.
+    :func:`coalesce_small` declares a read it gives 1 as one partition
+    (the parquet readers of ``sources.readers`` and the sources of
+    ``plans.pipeline.build_plan``), and ``sources.fs.replace_parquet``
+    writes at most this many files.
 
     From the optimized plan's leaf statistics only, so it runs no job:
     when the leaves hold ``scanned`` bytes in total and that fits
@@ -185,11 +181,29 @@ def static_partitions(df) -> int | None:
     sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
     bound = min(conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()),
                 conf.autoBroadcastJoinThreshold())
-    scanned = _scanned_bytes(spark._jvm, df._jdf.queryExecution().optimizedPlan())
+    scanned = _scanned_bytes(df._jdf.queryExecution().optimizedPlan())
     if scanned > bound:
         return None
     min_size = conf.getConf(sql_conf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
     return max(1, min(scanned // min_size, spark.sparkContext.defaultParallelism))
+
+
+def coalesce_small(df):
+    """``df.coalesce(1)`` when :func:`static_partitions` gives ``df`` one
+    partition (it reads under 2 MiB), else ``df``. Runs no job.
+
+    A read that small is one scan partition (a single file), or a few
+    (one per file of a small table), which the one task of the coalesce
+    reads one after another: no row is shuffled and the rows keep their
+    order. What changes is the plan: the planner sees
+    ``SinglePartition``, which satisfies every distribution, so no
+    aggregate, window or union above the read plans an exchange.
+    Filters and column pruning still reach the scan. Broadcasts are
+    left as they are: without them a join is a sort-merge join, whose
+    ``PartitioningCollection`` output Spark's one-partition shortcut
+    does not take, so the plan would add an exchange after every
+    join."""
+    return df.coalesce(1) if static_partitions(df) == 1 else df
 
 
 def spread(df, min_partitions: int | None = None):

@@ -20,7 +20,8 @@ Spark would scan, and a changed fingerprint re-infers. A table the
 engine itself rewrites through ``sources.fs.replace_parquet`` gets its
 entry from the writer (``written_entry``), so it is never re-inferred.
 Remote paths (``s3a://``, ``hdfs://``) are not listed and infer on every
-read.
+read. Both parquet readers return a small table as one declared
+partition (``session.coalesce_small``).
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_mini_spark.session import scoped_confs
+from etl_mini_spark.session import coalesce_small, scoped_confs
 
 
 class SourceMissingError(Exception):
@@ -277,13 +278,20 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     converted to µs timestamps. Naive timestamps read as session-tz
     TIMESTAMP, not TIMESTAMP_NTZ (``_force_ltz_timestamps``).
 
+    A table that ``session.static_partitions`` gives one partition
+    (under 2 MiB) is returned coalesced to one
+    (``session.coalesce_small``): the same rows in the same order, but
+    the planner sees one partition, so an aggregate, window or union
+    above the read plans no exchange. Filters and column pruning still
+    reach the scan. A larger table reads as Spark scans it.
+
     NOTE: when ns columns are present, ``nanosAsLong`` stays set on the
     session — that conf is consulted at EXECUTION time (not just schema
     inference), so restoring it before the action runs would break the
     deferred scan. It is additive-safe: it only affects parquet files
     that actually contain TIMESTAMP(NANOS), which Spark cannot read at
     all without it."""
-    return _nanos_to_micros(*_scan(spark, path))
+    return coalesce_small(_nanos_to_micros(*_scan(spark, path)))
 
 
 def read_parquet_ts_range(
@@ -304,7 +312,8 @@ def read_parquet_ts_range(
     row-group min/max statistics prune unread data — the difference
     between scanning a day and scanning 100 TB on a time-partitioned
     fact table. For regular (µs) timestamp columns the plain filter
-    already pushes down and this degrades to exactly that."""
+    already pushes down and this degrades to exactly that. A small
+    table is one declared partition, as in ``read_parquet``."""
     def _ns(dt) -> int:
         # PySpark's own literal conversion (a naive bound is local
         # time, as ``F.lit`` reads it on the µs path), in integers
@@ -316,4 +325,4 @@ def read_parquet_ts_range(
         df = df.filter(F.col(ts_col) >= F.lit(bound(start)))
     if end is not None:
         df = df.filter(F.col(ts_col) < F.lit(bound(end)))
-    return _nanos_to_micros(df, ns_cols)
+    return coalesce_small(_nanos_to_micros(df, ns_cols))

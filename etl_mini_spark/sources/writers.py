@@ -4,8 +4,9 @@
   engine writes: zstd pages and INT64 ``TIMESTAMP(MICROS,
   isAdjustedToUTC=true)`` timestamps. Every batch parquet write of the
   engine goes through it (the stage-swap of ``sources.fs``, the
-  pipeline's ``parquet`` sink and the layouts below, ``operators``'
-  Z-order and IVF layouts); the streaming file sink does not.
+  pipeline's ``parquet`` sink and the layouts below, the bucketed
+  tables, ``operators``' Z-order and IVF layouts); the streaming file
+  sink does not.
 - ``write_run_layout`` ≡ the reference's timestamped put + ``latest``
   pointer (s3_service.py:44-61): each run lands in an immutable
   ``{base}/{epoch}`` directory and ``latest`` is repointed atomically
@@ -29,9 +30,12 @@ from pyspark.sql import functions as F
 from etl_mini_spark.session import scoped_confs
 
 
-def write_parquet(writer: DataFrameWriter, path: str) -> None:
-    """Save ``writer`` (its mode, partitioning and rows) as parquet at
-    ``path`` in the engine's one table format.
+def write_parquet(writer: DataFrameWriter, path: str | None = None,
+                  table: str | None = None) -> None:
+    """Save ``writer`` (its mode, partitioning, bucketing and rows) as
+    parquet at ``path``, or as the catalog table ``table``
+    (``saveAsTable``, for :func:`write_bucketed`), in the engine's one
+    table format.
 
     - zstd pages (``compression=zstd``): part files are named
       ``*.zstd.parquet``;
@@ -55,7 +59,11 @@ def write_parquet(writer: DataFrameWriter, path: str) -> None:
     session's own writes keep their setting."""
     conf = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
     with scoped_confs(writer._spark, conf):
-        writer.option("compression", "zstd").parquet(path)
+        writer = writer.format("parquet").option("compression", "zstd")
+        if table is None:
+            writer.save(path)
+        else:
+            writer.saveAsTable(table)
 
 
 def write_ndjson(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -122,7 +130,8 @@ def write_bucketed(
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Hash-bucketed (and optionally sorted) managed table.
+    """Hash-bucketed (and optionally sorted) managed table, in the
+    format of :func:`write_parquet`.
 
     Two tables bucketed on the same key with the same bucket count join
     WITHOUT a shuffle — the per-bucket co-location replaces the
@@ -163,7 +172,7 @@ def write_bucketed(
     w = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
+    write_parquet(w, table=table)
 
 
 def write_partitioned_by_type_date(

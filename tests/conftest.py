@@ -43,3 +43,32 @@ def run_in_job_group(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", prev)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def over_the_bound(spark):
+    """Plan the enclosed reads as reads over the size rule's bound
+    (``session.static_partitions``, scoped to a 1 KiB advisory
+    partition size): the parquet readers do not coalesce a smoke table
+    to one partition and registry builders keep the AQE plan."""
+    from etl_mini_spark.session import scoped_confs
+
+    return scoped_confs(spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"})
+
+
+@pytest.fixture
+def large_reads(spark):
+    """The test runs :func:`over_the_bound`, so a plan-shape test sees
+    the exchanges its query plans at scale."""
+    with over_the_bound(spark):
+        yield
+
+
+def stage_work(spark, job_ids) -> tuple[int, int]:
+    """(tasks, shuffle bytes read plus written) of the stages of
+    ``job_ids``, from the status store."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stages = [store.lastStageAttempt(sid) for jid in job_ids
+              for sid in sc.statusTracker().getJobInfo(jid).stageIds]
+    return (sum(s.numCompleteTasks() for s in stages),
+            sum(s.shuffleReadBytes() + s.shuffleWriteBytes() for s in stages))

@@ -75,6 +75,7 @@ def test_bucketed_join_has_no_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_agg_does_partial_aggregation(spark):
     """Moment/histogram aggregates must map-side combine: two
     HashAggregate levels around exactly one shuffle, so the exchange
@@ -170,6 +171,7 @@ def test_simhash_no_nested_loop_join(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_order_by_hash_no_single_partition_exchange(spark):
     """The ordering checksum must aggregate per day-segment first; only
     the tiny per-day-hash rollup may funnel to one partition. The r01
@@ -319,6 +321,7 @@ def test_range_bucket_join_is_hash_not_nested_loop(spark):
     assert not any("NestedLoop" in j or "Cartesian" in j for j in s.joins), s.joins
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_interval_overlap_single_shuffle(spark):
     """The +1/-1 sweep: union → window(event_type) → groupBy(event_type)
     must pay exactly ONE exchange — the groupBy reuses the window's
@@ -336,6 +339,7 @@ def test_interval_overlap_single_shuffle(spark):
     assert n_ex == 1, f"expected 1 hash exchange, saw {n_ex}:\n{plan}"
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_sessionize_single_shuffle(spark):
     """sessionize: the groupBy(key, session_idx) must reuse the window's
     hashpartitioning(key) — exactly ONE exchange in the whole plan. A
@@ -515,6 +519,7 @@ def test_geo_and_levenshtein_bucketed_rewrites_are_equi_joins(spark):
         assert s.joins.count("BroadcastNestedLoopJoin") <= max_bnlj, (name, s.joins)
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_asof_forward_single_data_shuffle(spark):
     """Both as-of directions must keep the single-shuffle union-sort
     shape: exactly one hash Exchange over the unioned data (plus
@@ -637,6 +642,7 @@ def test_tfidf_pairs_all_joins_keyed(spark):
     ), s.joins
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_repeated_spans_two_exchanges(spark):
     """Repeated-span dedup is two keyed shuffles by construction —
     span-hash (global frequency window) then doc_id (rollup). A third
@@ -671,6 +677,7 @@ def test_snapshot_diff_full_outer_no_nested_loop(spark):
 # --- round-7 pending batch 2: scale shapes -----------------------------------
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_budget_cap_window_is_shard_partitioned(spark):
     """budget_cap's whole point is that the big cumsum window partitions
     by (group, shard) — 256-way parallel per group — not by group alone.

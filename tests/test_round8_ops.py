@@ -7,6 +7,8 @@ on a constant-flag output proves arithmetic, not behavior."""
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 # the round-8 batch, for the blanket plan audit below
@@ -212,6 +214,7 @@ def test_dpo_touches_only_the_patched_partition(spark):
             assert got[k] == base[k], (k, got[k], base[k])
 
 
+@pytest.mark.usefixtures("large_reads")
 def test_salted_distinct_shuffles_on_salt(spark):
     """The stage-1 dedup must hash-partition on (type, salt, ...) — if
     the salt column vanished from the exchange, the rewrite silently

@@ -123,3 +123,18 @@ def test_partitions_come_from_the_scanned_bytes(spark):
             assert _shuffle_partitions(planned(agg)) == {cores}
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+def test_subquery_tables_count_as_scanned_bytes(spark):
+    """The tables a scalar subquery reads, and a subquery nested in it,
+    count toward the plan's scanned bytes, beside its own leaves."""
+    import os
+
+    from etl_mini_spark.session import _scanned_bytes
+
+    size = {t: os.path.getsize(f"{SF_SMOKE}/{t}.parquet") for t in ("customer", "nation")}
+    for t in size:
+        spark.read.parquet(f"{SF_SMOKE}/{t}.parquet").createOrReplaceTempView(f"sub_{t}")
+    df = spark.range(5).filter(F.expr(
+        "id < (SELECT max(c_custkey) + (SELECT max(n_nationkey) FROM sub_nation) FROM sub_customer)"))
+    assert _scanned_bytes(df._jdf.queryExecution().optimizedPlan()) == 5 * 8 + sum(size.values())

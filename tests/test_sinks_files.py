@@ -180,6 +180,37 @@ def test_write_bucketed_cleans_orphaned_warehouse_dir(spark):
         spark.sql("DROP TABLE IF EXISTS orphan_bucketed_t")
 
 
+def test_write_bucketed_writes_the_engine_format(spark):
+    """A bucketed table is written as ``write_parquet`` writes: zstd
+    pages and its timestamps INT64 TIMESTAMP(MICROS) adjusted to UTC,
+    not the session default of snappy pages and INT96; it reads back
+    the same instants."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from etl_mini_spark.sources.writers import write_bucketed
+
+    spark.sql("DROP TABLE IF EXISTS fmt_bucketed_t")
+    df = spark.range(6).select(F.col("id").alias("k"), F.timestamp_micros(F.col("id") * 7).alias("ts"))
+    try:
+        write_bucketed(df, "fmt_bucketed_t", ["k"], num_buckets=2)
+        loc = spark.sql("DESCRIBE TABLE EXTENDED fmt_bucketed_t").filter("col_name = 'Location'")
+        files = sorted(Path(loc.first()["data_type"].removeprefix("file:")).glob("part-*"))
+        assert files and all(f.name.endswith(".zstd.parquet") for f in files), files
+        for f in files:
+            md = pq.read_metadata(str(f))
+            i = md.schema.names.index("ts")
+            col = md.row_group(0).column(i)
+            logical = json.loads(md.schema.column(i).logical_type.to_json())
+            assert (col.compression, col.physical_type, logical["isAdjustedToUTC"]) == (
+                "ZSTD", "INT64", True), (f, col, logical)
+        got = spark.table("fmt_bucketed_t").select("k", F.unix_micros("ts")).orderBy("k")
+        assert [tuple(r) for r in got.collect()] == [(k, 7 * k) for k in range(6)]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS fmt_bucketed_t")
+
+
 def test_binaryfile_source_feeds_multimodal_pipeline(spark, tmp_path):
     """Raw-file multimodal ingest: `binaryFile` scans a directory into
     (path, length, content) rows whose bytes round-trip exactly, and the
@@ -245,25 +276,46 @@ def test_write_parquet_keeps_edge_timestamps(spark, tmp_path):
     assert rows.fetchall() == want
 
 
-def _reads(node: ast.AST, readers: set[str]) -> bool:
+_BATCH_READ, _ANY_READ = ("read",), ("read", "readStream")
+
+
+def _reads(node: ast.AST, readers: set[str], attrs=_ANY_READ) -> bool:
     """Whether the call chain ending at ``node`` starts at a reader:
-    ``.read``/``.readStream``, or a name assigned from one."""
+    an ``attrs`` attribute (``.read``/``.readStream``), or a name
+    assigned from one."""
     while True:
         if isinstance(node, ast.Call):
             node = node.func
         elif isinstance(node, ast.Attribute):
-            if node.attr in ("read", "readStream"):
+            if node.attr in attrs:
                 return True
             node = node.value
         else:
             return isinstance(node, ast.Name) and node.id in readers
 
 
-def _parquet_writes(tree: ast.Module) -> list[tuple[str, int]]:
-    """(innermost enclosing function, line) of each ``.parquet(...)`` or
-    ``.format("parquet")`` call in ``tree`` that does not read."""
+def _format(node: ast.AST) -> str | None:
+    """The constant of the last ``.format(...)`` in the call chain
+    ending at ``node``, or None when it sets none."""
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "format" and node.args
+                and isinstance(node.args[0], ast.Constant)):
+            return node.args[0].value
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return None
+
+
+def _parquet_calls(tree: ast.Module, reads: bool) -> list[tuple[str, int]]:
+    """(innermost enclosing function, line) of each parquet call in
+    ``tree``. With ``reads``: each ``.parquet(...)`` or
+    ``.format("parquet")`` call on a batch reader. Without: each such
+    call on anything but a reader, and each ``.saveAsTable(...)`` that
+    sets no other format (a session saves its tables as parquet by
+    default)."""
+    attrs = _BATCH_READ if reads else _ANY_READ
     readers = {
-        t.id for n in ast.walk(tree) if isinstance(n, ast.Assign) and _reads(n.value, set())
+        t.id for n in ast.walk(tree) if isinstance(n, ast.Assign) and _reads(n.value, set(), attrs)
         for t in n.targets if isinstance(t, ast.Name)
     }
     owner = {}  # ast.walk is breadth-first: inner functions come later
@@ -277,9 +329,31 @@ def _parquet_writes(tree: ast.Module) -> list[tuple[str, int]]:
         parquet = n.func.attr == "parquet" or (
             n.func.attr == "format" and n.args
             and isinstance(n.args[0], ast.Constant) and n.args[0].value == "parquet")
-        if parquet and not _reads(n.func.value, readers):
+        if reads:
+            hit = parquet and _reads(n.func.value, readers, attrs)
+        elif n.func.attr == "saveAsTable":
+            fmt = next((k.value.value for k in n.keywords
+                        if k.arg == "format" and isinstance(k.value, ast.Constant)),
+                       _format(n.func.value))
+            hit = fmt in (None, "parquet")
+        else:
+            hit = parquet and not _reads(n.func.value, readers, attrs)
+        if hit:
             hits.append((fn, n.lineno))
-    return sorted(hits, key=lambda h: h[1])
+    return sorted(set(hits), key=lambda h: h[1])
+
+
+def _engine_hits(reads: bool, allowed: set[tuple[str, str]]) -> list[str]:
+    """``module:line (function)`` of each parquet call of the engine
+    outside ``queries/`` (whose builders write and read scratch inputs)
+    that ``allowed`` does not name."""
+    return [
+        f"{rel}:{line} ({fn})"
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (rel := p.relative_to(PACKAGE).as_posix()).split("/")[0] != "queries"
+        for fn, line in _parquet_calls(ast.parse(p.read_text()), reads)
+        if (rel, fn) not in allowed
+    ]
 
 
 # (module, function) that may write parquet without the writer:
@@ -290,19 +364,30 @@ _OWN_PARQUET_WRITES = {
     ("streaming/stream.py", "run_to_completion"),
 }
 
+# (module, function) that may read parquet without ``read_parquet``:
+# the reader itself, and the IVF read, whose static ``cell IN (...)``
+# filter prunes the partition directories of the layout it scans.
+_OWN_PARQUET_READS = {
+    ("sources/readers.py", "_scan"),
+    ("operators/similarity.py", "cosine_topk_ivf_partitioned"),
+}
+
 
 def test_engine_writes_parquet_only_through_the_writer():
-    """Outside ``queries/`` (whose builders write scratch inputs), no
-    module of the engine calls a writer's ``.parquet(`` or
-    ``.format("parquet")``: the on-disk format of every table the
-    engine writes is decided in ``writers.write_parquet``."""
-    hits = [
-        f"{rel}:{line} ({fn})"
-        for p in sorted(PACKAGE.rglob("*.py"))
-        if (rel := p.relative_to(PACKAGE).as_posix()).split("/")[0] != "queries"
-        for fn, line in _parquet_writes(ast.parse(p.read_text()))
-        if (rel, fn) not in _OWN_PARQUET_WRITES
-    ]
+    """Outside ``queries/``, no module of the engine calls a writer's
+    ``.parquet(``, ``.format("parquet")`` or a parquet
+    ``.saveAsTable(``: the on-disk format of every table the engine
+    writes is decided in ``writers.write_parquet``."""
+    hits = _engine_hits(False, _OWN_PARQUET_WRITES)
+    assert not hits, hits
+
+
+def test_engine_reads_parquet_only_through_the_reader():
+    """Outside ``queries/``, no module of the engine calls
+    ``spark.read...parquet(``: every batch parquet read goes through
+    ``readers.read_parquet`` (or ``read_parquet_ts_range``), so it gets
+    the schema cache and reads a small table as one partition."""
+    hits = _engine_hits(True, _OWN_PARQUET_READS)
     assert not hits, hits
 
 
@@ -313,8 +398,28 @@ def test_engine_writes_parquet_only_through_the_writer():
     ("def f(spark, p):\n    r = spark.readStream.schema(s)\n    return r.parquet(p)", []),
     ("def f(df, p):\n    def g():\n        df.write.parquet(p)\n    g()", [("g", 3)]),
     ("df.write.parquet(p)", [("<module>", 1)]),
+    ("def f(df, t):\n    df.write.bucketBy(4, 'k').saveAsTable(t)", [("f", 2)]),
+    ("def f(df, t):\n    df.write.format('parquet').saveAsTable(t)", [("f", 2)]),
+    ("def f(df, t):\n    df.write.format('json').mode('append').saveAsTable(t)", []),
+    ("def f(df, t):\n    df.write.saveAsTable(t, format='orc')", []),
 ])
 def test_parquet_write_finder(code, found):
-    """The finder behind the test above sees a write through a writer
-    variable, and does not take a read for a write."""
-    assert _parquet_writes(ast.parse(code)) == found
+    """The finder behind the write check sees a write through a writer
+    variable and a ``saveAsTable`` in the default format, and takes
+    neither a read nor a table of another format for a parquet write."""
+    assert _parquet_calls(ast.parse(code), reads=False) == found
+
+
+@pytest.mark.parametrize("code, found", [
+    ("def f(spark, p):\n    return spark.read.parquet(p)", [("f", 2)]),
+    ("def f(spark, p, s):\n    r = spark.read.schema(s)\n    return r.parquet(p)", [("f", 3)]),
+    ("def f(spark, p):\n    return spark.read.format('parquet').load(p)", [("f", 2)]),
+    ("def f(spark, p, s):\n    r = spark.readStream.schema(s)\n    return r.parquet(p)", []),
+    ("def f(df, p):\n    df.write.parquet(p)", []),
+    ("def f(spark, p):\n    return spark.read.json(p)", []),
+])
+def test_parquet_read_finder(code, found):
+    """The finder behind the read check sees a batch read, also through
+    a reader variable, and takes neither a streaming read nor a write
+    for one."""
+    assert _parquet_calls(ast.parse(code), reads=True) == found

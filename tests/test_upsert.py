@@ -10,7 +10,7 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE, run_in_job_group
+from tests.conftest import SF_SMOKE, run_in_job_group, stage_work
 
 WINDOWS = (datetime(2024, 1, 10), datetime(2024, 1, 20))
 FOUR_WINDOWS = (datetime(2024, 1, 8), datetime(2024, 1, 15), datetime(2024, 1, 22),
@@ -62,17 +62,6 @@ def _counts(windows) -> list[tuple[int, int]]:
     return [(len(upsert), len(every)) for upsert, every in windows]
 
 
-def _shuffle_bytes(spark, job_ids) -> int:
-    """Shuffle bytes read plus written by the stages of ``job_ids``, from
-    the status store."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    return sum(
-        store.lastStageAttempt(sid).shuffleReadBytes()
-        + store.lastStageAttempt(sid).shuffleWriteBytes()
-        for jid in job_ids for sid in sc.statusTracker().getJobInfo(jid).stageIds)
-
-
 def _rows(spark, path):
     return sorted(tuple(r) for r in spark.read.parquet(path).collect())
 
@@ -82,9 +71,13 @@ def test_steady_window_runs_two_upsert_jobs(spark, tmp_path, monkeypatch):
     one: the target's schema is cached by the previous swap, and the
     small merge is one partition planned statically, so no exchange or
     source-keys broadcast runs as a job of its own. The whole window is
-    that one job: the checkpoint read and commit run none."""
+    that one job: the checkpoint read and commit run none. The source's
+    schema is cached first, so the count does not depend on whether an
+    earlier test in the process read it: its inference is one more job
+    of the first window."""
     from etl_mini_spark.sources.readers import read_parquet
 
+    read_parquet(spark, f"{SF_SMOKE}/events.parquet")
     spec = _spec(tmp_path)
     first, steady = _counts(_run_windows(spark, spec, monkeypatch))
     assert (first, steady) == ((1, 1), (1, 1)), (first, steady)
@@ -110,7 +103,7 @@ def test_small_window_runs_without_a_shuffle(spark, tmp_path, monkeypatch):
     runs = _run_windows(
         spark, spec, monkeypatch, windows=FOUR_WINDOWS,
         between=lambda: parts.append(len(list((tmp_path / "target").glob("part-*")))))
-    assert [_shuffle_bytes(spark, every) for _, every in runs] == [0, 0, 0, 0]
+    assert [stage_work(spark, every)[1] for _, every in runs] == [0, 0, 0, 0]
     assert parts == [1, 1, 1, 1]
     want = read_parquet(spark, f"{SF_SMOKE}/events.parquet")
     want = want.filter(F.col("ts") < FOUR_WINDOWS[-1]).collect()
