@@ -123,28 +123,3 @@ ORDERS_DAILY_SQL = """
 
 
 _TMP = Path(__file__).resolve().parents[2] / "tmp"  # the repository's tmp/
-
-
-def _sweep_scratch(prefix: str, min_age_s: int = 3600) -> None:
-    """Remove stale ``tmp/<prefix>_*`` scratch left by PREVIOUS runs.
-
-    Age-gated: only dirs untouched for ``min_age_s`` are removed. A
-    concurrent verification shard (tests/test_queries_oracle.py runs
-    the registry as parallel subprocesses) or a twin entry re-running
-    the same builder (stream_capped_sessions_checksum calls the
-    stream_capped_sessions builder) must never rmtree another live
-    run's streaming scratch mid-query — an unconditional glob cleanup
-    here was observed as a flaky STREAM_FAILED under the sharded gate.
-    Live scratch is minutes old; anything past the gate is debris."""
-    import shutil
-    import time
-
-    now = time.time()
-    for old in _TMP.glob(f"{prefix}_*"):
-        try:
-            if now - old.stat().st_mtime >= min_age_s:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-
-

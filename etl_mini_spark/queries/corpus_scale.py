@@ -1,5 +1,5 @@
 from etl_mini_spark.queries._base import *  # noqa: F401,F403
-from etl_mini_spark.queries._base import _sweep_scratch, _t, _TMP  # noqa: F401
+from etl_mini_spark.queries._base import _t, _TMP  # noqa: F401
 
 # Round-3 batch 2: corpus-scale training-data ops — benchmark
 # decontamination, mixture sampling, incremental dedup, vocabulary
@@ -183,44 +183,36 @@ def stream_interval_join(spark, sf_dir):
     (streaming/windows.py:stream_interval_join). Inner-join semantics
     make the AvailableNow result equal the batch interval join, so the
     oracle is plain SQL."""
-    import shutil
-    import uuid
-
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
+    from etl_mini_spark.streaming.stream import replay
     from etl_mini_spark.streaming.windows import stream_interval_join as ssj
 
-    _sweep_scratch("stream_ij")  # age-gated: see _base
-    tmp = _TMP / f"stream_ij_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = str(tmp / "src"), str(tmp / "out"), str(tmp / "ckpt")
-    e = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
-    e.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    clicks = (
-        read_stream_parquet(spark, src, schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("c_ts"),
+    with replay(spark, "stream_ij") as r:
+        r.stage(_t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts"))
+        clicks = (
+            r.stream()
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id"),
+                F.col("ts").alias("c_ts"),
+            )
         )
-    )
-    purchases = (
-        read_stream_parquet(spark, src, schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
+        purchases = (
+            r.stream()
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user_id"),
+                F.col("ts").alias("p_ts"),
+            )
         )
-    )
-    joined = ssj(
-        clicks, purchases,
-        left_key="user_id", right_key="p_user_id",
-        left_ts="c_ts", right_ts="p_ts",
-        max_delay="10 minutes",
-    )
-    run_to_completion(joined, checkpoint_dir=ckpt, output_path=out)
-    return spark.read.parquet(out).select(
+        r.run(ssj(
+            clicks, purchases,
+            left_key="user_id", right_key="p_user_id",
+            left_ts="c_ts", right_ts="p_ts",
+            max_delay="10 minutes",
+        ))
+    return r.output.select(
         "click_id",
         "purchase_id",
         "user_id",
@@ -287,27 +279,16 @@ def stream_static_enrich(spark, sf_dir):
     rows land append-only; the per-segment rollup happens batch-side on
     the landed output, so the stream stays stateless. Deterministic:
     stream-static inner join emits exactly the batch join."""
-    import shutil
-    import uuid
+    from etl_mini_spark.streaming.stream import replay
 
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
-
-    _sweep_scratch("stream_enrich")  # age-gated: see _base
-    tmp = _TMP / f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = str(tmp / "src"), str(tmp / "out"), str(tmp / "ckpt")
-    e = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    e.write.mode("overwrite").parquet(src)
     dim = F.broadcast(
         _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
-    stream = read_stream_parquet(spark, src, spark.read.parquet(src).schema)
-    enriched = stream.join(dim, stream["user_id"] == dim["c_custkey"], "inner")
-    run_to_completion(enriched, checkpoint_dir=ckpt, output_path=out)
-    return (
-        spark.read.parquet(out)
-        .groupBy("c_mktsegment", "event_type")
-        .agg(F.count("*").alias("n"))
-    )
+    with replay(spark, "stream_enrich") as r:
+        r.stage(_t(spark, sf_dir, "events").select("event_id", "user_id", "event_type"))
+        stream = r.stream()
+        r.run(stream.join(dim, stream["user_id"] == dim["c_custkey"], "inner"))
+    return r.output.groupBy("c_mktsegment", "event_type").agg(F.count("*").alias("n"))
 
 
 @q(

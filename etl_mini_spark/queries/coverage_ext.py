@@ -1,5 +1,5 @@
 from etl_mini_spark.queries._base import *  # noqa: F401,F403
-from etl_mini_spark.queries._base import _sweep_scratch, _t, _TMP  # noqa: F401
+from etl_mini_spark.queries._base import _t  # noqa: F401
 
 # Extended SQL surface: multi-way joins + subqueries as ANSI-SQL strings.
 # The engine's SQL entry point is spark.sql over registered views; the
@@ -487,20 +487,13 @@ def stream_capped_sessions(spark, sf_dir):
     differential check lives in tests/test_streaming.py against a
     pure-python reference. Output restricted to gap/cap-closed sessions
     (timeout flushes depend on micro-batch boundaries)."""
-    import shutil
-    import uuid
-
     from etl_mini_spark.streaming.stateful import capped_sessions
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
+    from etl_mini_spark.streaming.stream import replay
 
-    _sweep_scratch("capped_sessions")  # age-gated: see _base
-    tmp = _TMP / f"capped_sessions_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = str(tmp / "src"), str(tmp / "out"), str(tmp / "ckpt")
-    batch = _t(spark, sf_dir, "events").select("user_id", "ts")
-    batch.write.mode("overwrite").parquet(src)
-    stream = read_stream_parquet(spark, src, spark.read.parquet(src).schema)
-    run_to_completion(capped_sessions(stream), checkpoint_dir=ckpt, output_path=out)
-    return spark.read.parquet(out).filter(F.col("closed_by").isin("gap", "cap"))
+    with replay(spark, "capped_sessions") as r:
+        r.stage(_t(spark, sf_dir, "events").select("user_id", "ts"))
+        r.run(capped_sessions(r.stream()))
+    return r.output.filter(F.col("closed_by").isin("gap", "cap"))
 
 
 @q("stream_capped_sessions_checksum")
@@ -542,27 +535,17 @@ def stream_dedup_watermark(spark, sf_dir):
     events: streaming dedup on planted duplicates recovers it exactly.
     Only copy-invariant columns are returned (which physical copy
     survives depends on file ordering, by design of first-wins dedup)."""
-    import shutil
-    import uuid
-
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
+    from etl_mini_spark.streaming.stream import replay
     from etl_mini_spark.streaming.windows import streaming_dedup
 
-    _sweep_scratch("stream_dedup")  # age-gated: see _base
-    tmp = _TMP / f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = str(tmp / "src"), str(tmp / "out"), str(tmp / "ckpt")
     e = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
     late_dupes = e.filter(F.col("event_id") % 10 == 0).withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 5 MINUTES")
     )
-    e.unionByName(late_dupes).write.mode("overwrite").parquet(src)
-    stream = read_stream_parquet(spark, src, spark.read.parquet(src).schema)
-    run_to_completion(
-        streaming_dedup(stream, keys=["event_id"], ts_col="ts", late_threshold="1 hour"),
-        checkpoint_dir=ckpt,
-        output_path=out,
-    )
-    return spark.read.parquet(out).select("event_id", "user_id", "event_type")
+    with replay(spark, "stream_dedup") as r:
+        r.stage(e.unionByName(late_dupes))
+        r.run(streaming_dedup(r.stream(), keys=["event_id"], ts_col="ts", late_threshold="1 hour"))
+    return r.output.select("event_id", "user_id", "event_type")
 
 
 # =========================================================================

@@ -1654,39 +1654,17 @@ def stream_holt_incremental(spark, sf_dir):
     tiny keyed fold (state rows = |series keys|), the corpus-side day
     aggregation happening once upstream — the incremental-agg shape
     that replaces full-history rescans at 100 TB."""
-    import os
-    import shutil
-    import uuid
+    from pathlib import Path
 
     import pandas as pd
 
-    from etl_mini_spark.queries._base import _sweep_scratch, _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
-
-    _sweep_scratch("holt")  # age-gated: see _base
-    tmp = _TMP / f"holt_{uuid.uuid4().hex[:8]}"
-    src, out, state, ckpt = tmp / "src", tmp / "out", tmp / "state", tmp / "ckpt"
+    from etl_mini_spark.streaming.stream import replay
 
     e = _t(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("d")
     ).agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("x"))
     cuts = ["0000-00-00", "2024-01-11", "2024-01-21", "9999-12-31"]
-    src.mkdir(parents=True, exist_ok=True)
-    all_daily = daily.toPandas()
-    for i in range(3):
-        chunk = all_daily[(all_daily["d"] >= cuts[i]) & (all_daily["d"] < cuts[i + 1])]
-        # one plain file per chunk => one micro-batch each under
-        # maxFilesPerTrigger=1; mtimes pinned strictly increasing
-        # because FileStreamSource orders by mtime with NO path
-        # tiebreak and back-to-back writes can tie at ms resolution —
-        # a reordered batch corrupts the cross-batch recursion
-        chunk.sort_values(["event_type", "d"]).to_parquet(
-            src / f"{i:02d}.parquet", index=False
-        )
-        os.utime(src / f"{i:02d}.parquet", (1_000_000_000 + i, 1_000_000_000 + i))
-
-    schema = spark.read.parquet(str(src / "00.parquet")).schema
 
     def sink(batch_df, batch_id):
         pdf = batch_df.toPandas().sort_values(["event_type", "d"])
@@ -1735,19 +1713,16 @@ def stream_holt_incremental(spark, sf_dir):
             ).to_parquet(out / f"batch_{batch_id}.parquet", index=False)
         st.reset_index().to_parquet(state / "state.parquet", index=False)
 
-    stream = read_stream_parquet(
-        spark, str(src), schema, options={"maxFilesPerTrigger": "1"}
-    )
-    run_to_completion(stream, checkpoint_dir=str(ckpt), sink=sink)
-
-    res = spark.read.schema(
-        "event_type string, d string, level double, trend double, fitted double"
-    ).parquet(str(out))
+    with replay(spark, "holt") as r:
+        out, state = Path(r.out), Path(r.root) / "state"
+        for i in range(3):
+            r.stage(daily.filter((F.col("d") >= cuts[i]) & (F.col("d") < cuts[i + 1])))
+        r.run(r.stream(), sink)
 
     def pin6(c):
         return F.floor(F.col(c) * 1_000_000 + F.lit(0.5)) / 1_000_000
 
-    return res.select(
+    return r.output.select(
         "event_type", "d",
         pin6("level").alias("level"),
         pin6("trend").alias("trend"),

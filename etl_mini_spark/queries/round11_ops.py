@@ -779,31 +779,15 @@ def stream_mg_incremental(spark, sf_dir):
     collected, so the sink stays driver-light at any micro-batch size;
     the exact pass touches only candidate tokens — the incremental-
     sketch shape that avoids re-scanning history at 100 TB."""
-    import shutil
-    import uuid
     from collections.abc import Iterator
+    from pathlib import Path
 
     import pandas as pd
 
     from etl_mini_spark.operators.sketches import mg_fold
-    from etl_mini_spark.queries._base import _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
-
-    # scope all FS state to this invocation's own uuid dir and clean it
-    # in `finally` — never sweep sibling smg_* dirs, which may belong
-    # to a concurrent run (parallel pytest worker / overlapping sweep)
-    tmp = _TMP / f"smg_{uuid.uuid4().hex[:8]}"
-    src, state, ckpt = tmp / "src", tmp / "state", tmp / "ckpt"
+    from etl_mini_spark.streaming.stream import replay
 
     d = _t(spark, sf_dir, "documents")
-    pdf_all = d.select("doc_id", "text").toPandas().sort_values("doc_id")
-    src.mkdir(parents=True, exist_ok=True)
-    n_docs = len(pdf_all)
-    for i in range(3):
-        chunk = pdf_all.iloc[i * n_docs // 3 : (i + 1) * n_docs // 3]
-        chunk.to_parquet(src / f"{i:02d}.parquet", index=False)
-
-    schema = spark.read.parquet(str(src / "00.parquet")).schema
 
     def mg_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict[str, int] = {}
@@ -835,25 +819,23 @@ def stream_mg_incremental(spark, sf_dir):
         for r in rows:  # pointwise add across partitions
             summary[r["t"]] = summary.get(r["t"], 0) + int(r["cnt"])
         try:
-            st_pdf = pd.read_parquet(state / "state.parquet")
+            st_pdf = pd.read_parquet(state)
             counters = dict(zip(st_pdf["t"], (int(c) for c in st_pdf["cnt"])))
         except (FileNotFoundError, OSError):
             counters = {}
         counters = mg_fold(counters, summary, k=64)  # add + one compress = MERGE
-        state.mkdir(parents=True, exist_ok=True)
+        state.parent.mkdir(parents=True, exist_ok=True)
         pd.DataFrame(
             {"t": list(counters.keys()), "cnt": list(counters.values())}
-        ).to_parquet(state / "state.parquet", index=False)
+        ).to_parquet(state, index=False)
 
-    try:
-        stream = read_stream_parquet(
-            spark, str(src), schema, options={"maxFilesPerTrigger": "1"}
-        )
-        run_to_completion(stream, checkpoint_dir=str(ckpt), sink=sink)
-        cand_pdf = pd.read_parquet(state / "state.parquet")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    cand = spark.createDataFrame(cand_pdf[["t"]])
+    # the final state is the output: the candidate tokens
+    with replay(spark, "smg") as r:
+        state = Path(r.out) / "state.parquet"
+        for i in range(3):
+            r.stage(d.filter(F.pmod("doc_id", F.lit(3)) == i).select("doc_id", "text"))
+        r.run(r.stream(), sink)
+    cand = r.output.select("t")
     toks = d.select(
         F.explode(
             F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")

@@ -2877,34 +2877,14 @@ def stream_rsi_incremental(spark, sf_dir):
     Plan: the day aggregation happens once upstream; per batch the
     fold touches one state row and |batch days| outputs — the
     incremental shape that never rescans history."""
-    import os
-    import shutil
-    import uuid
+    from pathlib import Path
 
     import pandas as pd
 
-    from etl_mini_spark.queries._base import _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
-
-    # state scoped to this invocation's own uuid dir, cleaned in
-    # finally — never sweep sibling dirs (r10-advice concurrency rule)
-    tmp = _TMP / f"srsi_{uuid.uuid4().hex[:8]}"
-    src, out, state, ckpt = tmp / "src", tmp / "out", tmp / "state", tmp / "ckpt"
+    from etl_mini_spark.streaming.stream import replay
 
     daily = events_daily_cents(spark, sf_dir)
-    all_daily = daily.toPandas().sort_values("d")
     cuts = ["0000-00-00", "2024-01-11", "2024-01-21", "9999-12-31"]
-    src.mkdir(parents=True, exist_ok=True)
-    for i in range(3):
-        chunk = all_daily[(all_daily["d"] >= cuts[i]) & (all_daily["d"] < cuts[i + 1])]
-        chunk.to_parquet(src / f"{i:02d}.parquet", index=False)
-        # strictly increasing mtimes: the cross-batch recursion is
-        # order-sensitive and FileStreamSource orders by mtime with no
-        # path tiebreak — back-to-back writes can tie at ms resolution
-        # and silently reorder batches (round8_ops late-drop pattern)
-        os.utime(src / f"{i:02d}.parquet", (1_000_000_000 + i, 1_000_000_000 + i))
-
-    schema = spark.read.parquet(str(src / "00.parquet")).schema
 
     def sink(batch_df, batch_id):
         pdf = batch_df.toPandas().sort_values("d")
@@ -2951,18 +2931,12 @@ def stream_rsi_incremental(spark, sf_dir):
             [{"last_c": last_c, "nd": nd, "sg": sg, "sl": sl, "ag": ag, "al": al}]
         ).to_parquet(state / "state.parquet", index=False)
 
-    try:
-        stream = read_stream_parquet(
-            spark, str(src), schema, options={"maxFilesPerTrigger": "1"}
-        )
-        run_to_completion(stream, checkpoint_dir=str(ckpt), sink=sink)
-        res_pdf = pd.concat(
-            [pd.read_parquet(p) for p in sorted(out.glob("batch_*.parquet"))],
-            ignore_index=True,
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    res = spark.createDataFrame(res_pdf)
+    with replay(spark, "srsi") as r:
+        out, state = Path(r.out), Path(r.root) / "state"
+        for i in range(3):
+            r.stage(daily.filter((F.col("d") >= cuts[i]) & (F.col("d") < cuts[i + 1])))
+        r.run(r.stream(), sink)
+    res = r.output
     rsi = F.when(F.col("al") == 0.0, 100.0).otherwise(
         100.0 - 100.0 / (1.0 + F.col("ag") / F.col("al"))
     )

@@ -2537,44 +2537,19 @@ def stream_cms_incremental(spark, sf_dir):
     md5-portable) — so unlike the MG heavy-hitter sink, the streaming
     sketch is fully oracle-backed. Per batch only <=256 cell rows
     cross the state boundary at any stream size."""
-    import os
-    import shutil
-    import uuid
+    from pathlib import Path
 
     import pandas as pd
 
-    from etl_mini_spark.queries._base import _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
+    from etl_mini_spark.streaming.stream import replay
 
-    tmp = _TMP / f"scms_{uuid.uuid4().hex[:8]}"
-    src, state, ckpt = tmp / "src", tmp / "state", tmp / "ckpt"
     e = _t(spark, sf_dir, "events").select(
         "ts",
         F.concat(F.col("event_type"), F.lit(":"), (F.col("user_id") % 100).cast("string"))
         .alias("token"),
     )
     cuts = ["0000-00-00", "2024-01-11", "2024-01-21", "9999-12-31"]
-    src.mkdir(parents=True, exist_ok=True)
-    # micro-batch source files are written by Spark FILTER, never a
-    # whole-table driver gather (r17 verdict #1): each date-range chunk
-    # lands as one executor-written part file that is then just RENAMED
-    # into the stream source dir — only file metadata touches the
-    # driver, so the builder holds at any stream size
-    ed = e.withColumn("d", F.date_format("ts", "yyyy-MM-dd"))
-    for i in range(3):
-        chunk_dir = tmp / f"chunk_{i:02d}"
-        (
-            ed.filter((F.col("d") >= cuts[i]) & (F.col("d") < cuts[i + 1]))
-            .select("token").coalesce(1)
-            .write.mode("overwrite").parquet(str(chunk_dir))
-        )
-        part = next(chunk_dir.glob("part-*.parquet"))
-        dest = src / f"{i:02d}.parquet"
-        os.replace(part, dest)
-        shutil.rmtree(chunk_dir, ignore_errors=True)
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    schema = spark.read.parquet(str(src / "00.parquet")).schema
+    d = F.date_format("ts", "yyyy-MM-dd")
 
     def sink(batch_df, batch_id):
         part = _cm_cells(
@@ -2582,26 +2557,24 @@ def stream_cms_incremental(spark, sf_dir):
         ).toPandas()
         if part.empty:
             return
-        state.mkdir(parents=True, exist_ok=True)
+        state.parent.mkdir(parents=True, exist_ok=True)
         try:
-            prev = pd.read_parquet(state / "cells.parquet")
+            prev = pd.read_parquet(state)
             merged = (
                 pd.concat([prev, part], ignore_index=True)
                 .groupby(["j", "b"], as_index=False)["cell"].sum()
             )
         except (FileNotFoundError, OSError):
             merged = part
-        merged.to_parquet(state / "cells.parquet", index=False)
+        merged.to_parquet(state, index=False)
 
-    try:
-        stream = read_stream_parquet(
-            spark, str(src), schema, options={"maxFilesPerTrigger": "1"}
-        )
-        run_to_completion(stream, checkpoint_dir=str(ckpt), sink=sink)
-        cells_pdf = pd.read_parquet(state / "cells.parquet")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    cells = spark.createDataFrame(cells_pdf)
+    # the final sketch state is the output
+    with replay(spark, "scms") as r:
+        state = Path(r.out) / "cells.parquet"
+        for i in range(3):
+            r.stage(e.filter((d >= cuts[i]) & (d < cuts[i + 1])).select("token"))
+        r.run(r.stream(), sink)
+    cells = r.output
     vocab = e.groupBy("token").agg(F.count("*").cast("bigint").alias("c"))
     top20 = vocab.orderBy(F.col("c").desc(), "token").limit(20)
     probes = top20.select(
@@ -2661,60 +2634,27 @@ def stream_sessionize_differential(spark, sf_dir):
     flushes every real session; the sentinel's own session is
     filtered. Plan: one keyed stateful agg per micro-batch, state
     bounded by active users."""
-    import os
-    import shutil
-    import uuid
+    from etl_mini_spark.streaming.stream import replay
 
-    from etl_mini_spark.queries._base import _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
-
-    tmp = _TMP / f"ssess_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = tmp / "src", tmp / "out", tmp / "ckpt"
     e = _t(spark, sf_dir, "events").select("user_id", "ts")
     mx = e.agg(F.max("ts").alias("m")).collect()[0]["m"]
     cuts = ["0000-00-00", "2024-01-11", "2024-01-21", "9999-12-31"]
-    src.mkdir(parents=True, exist_ok=True)
-    all_pdf = e.withColumn("d", F.date_format("ts", "yyyy-MM-dd")).toPandas()
-    for i in range(3):
-        chunk = all_pdf[(all_pdf["d"] >= cuts[i]) & (all_pdf["d"] < cuts[i + 1])]
-        chunk[["user_id", "ts"]].to_parquet(
-            src / f"{i:02d}.parquet", index=False,
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-        os.utime(src / f"{i:02d}.parquet", (1_000_000_000 + i, 1_000_000_000 + i))
-    sentinel = spark.createDataFrame([(-1, mx)], "user_id long, ts timestamp").withColumn(
+    d = F.date_format("ts", "yyyy-MM-dd")
+    sentinel = spark.createDataFrame([(-1, mx)], e.schema).withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 30 DAY")
     )
-    sentinel.toPandas().to_parquet(
-        src / "03.parquet", index=False,
-        coerce_timestamps="us", allow_truncated_timestamps=True,
-    )
-    os.utime(src / "03.parquet", (1_000_000_003, 1_000_000_003))
-
-    schema = spark.read.parquet(str(src / "00.parquet")).schema
-    try:
-        stream = read_stream_parquet(
-            spark, str(src), schema, options={"maxFilesPerTrigger": "1"}
-        )
+    with replay(spark, "ssess") as r:
+        for i in range(3):
+            r.stage(e.filter((d >= cuts[i]) & (d < cuts[i + 1])))
+        r.stage(sentinel)
         agg = (
-            stream.withWatermark("ts", "1 hour")
+            r.stream().withWatermark("ts", "1 hour")
             .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
             .agg(F.count("*").cast("bigint").alias("n_events"))
         )
-        run_to_completion(
-            agg.select("user_id", F.col("w.start").alias("ws"),
-                       F.col("w.end").alias("we"), "n_events"),
-            checkpoint_dir=str(ckpt), output_path=str(out),
-        )
-        # materialize to pandas BEFORE the tmp dir is removed — a cached
-        # plan over deleted files would break on any recompute
-        res_pdf = (
-            spark.read.parquet(str(out)).where(F.col("user_id") >= 0).toPandas()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    res = spark.createDataFrame(res_pdf)
-    return res.select(
+        r.run(agg.select("user_id", F.col("w.start").alias("ws"),
+                         F.col("w.end").alias("we"), "n_events"))
+    return r.output.where(F.col("user_id") >= 0).select(
         "user_id",
         F.date_format("ws", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.date_format("we", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
@@ -2757,50 +2697,23 @@ def stream_cdc_upsert_latest(spark, sf_dir):
     streaming counterpart of upsert_keyed, same merge operator.
     Cites reference services/sources/implementations/dwh/
     postgresql_service.py:117-296 (keyed ON CONFLICT upsert loop)."""
-    import os
-    import shutil
-    import uuid
+    from etl_mini_spark.streaming.stream import foreach_batch_upsert, replay
 
-    from etl_mini_spark.operators.upsert import upsert_parquet
-    from etl_mini_spark.queries._base import _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
-
-    tmp = _TMP / f"scdc_{uuid.uuid4().hex[:8]}"
-    src, tgt, ckpt = tmp / "src", str(tmp / "tgt"), tmp / "ckpt"
     c = _t(spark, sf_dir, "customer")
-    src.mkdir(parents=True, exist_ok=True)
-    for b in range(1, 4):
-        batch = (
-            c.where(md5_mod(F.col("c_custkey"), f":cdc:{b}", 3) == 0)
-            .select(
-                F.col("c_custkey").alias("k"),
-                F.lit(b).cast("long").alias("seq"),
-                F.concat(F.lit("SEG-"),
-                         md5_mod(F.col("c_custkey"), f":lab:{b}", 4).cast("string"))
-                .alias("segment"),
+    with replay(spark, "scdc") as r:
+        for b in range(1, 4):
+            r.stage(
+                c.where(md5_mod(F.col("c_custkey"), f":cdc:{b}", 3) == 0)
+                .select(
+                    F.col("c_custkey").alias("k"),
+                    F.lit(b).cast("long").alias("seq"),
+                    F.concat(F.lit("SEG-"),
+                             md5_mod(F.col("c_custkey"), f":lab:{b}", 4).cast("string"))
+                    .alias("segment"),
+                )
             )
-        )
-        batch.toPandas().to_parquet(src / f"{b:02d}.parquet", index=False)
-        os.utime(src / f"{b:02d}.parquet", (1_000_000_000 + b, 1_000_000_000 + b))
-
-    schema = spark.read.parquet(str(src / "01.parquet")).schema
-
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(batch_df.sparkSession, tgt, batch_df, keys=["k"])
-
-    try:
-        stream = read_stream_parquet(
-            spark, str(src), schema, options={"maxFilesPerTrigger": "1"}
-        )
-        run_to_completion(stream, checkpoint_dir=str(ckpt), sink=sink)
-        # materialize to pandas BEFORE the tmp dir is removed
-        res_pdf = spark.read.parquet(tgt).toPandas()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    res = spark.createDataFrame(res_pdf)
-    return res.select(
+        r.run(r.stream(), foreach_batch_upsert(r.out, keys=["k"]))
+    return r.output.select(
         F.col("k").alias("c_custkey"), "segment", F.col("seq").alias("last_seq")
     ).orderBy("c_custkey")
 

@@ -2484,9 +2484,8 @@ _STTL_SQL = """
 
 @pq("stream_state_ttl_eviction", _STTL_SQL)
 def stream_state_ttl_eviction(spark, sf_dir):
-    """Streaming TTL-state dedup: purchase events stream in strict
-    day-file order (pinned strictly increasing mtimes — the
-    FileStreamSource ordering rule); each micro-batch folds into keyed
+    """Streaming TTL-state dedup: purchase events stream in as three
+    date-chunked micro-batches, in order; each micro-batch folds into keyed
     state (last_emit, n_emitted, n_suppressed, checksum) per user,
     with an event emitted only when the key's state has been idle >=
     the 30-min TTL — the semantics a state store with TTL eviction
@@ -2498,35 +2497,18 @@ def stream_state_ttl_eviction(spark, sf_dir):
     under test. The batch oracle replays the
     identical per-key reset recursion; exact microsecond comparisons,
     integer checksums, no floats anywhere."""
-    import os
-    import shutil
-    import uuid
-
     import pandas as pd
 
-    from etl_mini_spark.queries._base import _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
+    from etl_mini_spark.streaming.stream import replay
 
     TTL_US = 30 * 60 * 1_000_000
-    tmp = _TMP / f"sttl_{uuid.uuid4().hex[:8]}"
-    src, ckpt = tmp / "src", tmp / "ckpt"
-    src.mkdir(parents=True, exist_ok=True)
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select("user_id", "event_id", F.unix_micros("ts").alias("ts_us"),
                 F.date_format("ts", "yyyy-MM-dd").alias("d"))
     )
-    days = [r["d"] for r in ev.select("d").distinct().orderBy("d").collect()]
-    for i, d in enumerate(days, start=1):
-        pdf = (
-            ev.filter(F.col("d") == d)
-            .select("user_id", "event_id", "ts_us")
-            .toPandas()
-        )
-        f = src / f"{i:03d}.parquet"
-        pdf.to_parquet(f, index=False)
-        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
+    cuts = ["0000-00-00", "2024-01-11", "2024-01-21", "9999-12-31"]
 
     state: dict[int, list] = {}  # user -> [last_emit, n_emit, n_sup, chk]
 
@@ -2543,14 +2525,11 @@ def stream_state_ttl_eviction(spark, sf_dir):
             else:
                 st[2] += 1
 
-    schema = spark.read.parquet(str(src / "001.parquet")).schema
-    try:
-        stream = read_stream_parquet(
-            spark, str(src), schema, options={"maxFilesPerTrigger": "1"}
-        )
-        run_to_completion(stream, checkpoint_dir=str(ckpt), sink=sink)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with replay(spark, "sttl") as r:
+        for i in range(3):
+            r.stage(ev.filter((F.col("d") >= cuts[i]) & (F.col("d") < cuts[i + 1]))
+                    .select("user_id", "event_id", "ts_us"))
+        r.run(r.stream(), sink)
     rows = [
         (u, st[1], st[2], st[3]) for u, st in sorted(state.items())
     ]

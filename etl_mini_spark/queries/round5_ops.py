@@ -544,7 +544,7 @@ def partitioned_roundtrip(spark, sf_dir):
     (partition pruning; asserted in tests/test_pipeline.py). At 100 TB
     the partition column is the first knife: scans of a filtered type
     touch 1/5th of the files before any row-group pruning."""
-    from etl_mini_spark.queries._base import _sweep_scratch, _TMP
+    from etl_mini_spark.queries._base import _TMP
 
     e = _t(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     path = str(_TMP / f"part_rt_{Path(sf_dir).name}")
@@ -609,31 +609,17 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     This is the reference's flagship ES→upsert→PG shape (S9 + §2.9)
     with streaming restart-safety replacing its metadata table. Oracle
     emulates the final table state declaratively."""
-    import shutil
-    import uuid
+    from etl_mini_spark.streaming.stream import foreach_batch_upsert, replay
 
-    from etl_mini_spark.queries._base import _sweep_scratch, _TMP
-    from etl_mini_spark.streaming.stream import (
-        foreach_batch_upsert,
-        read_stream_parquet,
-        run_to_completion,
-    )
-
-    _sweep_scratch("fbu")  # age-gated: see _base
-    tmp = _TMP / f"fbu_{uuid.uuid4().hex[:8]}"
-    src, tgt, ckpt = str(tmp / "src"), str(tmp / "tgt"), str(tmp / "ckpt")
     e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    e.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    sink = foreach_batch_upsert(tgt, keys=["event_id"])
-    run_to_completion(read_stream_parquet(spark, src, schema), checkpoint_dir=ckpt, sink=sink)
-    # incremental re-delivery: updated rows land as NEW source files
-    e.filter(F.col("event_id") % 7 == 0).withColumn(
-        "value", F.col("value") + 100
-    ).write.mode("append").parquet(src)
-    run_to_completion(read_stream_parquet(spark, src, schema), checkpoint_dir=ckpt, sink=sink)
-    final = spark.read.parquet(tgt)
-    return final.groupBy("event_type").agg(
+    with replay(spark, "fbu") as r:
+        sink = foreach_batch_upsert(r.out, keys=["event_id"])
+        r.stage(e)
+        r.run(r.stream(), sink)
+        # incremental re-delivery: updated rows land as a NEW source file
+        r.stage(e.filter(F.col("event_id") % 7 == 0).withColumn("value", F.col("value") + 100))
+        r.run(r.stream(), sink)
+    return r.output.groupBy("event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
 

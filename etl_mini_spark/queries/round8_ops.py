@@ -506,17 +506,9 @@ def stream_interval_join_outer(spark, sf_dir):
     outer-join state on bounded replays; with it the stream equals the
     batch LEFT JOIN exactly and the oracle is plain SQL. State stays
     O(watermark + max_delay) either way."""
-    import shutil
-    import uuid
-
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
+    from etl_mini_spark.streaming.stream import replay
     from etl_mini_spark.streaming.windows import stream_interval_join as ssj
 
-    from etl_mini_spark.queries._base import _sweep_scratch, _TMP
-
-    _sweep_scratch("stream_oj")  # age-gated: see _base
-    tmp = _TMP / f"stream_oj_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = str(tmp / "src"), str(tmp / "out"), str(tmp / "ckpt")
     e = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
     # watermark-advancer sentinel: one click + one purchase 30 days past
     # the horizon on an impossible user; evicts every real row's state
@@ -525,31 +517,30 @@ def stream_interval_join_outer(spark, sf_dir):
         [(-1, -1, "click", horizon), (-2, -1, "purchase", horizon)],
         e.schema,
     ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAY"))
-    e.unionByName(sentinel).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    clicks = (
-        read_stream_parquet(spark, src, schema)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("c_ts"))
-    )
-    purchases = (
-        read_stream_parquet(spark, src, schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
+    with replay(spark, "stream_oj") as r:
+        r.stage(e.unionByName(sentinel))
+        clicks = (
+            r.stream()
+            .filter(F.col("event_type") == "click")
+            .select(F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("c_ts"))
         )
-    )
-    joined = ssj(
-        clicks, purchases,
-        left_key="user_id", right_key="p_user_id",
-        left_ts="c_ts", right_ts="p_ts",
-        max_delay="10 minutes", how="leftOuter",
-    )
-    run_to_completion(joined, checkpoint_dir=ckpt, output_path=out)
+        purchases = (
+            r.stream()
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user_id"),
+                F.col("ts").alias("p_ts"),
+            )
+        )
+        r.run(ssj(
+            clicks, purchases,
+            left_key="user_id", right_key="p_user_id",
+            left_ts="c_ts", right_ts="p_ts",
+            max_delay="10 minutes", how="leftOuter",
+        ))
     return (
-        spark.read.parquet(out)
+        r.output
         .filter(F.col("user_id") >= 0)  # drop the sentinel
         .select("click_id", "purchase_id", "user_id")
     )
@@ -633,7 +624,7 @@ def dynamic_partition_overwrite(spark, sf_dir):
     proves partition-level surgery. Conf is scoped and restored."""
     from pathlib import Path as _P
 
-    from etl_mini_spark.queries._base import _sweep_scratch, _TMP
+    from etl_mini_spark.queries._base import _TMP
 
     path = str(_TMP / f"dpo_{_P(sf_dir).name}")
     o = _t(spark, sf_dir, "orders").select("o_orderpriority", "o_orderkey", "o_totalprice")
@@ -773,9 +764,9 @@ def stream_tumbling_late_drop(spark, sf_dir):
 
     This query makes that drop observable on a bounded replay — which
     a single batch can never do (the watermark only advances BETWEEN
-    micro-batches): maxFilesPerTrigger=1 over controlled file order
-    (modtime + name) runs batch 0 = the real events (watermark climbs
-    to max(ts)−1h), batch 1 = one on-time row at max(ts) (its
+    micro-batches): one staged file per micro-batch, in stage order
+    (``streaming.stream.replay``), runs batch 0 = the real events
+    (watermark climbs to max(ts)−1h), batch 1 = one on-time row at max(ts) (its
     processing EVICTS every window ending before the watermark),
     batch 2 = late re-deliveries of every event older than
     max(ts)−2h — all targeting already-emitted windows, so every one
@@ -784,17 +775,8 @@ def stream_tumbling_late_drop(spark, sf_dir):
     oracle is the batch aggregation over events + the on-time row
     ONLY: if Spark leaked a late row (or re-emitted an evicted
     window), counts or row count shift and the hash breaks."""
-    import os
-    import shutil
-    import uuid
+    from etl_mini_spark.streaming.stream import replay
 
-    from etl_mini_spark.queries._base import _sweep_scratch, _TMP
-    from etl_mini_spark.streaming.stream import read_stream_parquet, run_to_completion
-
-    _sweep_scratch("stream_late")  # age-gated: see _base
-    tmp = _TMP / f"stream_late_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = tmp / "src", str(tmp / "out"), str(tmp / "ckpt")
-    src.mkdir(parents=True)
     e = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     mx = e.agg(F.max("ts").alias("m")).collect()[0]["m"]
 
@@ -809,32 +791,16 @@ def stream_tumbling_late_drop(spark, sf_dir):
         "ts", F.col("ts") + F.expr("INTERVAL 2 DAY")
     )
 
-    def emit(df, name, mtime):
-        d = tmp / f"stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(d))
-        part = next(p for p in d.glob("part-*.parquet"))
-        dst = src / f"{name}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (mtime, mtime))
-
-    emit(e, "000_base", 1_000_000_000)
-    emit(ontime, "001_ontime", 1_000_000_100)
-    emit(late, "002_late", 1_000_000_200)
-    emit(sentinel, "003_sentinel", 1_000_000_300)
-
-    stream = read_stream_parquet(
-        spark, str(src), spark.read.parquet(str(src)).schema,
-        options={"maxFilesPerTrigger": "1", "latestFirst": "false"},
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"))
-        .count()
-    )
-    run_to_completion(agg, checkpoint_dir=ckpt, output_path=out)
-    res = spark.read.parquet(out)
+    with replay(spark, "stream_late") as r:
+        for batch in (e, ontime, late, sentinel):
+            r.stage(batch)
+        r.run(
+            r.stream().withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour"))
+            .count()
+        )
     return (
-        res.filter(F.col("window.start") <= F.lit(mx))  # drop the sentinel window
+        r.output.filter(F.col("window.start") <= F.lit(mx))  # drop the sentinel window
         .select(
             F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             F.col("count").cast("bigint").alias("n"),
@@ -1179,7 +1145,7 @@ def ndjson_corrupt_quarantine(spark, sf_dir):
     the planted constant."""
     from pathlib import Path as _P
 
-    from etl_mini_spark.queries._base import _sweep_scratch, _TMP
+    from etl_mini_spark.queries._base import _TMP
 
     tmp = _TMP / f"json_quarantine_{_P(sf_dir).name}"
     (

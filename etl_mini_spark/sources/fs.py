@@ -75,6 +75,19 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
         raise IOError(f"rename failed: {src} -> {dst}")
 
 
+def fs_glob(spark: SparkSession, pattern: str) -> list[str]:
+    """The paths matching the glob ``pattern``, sorted; [] when none."""
+    fs, p = _fs_and_path(spark, pattern)
+    return sorted(s.getPath().toString() for s in fs.globStatus(p) or [])
+
+
+def fs_set_mtime(spark: SparkSession, path: str, mtime_ms: int) -> None:
+    """Set the modification time of ``path`` (epoch milliseconds); its
+    access time is left as it is."""
+    fs, p = _fs_and_path(spark, path)
+    fs.setTimes(p, mtime_ms, -1)
+
+
 def replace_parquet(
     spark: SparkSession, path: str, build: Callable[[bool], DataFrame]
 ) -> None:

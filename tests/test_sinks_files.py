@@ -423,3 +423,47 @@ def test_parquet_read_finder(code, found):
     a reader variable, and takes neither a streaming read nor a write
     for one."""
     assert _parquet_calls(ast.parse(code), reads=True) == found
+
+
+# Calls a registry builder leaves to ``streaming.stream.replay``, which
+# stages the files of a stream, orders them and starts the stream.
+_REPLAY_OWNED = {"read_stream_parquet", "run_to_completion", "utime"}
+
+
+def _replay_calls(tree: ast.Module) -> list[tuple[str, int]]:
+    """(name, line) of each call in ``tree`` to a ``_REPLAY_OWNED``
+    function, called by its name or as an attribute (``os.utime``)."""
+    hits = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in _REPLAY_OWNED:
+                hits.append((name, n.lineno))
+    return sorted(hits, key=lambda h: h[1])
+
+
+def test_queries_replay_streams_only_through_the_helper():
+    """No registry builder starts a stream or sets a file's mtime
+    itself: each stream it replays is staged, run and read back by
+    ``streaming.stream.replay``."""
+    hits = [
+        f"{p.relative_to(PACKAGE).as_posix()}:{line} ({name})"
+        for p in sorted((PACKAGE / "queries").glob("*.py"))
+        for name, line in _replay_calls(ast.parse(p.read_text()))
+    ]
+    assert not hits, hits
+
+
+@pytest.mark.parametrize("code, found", [
+    ("run_to_completion(q, ckpt, sink=s)", [("run_to_completion", 1)]),
+    ("df = stream.read_stream_parquet(spark, p, schema)", [("read_stream_parquet", 1)]),
+    ("import os\nos.utime(f, (1, 1))", [("utime", 2)]),
+    ("from etl_mini_spark.streaming.stream import run_to_completion", []),
+    ("with replay(spark, 'x') as r:\n    r.run(r.stream())", []),
+])
+def test_replay_call_finder(code, found):
+    """The finder behind the replay check sees a call by name and as an
+    attribute, and takes neither an import nor the helper's own calls
+    for one."""
+    assert _replay_calls(ast.parse(code)) == found

@@ -401,3 +401,83 @@ def test_streaming_incremental_agg_state(spark, tmp_path):
         .collect()
     }
     assert got == want
+
+
+def _replay_batches(i: int):
+    """Rows of the i-th staged micro-batch: two ids and their instants."""
+    from datetime import datetime, timezone
+
+    return [(10 * i + k, datetime(2024, 1, 1 + i, k, tzinfo=timezone.utc)) for k in (1, 2)]
+
+
+def test_replay_keeps_stage_order_when_names_sort_the_other_way(spark):
+    """The file source orders files by mtime, not by name: three staged
+    batches renamed so that their names sort in reverse still run as
+    three micro-batches in stage order."""
+    from etl_mini_spark.sources.fs import fs_glob, fs_rename
+    from etl_mini_spark.streaming.stream import replay
+
+    seen = []
+    with replay(spark, "test_replay_order") as r:
+        for i in range(3):
+            r.stage(spark.createDataFrame(_replay_batches(i), "id long, ts timestamp"))
+        staged = fs_glob(spark, f"{r.root}/src/*.parquet")
+        for f, name in zip(staged, ["c", "b", "a"]):
+            fs_rename(spark, f, f"{r.root}/src/{name}.parquet")
+        r.run(r.stream(), lambda df, _: seen.append(sorted(x["id"] for x in df.collect())))
+    assert seen == [[1, 2], [11, 12], [21, 22]]
+
+
+def test_replay_round_trips_timestamps(spark):
+    """A staged TIMESTAMP column streams, lands and reads back as
+    TIMESTAMP with the same instants."""
+    from datetime import datetime
+
+    from pyspark.sql import types as T
+
+    from etl_mini_spark.streaming.stream import replay
+
+    rows = [(0, datetime(1899, 12, 31, 23, 59, 59, 999999)), (1, datetime(1970, 1, 1)),
+            (2, datetime(2024, 3, 10, 2, 30, 0, 1)), (3, None)]
+    batch = spark.createDataFrame(rows, "id long, ts timestamp")
+    want = {r["id"]: r["us"] for r in batch.select("id", F.unix_micros("ts").alias("us")).collect()}
+    with replay(spark, "test_replay_ts") as r:
+        r.stage(batch)
+        stream = r.stream()
+        assert stream.schema["ts"].dataType == T.TimestampType()
+        r.run(stream)
+    assert r.output.schema["ts"].dataType == T.TimestampType()
+    got = {x["id"]: x["us"] for x in r.output.select("id", F.unix_micros("ts").alias("us")).collect()}
+    assert got == want
+
+
+def test_replay_deletes_its_dir_on_exit_and_on_error(spark):
+    """The scratch dir is gone after the block, whether it ends
+    normally (the output is still readable) or raises."""
+    from pathlib import Path
+
+    from etl_mini_spark.streaming.stream import replay
+
+    with replay(spark, "test_replay_exit") as r:
+        r.stage(spark.createDataFrame(_replay_batches(0), "id long, ts timestamp"))
+        r.run(r.stream())
+    assert not Path(r.root).exists()
+    assert r.output.count() == 2
+
+    with pytest.raises(RuntimeError, match="inside the block"):
+        with replay(spark, "test_replay_exit") as r:
+            r.stage(spark.createDataFrame(_replay_batches(0), "id long, ts timestamp"))
+            raise RuntimeError("inside the block")
+    assert not Path(r.root).exists()
+    assert r.output is None
+
+
+@pytest.mark.parametrize("name", ["stream_foreachbatch_upsert", "stream_tumbling_late_drop"])
+def test_stream_builder_leaves_tmp_as_found(spark, name):
+    """A stream entry cleans up its own scratch: one build and collect
+    leave the repository's tmp/ holding the same entries as before."""
+    from etl_mini_spark.queries import QUERIES
+
+    before = sorted(p.name for p in (REPO / "tmp").iterdir())
+    assert QUERIES[name](spark, SF_SMOKE).collect()
+    assert sorted(p.name for p in (REPO / "tmp").iterdir()) == before
