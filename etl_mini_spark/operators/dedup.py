@@ -663,62 +663,6 @@ def simhash_near_dup_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame, src: str = "d1", dst: str = "d2", max_iter: int = 25
-) -> DataFrame:
-    """Connected components of an undirected edge list → (node, comp),
-    where ``comp`` is the minimum node id reachable from ``node``.
-
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels (one shuffle-join + one
-    aggregate per round), each round one superstep of ``graph.iterate``
-    (pinned, so the DAG stays flat; the changed-label count is observed
-    inside the pin's own job), with an early exit when a round changes
-    nothing. Rounds needed = graph diameter; near-dup graphs are unions
-    of small dense cliques (diameter ~2-3), so this settles in a
-    handful of rounds even at corpus scale. For adversarial
-    long-chain graphs the published O(log n)-round alternation
-    (large-star/small-star, Kiveris et al. 2014 "Connected Components in
-    MapReduce and Beyond") drops in behind the same signature.
-
-    Used for near-dup CLUSTER assignment: pairs from MinHash-LSH or
-    shingle-Jaccard rarely form clean pairs — transitive closure turns
-    them into keep-one-per-cluster decisions.
-    """
-    _require_integral_ids(edges, src, dst)
-    e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    sym = pin(sym)  # reused every round — pin, don't recompute
-    changes = []
-
-    def step(labels):
-        nbr_min = (
-            sym.join(labels.select(F.col("node").alias("b"), F.col("comp").alias("nc")), "b")
-            .groupBy("a")
-            .agg(F.min("nc").alias("nbr_comp"))
-            .withColumnRenamed("a", "node")
-        )
-        new, obs = observed_count(
-            labels.join(nbr_min, "node", "left").select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("new"),
-                F.col("comp").alias("old"),
-            ),
-            F.col("new") != F.col("old"),
-        )
-        changes.append(obs)
-        return new.select("node", F.col("new").alias("comp"))
-
-    # Returning unconverged labels would silently under-merge components
-    # (long chains > max_iter hops keep distinct reps and dedup keeps
-    # rows it should drop), so a graph whose diameter exceeds max_iter
-    # raises: raise max_iter, or use connected_components_star.
-    labels = sym.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
-    return iterate(
-        labels, step, max_iter=max_iter, until=lambda prev, cur: changes[-1].get["n"] == 0
-    )
-
-
 def _require_integral_ids(edges: DataFrame, src: str, dst: str) -> None:
     for c in (src, dst):
         dt = dict(edges.dtypes)[c]
@@ -729,20 +673,26 @@ def _require_integral_ids(edges: DataFrame, src: str, dst: str) -> None:
             )
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "d1",
-    dst: str = "d2",
-    max_iter: int = 50,
-    small_graph_max: int = 1 << 17,
-) -> DataFrame:
-    """Connected components in O(log n) rounds — the large-star /
-    small-star alternation (Kiveris et al. 2014, "Connected Components
-    in MapReduce and Beyond"). Same output contract as
-    :func:`connected_components`: (node, comp) with ``comp`` = minimum
-    node id of the component.
+# Edge count up to which connected_components runs the driver union-find
+# instead of the distributed rounds: 2^17 edges ≈ 2 MB of longs.
+UNION_FIND_MAX_EDGES = 1 << 17
 
-    Per round (each a groupBy-min + join — two shuffles):
+
+def connected_components(
+    edges: DataFrame, src: str = "d1", dst: str = "d2", max_iter: int = 50
+) -> DataFrame:
+    """Connected components of an undirected edge list → (node, comp),
+    where ``comp`` is the minimum node id reachable from ``node``. A
+    node seen only on self-loop edges is its own component, and an edge
+    with a null endpoint adds one ``(null, null)`` row.
+
+    Used for near-dup CLUSTER assignment: pairs from MinHash-LSH or
+    shingle-Jaccard rarely form clean pairs — transitive closure turns
+    them into keep-one-per-cluster decisions.
+
+    Distributed path: the large-star / small-star alternation (Kiveris
+    et al. 2014, "Connected Components in MapReduce and Beyond"). Per
+    round (each a groupBy-min + join — two shuffles):
     - **large-star**: every node links its strictly-larger neighbors to
       the minimum of its closed neighborhood;
     - **small-star**: every node links its smaller-or-equal neighbors
@@ -750,57 +700,43 @@ def connected_components_star(
 
     Both operations preserve connectivity and strictly contract the
     graph toward stars rooted at component minima; alternation
-    converges in O(log n) rounds REGARDLESS of diameter — use this over
-    min-label propagation when components can be long chains
-    (templated/boilerplate near-dup corpora), where label propagation
-    needs diameter rounds. Convergence is detected by edge-set
-    fixpoint, so the result is never silently unconverged.
+    converges in O(log n) rounds REGARDLESS of diameter, where min-label
+    propagation needs diameter rounds (long chains on
+    templated/boilerplate near-dup corpora). Convergence is detected by
+    edge-set fixpoint, so the result is never silently unconverged: no
+    fixpoint within ``max_iter`` rounds raises ``RuntimeError``.
 
-    ``small_graph_max``: edge-count bound (default 2^17 ≈ 2 MB of
-    longs) under which the components come from a driver-side
-    union-find over the one-time-materialized edge projection instead
-    of the sequential Spark rounds — bit-identical output, bounded
-    driver work (the same class of bounded gather as the quantile-cut
-    / bucket-offset collects), and none of the ~log n × 3-jobs
-    scheduling latency that dominates small graphs. Set 0 to force the
-    distributed path.
+    Up to ``UNION_FIND_MAX_EDGES`` edges the components come from a
+    driver-side union-find over the one-time-materialized edge
+    projection instead of the sequential Spark rounds — bit-identical
+    output, bounded driver work (the same class of bounded gather as
+    the quantile-cut / bucket-offset collects), and none of the ~log n ×
+    3-jobs scheduling latency that dominates small graphs.
     """
     _require_integral_ids(edges, src, dst)
     spark = edges.sparkSession
     # The O(log n) rounds are SEQUENTIAL stages; at verification SFs the
     # cost is per-stage latency, not data, so they run under
     # session.loop_confs like every superstep loop.
-    # Materialize the RAW (a, b) projection once, BEFORE the loop confs
-    # take effect: ``edges`` lineage is often the expensive near-dup
-    # pair join, and it used to be re-executed twice more by the
-    # singleton restore below (the all_nodes union read the
-    # un-checkpointed input) — worse, that upstream materialization ran
-    # under the loop's 8-partition/AQE-off scope. Checkpointing the
-    # two-long projection — O(pairs) rows, tiny vs the corpus — under
-    # the SESSION confs means the upstream pair generation runs exactly
-    # once per call at full parallelism; ``e`` and ``all_nodes`` both
-    # derive from it.
-    raw = pin(edges.select(
+    # Materialize the RAW (a, b) projection once, under the SESSION
+    # confs, BEFORE the loop confs take effect: ``edges`` lineage is
+    # often the expensive near-dup pair join, and both ``e`` and the
+    # singleton restore (``all_nodes``) read it, so the upstream pair
+    # generation runs exactly once per call at full parallelism. The
+    # edge count is observed inside the pin's own job, so choosing the
+    # path runs no job of its own.
+    raw, edge_count = observed_count(edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     ))
-    # Loop partition count derived from the materialized edge count —
-    # ~1M edges (≈16 MB) per partition, min 1 — instead of a constant:
-    # near-dup edge sets are usually tiny relative to the corpus, and a
-    # fixed 8 partitions made every one of the ~log n sequential rounds
-    # pay 8 tasks of pure scheduling latency for a few hundred rows; at
-    # real graph sizes the same formula scales the rounds back out
-    # (capped so a pathological edge count cannot explode task counts).
-    n_raw = raw.count()
-    if n_raw <= small_graph_max:
-        # Small-graph fast path: below the bound the edge list is a few
-        # MB at most (16 B/edge) — union-find on the driver is exact,
+    raw = pin(raw)
+    n_raw = edge_count.get["n"]
+    if n_raw <= UNION_FIND_MAX_EDGES:
+        # Small-graph path: below the bound the edge list is a few MB
+        # at most (16 B/edge) — union-find on the driver is exact,
         # deterministic, and replaces ~log n sequential Spark rounds
         # (each 3+ jobs of pure scheduling latency) with one bounded
         # collect. Same output contract as the distributed path: every
         # node that appears in the edge list, comp = component minimum.
-        # The threshold is a count check on the already-materialized
-        # projection, so the upstream lineage never runs twice; at real
-        # graph sizes the O(log n) alternation below takes over.
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -835,6 +771,13 @@ def connected_components_star(
         if saw_null:
             out.append((None, None))
         return spark.createDataFrame(out, "node long, comp long")
+    # Loop partition count derived from the observed edge count — ~1M
+    # edges (≈16 MB) per partition, min 1 — instead of a constant:
+    # near-dup edge sets are usually tiny relative to the corpus, and a
+    # fixed 8 partitions made every one of the ~log n sequential rounds
+    # pay 8 tasks of pure scheduling latency for a few hundred rows; at
+    # real graph sizes the same formula scales the rounds back out
+    # (capped so a pathological edge count cannot explode task counts).
     loop_parts = max(1, min(2048, (n_raw + 999_999) // 1_000_000))
     counts = []
 
@@ -884,9 +827,8 @@ def connected_components_star(
         e.select(F.col("v").alias("node"), F.col("v").alias("comp")).distinct()
     )
     # Nodes that appeared ONLY via self-loop edges were dropped by the
-    # a != b filter above; restore them as singleton components so the
-    # output contract matches connected_components exactly (which emits
-    # (x, x) for them).
+    # a != b filter above; restore them as singleton components (x, x),
+    # as the union-find path emits them.
     all_nodes = (
         raw.select(F.col("a").alias("node"))
         .union(raw.select(F.col("b").alias("node")))

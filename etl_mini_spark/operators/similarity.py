@@ -401,11 +401,12 @@ def embedding_near_dup_pairs_lsh(
     driver actions over it — unpinned, the upstream lineage (often a
     union or a transform over a scan) re-ran five times (guide 3.3).
     The two probes share ONE action (guide 5: fewer driver round
-    trips)."""
+    trips). The pin is lazy: that probe is its first action and
+    materializes it, so no job runs for the pin alone."""
     from etl_mini_spark.session import pin
 
     spark = corpus.sparkSession
-    corpus = pin(corpus)
+    corpus = pin(corpus, eager=False)
     n_rows, dim = corpus.agg(
         F.count("*"), F.first(F.size(F.col(vec_col)))
     ).first()

@@ -32,7 +32,7 @@ from etl_mini_spark.plans.checkpoint import CheckpointTable
 from etl_mini_spark.session import coalesce_small, static_plan
 from etl_mini_spark.sources.readers import read_csv, read_ndjson, read_parquet, require_source
 from etl_mini_spark.sources.writers import (
-    write_parquet, write_partitioned_by_type_date, write_run_layout,
+    write_ndjson, write_parquet, write_partitioned_by_type_date, write_run_layout,
 )
 
 
@@ -193,7 +193,7 @@ def write_sink(spark: SparkSession, df: DataFrame, sink: SinkSpec) -> None:
         return
     write = {
         "parquet": lambda: write_parquet(df.write.mode(sink.mode), sink.path),
-        "ndjson": lambda: df.write.mode(sink.mode).json(sink.path),
+        "ndjson": lambda: write_ndjson(df, sink.path, sink.mode),
         "run_layout": lambda: write_run_layout(df, sink.path),
         "partitioned": lambda: write_partitioned_by_type_date(
             df, sink.path, sink.partition_type_col, sink.partition_ts_col, sink.mode

@@ -137,23 +137,22 @@ FROM comp
 @q("dedup_clusters", _CLUSTERS_ORACLE)
 def dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTER assignment: shingle-Jaccard pairs (≥0.8) →
-    transitive closure via iterative min-label propagation → one
-    representative (min doc_id) per component plus the component size.
-    The keep/drop decision a dedup pipeline actually needs — pairs alone
-    under-delete when A~B and B~C but A~C is below threshold. The oracle
-    recomputes the closure with a recursive CTE (a completely different
-    evaluation strategy — strong differential check).
+    transitive closure (connected components) → one representative
+    (min doc_id) per component plus the component size. The keep/drop
+    decision a dedup pipeline actually needs — pairs alone under-delete
+    when A~B and B~C but A~C is below threshold. The oracle recomputes
+    the closure with a recursive CTE (a completely different evaluation
+    strategy — strong differential check).
 
-    Uses the large-star/small-star alternation (O(log n) rounds
-    regardless of component diameter) rather than min-label propagation:
-    on a templated/boilerplate corpus near-dup graphs can be long
-    chains, where propagation needs diameter rounds and raises on its
-    iteration cap mid-pipeline — the star variant cannot."""
-    from etl_mini_spark.operators.dedup import connected_components_star
+    The closure runs in O(log n) rounds regardless of component
+    diameter (large-star/small-star), so a templated/boilerplate corpus
+    whose near-dup graphs are long chains cannot exhaust an iteration
+    cap mid-pipeline the way diameter-round label propagation would."""
+    from etl_mini_spark.operators.dedup import connected_components
 
     d = _t(spark, sf_dir, "documents")
     pairs = near_dup_pairs_ngram_jaccard(d, "doc_id", "text")
-    comp = connected_components_star(pairs)
+    comp = connected_components(pairs)
     w = Window.partitionBy("cluster_rep")
     return comp.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_rep")

@@ -859,7 +859,7 @@ def dbscan_grid_blocked(spark, sf_dir):
     the min neighboring core label. This is the decomposition that
     survives 100 TB — the oracle's quadratic join is the deliberately
     naive derivation on the bounded subset."""
-    from etl_mini_spark.operators.dedup import connected_components_star
+    from etl_mini_spark.operators.dedup import connected_components
     from etl_mini_spark.session import pin
 
     li = _t(spark, sf_dir, "lineitem")
@@ -904,7 +904,7 @@ def dbscan_grid_blocked(spark, sf_dir):
         .filter(F.col("pa") < F.col("pb"))
         .select(F.col("pa").alias("d1"), F.col("pb").alias("d2"))
     )
-    cc = connected_components_star(core_edges, "d1", "d2")
+    cc = connected_components(core_edges, "d1", "d2")
     lbl = (
         cores.join(cc.withColumnRenamed("node", "pid"), "pid", "left")
         .select("pid", F.coalesce("comp", F.col("pid")).cast("bigint").alias("comp"))

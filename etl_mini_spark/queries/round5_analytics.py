@@ -307,12 +307,12 @@ def dedup_canonical_pick(spark, sf_dir):
     brute-force ALL-PAIRS check (quadratic by design — the stronger
     differential), so the query runs on the doc_id%2 half-corpus to
     keep the verification gate's oracle cost bounded."""
-    from etl_mini_spark.operators.dedup import connected_components_star
+    from etl_mini_spark.operators.dedup import connected_components
     from etl_mini_spark.operators.dedup import near_dup_pairs_ngram_jaccard
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     pairs = near_dup_pairs_ngram_jaccard(d, "doc_id", "text")
-    comp = connected_components_star(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_rep")
     )
     sized = comp.join(d.select("doc_id", "n_chars"), "doc_id")

@@ -1593,14 +1593,14 @@ def split_leakage_safe(spark, sf_dir):
     the extra cost over a naive split is the dedup pass the pipeline
     runs anyway."""
     from etl_mini_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         near_dup_pairs_ngram_jaccard,
     )
     from etl_mini_spark.operators.sampling import split_assign
 
     d = _t(spark, sf_dir, "documents")
     pairs = near_dup_pairs_ngram_jaccard(d, "doc_id", "text")
-    comp = connected_components_star(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("rep0")
     )
     assigned = (
@@ -2231,7 +2231,7 @@ def corpus_curation_pipeline(spark, sf_dir):
     docstring) — the 500-row fixture keeps the exact path because its
     oracle is the uncapped exact join."""
     from etl_mini_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         exact_dedup_keep,
         near_dup_pairs_ngram_jaccard,
     )
@@ -2246,7 +2246,7 @@ def corpus_curation_pipeline(spark, sf_dir):
     # of the aggregate + join-back that scanned documents twice per use
     s1 = exact_dedup_keep(q, "text", "doc_id")
     pairs = near_dup_pairs_ngram_jaccard(s1, "doc_id", "text")
-    comp = connected_components_star(pairs).select(
+    comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("rep")
     )
     canon = s1.join(comp, "doc_id", "left").filter(

@@ -5,6 +5,7 @@ caught SURVEY §9 three rounds stale)."""
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import json
 import re
@@ -71,6 +72,20 @@ def test_architecture_py_paths_exist():
     assert paths
     missing = sorted(p for p in paths if not any((r / p).is_file() for r in roots))
     assert not missing, f"ARCHITECTURE.md cites missing files: {missing}"
+
+
+def test_no_test_module_redefines_a_top_level_name():
+    """A second top-level def or class of the same name in a tests/
+    module hides the first, so pytest never collects it."""
+    dups = []
+    for path in sorted((REPO / "tests").glob("*.py")):
+        seen = set()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if node.name in seen:
+                    dups.append(f"{path.name}:{node.lineno} {node.name}")
+                seen.add(node.name)
+    assert not dups, f"redefined top-level names: {dups}"
 
 
 if __name__ == "__main__":

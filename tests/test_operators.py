@@ -558,8 +558,8 @@ def test_stratified_take_exact_k(spark):
 
 
 def test_connected_components_chain_and_cliques(spark):
-    """Min-label propagation must close a 6-hop chain (worst case for
-    per-hop propagation) and keep disjoint cliques separate."""
+    """Connected components must close a 6-hop chain and keep disjoint
+    cliques separate."""
     from etl_mini_spark.operators.dedup import connected_components
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),  # chain 1..7
@@ -573,13 +573,16 @@ def test_connected_components_chain_and_cliques(spark):
     assert len(got) == 12
 
 
-def test_connected_components_unconverged_raises(spark):
-    from etl_mini_spark.operators.dedup import connected_components
+def test_connected_components_unconverged_raises(spark, monkeypatch):
+    """The distributed rounds raise, rather than return under-merged
+    components, when max_iter ends them before the edge-set fixpoint."""
+    from etl_mini_spark.operators import dedup
 
-    chain = [(i, i + 1) for i in range(1, 30)]  # diameter 29 > max_iter 3
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    chain = [(i, i + 1) for i in range(1, 30)]
     df = spark.createDataFrame(chain, ["d1", "d2"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=3)
+        dedup.connected_components(df, max_iter=2)
 
 
 def test_connected_components_rejects_string_ids(spark):
@@ -590,58 +593,47 @@ def test_connected_components_rejects_string_ids(spark):
         connected_components(df)
 
 
-def test_star_components_long_chain(spark):
-    """The O(log n) alternation closes a 200-hop chain in ~log rounds —
-    the case where min-label propagation needs 200 rounds."""
-    from etl_mini_spark.operators.dedup import connected_components_star
+def test_star_components_chain_converges_in_log_rounds(spark, monkeypatch):
+    """The distributed O(log n) alternation closes a 200-hop chain
+    within 20 rounds — the case where min-label propagation would need
+    200."""
+    from etl_mini_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
     chain = [(i, i + 1) for i in range(1, 200)]
     df = spark.createDataFrame(chain, ["d1", "d2"])
-    got = {r["node"]: r["comp"] for r in connected_components_star(df, max_iter=20).collect()}
+    got = {r["node"]: r["comp"] for r in dedup.connected_components(df, max_iter=20).collect()}
     assert len(got) == 200
     assert all(c == 1 for c in got.values())
 
 
-def test_star_components_match_label_propagation(spark):
-    """Differential: star alternation ≡ min-label propagation on a
-    seeded random graph (mixed cliques, chains, singleton pairs)."""
+def test_star_components_small_graph_fast_path_matches_distributed(spark, monkeypatch):
+    """The driver-side union-find path (edge count ≤
+    UNION_FIND_MAX_EDGES) is an exact, independent reference: the
+    distributed large-star/small-star loop (forced by a zero bound)
+    must be row-identical to it on mixed cliques, a long chain,
+    self-loops and reversed duplicate edges, and on a seeded random
+    graph of cliques, chains and pairs."""
     import random
 
-    from etl_mini_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(42)
-    edges = {(rng.randrange(120), rng.randrange(120)) for _ in range(150)}
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, ["d1", "d2"])
-    a = {r["node"]: r["comp"] for r in connected_components(df, max_iter=60).collect()}
-    b = {r["node"]: r["comp"] for r in connected_components_star(df).collect()}
-    assert a == b
-
-
-def test_star_components_small_graph_fast_path_matches_distributed(spark):
-    """The round-18 driver-side union-find fast path (edge count ≤
-    small_graph_max) must be row-identical to the distributed
-    large-star/small-star loop (forced via small_graph_max=0) — mixed
-    cliques, a long chain, self-loops, and reversed duplicate edges."""
-    import random
-
-    from etl_mini_spark.operators.dedup import connected_components_star
+    from etl_mini_spark.operators import dedup
 
     rng = random.Random(7)
-    edges = {(rng.randrange(80), rng.randrange(80)) for _ in range(90)}
-    edges |= {(i, i + 1) for i in range(200, 230)}          # chain
-    edges |= {(300, 300), (301, 301)}                       # self-loop singletons
-    edges |= {(b, a) for a, b in list(edges)[:10]}          # reversed dups
-    df = spark.createDataFrame(sorted(edges), ["d1", "d2"])
-    fast = {(r["node"], r["comp"])
-            for r in connected_components_star(df).collect()}
-    dist = {(r["node"], r["comp"])
-            for r in connected_components_star(df, small_graph_max=0).collect()}
-    assert fast == dist
-    assert (300, 300) in fast and (301, 301) in fast
+    mixed = {(rng.randrange(80), rng.randrange(80)) for _ in range(90)}
+    mixed |= {(i, i + 1) for i in range(200, 230)}          # chain
+    mixed |= {(300, 300), (301, 301)}                       # self-loop singletons
+    mixed |= {(b, a) for a, b in list(mixed)[:10]}          # reversed dups
+    rng = random.Random(42)
+    rand = {(rng.randrange(120), rng.randrange(120)) for _ in range(150)}
+    rand = {(a, b) for a, b in rand if a != b}
+    for edges, singletons in ((mixed, {(300, 300), (301, 301)}), (rand, set())):
+        df = spark.createDataFrame(sorted(edges), ["d1", "d2"])
+        fast = {(r["node"], r["comp"]) for r in dedup.connected_components(df).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+            dist = {(r["node"], r["comp"]) for r in dedup.connected_components(df).collect()}
+        assert fast == dist
+        assert singletons <= fast
 
 
 def test_merge_upsert_explicit_null_overwrites(spark):
@@ -663,39 +655,24 @@ def test_merge_upsert_explicit_null_overwrites(spark):
 
 def test_star_components_self_loop_nodes(spark):
     """Nodes present ONLY via self-loop edges must still be assigned
-    (node, node) — same contract as connected_components."""
-    from etl_mini_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    (node, node)."""
+    from etl_mini_spark.operators.dedup import connected_components
 
     df = spark.createDataFrame([(1, 2), (5, 5), (7, 7)], ["d1", "d2"])
-    want = {1: 1, 2: 1, 5: 5, 7: 7}
-    got_lp = {r["node"]: r["comp"] for r in connected_components(df).collect()}
-    got_star = {r["node"]: r["comp"] for r in connected_components_star(df).collect()}
-    assert got_lp == want
-    assert got_star == want
+    got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
+    assert got == {1: 1, 2: 1, 5: 5, 7: 7}
 
 
 def test_star_components_long_chain(spark):
     """A 1000-node chain (diameter 999) — the shape the registry's
-    dedup_clusters path must survive on templated/boilerplate corpora.
-    Min-label propagation needs ~diameter rounds and raises on its
-    iteration cap here; the large/small-star alternation converges in
-    O(log n) rounds. The registry path uses the star variant
-    (queries/coverage_ext.py dedup_clusters), so this is its contract."""
-    import pytest as _pytest
-
-    from etl_mini_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    dedup_clusters path must survive on templated/boilerplate corpora,
+    where label propagation would need ~diameter rounds
+    (queries/coverage_ext.py dedup_clusters)."""
+    from etl_mini_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(999)], ["d1", "d2"])
-    got = {r["node"]: r["comp"] for r in connected_components_star(edges).collect()}
+    got = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
     assert len(got) == 1000 and set(got.values()) == {0}
-    with _pytest.raises(RuntimeError):
-        connected_components(edges, max_iter=8)
 
 
 def test_gather_guard_raises_above_cap(spark):
@@ -835,31 +812,6 @@ def test_morton_code_interleaves_bits(spark):
     # bit i of x -> 2i ; bit i of y -> 2i+1
     # x bits: 1@0, 0@1, 1@2 -> z bits 1@0, 1@4 ; y bits: 1@0, 1@1 -> z bits 1@1, 1@3
     assert df.collect()[0].z == (1 << 0) | (1 << 4) | (1 << 1) | (1 << 3)
-
-
-def test_chunk_udtf_matches_native_chunker(spark):
-    """The UDTF escape hatch (functions/udtf_fns.py) must stay
-    row-identical to the native codegen chunker on the same corpus —
-    including trailing short chunks and empty docs."""
-    from etl_mini_spark.functions.udtf_fns import ChunkDocUDTF
-    from etl_mini_spark.operators.text import chunk_documents
-    from etl_mini_spark.session import load_table
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents").limit(200)
-    native = {
-        (r["doc_id"], r["chunk_id"], r["chunk"], r["n_tokens"])
-        for r in chunk_documents(d, "doc_id", "text", window=32, stride=16).collect()
-    }
-    spark.udtf.register("chunk_doc", ChunkDocUDTF)
-    d.createOrReplaceTempView("docs_udtf_src")
-    via_udtf = {
-        (r["doc_id"], r["chunk_id"], r["chunk"], r["n_tokens"])
-        for r in spark.sql(
-            "SELECT doc_id, c.* FROM docs_udtf_src, "
-            "LATERAL chunk_doc(text, 32, 16) c"
-        ).collect()
-    }
-    assert via_udtf == native and len(native) > 0
 
 
 def test_corpus_tokenization_edge_docs_match_oracle(spark, tmp_path):
@@ -1328,8 +1280,7 @@ def test_iterate_pins_through_session_pin(spark, monkeypatch, tmp_path):
     with it set, no localCheckpoint runs at all. Only DataFrames a
     superstep produced anew are pinned; carried-over ones are not."""
     from etl_mini_spark import session
-    from etl_mini_spark.operators.dedup import connected_components
-    from etl_mini_spark.operators.graph import iterate
+    from etl_mini_spark.operators.graph import bfs_circulant, iterate
 
     pins = []
     real_pin = session.pin
@@ -1348,11 +1299,10 @@ def test_iterate_pins_through_session_pin(spark, monkeypatch, tmp_path):
     assert len(pins) == 3  # supersteps 2, 4 and the last (5)
     assert out[1] is carried and out[2] == "tag" and out[0].first()["x"] == 5
 
-    # a ported operator: a 7-node chain converges in 6 rounds + 1
-    # no-change round, one pin each
+    # a ported operator: BFS on a 12-node ring reaches distance 6 in 6
+    # levels + 1 empty level, one pin each
     pins.clear()
-    chain = spark.createDataFrame([(i, i + 1) for i in range(1, 7)], ["d1", "d2"])
-    assert {r["comp"] for r in connected_components(chain).collect()} == {1}
+    assert max(r["d"] for r in bfs_circulant(12, [1]).collect()) == 6
     assert len(pins) == 7
 
     def no_local(self, eager=True):

@@ -105,7 +105,7 @@ def test_asof_join_forward_matches_pandas_merge_asof(spark, left, right, buckete
     rows=st.lists(st.tuples(_keys, _times, _vals), min_size=0, max_size=20),
 )
 @settings(**SETTINGS)
-def test_ordered_dedup_matches_pandas_keep_first(spark, rows):
+def test_ordered_dedup_directed_order_matches_pandas_keep_first(spark, rows):
     """ordered_dedup ≡ sort_values + drop_duplicates(keep='first') with
     a total order (ties broken by the value column) — the reference's
     D1 semantics (pandas_select_and_enrich.py:52-57)."""
