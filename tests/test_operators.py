@@ -607,33 +607,53 @@ def test_star_components_chain_converges_in_log_rounds(spark, monkeypatch):
     assert all(c == 1 for c in got.values())
 
 
+def test_star_components_match_label_propagation(spark, monkeypatch):
+    """Differential: the distributed star alternation (forced by a zero
+    UNION_FIND_MAX_EDGES) ≡ plain min-label propagation, run to its
+    fixed point in Python, on a seeded random graph (mixed cliques,
+    chains, singleton pairs)."""
+    import random
+
+    from etl_mini_spark.operators import dedup
+
+    rng = random.Random(42)
+    edges = {(rng.randrange(120), rng.randrange(120)) for _ in range(150)}
+    edges = [(a, b) for a, b in edges if a != b]
+    label = {n: n for e in edges for n in e}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in edges:
+            m = min(label[a], label[b])
+            if label[a] != m or label[b] != m:
+                label[a] = label[b] = m
+                changed = True
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    df = spark.createDataFrame(edges, ["d1", "d2"])
+    got = {r["node"]: r["comp"] for r in dedup.connected_components(df).collect()}
+    assert got == label
+
+
 def test_star_components_small_graph_fast_path_matches_distributed(spark, monkeypatch):
     """The driver-side union-find path (edge count ≤
-    UNION_FIND_MAX_EDGES) is an exact, independent reference: the
-    distributed large-star/small-star loop (forced by a zero bound)
-    must be row-identical to it on mixed cliques, a long chain,
-    self-loops and reversed duplicate edges, and on a seeded random
-    graph of cliques, chains and pairs."""
+    UNION_FIND_MAX_EDGES) must be row-identical to the distributed
+    large-star/small-star loop (forced by a zero bound) on mixed
+    cliques, a long chain, self-loops and reversed duplicate edges."""
     import random
 
     from etl_mini_spark.operators import dedup
 
     rng = random.Random(7)
-    mixed = {(rng.randrange(80), rng.randrange(80)) for _ in range(90)}
-    mixed |= {(i, i + 1) for i in range(200, 230)}          # chain
-    mixed |= {(300, 300), (301, 301)}                       # self-loop singletons
-    mixed |= {(b, a) for a, b in list(mixed)[:10]}          # reversed dups
-    rng = random.Random(42)
-    rand = {(rng.randrange(120), rng.randrange(120)) for _ in range(150)}
-    rand = {(a, b) for a, b in rand if a != b}
-    for edges, singletons in ((mixed, {(300, 300), (301, 301)}), (rand, set())):
-        df = spark.createDataFrame(sorted(edges), ["d1", "d2"])
-        fast = {(r["node"], r["comp"]) for r in dedup.connected_components(df).collect()}
-        with monkeypatch.context() as m:
-            m.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
-            dist = {(r["node"], r["comp"]) for r in dedup.connected_components(df).collect()}
-        assert fast == dist
-        assert singletons <= fast
+    edges = {(rng.randrange(80), rng.randrange(80)) for _ in range(90)}
+    edges |= {(i, i + 1) for i in range(200, 230)}          # chain
+    edges |= {(300, 300), (301, 301)}                       # self-loop singletons
+    edges |= {(b, a) for a, b in list(edges)[:10]}          # reversed dups
+    df = spark.createDataFrame(sorted(edges), ["d1", "d2"])
+    fast = {(r["node"], r["comp"]) for r in dedup.connected_components(df).collect()}
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    dist = {(r["node"], r["comp"]) for r in dedup.connected_components(df).collect()}
+    assert fast == dist
+    assert (300, 300) in fast and (301, 301) in fast
 
 
 def test_merge_upsert_explicit_null_overwrites(spark):
